@@ -3,15 +3,16 @@ package graft.llm
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
-/** Crash-recoverable directory swap for persisted-index compaction
-  * (the vacuum tier in [[TextDedupOps]] / [[SimilarityOps]]).
+/** Crash-recoverable directory swap for store maintenance — every
+  * rewrite under [[IngestCommit.maintain]] (LSH bands/sigs, SimHash
+  * hashes, IVF-PQ cells, affected corpus partitions) swaps through it.
   *
   * The naive swap — delete(live) then rename(tmp, live) — has a window
   * where a crash leaves NO live layout, and a re-run fails resolving
   * the missing parquet path instead of completing the job. This helper
   * swaps by renames only (each atomic on HDFS-like filesystems), so
-  * every intermediate state is recoverable by [[recover]] on the next
-  * vacuum entry:
+  * every intermediate state is recoverable by [[recoverAll]] on the
+  * next maintenance entry:
   *
   *   1. crash while writing `.sub.compact`  → live intact; the re-run
   *      deletes the partial temp and rewrites it;
@@ -23,9 +24,9 @@ import org.apache.hadoop.fs.Path
   *   3. crash after rename-in but before the trash delete → live is
   *      the new layout; [[recover]] just drops the trash.
   *
-  * In every state the index's tombstones are still present (vacuums
-  * clear them only after all swaps commit), so the re-run that calls
-  * [[recover]] proceeds to a full — idempotent — re-vacuum. On
+  * In every state the store's tombstones are still present
+  * (maintenance clears them only after all swaps commit), so the
+  * re-run that recovers proceeds to a full — idempotent — rewrite. On
   * S3-style object stores rename is a copy, not atomic; run vacuums
   * there behind a committer or a table format. */
 private[llm] object IndexSwap {
@@ -33,17 +34,26 @@ private[llm] object IndexSwap {
     (new Path(s"$dir/$sub"), new Path(s"$dir/.$sub.compact"),
       new Path(s"$dir/.$sub.trash"))
 
-  /** Finish a swap a previous vacuum crashed in (see states above).
-    * Call on vacuum entry for every sub-layout the vacuum swaps,
-    * BEFORE reading the live directory. No-op on a clean index. */
-  def recover(conf: Configuration, dir: String, sub: String): Unit = {
-    val (live, tmp, trash) = paths(dir, sub)
-    val fs = live.getFileSystem(conf)
-    if (!fs.exists(live) && fs.exists(tmp))
-      require(fs.rename(tmp, live),
-        s"index swap recovery: rename $tmp -> $live failed")
-    fs.delete(trash, true)
-    ()
+  private val SwapRe = """^\.(.+)\.(compact|trash)$""".r
+
+  /** Finish every swap a previous maintenance run crashed in under
+    * `dir` (see states above): one recovery per sub-layout that left a
+    * `.sub.compact` / `.sub.trash` directory behind. Call on
+    * maintenance entry, BEFORE reading any live directory. One listing
+    * and no-op on a clean store. */
+  def recoverAll(conf: Configuration, dir: String): Unit = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(conf)
+    if (!fs.exists(root)) return
+    fs.listStatus(root).map(_.getPath.getName)
+      .collect { case SwapRe(sub, _) => sub }.distinct
+      .foreach { sub =>
+        val (live, tmp, trash) = paths(dir, sub)
+        if (!fs.exists(live) && fs.exists(tmp))
+          require(fs.rename(tmp, live),
+            s"index swap recovery: rename $tmp -> $live failed")
+        fs.delete(trash, true)
+      }
   }
 
   /** Write the compacted layout to `.sub.compact` via `write`, then

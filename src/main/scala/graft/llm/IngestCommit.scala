@@ -53,8 +53,7 @@ import org.apache.spark.sql.functions._
   * With the log in place, intra-batch WRITE ORDER no longer carries
   * correctness weight (uncommitted rows are invisible regardless of
   * which write crashed), and maintenance (vacuum/compaction) refuses
-  * to run over an in-flight batch — see
-  * `TextDedupOps.requireNoInFlightIngest`.
+  * to run over an in-flight batch — see [[maintain]].
   *
   * SINGLE-WRITER CONTRACT (r18 verdict task #4): one store (one commit
   * log) takes ONE ingest writer — a single streaming query whose
@@ -99,8 +98,17 @@ import org.apache.spark.sql.functions._
   * IndexSwap recovery + rewrite complete the job and release), or
   * [[breakMaintenanceLease]] clears it manually.
   *
-  * DELETES vs RECOVERY: tombstone deletes (the index tier's
-  * deleteFrom*) are legal at ANY point, including between a crashed
+  * STORE PROTOCOL: the four exactly-once stores — the ingested
+  * corpus, the LSH index, the SimHash store, the IVF-PQ index — share
+  * one tombstone delete/read/anti-join ([[appendTombstones]],
+  * [[readTombstones]], [[minusTombstones]]), one maintenance entry
+  * ([[maintain]]: lease, swap recovery, in-flight guard, the store's
+  * own rewrite, tombstone clear) and one publish-then-commit step
+  * ([[publishAndCommit]]), all defined in this module; each store
+  * keeps only its layout ([[Store]]) and its rewrite.
+  *
+  * DELETES vs RECOVERY: tombstone deletes (the deleteFrom* ops) are
+  * legal at ANY point, including between a crashed
   * ingest attempt and its replay — soundness rests on monotonicity:
   * a delete only REMOVES matches, so the replay's survivor set is
   * always a SUPERSET of the crashed attempt's, and the exceptAll
@@ -149,7 +157,7 @@ object IngestCommit {
 
   /** Maintenance-lease marker prefix — `maint-<nanotime stamp>`.
     * Deliberately OUTSIDE MarkerRe: lease files are invisible to the
-    * hwm/in-flight parse and survive [[compactLog]]. */
+    * hwm/in-flight parse and survive [[compactIngestLog]]. */
   private val LeasePrefix = "maint-"
 
   /** (committed high-water-mark, begun-but-uncommitted batch ids,
@@ -295,21 +303,6 @@ object IngestCommit {
     finally { fs.delete(tokenP, false); () }
   }
 
-  /** Fold a fully-committed ingest log to its single max commit
-    * marker — the PUBLIC entry for stores with no index-maintenance
-    * op to do it for them (the exact-dedup corpus log at
-    * `corpusDir/_commits`, the SimHash hashes log at
-    * `hashesDir/_commits`; the LSH and IVF-PQ logs fold inside
-    * compactLshIndex / compactIvfPqIndex): a long-lived nightly
-    * otherwise accumulates 1-2 marker files per batch and pays an
-    * ever-growing directory listing on every hwm read. Refuses over
-    * an in-flight (begun, uncommitted) batch; otherwise idempotent
-    * and safe to run between batches — markers created AFTER its
-    * listing are never touched, and every intermediate state of a
-    * crashed fold parses to the same (hwm, in-flight). */
-  def compactIngestLog(spark: SparkSession, logDir: String): Unit =
-    compactLog(spark, logDir)
-
   /** Clear maintenance lease(s) left by a maintainer that died
     * mid-rewrite — the MANUAL stale-lease override. Prefer re-running
     * the maintenance op itself: it recovers the layout AND releases
@@ -327,18 +320,23 @@ object IngestCommit {
       }
   }
 
-  /** Collapse a fully-committed log to its max commit marker — called
-    * from [[TextDedupOps.compactLshIndex]] under its no-in-flight
-    * guard. Idempotent: a crash mid-delete leaves extra markers whose
-    * parse is unchanged (hwm = max commit). */
-  private[llm] def compactLog(spark: SparkSession,
-      logDir: String): Unit = {
+  /** Fold a fully-committed ingest log to its single max commit
+    * marker: a long-lived nightly otherwise accumulates 1-2 marker
+    * files per batch and pays an ever-growing directory listing on
+    * every hwm read. Public for the exact-dedup corpus log
+    * (`corpusDir/_commits`), which has no maintenance op to fold it;
+    * the index compactions fold their logs themselves. Refuses over
+    * an in-flight (begun, uncommitted) batch; otherwise idempotent
+    * and safe to run between batches — markers created AFTER its
+    * listing are never touched, and every intermediate state of a
+    * crashed fold parses to the same (hwm, in-flight). */
+  def compactIngestLog(spark: SparkSession, logDir: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(logDir)
     val fs = fsOf(spark, p)
     if (!fs.exists(p)) return
     val (hwm, inFlight) = logState(spark, logDir)
     require(inFlight.isEmpty,
-      s"compactLog: in-flight ingest batch(es) at $logDir: " +
+      s"compactIngestLog: in-flight ingest batch(es) at $logDir: " +
         inFlight.toSeq.sorted.mkString(", "))
     if (hwm < 0) return
     val keep = s"commit-$hwm"
@@ -352,6 +350,147 @@ object IngestCommit {
       }
       ()
     }
+  }
+
+  // ----- Shared STORE protocol (see the header) ----------------------
+
+  /** One exactly-once store's layout: its data directory, its commit
+    * log, its tombstone directory, and the ingest wrapper that writes
+    * it (the one to replay when maintenance finds a batch in flight). */
+  private[llm] final case class Store(dir: String, logDir: String,
+      tombDir: String, ingest: String)
+
+  private[llm] def lshStore(dir: String): Store =
+    Store(dir, s"$dir/commits", s"$dir/tombstones", "nearDupIngestBatch")
+  private[llm] def simHashStore(dir: String): Store =
+    Store(dir, s"$dir/_commits", s"$dir/tombstones", "simHashIngestBatch")
+  private[llm] def ivfPqStore(dir: String): Store =
+    Store(dir, s"$dir/commits", s"$dir/tombstones", "ivfPqIngestBatch")
+
+  /** The ingested corpus — the underscores keep Spark's listing from
+    * reading the log and the tombstones as corpus data. `logDir` is
+    * the pipeline's commit log; empty means the exact-dedup loop's
+    * own `corpusDir/_commits`. */
+  private[llm] def corpusStore(corpusDir: String, logDir: String): Store =
+    if (logDir.isEmpty)
+      Store(corpusDir, s"$corpusDir/_commits", s"$corpusDir/_tombstones",
+        "exactDedupIngestBatch")
+    else Store(corpusDir, logDir, s"$corpusDir/_tombstones",
+      s"the ingest wrapper committing to $logDir")
+
+  /** Append `ids` (cast to long, keyed `idCol`) to a store's
+    * tombstones. Deleting an absent id is a harmless no-op. */
+  private[llm] def appendTombstones(ids: DataFrame, store: Store,
+      idCol: String): Unit =
+    ids.select(col(idCol).cast("long").as(idCol)).distinct()
+      .coalesce(1) // deletes are metadata-sized next to any store
+      .write.mode("append").parquet(store.tombDir)
+
+  /** A store's pending tombstones as a slim distinct long id set keyed
+    * `idCol` — or, when `idCol` is empty, by the tombstone file's own
+    * single column (the self-describing corpus takedowns). None when
+    * nothing is pending: one `exists` call, no Spark job. */
+  private[llm] def readTombstones(spark: SparkSession, store: Store,
+      idCol: String = ""): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(store.tombDir)
+    if (!fsOf(spark, p).exists(p)) None
+    else {
+      val raw = spark.read.parquet(store.tombDir)
+      val idc = if (idCol.isEmpty) raw.columns.head else idCol
+      Some(raw.select(col(idc).cast("long").as(idc)).distinct())
+    }
+  }
+
+  /** Anti-join `tomb` out of `df` on the tombstone set's own key column
+    * (cast to long on both sides — the stored id type). Broadcast: a
+    * tombstone set is deletes-sized, not store-sized. No tombstones →
+    * `df` unchanged, its plan byte-identical to a tombstone-free read. */
+  private[llm] def minusTombstones(df: DataFrame,
+      tomb: Option[DataFrame]): DataFrame =
+    tomb.fold(df) { t =>
+      val idc = t.columns.head
+      df.join(broadcast(t.withColumnRenamed(idc, "__tomb_id")),
+        df(idc).cast("long") === col("__tomb_id"), "left_anti")
+    }
+
+  /** Maintenance may only run between COMMITTED ingest batches: a
+    * rewrite folds every surviving row into the unstamped base (valid
+    * precisely because all rows are committed), so an in-flight or
+    * crashed-uncommitted batch at rewrite time would have its partial
+    * rows promoted to unconditionally-visible — the exact corruption
+    * the commit log exists to prevent. Fail with the remedy. */
+  private def requireNoInFlight(spark: SparkSession, store: Store,
+      op: String): Unit = {
+    val (_, inFlight) = logState(spark, store.logDir)
+    require(inFlight.isEmpty,
+      s"$op: store at ${store.dir} has in-flight (begun, uncommitted) " +
+        s"ingest batch(es) ${inFlight.toSeq.sorted.mkString(", ")} in " +
+        s"${store.logDir} — finish or replay the ingest (${store.ingest} " +
+        "recovers it) before maintenance")
+  }
+
+  /** The one maintenance entry of every store's vacuum/compaction:
+    * take the lease on the store's log (ingest is excluded for the
+    * WHOLE rewrite window, not just at this entry check — an append
+    * racing a swap would land in the old directory and be silently
+    * dropped by the rename), finish every [[IndexSwap]] a crashed run
+    * left, refuse over an in-flight batch, run the store's own
+    * `rewrite` over its pending tombstones ([[readTombstones]] keyed
+    * `idCol`), and clear those tombstones LAST — only when there were
+    * some — so a re-run completes the job from EVERY intermediate
+    * state. Each rewrite swaps its
+    * layouts through IndexSwap (renames only: atomic on HDFS-like
+    * filesystems, a copy on S3-style object stores — maintain there
+    * behind a committer or a table format). The exactly-once wrappers
+    * are excluded by the lease; DIRECT appends (writeLshIndex append,
+    * appendIvfPqIndex) must still pause their writer themselves. */
+  private[llm] def maintain(spark: SparkSession, store: Store, op: String,
+      idCol: String = "")(rewrite: Option[DataFrame] => Unit): Unit =
+    withMaintenanceLease(spark, store.logDir, op) {
+      IndexSwap.recoverAll(spark.sparkContext.hadoopConfiguration,
+        store.dir)
+      requireNoInFlight(spark, store, op)
+      val tomb = readTombstones(spark, store, idCol)
+      rewrite(tomb)
+      if (tomb.nonEmpty) {
+        val tombP = new org.apache.hadoop.fs.Path(store.tombDir)
+        fsOf(spark, tombP).delete(tombP, true)
+      }
+      ()
+    }
+
+  /** The default no-op failpoint. Reference-compared in
+    * [[publishAndCommit]]: with it, the corpus publish and the index
+    * append run CONCURRENTLY (independent outputs, both invisible
+    * until the commit marker — crash order carries no correctness
+    * weight under the log); any custom failpoint forces the
+    * sequential corpus→index order so kill specs can target the exact
+    * inter-write states. */
+  val NoFailpoint: String => Unit = _ => ()
+
+  /** Publish one batch's corpus partition and index append, then
+    * commit it — the shared tail of the index ingest wrappers.
+    * Concurrent under [[NoFailpoint]], sequential (with the
+    * "after-corpus" / "after-index" crash points) otherwise; a failure
+    * rethrows only AFTER both writes settle, so no stray in-flight
+    * write may outlive this batch into the next. */
+  private def publishAndCommit(spark: SparkSession, logDir: String,
+      batchId: Long, failpoint: String => Unit)(writeCorpus: => Unit)
+      (writeIndex: => Unit): Boolean = {
+    if (failpoint eq NoFailpoint) {
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      import scala.concurrent.duration.Duration
+      val f1 = Future(writeCorpus); val f2 = Future(writeIndex)
+      val r1 = scala.util.Try(Await.result(f1, Duration.Inf))
+      val r2 = scala.util.Try(Await.result(f2, Duration.Inf))
+      r1.get; r2.get
+    } else {
+      writeCorpus; failpoint("after-corpus")
+      writeIndex; failpoint("after-index")
+    }
+    appendLog(spark, logDir, batchId, "commit")
+    true
   }
 
   /** The COMMITTED corpus view: partition directories with
@@ -368,7 +507,7 @@ object IngestCommit {
       s"committedCorpus: no committed ingest batch recorded at $logDir")
     val base = spark.read.option("basePath", corpusDir).parquet(corpusDir)
       .filter(col("ingest_id") <= hwm).drop("ingest_id")
-    minusCorpusTombstones(spark, corpusDir, base)
+    minusTombstones(base, corpusTombstones(spark, corpusDir, base.columns))
   }
 
   /** The committed corpus AS OF an earlier batch — the snapshot read
@@ -393,19 +532,15 @@ object IngestCommit {
         "data never serves")
     val base = spark.read.option("basePath", corpusDir).parquet(corpusDir)
       .filter(col("ingest_id") <= asOfBatch).drop("ingest_id")
-    minusCorpusTombstones(spark, corpusDir, base)
+    minusTombstones(base, corpusTombstones(spark, corpusDir, base.columns))
   }
 
   // ----- Corpus TAKEDOWN tier (r19) ---------------------------------
-  // The matching indexes have had tombstone deletes since r16; the
-  // ingested CORPUS itself had none — yet at 100 TB the most common
-  // delete is not curation but COMPLIANCE: "remove these documents
-  // from the training corpus" (takedown, opt-out, license recall),
-  // which must not cost a corpus-sized rewrite. Same design as the
-  // index tier: ids append to `corpusDir/_tombstones` (metadata-sized;
-  // the underscore keeps Spark's listing from reading it as data),
-  // every committed read anti-joins them out immediately, and
-  // [[vacuumCorpus]] folds them physically — rewriting ONLY the
+  // At 100 TB the most common delete is not curation but COMPLIANCE:
+  // "remove these documents from the training corpus" (takedown,
+  // opt-out, license recall), which must not cost a corpus-sized
+  // rewrite. The store protocol above applies with the corpus layout
+  // ([[corpusStore]]), and [[vacuumCorpus]] rewrites ONLY the
   // partitions that hold tombstoned rows, so the physical cost is
   // O(affected batches), not O(corpus).
   //
@@ -427,45 +562,35 @@ object IngestCommit {
     * name must be the corpus' id column. */
   def deleteFromCorpus(ids: DataFrame, corpusDir: String,
       idCol: String = "doc_id"): Unit =
-    ids.select(col(idCol).cast("long").as(idCol)).distinct()
-      .coalesce(1) // deletes are metadata-sized next to the corpus
-      .write.mode("append").parquet(s"$corpusDir/_tombstones")
+    appendTombstones(ids, corpusStore(corpusDir, ""), idCol)
 
-  private def corpusTombstones(spark: SparkSession,
-      corpusDir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$corpusDir/_tombstones")
-    if (fsOf(spark, p).exists(p))
-      Some(spark.read.parquet(p.toString))
-    else None
+  /** The corpus' pending takedowns (read only when tombstones exist). */
+  private def corpusTombstones(spark: SparkSession, corpusDir: String,
+      corpusCols: => Array[String]): Option[DataFrame] =
+    readTombstones(spark, corpusStore(corpusDir, ""))
+      .map(requireCorpusKey(corpusDir, corpusCols, _))
+
+  /** `tomb`, once the column it keys on — the one the tombstone file
+    * names — is checked to be one of the corpus' `corpusCols`. */
+  private def requireCorpusKey(corpusDir: String,
+      corpusCols: Array[String], tomb: DataFrame): DataFrame = {
+    val idc = tomb.columns.head
+    require(corpusCols.contains(idc),
+      s"corpus tombstones at $corpusDir/_tombstones key on '$idc' " +
+        s"but the corpus columns are ${corpusCols.mkString(", ")} — " +
+        "deleteFromCorpus must use the corpus' id column")
+    tomb
   }
-
-  /** Anti-join pending corpus tombstones out of `df` (no tombstones →
-    * `df` unchanged, plan byte-identical to the pre-takedown read). */
-  private def minusCorpusTombstones(spark: SparkSession,
-      corpusDir: String, df: DataFrame): DataFrame =
-    corpusTombstones(spark, corpusDir).fold(df) { t =>
-      val idc = t.columns.head
-      require(df.columns.contains(idc),
-        s"corpus tombstones at $corpusDir/_tombstones key on '$idc' " +
-          s"but the corpus columns are ${df.columns.mkString(", ")} — " +
-          "deleteFromCorpus must use the corpus' id column")
-      df.join(broadcast(t.select(col(idc).cast("long").as("__tomb_id"))
-          .distinct()),
-        df(idc).cast("long") === col("__tomb_id"), "left_anti")
-    }
 
   /** Fold accumulated corpus tombstones into a PHYSICAL rewrite of
     * exactly the `ingest_id=<n>` partitions that hold tombstoned rows
     * — O(affected batches), never O(corpus). Each partition swaps
-    * through [[IndexSwap]] (renames only, recovered on entry), and
-    * the tombstone file clears LAST, so a crash at ANY point re-runs
-    * to completion with the logical view ([[committedCorpus]])
-    * unchanged throughout. Runs under the maintenance lease on
-    * `logDir` — the pipeline's commit log (`corpusDir/_commits` for
-    * the exact-dedup loop, the default; `indexDir/commits` etc. for
-    * the index pipelines), so the wrapper's ingest is excluded for
-    * the whole rewrite — and refuses over an in-flight batch. Same
-    * object-store rename caveat as every IndexSwap user.
+    * through [[IndexSwap]], and the run goes through [[maintain]]
+    * under the lease on `logDir` — the pipeline's commit log
+    * (`corpusDir/_commits` for the exact-dedup loop, the default;
+    * `indexDir/commits` etc. for the index pipelines) — so a crash at
+    * ANY point re-runs to completion with the logical view
+    * ([[committedCorpus]]) unchanged throughout.
     *
     * `failpoint` is a test hook ("after-partition" per swapped
     * partition, "before-tombstone-clear"); production callers leave
@@ -473,65 +598,32 @@ object IngestCommit {
   def vacuumCorpus(spark: SparkSession, corpusDir: String,
       logDir: String = "",
       failpoint: String => Unit = NoFailpoint): Unit = {
-    val log = if (logDir.isEmpty) s"$corpusDir/_commits" else logDir
-    withMaintenanceLease(spark, log, "vacuumCorpus") {
-      val conf = spark.sparkContext.hadoopConfiguration
-      recoverCorpusSwaps(spark, corpusDir)
-      val (_, inFlight) = logState(spark, log)
-      require(inFlight.isEmpty,
-        s"vacuumCorpus: corpus at $corpusDir has in-flight (begun, " +
-          s"uncommitted) ingest batch(es) " +
-          s"${inFlight.toSeq.sorted.mkString(", ")} in $log — finish " +
-          "or replay the ingest before maintenance")
-      corpusTombstones(spark, corpusDir).foreach { tombRaw =>
-        val idc = tombRaw.columns.head
-        val tomb = tombRaw.select(col(idc).cast("long").as("__tomb_id"))
-          .distinct()
+    val store = corpusStore(corpusDir, logDir)
+    maintain(spark, store, "vacuumCorpus") { pending =>
+      pending.foreach { tomb0 =>
         val base = spark.read.option("basePath", corpusDir)
           .parquet(corpusDir)
-        require(base.columns.contains(idc),
-          s"corpus tombstones at $corpusDir/_tombstones key on " +
-            s"'$idc' but the corpus columns are " +
-            base.columns.mkString(", "))
+        val tomb = requireCorpusKey(corpusDir, base.columns, tomb0)
+        val idc = tomb.columns.head
         // the partitions that actually hold tombstoned rows — bounded
         // by the batch count; the semi-join rides the slim id column
         val affected = base
-          .join(broadcast(tomb),
+          .join(broadcast(tomb.withColumnRenamed(idc, "__tomb_id")),
             base(idc).cast("long") === col("__tomb_id"), "left_semi")
           .select(col("ingest_id").cast("long")).distinct()
           .collect().map(_.getLong(0)).sorted
         affected.foreach { pid =>
           val sub = s"ingest_id=$pid"
-          IndexSwap.swapIn(conf, corpusDir, sub) { tmp =>
-            val part = spark.read.parquet(s"$corpusDir/$sub")
-            part.join(broadcast(tomb),
-                part(idc).cast("long") === col("__tomb_id"), "left_anti")
-              .write.parquet(tmp)
+          IndexSwap.swapIn(spark.sparkContext.hadoopConfiguration,
+              corpusDir, sub) { tmp =>
+            minusTombstones(spark.read.parquet(s"$corpusDir/$sub"),
+              Some(tomb)).write.parquet(tmp)
           }
           failpoint("after-partition")
         }
       }
       failpoint("before-tombstone-clear")
-      val tombP = new org.apache.hadoop.fs.Path(s"$corpusDir/_tombstones")
-      fsOf(spark, tombP).delete(tombP, true) // LAST — a re-run of any
-                                             // crashed state completes
-      ()
     }
-  }
-
-  /** Finish partition swaps a previous [[vacuumCorpus]] crashed in —
-    * one [[IndexSwap.recover]] per partition with a leftover
-    * `.ingest_id=<n>.compact` / `.trash` directory. */
-  private def recoverCorpusSwaps(spark: SparkSession,
-      corpusDir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(corpusDir)
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) return
-    val SwapRe = """^\.(ingest_id=[^/.]+)\.(compact|trash)$""".r
-    val conf = spark.sparkContext.hadoopConfiguration
-    fs.listStatus(p).map(_.getPath.getName)
-      .collect { case SwapRe(sub, _) => sub }.distinct
-      .foreach(sub => IndexSwap.recover(conf, corpusDir, sub))
   }
 
   /** Exactly-once EXACT-dedup ingest of one foreachBatch micro-batch:
@@ -551,7 +643,7 @@ object IngestCommit {
       textCol: String = "text",
       failpoint: String => Unit = _ => ()): Boolean = {
     val spark = batch.sparkSession
-    val logDir = s"$corpusDir/_commits"
+    val logDir = corpusStore(corpusDir, "").logDir
     if (beginIngest(spark, logDir, batchId, "exactDedupIngestBatch",
         writeAhead = false).isEmpty) return false
     val hwm = committedHwm(spark, logDir).getOrElse(-1L)
@@ -559,12 +651,13 @@ object IngestCommit {
     // taken-down document surrenders its claim on the content, so a
     // later copy of its text is admitted again (the index-delete rule)
     val existing =
-      if (hwm >= 0)
-        minusCorpusTombstones(spark, corpusDir,
-          spark.read.option("basePath", corpusDir).parquet(corpusDir)
-            .filter(col("ingest_id") <= hwm))
+      if (hwm >= 0) {
+        val committed = spark.read.option("basePath", corpusDir)
+          .parquet(corpusDir).filter(col("ingest_id") <= hwm)
+        minusTombstones(committed,
+          corpusTombstones(spark, corpusDir, committed.columns))
           .select(col(textCol))
-      else batch.select(col(textCol)).limit(0)
+      } else batch.select(col(textCol)).limit(0)
     TextDedupOps.dedupIncremental(batch, existing, idCol, textCol)
       .write.mode("overwrite").parquet(s"$corpusDir/ingest_id=$batchId")
     failpoint("after-corpus")
@@ -572,49 +665,6 @@ object IngestCommit {
     true
   }
 
-  /** Exactly-once NEAR-DUP ingest of one foreachBatch micro-batch
-    * against a persisted LSH index: survivors are computed against the
-    * COMMITTED index view, published to `corpusDir/ingest_id=<batch>`,
-    * their signatures appended to the index stamped with the batch id,
-    * and the batch committed — in that order, though under the log the
-    * order is a convention, not a correctness dependency. Returns
-    * false (no storage writes) for an already-committed batch.
-    *
-    * Driver-cost shape (the r17 witness measured ~10 actions per
-    * micro-batch): here the banded join + component rounds run ONCE —
-    * the slim survivor-ID set is checkpointed and the corpus write,
-    * bands append, and sigs append all derive from checkpointed
-    * inputs — and `kKnown` skips the per-append signature-length
-    * probe job.
-    *
-    * `failpoint` is a test hook invoked at the named crash points
-    * ("after-survivors", "after-corpus", "after-index"); production
-    * callers leave the default no-op. */
-  /** The default no-op failpoint. Reference-compared in
-    * [[nearDupIngestBatch]] / [[simHashIngestBatch]]: with it, the
-    * corpus publish and the index append run CONCURRENTLY
-    * (independent outputs, both invisible until the commit marker —
-    * crash order carries no correctness weight under the log); any
-    * custom failpoint forces the sequential corpus→index order so
-    * kill specs can target the exact inter-write states. */
-  val NoFailpoint: String => Unit = _ => ()
-
-  /** Exactly-once SIMHASH near-dup ingest — the banded-Hamming twin
-    * of [[nearDupIngestBatch]] over the cheapest persisted index
-    * (8 bytes of hash per document): survivors are computed against
-    * the COMMITTED, tombstone-filtered hash view
-    * ([[TextDedupOps.committedSimHashes]] — deletes via
-    * [[TextDedupOps.deleteFromSimHashStore]] take effect on the next
-    * batch's matching immediately), published to
-    * `corpusDir/ingest_id=<batch>`, and their hashes appended under
-    * `hashesDir/hashes` stamped with the batch id (r18 root-layout
-    * stores migrate on first touch); the commit log lives at
-    * `hashesDir/_commits`. This wrapper OWNS the store (every file it
-    * writes carries `ingest_id`); recovery after a mid-append crash
-    * subtracts the batch's already-visible rows exactly as the LSH
-    * path does, and [[TextDedupOps.compactSimHashStore]] is the
-    * maintenance tier (lease-guarded, like the siblings). Returns
-    * false (no writes) for a replay of the hwm batch. */
   /** Exactly-once IVF-PQ ingest — the EMBEDDING-store member of the
     * family: unlike the dedup loops there is no survivorship (the
     * index stores what it is given; `dedupIds = true` drops batch
@@ -632,13 +682,14 @@ object IngestCommit {
     * in-flight batch. Recovery after a mid-append crash subtracts the
     * already-visible stamped rows — sound because the encode is
     * deterministic against the STORED quantizers. Returns false (no
-    * writes) for an already-committed batch. */
+    * writes) for an already-committed batch. `failpoint` is a test
+    * hook ("after-batch", "after-corpus", "after-index"). */
   def ivfPqIngestBatch(newVectors: DataFrame, batchId: Long,
       indexDir: String, corpusDir: String, cId: String = "vec_id",
       embCol: String = "embedding", dedupIds: Boolean = false,
       failpoint: String => Unit = NoFailpoint): Boolean = {
     val spark = newVectors.sparkSession
-    val logDir = s"$indexDir/commits"
+    val logDir = ivfPqStore(indexDir).logDir
     val recover = beginIngest(spark, logDir, batchId,
       "ivfPqIngestBatch", writeAhead = true) match {
       case None => return false
@@ -673,35 +724,39 @@ object IngestCommit {
       .localCheckpoint(true) // consumed twice; caller lineage may be
                              // expensive and must not run per write
     failpoint("after-batch")
-    def writeCorpus(): Unit =
+    publishAndCommit(spark, logDir, batchId, failpoint) {
       batch.write.mode("overwrite")
         .parquet(s"$corpusDir/ingest_id=$batchId")
-    def writeIndex(): Unit =
+    } {
       SimilarityOps.appendIvfPqIndex(batch, indexDir, cId, embCol,
         ingestId = Some(batchId), recover = recover)
-    if (failpoint eq NoFailpoint) {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val f1 = Future(writeCorpus()); val f2 = Future(writeIndex())
-      val r1 = scala.util.Try(Await.result(f1, Duration.Inf))
-      val r2 = scala.util.Try(Await.result(f2, Duration.Inf))
-      r1.get; r2.get
-    } else {
-      writeCorpus(); failpoint("after-corpus")
-      writeIndex(); failpoint("after-index")
     }
-    appendLog(spark, logDir, batchId, "commit")
-    true
   }
 
+  /** Exactly-once SIMHASH near-dup ingest — the banded-Hamming twin
+    * of [[nearDupIngestBatch]] over the cheapest persisted index
+    * (8 bytes of hash per document): survivors are computed against
+    * the COMMITTED, tombstone-filtered hash view
+    * ([[TextDedupOps.committedSimHashes]] — deletes via
+    * [[TextDedupOps.deleteFromSimHashStore]] take effect on the next
+    * batch's matching immediately), published to
+    * `corpusDir/ingest_id=<batch>`, and their hashes appended under
+    * `hashesDir/hashes` stamped with the batch id (r18 root-layout
+    * stores migrate on first touch); the commit log lives at
+    * `hashesDir/_commits`. This wrapper OWNS the store (every file it
+    * writes carries `ingest_id`); recovery after a mid-append crash
+    * subtracts the batch's already-visible rows exactly as the LSH
+    * path does, and [[TextDedupOps.compactSimHashStore]] is the
+    * maintenance tier. Returns false (no writes) for a replay of the
+    * hwm batch. `failpoint` is a test hook ("after-survivors",
+    * "after-corpus", "after-index"). */
   def simHashIngestBatch(batch: DataFrame, batchId: Long,
       hashesDir: String, corpusDir: String, idCol: String = "doc_id",
       textCol: String = "text", maxHamming: Int = 3, bands: Int = 4,
       maxBucketSize: Int = Int.MaxValue,
       failpoint: String => Unit = NoFailpoint): Boolean = {
     val spark = batch.sparkSession
-    val logDir = s"$hashesDir/_commits"
+    val logDir = simHashStore(hashesDir).logDir
     val recover = beginIngest(spark, logDir, batchId,
       "simHashIngestBatch", writeAhead = true) match {
       case None => return false
@@ -729,10 +784,10 @@ object IngestCommit {
     // committed view must serve
     val survHashes = TextDedupOps.simHash(surv, idCol, textCol)
       .select(col(idCol).cast("long").as(idCol), col("simhash"))
-    def writeCorpus(): Unit =
+    publishAndCommit(spark, logDir, batchId, failpoint) {
       surv.write.mode("overwrite")
         .parquet(s"$corpusDir/ingest_id=$batchId")
-    def writeIndex(): Unit = {
+    } {
       val dataP = new org.apache.hadoop.fs.Path(dataDir)
       val hasData = fsOf(spark, dataP).exists(dataP)
       val toWrite =
@@ -751,22 +806,26 @@ object IngestCommit {
       toWrite.withColumn("ingest_id", lit(batchId))
         .write.mode("append").parquet(dataDir)
     }
-    if (failpoint eq NoFailpoint) {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val f1 = Future(writeCorpus()); val f2 = Future(writeIndex())
-      val r1 = scala.util.Try(Await.result(f1, Duration.Inf))
-      val r2 = scala.util.Try(Await.result(f2, Duration.Inf))
-      r1.get; r2.get
-    } else {
-      writeCorpus(); failpoint("after-corpus")
-      writeIndex(); failpoint("after-index")
-    }
-    appendLog(spark, logDir, batchId, "commit")
-    true
   }
 
+  /** Exactly-once NEAR-DUP ingest of one foreachBatch micro-batch
+    * against a persisted LSH index: survivors are computed against the
+    * COMMITTED index view, published to `corpusDir/ingest_id=<batch>`,
+    * their signatures appended to the index stamped with the batch id,
+    * and the batch committed — in that order, though under the log the
+    * order is a convention, not a correctness dependency. Returns
+    * false (no storage writes) for an already-committed batch.
+    *
+    * Driver-cost shape (the r17 witness measured ~10 actions per
+    * micro-batch): here the banded join + component rounds run ONCE —
+    * the slim survivor-ID set is checkpointed and the corpus write,
+    * bands append, and sigs append all derive from checkpointed
+    * inputs — and `kKnown` skips the per-append signature-length
+    * probe job.
+    *
+    * `failpoint` is a test hook invoked at the named crash points
+    * ("after-survivors", "after-corpus", "after-index"); production
+    * callers leave the default no-op. */
   def nearDupIngestBatch(batch: DataFrame, batchId: Long,
       indexDir: String, corpusDir: String, idCol: String = "doc_id",
       textCol: String = "text", shingleN: Int = 3, k: Int = 32,
@@ -774,7 +833,7 @@ object IngestCommit {
       maxBucketSize: Int = Int.MaxValue,
       failpoint: String => Unit = NoFailpoint): Boolean = {
     val spark = batch.sparkSession
-    val logDir = s"$indexDir/commits"
+    val logDir = lshStore(indexDir).logDir
     val recover = beginIngest(spark, logDir, batchId,
       "nearDupIngestBatch", writeAhead = true) match {
       case None => return false
@@ -794,27 +853,13 @@ object IngestCommit {
     val survSigs = nwSigs
       .select(shiftright(col(idCol), 1).as(idCol), col("signature"))
       .join(ids, Seq(idCol), "left_semi")
-    def writeCorpus(): Unit =
+    publishAndCommit(spark, logDir, batchId, failpoint) {
       surv.write.mode("overwrite")
         .parquet(s"$corpusDir/ingest_id=$batchId")
-    def writeIndex(): Unit =
+    } {
       TextDedupOps.appendSigsToIndex(survSigs, indexDir, idCol, bands,
         shingleN, ingestId = Some(batchId), recover = recover,
         kKnown = Some(k))
-    if (failpoint eq NoFailpoint) {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val f1 = Future(writeCorpus()); val f2 = Future(writeIndex())
-      val r1 = scala.util.Try(Await.result(f1, Duration.Inf))
-      val r2 = scala.util.Try(Await.result(f2, Duration.Inf))
-      r1.get; r2.get // rethrow AFTER both settle — no stray in-flight
-                     // write may outlive this batch into the next
-    } else {
-      writeCorpus(); failpoint("after-corpus")
-      writeIndex(); failpoint("after-index")
     }
-    appendLog(spark, logDir, batchId, "commit")
-    true
   }
 }

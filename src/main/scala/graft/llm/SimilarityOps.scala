@@ -1159,70 +1159,23 @@ object SimilarityOps {
     * Deleting an unindexed id is a harmless no-op. */
   def deleteFromIvfPqIndex(ids: DataFrame, dir: String,
       cId: String = "vec_id"): Unit =
-    ids.select(col(cId).cast("long").as(cId)).distinct()
-      .coalesce(1)
-      .write.mode("append").parquet(s"$dir/tombstones")
-
-  private def ivfPqTombstones(spark: org.apache.spark.sql.SparkSession,
-      dir: String, cId: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      Some(spark.read.parquet(p.toString)
-        .select(col(cId).cast("long").as(cId)).distinct())
-    else None
-  }
-
-  private def minusTombstones(df: DataFrame, tomb: Option[DataFrame],
-      cId: String): DataFrame =
-    tomb.fold(df) { t =>
-      df.join(broadcast(t.withColumnRenamed(cId, "__tomb_id")),
-        df(cId).cast("long") === col("__tomb_id"), "left_anti")
-    }
+    IngestCommit.appendTombstones(ids, IngestCommit.ivfPqStore(dir), cId)
 
   /** Fold accumulated tombstones into a PHYSICAL rewrite of
     * `dir/cells` (the only id-carrying layout — centroids and
     * codebooks are trainer state, untouched), preserving the
-    * partition-by-cell serving layout; tombstones clear LAST, so a
-    * crash mid-vacuum leaves them in place and a re-run completes the
-    * job. The swap runs through [[IndexSwap]] — renames only, with
-    * crash recovery on vacuum entry — so re-running recovers EVERY
+    * partition-by-cell serving layout. Runs through
+    * [[IngestCommit.maintain]] (lease, swap recovery, in-flight
+    * guard, tombstones cleared LAST), so re-running recovers EVERY
     * intermediate state, including the window where the old naive
-    * swap left no live directory at all (atomic on HDFS-like
-    * filesystems; an S3-style object store copies on rename — vacuum
-    * there behind a committer or a table format). The exactly-once
-    * ingest wrapper is excluded for the whole rewrite by the
-    * maintenance lease; direct appendIvfPqIndex callers must still
-    * pause their writer themselves. */
+    * swap left no live directory at all. No-op without tombstones. */
   def vacuumIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, cId: String = "vec_id"): Unit =
-    // LEASE: ingest excluded for the whole rewrite window (see
-    // IngestCommit.withMaintenanceLease — an append racing the swap
-    // would be silently dropped with the old cells directory)
-    IngestCommit.withMaintenanceLease(spark, s"$dir/commits",
-        "vacuumIvfPqIndex") {
-      val conf = spark.sparkContext.hadoopConfiguration
-      IndexSwap.recover(conf, dir, "cells")
+      dir: String, cId: String = "vec_id"): Unit = {
+    val store = IngestCommit.ivfPqStore(dir)
+    IngestCommit.maintain(spark, store, "vacuumIvfPqIndex", cId) { tomb =>
       checkIvfPqMeta(spark, dir)
-      requireNoInFlightIvfPqIngest(spark, dir, "vacuumIvfPqIndex")
-      val tomb = ivfPqTombstones(spark, dir, cId)
       if (tomb.nonEmpty) rewriteIvfPqCells(spark, dir, cId, tomb)
     }
-
-  /** Same contract as the LSH index's maintenance guard: the rewrite
-    * folds ingest stamps into the unstamped base (valid only when
-    * every row is committed), so an in-flight or crashed-uncommitted
-    * exactly-once ingest blocks maintenance with the recovery
-    * remedy. */
-  private def requireNoInFlightIvfPqIngest(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      op: String): Unit = {
-    val (_, inFlight) = IngestCommit.logState(spark, s"$dir/commits")
-    require(inFlight.isEmpty,
-      s"$op: index at $dir has in-flight (begun, uncommitted) ingest " +
-        s"batch(es) ${inFlight.toSeq.sorted.mkString(", ")} — finish " +
-        "or replay the ingest (IngestCommit.ivfPqIngestBatch recovers " +
-        "it) before maintenance")
   }
 
   /** COMPACT the cell partitions regardless of tombstones — the
@@ -1231,40 +1184,33 @@ object SimilarityOps {
     * per touched cell directory, so a long-running ingest accumulates
     * small files a probe must individually open. Rewrites the cells
     * layout through the same crash-recoverable swap (one file set per
-    * cell again), folding any pending tombstones along the way. */
+    * cell again), folding any pending tombstones along the way, then
+    * folds the commit log to its max marker like compactLshIndex. */
   def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, cId: String = "vec_id"): Unit =
-    // same lease rationale as vacuumIvfPqIndex
-    IngestCommit.withMaintenanceLease(spark, s"$dir/commits",
-        "compactIvfPqIndex") {
-      val conf = spark.sparkContext.hadoopConfiguration
-      IndexSwap.recover(conf, dir, "cells")
+      dir: String, cId: String = "vec_id"): Unit = {
+    val store = IngestCommit.ivfPqStore(dir)
+    IngestCommit.maintain(spark, store, "compactIvfPqIndex", cId) { tomb =>
       checkIvfPqMeta(spark, dir)
-      requireNoInFlightIvfPqIngest(spark, dir, "compactIvfPqIndex")
-      rewriteIvfPqCells(spark, dir, cId, ivfPqTombstones(spark, dir, cId))
-      // fold the commit log to its max marker, like compactLshIndex
-      // (marker-only deletes — the live lease survives the fold)
-      IngestCommit.compactLog(spark, s"$dir/commits")
+      rewriteIvfPqCells(spark, dir, cId, tomb)
+      IngestCommit.compactIngestLog(spark, store.logDir)
     }
+  }
 
   private def rewriteIvfPqCells(spark: org.apache.spark.sql.SparkSession,
       dir: String, cId: String, tomb: Option[DataFrame]): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
     // schema-pinned: a vacuum that tombstones every remaining id must
     // itself be re-runnable against the emptied layout it wrote
     // ingest stamps fold away (drop): every surviving row is committed
-    // (the no-in-flight guard gates both callers), and an unstamped
+    // (the maintenance entry's in-flight guard), and an unstamped
     // base row is visible at any high-water-mark
     val exCells = spark.read.schema(ivfPqCellsSchema(cId))
       .parquet(s"$dir/cells").drop("ingest_id")
-    IndexSwap.swapIn(conf, dir, "cells") { tmp =>
-      minusTombstones(exCells, tomb, cId)
+    IndexSwap.swapIn(spark.sparkContext.hadoopConfiguration, dir,
+        "cells") { tmp =>
+      IngestCommit.minusTombstones(exCells, tomb)
         .repartition(col("cell"))
         .write.partitionBy("cell").parquet(tmp)
     }
-    val tombPath = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    tombPath.getFileSystem(conf).delete(tombPath, true)
-    ()
   }
 
   /** The residual codebooks back from a persisted index
@@ -1310,14 +1256,15 @@ object SimilarityOps {
     // filters to COMMITTED rows — a crashed ingest's stamped partial
     // append must not serve; indexes without a log are unfiltered
     // (legacy behavior, plan unchanged).
-    val hwmOpt = IngestCommit.committedHwm(spark, s"$indexDir/commits")
+    val store = IngestCommit.ivfPqStore(indexDir)
+    val hwmOpt = IngestCommit.committedHwm(spark, store.logDir)
     val rawCells = spark.read.schema(ivfPqCellsSchema(cId))
       .parquet(s"$indexDir/cells")
       .filter(col("cell").isin(probedCells.map(c => c: Any): _*))
     val committedCells = hwmOpt.fold(rawCells)(h =>
       rawCells.filter(col("ingest_id").isNull || col("ingest_id") <= h))
-    val cc = minusTombstones(committedCells,
-        ivfPqTombstones(spark, indexDir, cId), cId)
+    val cc = IngestCommit.minusTombstones(committedCells,
+        IngestCommit.readTombstones(spark, store, cId))
       .select(col(cId), col("pq_codes").as("__codes"),
         col("recon_normsq").as("__cnormsq"), col("cell").as("__cell"))
     ivfPqScore(probed, qlut, cc, k, rerankFactor, Some(corpus), qId,

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import IngestCommit.{lshStore, minusTombstones, readTombstones,
+  simHashStore}
+
 /** Training-data deduplication operators (north-star LLM pipeline;
   * beyond the reference's surface — its only related primitive is
   * hash_pandas_object, pandas/core/util/hashing.py:49).
@@ -574,81 +577,22 @@ object TextDedupOps {
     * a few percent of the index, which also reclaims the scan). */
   def deleteFromLshIndex(ids: DataFrame, dir: String,
       idCol: String = "doc_id"): Unit =
-    ids.select(col(idCol).cast("long").as(idCol)).distinct()
-      .coalesce(1) // deletes are metadata-sized next to the index
-      .write.mode("append").parquet(s"$dir/tombstones")
-
-  private[llm] def lshTombstones(spark: org.apache.spark.sql.SparkSession,
-      dir: String, idCol: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      Some(spark.read.parquet(p.toString)
-        .select(col(idCol).cast("long").as(idCol)).distinct())
-    else None
-  }
-
-  /** Anti-join `df` against the index's tombstones on `idCol` (cast
-    * to long on both sides — the stored layout's id type). Broadcast:
-    * a tombstone set is deletes-sized, not index-sized. */
-  private[llm] def minusTombstones(df: DataFrame,
-      tomb: Option[DataFrame], idCol: String): DataFrame =
-    tomb.fold(df) { t =>
-      df.join(broadcast(t.withColumnRenamed(idCol, "__tomb_id")),
-        df(idCol).cast("long") === col("__tomb_id"), "left_anti")
-    }
+    IngestCommit.appendTombstones(ids, lshStore(dir), idCol)
 
   /** Fold accumulated tombstones into a PHYSICAL rewrite — the
     * compaction half of the delete contract: rewrite `dir/bands`
     * (restoring the init-time range layout) and `dir/sigs` without
-    * the deleted ids, then drop the tombstone set. Commit order is
-    * crash-safe by the same reasoning as [[writeLshIndex]]'s: bands
-    * swap FIRST (a crash then leaves deleted ids sigs-only — invisible
-    * to banding, which is the goal — with tombstones still present,
-    * so re-running the vacuum completes the job); tombstones clear
-    * LAST. Each layout swaps via [[IndexSwap]] — renames only, never a
-    * delete of the live directory before its replacement is in place —
-    * and vacuum entry first RECOVERS any swap a previous run crashed
-    * in, so re-running the vacuum completes the job from EVERY
-    * intermediate state (rename is atomic on HDFS-like filesystems;
-    * on S3-style object stores it is a copy — run vacuums there behind
-    * a committer or a table format). No-op without tombstones. The
-    * exactly-once ingest wrappers are excluded for the whole rewrite
-    * by the maintenance lease (an append racing the swap would lose
-    * its rows with the old directory); DIRECT appendSigsToIndex /
-    * writeLshIndex callers must still pause their writer themselves. */
+    * the deleted ids, then drop the tombstone set. Bands swap FIRST
+    * (a crash then leaves deleted ids sigs-only — invisible to
+    * banding, which is the goal — with tombstones still present), and
+    * the run goes through [[IngestCommit.maintain]], so re-running the
+    * vacuum completes the job from every intermediate state. No-op
+    * without tombstones. */
   def vacuumLshIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, idCol: String = "doc_id"): Unit =
-    // LEASE (IngestCommit.withMaintenanceLease): ingest is excluded
-    // for the WHOLE rewrite window, not just at this entry check — an
-    // append racing the swap would land in the old directory and be
-    // silently dropped by the rename
-    IngestCommit.withMaintenanceLease(spark, s"$dir/commits",
-        "vacuumLshIndex") {
-      val conf = spark.sparkContext.hadoopConfiguration
-      IndexSwap.recover(conf, dir, "bands")
-      IndexSwap.recover(conf, dir, "sigs")
-      requireNoInFlightIngest(spark, dir, "vacuumLshIndex")
-      val tomb = lshTombstones(spark, dir, idCol)
-      if (tomb.nonEmpty) rewriteLshIndex(spark, dir, idCol, tomb)
+    IngestCommit.maintain(spark, lshStore(dir), "vacuumLshIndex", idCol) {
+      tomb => if (tomb.nonEmpty) rewriteLshIndex(spark, dir, idCol, tomb)
     }
-
-  /** Maintenance may only run between COMMITTED ingest batches: the
-    * rewrite folds every surviving row into the unstamped base (valid
-    * precisely because all rows are committed), so an in-flight or
-    * crashed-uncommitted ingest at rewrite time would have its partial
-    * rows promoted to unconditionally-visible — the exact corruption
-    * the commit log exists to prevent. Fail with the remedy. */
-  private def requireNoInFlightIngest(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      op: String): Unit = {
-    val (_, inFlight) = IngestCommit.logState(spark, s"$dir/commits")
-    require(inFlight.isEmpty,
-      s"$op: index at $dir has in-flight (begun, uncommitted) ingest " +
-        s"batch(es) ${inFlight.toSeq.sorted.mkString(", ")} — finish " +
-        "or replay the ingest (IngestCommit.nearDupIngestBatch " +
-        "recovers it) before maintenance")
-  }
 
   /** COMPACT the index layout regardless of tombstones — the
     * append-heavy maintenance twin of [[vacuumLshIndex]] (which no-ops
@@ -658,26 +602,16 @@ object TextDedupOps {
     * range layout (per-file band_hash runs are what keep banded reads
     * skipping). This rewrites bands+sigs through the same
     * crash-recoverable swap, restoring the range layout and folding
-    * any pending tombstones along the way. Same lease protection and
-    * object-store caveats as vacuum. */
+    * any pending tombstones along the way, then folds the commit log:
+    * ingest creates one begin + one commit marker per batch, and every
+    * batch is committed here, so the history collapses to the max
+    * commit marker (the live lease survives — only markers fold). */
   def compactLshIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, idCol: String = "doc_id"): Unit =
-    // same lease rationale as vacuumLshIndex — ingest excluded for
-    // the whole rewrite window, with crashed-maintenance takeover
-    IngestCommit.withMaintenanceLease(spark, s"$dir/commits",
-        "compactLshIndex") {
-      val conf = spark.sparkContext.hadoopConfiguration
-      IndexSwap.recover(conf, dir, "bands")
-      IndexSwap.recover(conf, dir, "sigs")
-      requireNoInFlightIngest(spark, dir, "compactLshIndex")
-      rewriteLshIndex(spark, dir, idCol, lshTombstones(spark, dir, idCol))
-      // fold the commit log too: ingest creates one begin + one commit
-      // marker per batch, and a long-lived index would otherwise pay an
-      // ever-growing listing on every hwm read. All batches are
-      // committed here (guard above), so the entire history collapses
-      // to the max commit marker — same skip semantics. The fold only
-      // touches recognized markers, so the live lease survives it.
-      IngestCommit.compactLog(spark, s"$dir/commits")
+    IngestCommit.maintain(spark, lshStore(dir), "compactLshIndex", idCol) {
+      tomb =>
+        rewriteLshIndex(spark, dir, idCol, tomb)
+        IngestCommit.compactIngestLog(spark, lshStore(dir).logDir)
     }
 
   private def rewriteLshIndex(spark: org.apache.spark.sql.SparkSession,
@@ -686,7 +620,7 @@ object TextDedupOps {
     def swapIn(sub: String)(write: String => Unit): Unit =
       IndexSwap.swapIn(conf, dir, sub)(write)
     // the rewrite FOLDS ingest stamps to NULL: every surviving row is
-    // committed (requireNoInFlightIngest gates both callers), and a
+    // committed (the maintenance entry's in-flight guard), and a
     // null-stamped row is visible at any high-water-mark. The COLUMN
     // itself is kept — every r18+ write carries it, and the ingest
     // loop's plain (non-merged) sigs read rejects a logged store
@@ -696,7 +630,7 @@ object TextDedupOps {
     val exBands = spark.read.schema(bandsReadSchema(idCol))
       .parquet(s"$dir/bands").withColumn("ingest_id", nullStamp)
     swapIn("bands") { tmp =>
-      minusTombstones(exBands, tomb, idCol)
+      minusTombstones(exBands, tomb)
         .repartitionByRange(col("band"), col("band_hash"))
         .sortWithinPartitions("band", "band_hash")
         .write.partitionBy("band").parquet(tmp)
@@ -707,11 +641,8 @@ object TextDedupOps {
     val exSigs = sigsMergedRead(spark, dir)
       .withColumn("ingest_id", nullStamp)
     swapIn("sigs") { tmp =>
-      minusTombstones(exSigs, tomb, idCol).write.parquet(tmp)
+      minusTombstones(exSigs, tomb).write.parquet(tmp)
     }
-    val tombPath = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    tombPath.getFileSystem(conf).delete(tombPath, true)
-    ()
   }
 
   /** Post-crash index reconciliation: (ids only in bands, ids only in
@@ -730,22 +661,22 @@ object TextDedupOps {
   def lshIndexOrphans(spark: org.apache.spark.sql.SparkSession,
       dir: String, idCol: String = "doc_id"): (Long, Long, Long) = {
     val (bands, _, _) = readLshMeta(spark, dir)
-    val hwmOpt = IngestCommit.committedHwm(spark, s"$dir/commits")
+    val hwmOpt = IngestCommit.committedHwm(spark, lshStore(dir).logDir)
     def committed(df: DataFrame): DataFrame = hwmOpt.fold(df)(h =>
       df.filter(col("ingest_id").isNull || col("ingest_id") <= h))
     // tombstoned ids are LOGICALLY deleted — a crashed vacuum (bands
     // swapped, sigs not yet) must not read as sig-orphans; the ids
     // are gone either way
-    val tomb = lshTombstones(spark, dir, idCol)
+    val tomb = readTombstones(spark, lshStore(dir), idCol)
     val sigIds = minusTombstones(
-        committed(sigsMergedRead(spark, dir)), tomb, idCol)
+        committed(sigsMergedRead(spark, dir)), tomb)
       .select(col(idCol).cast("long").as(idCol)).distinct()
     // schema-pinned like lshIncrementalIndexed's read: a vacuum that
     // deleted every row leaves dir/bands with no data files to infer
     // from, and reconciliation of an emptied index must still work
     val bandAgg = minusTombstones(
         committed(spark.read.schema(bandsReadSchema(idCol))
-          .parquet(s"$dir/bands")), tomb, idCol)
+          .parquet(s"$dir/bands")), tomb)
       .groupBy(col(idCol).cast("long").as(idCol))
       .agg(count(lit(1)).as("__n"))
     val bandsOnly = bandAgg.join(sigIds, Seq(idCol), "left_anti").count()
@@ -858,7 +789,8 @@ object TextDedupOps {
       maxBucketSize: Int): (DataFrame, DataFrame) = {
     val spark = newBatch.sparkSession
     checkLshMeta(spark, indexDir, bands, shingleN, k)
-    val hwmOpt = IngestCommit.committedHwm(spark, s"$indexDir/commits")
+    val hwmOpt = IngestCommit.committedHwm(spark,
+      lshStore(indexDir).logDir)
     def committed(df: DataFrame): DataFrame = hwmOpt.fold(df)(h =>
       df.filter(col("ingest_id").isNull || col("ingest_id") <= h))
     val nwSigs = minHashSignatures(newBatch, idCol, textCol, shingleN, k)
@@ -868,7 +800,7 @@ object TextDedupOps {
     // tombstoned ids (deleteFromLshIndex) leave both layouts logically
     // BEFORE the fold — a deleted doc must neither band-match nor
     // est-jaccard-join, exactly as if vacuumed
-    val tomb = lshTombstones(spark, indexDir, idCol)
+    val tomb = readTombstones(spark, lshStore(indexDir), idCol)
     // plain read, not mergeSchema: every r18+ write (init AND append)
     // carries the ingest_id column, so inference always sees it —
     // a per-batch footer-merge job was the first cut's main overhead.
@@ -882,14 +814,14 @@ object TextDedupOps {
           "pre-exactly-once build) — rebuild with writeLshIndex")
       committed(rawSigs0)
     }
-    val exSigs = minusTombstones(rawSigs, tomb, idCol)
+    val exSigs = minusTombstones(rawSigs, tomb)
       .select((col(idCol).cast("long") * 2).as(idCol), col("signature"))
     // explicit schema: a band-partitioned EMPTY index (fresh init) has
     // no data files to infer from, and the partition column must read
     // back typed either way
     val exBands = committed(
       spark.read.schema(bandsReadSchema(idCol)).parquet(s"$indexDir/bands"))
-    val exBandsLive = minusTombstones(exBands, tomb, idCol)
+    val exBandsLive = minusTombstones(exBands, tomb)
       .select((col(idCol).cast("long") * 2).as(idCol),
         col("band"), col("band_hash"))
     val nwBands = bandFrame(nwSigs, idCol, bands)
@@ -1153,20 +1085,7 @@ object TextDedupOps {
     * Deleting an unindexed id is a harmless no-op. */
   def deleteFromSimHashStore(ids: DataFrame, dir: String,
       idCol: String = "doc_id"): Unit =
-    ids.select(col(idCol).cast("long").as(idCol)).distinct()
-      .coalesce(1) // deletes are metadata-sized next to the store
-      .write.mode("append").parquet(s"$dir/tombstones")
-
-  private[llm] def simHashTombstones(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      idCol: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      Some(spark.read.parquet(p.toString)
-        .select(col(idCol).cast("long").as(idCol)).distinct())
-    else None
-  }
+    IngestCommit.appendTombstones(ids, simHashStore(dir), idCol)
 
   /** The COMMITTED, tombstone-filtered matching view of a SimHash
     * store — (idCol, simhash), exactly the frame the exactly-once
@@ -1185,44 +1104,28 @@ object TextDedupOps {
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         simHashReadSchema(idCol))
-    val hwmOpt = IngestCommit.committedHwm(spark, s"$dir/_commits")
+    val hwmOpt = IngestCommit.committedHwm(spark, simHashStore(dir).logDir)
     val committed = hwmOpt.fold(raw)(h =>
       raw.filter(col("ingest_id").isNull || col("ingest_id") <= h))
-    minusTombstones(committed, simHashTombstones(spark, dir, idCol),
-      idCol).select(col(idCol), col("simhash"))
-  }
-
-  private def requireNoInFlightSimHashIngest(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      op: String): Unit = {
-    val (_, inFlight) = IngestCommit.logState(spark, s"$dir/_commits")
-    require(inFlight.isEmpty,
-      s"$op: store at $dir has in-flight (begun, uncommitted) ingest " +
-        s"batch(es) ${inFlight.toSeq.sorted.mkString(", ")} — finish " +
-        "or replay the ingest (IngestCommit.simHashIngestBatch " +
-        "recovers it) before maintenance")
+    minusTombstones(committed,
+      readTombstones(spark, simHashStore(dir), idCol))
+      .select(col(idCol), col("simhash"))
   }
 
   /** COMPACT the SimHash store: fold tombstones into a physical
     * rewrite, fold ingest stamps to NULL (every surviving row is
-    * committed — the no-in-flight guard below), coalesce the
-    * one-file-per-batch append history, and fold the commit log to
+    * committed — the maintenance entry's in-flight guard), coalesce
+    * the one-file-per-batch append history, and fold the commit log to
     * its single max marker. One op covers both the vacuum and the
     * small-files roles its LSH/IVF-PQ siblings split — at 8 bytes of
-    * hash per document the rewrite is always cheap. Runs under the
-    * maintenance lease (ingest excluded for the whole rewrite) and
-    * swaps through [[IndexSwap]] — renames only, recovered on entry,
-    * so a re-run completes any crashed compaction. Same object-store
-    * rename caveat as the siblings. */
+    * hash per document the rewrite is always cheap. Runs through
+    * [[IngestCommit.maintain]] like the siblings. */
   def compactSimHashStore(spark: org.apache.spark.sql.SparkSession,
       dir: String, idCol: String = "doc_id"): Unit =
-    IngestCommit.withMaintenanceLease(spark, s"$dir/_commits",
-        "compactSimHashStore") {
+    IngestCommit.maintain(spark, simHashStore(dir),
+        "compactSimHashStore", idCol) { tomb =>
       val conf = spark.sparkContext.hadoopConfiguration
       migrateSimHashLayout(spark, dir)
-      IndexSwap.recover(conf, dir, "hashes")
-      requireNoInFlightSimHashIngest(spark, dir, "compactSimHashStore")
-      val tomb = simHashTombstones(spark, dir, idCol)
       val data = simHashDataDir(dir)
       val dataP = new org.apache.hadoop.fs.Path(data)
       if (dataP.getFileSystem(conf).exists(dataP)) {
@@ -1233,12 +1136,10 @@ object TextDedupOps {
           // docs — the rewrite folds per-batch files into
           // shuffle-partition-count files, which is the same story
           // the LSH sigs rewrite tells
-          minusTombstones(ex, tomb, idCol).write.parquet(tmp)
+          minusTombstones(ex, tomb).write.parquet(tmp)
         }
       }
-      val tombPath = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-      tombPath.getFileSystem(conf).delete(tombPath, true)
-      IngestCommit.compactLog(spark, s"$dir/_commits")
+      IngestCommit.compactIngestLog(spark, simHashStore(dir).logDir)
     }
 
   /** CROSS-corpus near-duplicate detection — eval/benchmark

@@ -1627,6 +1627,22 @@ object TextStatsOps {
     }(org.apache.spark.sql.Encoders.row(outSchema))
   }
 
+  /** Slot count of [[gopherDocMetrics]]' open-address n-gram table
+    * for `starts` n-gram start positions in a `words`-word document:
+    * the smallest power of two ≥ max(4, 2·starts). Long arithmetic —
+    * the Int form overflowed above 2^30 starts, left the table too
+    * small, and the linear probe never ended. A table past the
+    * largest power-of-two array (2^30 slots) fails loudly instead. */
+  private[graft] def ngramTableCapacity(starts: Int, words: Int): Int = {
+    val need = math.max(4L, 2L * starts)
+    require(need <= (1L << 30),
+      s"gopherRepetition: a document of $words words needs an n-gram " +
+        s"table of $need slots, above the 2^30-slot array limit")
+    var cap = 4L
+    while (cap < need) cap <<= 1
+    cap.toInt
+  }
+
   /** The 13 Gopher repetition fractions of one document, in
     * [[gopherRepetition]]'s column order: dup_line_frac,
     * dup_line_cfrac, dup_para_frac, dup_para_cfrac, top_{2,3,4}gram_
@@ -1688,8 +1704,7 @@ object TextStatsOps {
     // key compare on the id sequence — exact identity, never hash-only
     def fillTable(n: Int): (Array[Int], Array[Int], Array[Int]) = {
       val starts = m - n + 1
-      var cap = 4
-      while (cap < starts * 2) cap <<= 1
+      val cap = ngramTableCapacity(starts, m)
       val mask = cap - 1
       val slotS = new Array[Int](cap)
       java.util.Arrays.fill(slotS, -1)
@@ -2676,13 +2691,7 @@ object TextStatsOps {
     // per partition, so only distinct (piece, partial-count) rows hit
     // the exchange. Counts are exact integers either way — bit-equal
     // seeds, spec-pinned against the expression form.
-    def dbgT[T](name: String)(body: => T): T = {
-      if (sys.env.contains("SPARK_GRAFT_TRAIN_DEBUG")) {
-        val t0 = System.nanoTime(); val r = body
-        System.err.println(f"[unidbg] $name: ${(System.nanoTime()-t0)/1e9}%.3f s"); r
-      } else body
-    }
-    val seedCounts = dbgT("seed") {
+    val seedCounts = {
       val mtl = maxTokenLen
       val sp = corpus.sparkSession
       import sp.implicits._
@@ -2694,12 +2703,12 @@ object TextStatsOps {
         .filter(col("c") >= minCount)
         .localCheckpoint(true) // consumed twice (chars + multis)
     }
-    val seedMultis = dbgT("seedMultis collect") { seedCounts.filter(length(col("p")) > 1)
+    val seedMultis = seedCounts.filter(length(col("p")) > 1)
       .orderBy(col("c").desc, col("p").asc).limit(4 * vocabSize)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq }
-    val chars = dbgT("chars collect") { seedCounts.filter(length(col("p")) === 1)
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    val chars = seedCounts.filter(length(col("p")) === 1)
       .orderBy(col("p").asc)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq }
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     require(chars.nonEmpty,
       "trainUnigramLm: no single-char piece met minCount — empty corpus?")
     def toScores(cnts: Seq[(String, Long)]): Map[String, Long] = {
@@ -2717,46 +2726,45 @@ object TextStatsOps {
       // lookups — switch to the broadcast-HashMap kernel (spec-pinned
       // bit-identical to the column tier, so the threshold can never
       // change a trained vocabulary, only its cost)
-      val counted = dbgT(s"E-step round $r") {
-        (if (em == "soft") {
-          // SOFT E-step (em = "soft"): forward-backward expected
-          // counts instead of best-path counts — SentencePiece's
-          // actual E-step, which trains low-probability pieces the
-          // Viterbi counts starve. Per-word micro-integer rounding
-          // keeps the aggregation layout-invariant (see
-          // softExpectedCounts); counts flow through the SAME M-step
-          // in micro units (ratios cancel in the log re-score).
-          val bVocab = spark.sparkContext.broadcast(vocabHashMap(vocab))
-          val mtl = maxTokenLen; val unk = unkCharMicro
-          wordCounts.select(col("__w").cast("string"), col("__cnt"))
-            .as[(String, Long)]
-            .mapPartitions { it =>
-              val vm = bVocab.value
-              it.flatMap { case (w, cnt) =>
-                softExpectedCounts(w, vm, unk, mtl).iterator.map {
-                  case (p, micro) => (p, micro * cnt) }
-              }
+      val counted = (if (em == "soft") {
+        // SOFT E-step (em = "soft"): forward-backward expected
+        // counts instead of best-path counts — SentencePiece's
+        // actual E-step, which trains low-probability pieces the
+        // Viterbi counts starve. Per-word micro-integer rounding
+        // keeps the aggregation layout-invariant (see
+        // softExpectedCounts); counts flow through the SAME M-step
+        // in micro units (ratios cancel in the log re-score).
+        val bVocab = spark.sparkContext.broadcast(vocabHashMap(vocab))
+        val mtl = maxTokenLen; val unk = unkCharMicro
+        wordCounts.select(col("__w").cast("string"), col("__cnt"))
+          .as[(String, Long)]
+          .mapPartitions { it =>
+            val vm = bVocab.value
+            it.flatMap { case (w, cnt) =>
+              softExpectedCounts(w, vm, unk, mtl).iterator.map {
+                case (p, micro) => (p, micro * cnt) }
             }
-            .toDF("p", "__cnt")
-        } else if (vocab.size > kernelThreshold) {
-          val bVocab = spark.sparkContext.broadcast(vocabHashMap(vocab))
-          val mtl = maxTokenLen; val unk = unkCharMicro
-          wordCounts.select(col("__w").cast("string"), col("__cnt"))
-            .as[(String, Long)]
-            .mapPartitions { it =>
-              val vm = bVocab.value
-              it.flatMap { case (w, cnt) =>
-                viterbiSegment(w, vm, unk, mtl).iterator.map(p =>
-                  (p, cnt))
-              }
+          }
+          .toDF("p", "__cnt")
+      } else if (vocab.size > kernelThreshold) {
+        val bVocab = spark.sparkContext.broadcast(vocabHashMap(vocab))
+        val mtl = maxTokenLen; val unk = unkCharMicro
+        wordCounts.select(col("__w").cast("string"), col("__cnt"))
+          .as[(String, Long)]
+          .mapPartitions { it =>
+            val vm = bVocab.value
+            it.flatMap { case (w, cnt) =>
+              viterbiSegment(w, vm, unk, mtl).iterator.map(p =>
+                (p, cnt))
             }
-            .toDF("p", "__cnt")
-        } else wordCounts.select(
-          explode(unigramViterbiPieces(col("__w"), vocab, unkCharMicro,
-            maxTokenLen)).as("p"),
-          col("__cnt")))
+          }
+          .toDF("p", "__cnt")
+      } else wordCounts.select(
+        explode(unigramViterbiPieces(col("__w"), vocab, unkCharMicro,
+          maxTokenLen)).as("p"),
+        col("__cnt")))
         .groupBy("p").agg(sum(col("__cnt")).as("c"))
-        .collect().map(r2 => (r2.getString(0), r2.getLong(1))).toMap }
+        .collect().map(r2 => (r2.getString(0), r2.getLong(1))).toMap
       // the "never unencodable" floor is ONE OBSERVATION — in soft
       // mode counts are micro-scaled, so the floor must scale too (a
       // raw 1L would price an unused char at ln(1e-6/total), ~13.8

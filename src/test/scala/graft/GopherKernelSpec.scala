@@ -130,4 +130,23 @@ class GopherKernelSpec extends SparkSpec {
     val n = docs.count(); val k = kept.count()
     assert(k > 0 && k < n, s"degenerate fixture: $k of $n kept")
   }
+
+  test("n-gram table capacity: power of two ≥ 2·starts in long " +
+      "arithmetic; past 2^30 slots it rejects naming the word count") {
+    import TextStatsOps.ngramTableCapacity
+    assert(ngramTableCapacity(-3, 2) == 4) // sub-n document
+    assert(ngramTableCapacity(0, 5) == 4)
+    assert(ngramTableCapacity(2, 6) == 4)
+    assert(ngramTableCapacity(3, 7) == 8)
+    assert(ngramTableCapacity(1000, 1004) == 2048)
+    // the boundary: 2^29 starts fit exactly; one more start (or the
+    // Int-overflow range the old loop spun on) must fail, not hang
+    assert(ngramTableCapacity(1 << 29, (1 << 29) + 4) == (1 << 30))
+    for (starts <- Seq((1 << 29) + 1, 1 << 30, Int.MaxValue)) {
+      val e = intercept[IllegalArgumentException] {
+        ngramTableCapacity(starts, starts)
+      }
+      assert(e.getMessage.contains(s"$starts words"), e.getMessage)
+    }
+  }
 }

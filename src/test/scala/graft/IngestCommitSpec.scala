@@ -976,4 +976,67 @@ class IngestCommitSpec extends SparkSpec {
     }
     assert(e3.getMessage.contains("vec_id"))
   }
+
+  test("every store's maintenance refuses an in-flight batch and " +
+      "releases its lease: one crashed batch per store, all six ops") {
+    val root = tmpDir("inflight-all")
+    val kill: String => Unit =
+      p => if (p == "after-index") sys.error("kill")
+    def nearDupCrashed(tag: String): (String, String) = {
+      val (index, corpus) = (s"$root/$tag/index", s"$root/$tag/corpus")
+      initIndex(index)
+      assert(IngestCommit.nearDupIngestBatch(triDocs(0L until 10L), 0L,
+        index, corpus, threshold = 0.99))
+      intercept[RuntimeException] {
+        IngestCommit.nearDupIngestBatch(triDocs(10L until 20L), 1L,
+          index, corpus, threshold = 0.99, failpoint = kill)
+      }
+      (index, corpus)
+    }
+    val (lshIdx, _) = nearDupCrashed("lsh")
+    val (pipeIdx, pipeCorpus) = nearDupCrashed("corpus")
+    val hashes = s"$root/simhash/hashes"
+    assert(IngestCommit.simHashIngestBatch(triDocs(0L until 10L), 0L,
+      hashes, s"$root/simhash/corpus"))
+    intercept[RuntimeException] {
+      IngestCommit.simHashIngestBatch(triDocs(10L until 20L), 1L, hashes,
+        s"$root/simhash/corpus", failpoint = kill)
+    }
+    val ivfIdx = s"$root/ivfpq/index"
+    val seed = vecs.filter(col("vec_id") < 30)
+    val cents = SimilarityOps.trainIvfCentroids(seed, "vec_id",
+      "embedding", 4)
+    SimilarityOps.writeIvfPqIndex(seed, ivfIdx, cents,
+      SimilarityOps.trainPqCodebooksResidual(seed, "vec_id", "embedding",
+        cents, m = 4, ksub = 4, iters = 1))
+    intercept[RuntimeException] {
+      IngestCommit.ivfPqIngestBatch(vecs.filter(col("vec_id") >= 30), 0L,
+        ivfIdx, s"$root/ivfpq/corpus", failpoint = kill)
+    }
+    // (op, its store's commit log, the maintenance call)
+    val ops: Seq[(String, String, () => Unit)] = Seq(
+      ("vacuumLshIndex", s"$lshIdx/commits",
+        () => TextDedupOps.vacuumLshIndex(spark, lshIdx)),
+      ("compactLshIndex", s"$lshIdx/commits",
+        () => TextDedupOps.compactLshIndex(spark, lshIdx)),
+      ("compactSimHashStore", s"$hashes/_commits",
+        () => TextDedupOps.compactSimHashStore(spark, hashes)),
+      ("vacuumIvfPqIndex", s"$ivfIdx/commits",
+        () => SimilarityOps.vacuumIvfPqIndex(spark, ivfIdx)),
+      ("compactIvfPqIndex", s"$ivfIdx/commits",
+        () => SimilarityOps.compactIvfPqIndex(spark, ivfIdx)),
+      ("vacuumCorpus", s"$pipeIdx/commits",
+        () => IngestCommit.vacuumCorpus(spark, pipeCorpus,
+          s"$pipeIdx/commits")))
+    ops.foreach { case (op, logDir, run) =>
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("in-flight"), s"$op: ${e.getMessage}")
+      assert(e.getMessage.contains(s"$op: "), e.getMessage)
+      val leases = new java.io.File(logDir).listFiles().map(_.getName)
+        .filter(_.startsWith("maint-"))
+      assert(leases.isEmpty, s"$op left lease(s) ${leases.mkString(", ")}")
+      assert(IngestCommit.logState(spark, logDir)._2 == Set(
+        if (op.contains("IvfPq")) 0L else 1L), s"$op: log state changed")
+    }
+  }
 }

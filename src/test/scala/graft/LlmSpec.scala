@@ -707,7 +707,7 @@ class LlmSpec extends SparkSpec {
     // its IHDR chunk) — decoding it proves the kernel isn't only
     // round-tripping its own encoder's output.
     val p = java.nio.file.Paths.get("/root/reference/doc/logo/pandas_logo.png")
-    assume(java.nio.file.Files.exists(p), "external fixture not present")
+    assumeFixture(p.toString)
     val bytes = java.nio.file.Files.readAllBytes(p)
     val meta = MultimodalOps.decodeImageMeta(
         Seq((1L, bytes)).toDF("asset_id", "payload")).collect()

@@ -18,11 +18,9 @@ class SasBdatSpec extends SparkSpec {
 
   private val fixtureDir = "/root/reference/pandas/tests/io/sas/data"
 
-  private def haveFixtures = new java.io.File(fixtureDir).isDirectory
-
   test("sas7bdat: cell-exact vs goldens from real SAS files, " +
       "page-range split-parallel") {
-    assume(haveFixtures)
+    assumeFixture(fixtureDir)
     for (name <- Seq("cars", "datetime", "productsales", "test1")) {
       // splitBytes below one page forces multiple page-range tasks
       val df = SasBdatIo.read(spark, s"$fixtureDir/$name.sas7bdat",
@@ -39,7 +37,7 @@ class SasBdatSpec extends SparkSpec {
 
   test("sas7bdat: directory read decodes each file with ITS OWN " +
       "metadata and unions rows") {
-    assume(haveFixtures)
+    assumeFixture(fixtureDir)
     val dir = java.nio.file.Files.createTempDirectory("sasdir")
     for (n <- Seq("a", "b")) java.nio.file.Files.copy(
       java.nio.file.Path.of(s"$fixtureDir/cars.sas7bdat"),
@@ -52,7 +50,7 @@ class SasBdatSpec extends SparkSpec {
   }
 
   test("sas7bdat: metadata — names, widths, types, formats, labels") {
-    assume(haveFixtures)
+    assumeFixture(fixtureDir)
     val m = SasBdatIo.parseMeta(() => {
       val p = new org.apache.hadoop.fs.Path(s"$fixtureDir/cars.sas7bdat")
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
@@ -67,7 +65,7 @@ class SasBdatSpec extends SparkSpec {
 
   test("sas7bdat: FULL layout matrix — {u32,u64} × {LE,BE} × " +
       "{raw,RLE,RDC} (test1-15) decodes cell-exact to one golden") {
-    assume(haveFixtures)
+    assumeFixture(fixtureDir)
     val golden0 = {
       val df0 = SasBdatIo.read(spark, s"$fixtureDir/test1.sas7bdat")
       spark.read.schema(df0.schema)
@@ -88,7 +86,7 @@ class SasBdatSpec extends SparkSpec {
   }
 
   test("sas7bdat: UTF-8 encoded file (test16) decodes cell-exact") {
-    assume(haveFixtures)
+    assumeFixture(fixtureDir)
     // the file header declares latin1 but the payload is UTF-8; the
     // reference test passes the same explicit override
     val df = SasBdatIo.read(spark, s"$fixtureDir/test16.sas7bdat",
@@ -103,7 +101,7 @@ class SasBdatSpec extends SparkSpec {
   }
 
   test("sas7bdat: compression + endianness metadata detected per file") {
-    assume(haveFixtures)
+    assumeFixture(fixtureDir)
     def metaOf(name: String) = SasBdatIo.parseMeta(() => {
       val p = new org.apache.hadoop.fs.Path(s"$fixtureDir/$name.sas7bdat")
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
