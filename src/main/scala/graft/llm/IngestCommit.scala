@@ -389,16 +389,24 @@ object IngestCommit {
   /** A store's pending tombstones as a slim distinct long id set keyed
     * `idCol` — or, when `idCol` is empty, by the tombstone file's own
     * single column (the self-describing corpus takedowns). None when
-    * nothing is pending: one `exists` call, no Spark job. */
+    * nothing is pending — no tombstone directory, or one holding only
+    * `_`/`.` markers (`_SUCCESS`, a running append's `_temporary`):
+    * one listing, no Spark job. */
   private[llm] def readTombstones(spark: SparkSession, store: Store,
-      idCol: String = ""): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(store.tombDir)
-    if (!fsOf(spark, p).exists(p)) None
+      idCol: String = ""): Option[DataFrame] =
+    if (tombListing(spark, store).forall(_.getPath.getName.matches("[_.].*")))
+      None
     else {
       val raw = spark.read.parquet(store.tombDir)
       val idc = if (idCol.isEmpty) raw.columns.head else idCol
       Some(raw.select(col(idc).cast("long").as(idc)).distinct())
     }
+
+  private def tombListing(spark: SparkSession,
+      store: Store): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val p = new org.apache.hadoop.fs.Path(store.tombDir)
+    try fsOf(spark, p).listStatus(p).toSeq
+    catch { case _: java.io.FileNotFoundException => Nil }
   }
 
   /** Anti-join `tomb` out of `df` on the tombstone set's own key column
@@ -436,14 +444,15 @@ object IngestCommit {
     * dropped by the rename), finish every [[IndexSwap]] a crashed run
     * left, refuse over an in-flight batch, run the store's own
     * `rewrite` over its pending tombstones ([[readTombstones]] keyed
-    * `idCol`), and clear those tombstones LAST — only when there were
-    * some — so a re-run completes the job from EVERY intermediate
-    * state. Each rewrite swaps its
-    * layouts through IndexSwap (renames only: atomic on HDFS-like
-    * filesystems, a copy on S3-style object stores — maintain there
-    * behind a committer or a table format). The exactly-once wrappers
-    * are excluded by the lease; DIRECT appends (writeLshIndex append,
-    * appendIvfPqIndex) must still pause their writer themselves. */
+    * `idCol`), and clear those tombstones LAST (exactly the files the
+    * read listed: a delete landing mid-rewrite stays pending), so a
+    * re-run completes the job from EVERY intermediate state. Each
+    * rewrite swaps its layouts through IndexSwap (renames only: atomic
+    * on HDFS-like filesystems, a copy on S3-style object stores —
+    * maintain there behind a committer or a table format). The
+    * exactly-once wrappers are excluded by the lease; DIRECT appends
+    * (writeLshIndex append, appendIvfPqIndex) must still pause their
+    * writer themselves. */
   private[llm] def maintain(spark: SparkSession, store: Store, op: String,
       idCol: String = "")(rewrite: Option[DataFrame] => Unit): Unit =
     withMaintenanceLease(spark, store.logDir, op) {
@@ -451,10 +460,19 @@ object IngestCommit {
         store.dir)
       requireNoInFlight(spark, store, op)
       val tomb = readTombstones(spark, store, idCol)
+      val read = tomb.fold(Array.empty[String])(_.inputFiles)
       rewrite(tomb)
-      if (tomb.nonEmpty) {
-        val tombP = new org.apache.hadoop.fs.Path(store.tombDir)
-        fsOf(spark, tombP).delete(tombP, true)
+      val tombP = new org.apache.hadoop.fs.Path(store.tombDir)
+      val fs = fsOf(spark, tombP)
+      read.foreach(f => fs.delete(new org.apache.hadoop.fs.Path(f), false))
+      // then the directory, once only `_` marker files are left; its
+      // delete is NON-recursive, so a tombstone (or a `_temporary`)
+      // landing in between keeps it
+      val left = tombListing(spark, store)
+      if (read.nonEmpty && left.forall(st =>
+          st.isFile && st.getPath.getName.startsWith("_"))) {
+        left.foreach(st => fs.delete(st.getPath, false))
+        scala.util.Try(fs.delete(tombP, false))
       }
       ()
     }
@@ -843,16 +861,14 @@ object IngestCommit {
     // crashed attempt's own stamped rows are invisible, making the
     // survivor set identical on every replay (the determinism the
     // recovery subtraction in appendSigsToIndex relies on)
-    val (nwSigs, survivors) = TextDedupOps.lshIncrementalIndexedCore(
+    val (batchSigs, survivors) = TextDedupOps.lshIncrementalIndexedCore(
       batch, indexDir, idCol, textCol, shingleN, k, bands, threshold,
       maxBucketSize)
     val ids = survivors.select(col(idCol).cast("long").as(idCol))
       .localCheckpoint(true) // slim; the ONE pair computation per batch
     failpoint("after-survivors")
     val surv = batch.join(ids, Seq(idCol), "left_semi")
-    val survSigs = nwSigs
-      .select(shiftright(col(idCol), 1).as(idCol), col("signature"))
-      .join(ids, Seq(idCol), "left_semi")
+    val survSigs = batchSigs.join(ids, Seq(idCol), "left_semi")
     publishAndCommit(spark, logDir, batchId, failpoint) {
       surv.write.mode("overwrite")
         .parquet(s"$corpusDir/ingest_id=$batchId")

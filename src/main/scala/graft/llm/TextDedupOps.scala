@@ -172,14 +172,20 @@ object TextDedupOps {
   /** `wordHashes` MUST be a materialized column (attribute), not an
     * inline transform(...) expression: HOF lambdas re-evaluate captured
     * subtrees per element, which would re-hash every word per shingle
-    * (O(words²)). */
+    * (O(words²)).
+    *
+    * A document of m < n words (empty text normalizes to one empty
+    * word) yields ONE shingle, the same polynomial over its m words:
+    * terms past the end count 0 (a guard ≥ n-word documents never
+    * hit). A NULL word array yields one NULL shingle. */
   def shingleHashesFromWordHashes(wordHashes: Column, n: Int): Column = {
     val coeffs = Seq(1299709L, 15485863L, 32452843L, 49979687L, 67867967L)
     transform(
       sequence(lit(0), greatest(size(wordHashes) - n, lit(0))),
       i => pmod((0 until n).map { j =>
-        pmod(element_at(wordHashes, i + j + 1) * lit(coeffs(j % coeffs.size)),
-          lit(HashP))
+        val t = pmod(element_at(wordHashes, i + j + 1) *
+          lit(coeffs(j % coeffs.size)), lit(HashP))
+        if (j == 0) t else when(size(wordHashes) > i + j, t).otherwise(0L)
       }.reduce(_ + _), lit(HashP)))
   }
 
@@ -261,14 +267,9 @@ object TextDedupOps {
       // colliding band, so first-collide emission is not bucket-locally
       // decidable under a cap (see asymPairsFromBands for the same
       // reasoning on the incremental path).
-      val bandedAll = signatures.select(col(idCol),
-        posexplode(split_band(col("signature"), bands)))
-        .withColumnRenamed("pos", "band")
-        .withColumn("band_hash", xxhash64(col("col").cast("string")))
-        .drop("col")
       val wsz = org.apache.spark.sql.expressions.Window
         .partitionBy("band", "band_hash")
-      val banded = bandedAll
+      val banded = bandFrame(signatures, idCol, bands)
         .withColumn("__bsz", count(lit(1)).over(wsz))
         .filter(col("__bsz") <= maxBucketSize)
         .drop("__bsz")
@@ -278,6 +279,14 @@ object TextDedupOps {
         .filter(col("id_a") < col("id_b"))
         .select("id_a", "id_b").distinct()
     }
+    withEstJaccard(pairs, signatures, idCol, threshold)
+  }
+
+  /** Re-attach both signatures to candidate `pairs` (id_a, id_b) and
+    * keep the pairs whose estimated Jaccard — the fraction of agreeing
+    * minima — reaches `threshold`. Returns (id_a, id_b, est_jaccard). */
+  private def withEstJaccard(pairs: DataFrame, signatures: DataFrame,
+      idCol: String, threshold: Double): DataFrame = {
     val withSigs = pairs
       .join(signatures.select(col(idCol).as("id_a"), col("signature").as("sig_a")), Seq("id_a"))
       .join(signatures.select(col(idCol).as("id_b"), col("signature").as("sig_b")), Seq("id_b"))
@@ -310,10 +319,10 @@ object TextDedupOps {
     * Scale shape: the index side ships (id, signature) — k+1 longs per
     * UNIQUE surviving doc, not texts; the union rides the same
     * bucket-bounded, cappable banded join as [[lshCandidatePairs]]
-    * (side bit folded into the id like [[crossCorpusNearDups]] — ids
-    * must be non-negative and < 2^62); components run on candidate
-    * pairs only (O(diameter) rounds — near-dup graphs are shallow);
-    * the final membership check is one anti-join on unique ids. */
+    * (the side bit folded into the id, see the side-bit fold's id
+    * contract); components run on candidate pairs only (O(diameter)
+    * rounds — near-dup graphs are shallow); the final membership check
+    * is one anti-join on unique ids. */
   def lshIncremental(newBatch: DataFrame, existingSignatures: DataFrame,
       idCol: String, textCol: String, shingleN: Int = 3, k: Int = 32,
       bands: Int = 8, threshold: Double = 0.7,
@@ -322,50 +331,55 @@ object TextDedupOps {
       textCol, shingleN, k, bands, threshold, maxBucketSize)._1
 
   /** [[lshIncremental]] plus the SURVIVORS' signature frame — the rows
-    * a production ingest loop appends to its persisted index. The
-    * signatures come from the SAME persisted frame the dedup banded
-    * (a semi-join on the survivor ids, a cache hit) — re-signaturing
-    * the survivors from text would repeat the shingle-explode + k-way
-    * min aggregation, the dominant per-batch cost of the loop. */
+    * a production ingest loop appends to its persisted index: a
+    * semi-join of the batch's checkpointed signatures, since
+    * re-signaturing the survivors from text would repeat the
+    * shingle-explode + k-way min aggregation, the dominant per-batch
+    * cost of the loop. `existingSignatures` is RE-EXECUTED per consumer
+    * — fine for a parquet read or a checkpointed in-session index; an
+    * expensive un-materialized lineage should be persisted first, or
+    * use [[lshIncrementalIndexed]] where storage IS the index. */
   def lshIncrementalWithSignatures(newBatch: DataFrame,
       existingSignatures: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, k: Int = 32, bands: Int = 8,
       threshold: Double = 0.7, maxBucketSize: Int = Int.MaxValue)
       : (DataFrame, DataFrame) = {
-    val batchSigs = minHashSignatures(newBatch, idCol, textCol, shingleN, k)
-    val ex = existingSignatures.select(
-      (col(idCol).cast("long") * 2).as(idCol), col("signature"))
-    val nw = batchSigs.select(
-      (col(idCol).cast("long") * 2 + 1).as(idCol), col("signature"))
-    // the banded join consumes the signature frame THREE times (band
-    // explode + two pair-side re-attach joins): an EAGER localCheckpoint
-    // of the BATCH side both materializes its shingle-explode + k-way
-    // min aggregation once (the minhash_near_dup persist lesson) and
-    // TRUNCATES the logical plan to an RDD scan. The truncation is the
-    // point: a persist caches execution but every downstream ACTION
-    // still re-analyzes the full nested plan, and this frame is embedded
-    // 2× per pair side × every consumer — per-batch driver time in the
-    // ingest-loop witness was dominated by Catalyst re-analysis of those
-    // nested copies, not by any Spark job. Only the batch checkpoints:
-    // the INDEX side is caller-provided storage-backed signatures (a
-    // parquet read in steady state) whose re-scan is cheap and whose
-    // materialized copy would cost index-sized executor storage per
-    // batch. Blocks are freed when the checkpointed RDD is GC'd (the
-    // connectedComponents note). Corollary: `existingSignatures` is
-    // RE-EXECUTED per consumer — fine for the steady state (a parquet
-    // read) and for checkpointed in-session indexes; a caller whose
-    // index is an expensive un-materialized lineage (e.g. a fresh
-    // minHashSignatures over raw text) should persist it first, or use
-    // [[lshIncrementalIndexed]] where storage IS the index.
-    val sigs = ex.unionByName(nw.localCheckpoint(true))
-    val pairs = lshCandidatePairsAsym(sigs, idCol, bands,
-      threshold, maxBucketSize)
-    val survivors = incrementalSurvivors(newBatch, pairs, idCol)
-    val survivorSigs = sigs
-      .filter(col(idCol).bitwiseAND(1) === 1)
-      .select(shiftright(col(idCol), 1).as(idCol), col("signature"))
-      .join(survivors.select(col(idCol)), Seq(idCol), "left_semi")
-    (survivors, survivorSigs)
+    val (batchSigs, survivors) = incrementalMinHash(newBatch,
+      existingSignatures, bandFrame(existingSignatures, idCol, bands),
+      idCol, textCol, shingleN, k, bands, threshold, maxBucketSize)
+    (survivors, batchSigs.join(survivors.select(col(idCol)), Seq(idCol),
+      "left_semi"))
+  }
+
+  /** The one incremental MinHash body of the in-memory and the
+    * persisted-index tier, which differ only in where the existing side
+    * comes from: `exSigs` (idCol, signature) and `exBands` (idCol,
+    * band, band_hash), keyed by plain ids. Returns (the batch's
+    * checkpointed signatures, plain ids; the survivor frame).
+    *
+    * The pair join consumes the batch signatures THREE times (band
+    * explode + two re-attach joins): an EAGER localCheckpoint runs the
+    * shingle-explode + k-way min aggregation once and TRUNCATES the
+    * plan to an RDD scan — the point, since per-batch driver time in
+    * the ingest loop was Catalyst re-analysis of the nested copies, not
+    * Spark jobs. The existing side is storage-backed and cheap to
+    * re-scan, so it does not checkpoint (that would cost index-sized
+    * executor storage per batch). */
+  private def incrementalMinHash(newBatch: DataFrame, exSigs: DataFrame,
+      exBands: DataFrame, idCol: String, textCol: String, shingleN: Int,
+      k: Int, bands: Int, threshold: Double,
+      maxBucketSize: Int): (DataFrame, DataFrame) = {
+    val nwSigs = minHashSignatures(newBatch, idCol, textCol, shingleN, k)
+      .select(foldNew(col(idCol)).as(idCol), col("signature"))
+      .localCheckpoint(true)
+    val nwBands = bandFrame(nwSigs, idCol, bands)
+    val ex = exSigs.select(foldOld(col(idCol)).as(idCol), col("signature"))
+    val exB = exBands.select(foldOld(col(idCol)).as(idCol), col("band"),
+      col("band_hash"))
+    val pairs = asymPairsFromBands(exB.unionByName(nwBands), nwBands,
+      ex.unionByName(nwSigs), idCol, threshold, maxBucketSize)
+    (nwSigs.select(unfold(col(idCol)).as(idCol), col("signature")),
+      incrementalSurvivors(newBatch, pairs, idCol))
   }
 
   /** Persist an LSH signature index PRE-BANDED — the steady-state
@@ -582,7 +596,7 @@ object TextDedupOps {
   /** Fold accumulated tombstones into a PHYSICAL rewrite — the
     * compaction half of the delete contract: rewrite `dir/bands`
     * (restoring the init-time range layout) and `dir/sigs` without
-    * the deleted ids, then drop the tombstone set. Bands swap FIRST
+    * the deleted ids, then drop the tombstones it read. Bands swap FIRST
     * (a crash then leaves deleted ids sigs-only — invisible to
     * banding, which is the goal — with tombstones still present), and
     * the run goes through [[IngestCommit.maintain]], so re-running the
@@ -761,19 +775,17 @@ object TextDedupOps {
       idCol: String, textCol: String, shingleN: Int = 3, k: Int = 32,
       bands: Int = 8, threshold: Double = 0.7,
       maxBucketSize: Int = Int.MaxValue): (DataFrame, DataFrame) = {
-    val (nwSigs, survivors) = lshIncrementalIndexedCore(newBatch,
+    val (batchSigs, survivors) = lshIncrementalIndexedCore(newBatch,
       indexDir, idCol, textCol, shingleN, k, bands, threshold,
       maxBucketSize)
-    val survivorSigs = nwSigs
-      .select(shiftright(col(idCol), 1).as(idCol), col("signature"))
-      .join(survivors.select(col(idCol)), Seq(idCol), "left_semi")
-    (survivors, survivorSigs)
+    (survivors, batchSigs.join(survivors.select(col(idCol)), Seq(idCol),
+      "left_semi"))
   }
 
   /** [[lshIncrementalIndexed]] minus the survivor-signature join —
-    * returns (the batch's checkpointed odd-folded signature frame,
-    * the survivor frame) so the exactly-once ingest loop can
-    * materialize the SLIM survivor-id set once and derive the corpus
+    * returns (the batch's checkpointed signature frame, the survivor
+    * frame) so the exactly-once ingest loop can materialize the SLIM
+    * survivor-id set once and derive the corpus
     * write, the bands append, and the sigs append from checkpointed
     * inputs (one pair computation per batch instead of one per
     * consumer). When the index carries a commit log
@@ -793,10 +805,6 @@ object TextDedupOps {
       lshStore(indexDir).logDir)
     def committed(df: DataFrame): DataFrame = hwmOpt.fold(df)(h =>
       df.filter(col("ingest_id").isNull || col("ingest_id") <= h))
-    val nwSigs = minHashSignatures(newBatch, idCol, textCol, shingleN, k)
-      .select((col(idCol).cast("long") * 2 + 1).as(idCol),
-        col("signature"))
-      .localCheckpoint(true) // batch-sized; consumed 3× (see above)
     // tombstoned ids (deleteFromLshIndex) leave both layouts logically
     // BEFORE the fold — a deleted doc must neither band-match nor
     // est-jaccard-join, exactly as if vacuumed
@@ -814,41 +822,14 @@ object TextDedupOps {
           "pre-exactly-once build) — rebuild with writeLshIndex")
       committed(rawSigs0)
     }
-    val exSigs = minusTombstones(rawSigs, tomb)
-      .select((col(idCol).cast("long") * 2).as(idCol), col("signature"))
     // explicit schema: a band-partitioned EMPTY index (fresh init) has
     // no data files to infer from, and the partition column must read
     // back typed either way
     val exBands = committed(
       spark.read.schema(bandsReadSchema(idCol)).parquet(s"$indexDir/bands"))
-    val exBandsLive = minusTombstones(exBands, tomb)
-      .select((col(idCol).cast("long") * 2).as(idCol),
-        col("band"), col("band_hash"))
-    val nwBands = bandFrame(nwSigs, idCol, bands)
-    val pairs = asymPairsFromBands(exBandsLive.unionByName(nwBands),
-      nwBands, exSigs.unionByName(nwSigs), idCol, threshold,
-      maxBucketSize)
-    (nwSigs, incrementalSurvivors(newBatch, pairs, idCol))
-  }
-
-  /** Banded candidate pairs for the INCREMENTAL path: new-side rows
-    * (odd folded ids) join against ALL rows — never old × old. An
-    * old-old pair is provably irrelevant to incremental survivorship:
-    * a batch doc dies the moment it (or a new-new-connected peer)
-    * touches ANY existing doc, so which old docs interconnect beyond
-    * that cannot change any verdict, and components that elect a
-    * min-new survivor contain no old doc at all. At 100 TB this is
-    * THE incremental win — per-batch join work scales with
-    * batch × bucket occupancy, not (index + batch)². Bucket-size caps
-    * still count the full bucket (old + new), matching
-    * [[lshCandidatePairs]]' semantics. */
-  private def lshCandidatePairsAsym(signatures: DataFrame, idCol: String,
-      bands: Int, threshold: Double,
-      maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    val bandedAll = bandFrame(signatures, idCol, bands)
-    asymPairsFromBands(bandedAll,
-      bandedAll.filter(col(idCol).bitwiseAND(1) === 1), signatures,
-      idCol, threshold, maxBucketSize)
+    incrementalMinHash(newBatch, minusTombstones(rawSigs, tomb),
+      minusTombstones(exBands, tomb), idCol, textCol, shingleN, k, bands,
+      threshold, maxBucketSize)
   }
 
   /** The slim (idCol, band, band_hash) frame the banded joins consume
@@ -863,52 +844,102 @@ object TextDedupOps {
       .withColumn("band_hash", xxhash64(col("col").cast("string")))
       .drop("col")
 
-  /** Asymmetric pair core over pre-banded frames: `bandedNew` must be
-    * the odd-id (new-side) subset of the id space `bandedAll` covers;
-    * bucket caps count over bandedAll (old + new together, matching
-    * [[lshCandidatePairs]]); `signatures` re-attaches for the
-    * est-Jaccard filter. */
+  /** Banded candidate pairs for the INCREMENTAL path, over side-folded
+    * ids: the new-side rows (`bandedNew`, the odd-id subset of the id
+    * space `bandedAll` covers) join against ALL rows — never old × old.
+    * An old-old pair is provably irrelevant to incremental
+    * survivorship: a batch doc dies the moment it (or a
+    * new-new-connected peer) touches ANY existing doc, so which old
+    * docs interconnect beyond that cannot change any verdict, and
+    * components that elect a min-new survivor contain no old doc at
+    * all. At 100 TB this is THE incremental win — per-batch join work
+    * scales with batch × bucket occupancy, not (index + batch)².
+    * Bucket-size caps count over bandedAll (old + new together,
+    * matching [[lshCandidatePairs]]); `signatures` re-attaches for the
+    * est-Jaccard filter. The `distinct` stays: a pair colliding in
+    * several bands surfaces once per band, and under a cap a dropped
+    * bucket can hide its first colliding band. */
   private def asymPairsFromBands(bandedAll: DataFrame,
       bandedNew: DataFrame, signatures: DataFrame, idCol: String,
       threshold: Double, maxBucketSize: Int): DataFrame = {
-    val (o0, n0) =
-      if (maxBucketSize == Int.MaxValue) (bandedAll, bandedNew)
-      else {
-        val keep = bandedAll.groupBy("band", "band_hash")
-          .agg(count(lit(1)).as("__bsz"))
-          .filter(col("__bsz") <= maxBucketSize)
-          .select("band", "band_hash")
-        (bandedAll.join(keep, Seq("band", "band_hash"), "left_semi"),
-          bandedNew.join(keep, Seq("band", "band_hash"), "left_semi"))
-      }
-    val n = n0.select(col(idCol).as("__nid"), col("band"), col("band_hash"))
-    val o = o0.select(col(idCol).as("__oid"), col("band"), col("band_hash"))
+    val cap = bucketCap(bandedAll, Seq("band", "band_hash"), maxBucketSize)
+    val n = cap(bandedNew)
+      .select(col(idCol).as("__nid"), col("band"), col("band_hash"))
+    val o = cap(bandedAll)
+      .select(col(idCol).as("__oid"), col("band"), col("band_hash"))
     val pairs = n.join(o, Seq("band", "band_hash"))
       .filter(col("__nid") =!= col("__oid"))
       .select(least(col("__nid"), col("__oid")).as("id_a"),
         greatest(col("__nid"), col("__oid")).as("id_b"))
       .distinct()
-    val withSigs = pairs
-      .join(signatures.select(col(idCol).as("id_a"), col("signature").as("sig_a")), Seq("id_a"))
-      .join(signatures.select(col(idCol).as("id_b"), col("signature").as("sig_b")), Seq("id_b"))
-    val est = size(filter(zip_with(col("sig_a"), col("sig_b"),
-      (x, y) => (x === y).cast("int")), v => v === 1)).cast("double") /
-      size(col("sig_a"))
-    withSigs.withColumn("est_jaccard", est)
-      .filter(col("est_jaccard") >= threshold)
-      .select("id_a", "id_b", "est_jaccard")
+    withEstJaccard(pairs, signatures, idCol, threshold)
+  }
+
+  /** The hot-key cap of every bucketed pair generator (LSH and SimHash
+    * band buckets, shingle and n-gram document frequencies): a function
+    * that keeps only the rows whose bucket (`key`) holds at most
+    * `maxBucketSize` rows of `all` — one map-side-combined count per
+    * bucket plus a semi-join on the slim keyed frame. The identity when
+    * uncapped, so the uncapped plans carry no count at all. */
+  private def bucketCap(all: DataFrame, key: Seq[String],
+      maxBucketSize: Int): DataFrame => DataFrame =
+    if (maxBucketSize == Int.MaxValue) identity
+    else {
+      val keep = all.groupBy(key.map(col): _*)
+        .agg(count(lit(1)).as("__bsz"))
+        .filter(col("__bsz") <= maxBucketSize)
+        .select(key.map(col): _*)
+      _.join(keep, key, "left_semi")
+    }
+
+  // ----- Side-bit id fold -------------------------------------------
+  // The incremental tiers (existing index vs new batch) and the
+  // cross-corpus pass (corpus vs probes) band both sides in ONE id
+  // space by folding the side into the id's low bit: old/corpus = 2·id,
+  // new/probe = 2·id + 1. The bucket shuffle then still carries one
+  // long per id; the side decodes with `& 1`, the id with `>> 1`. Ids
+  // must therefore be non-negative and < 2^62.
+  private def foldOld(id: Column): Column = id.cast("long") * 2
+  private def foldNew(id: Column): Column = id.cast("long") * 2 + 1
+  private def sideBit(id: Column): Column = id.bitwiseAND(1)
+  private def isNew(id: Column): Column = sideBit(id) === 1
+  private def unfold(id: Column): Column = shiftright(id, 1)
+  private def isNewId(id: Long): Boolean = (id & 1L) == 1L
+  private def unfoldId(id: Long): Long = id >> 1
+
+  /** Driver union-find with union by minimum root over `edges`: every
+    * endpoint mapped to its component's minimum id — the `cluster`
+    * label [[connectedComponents]] assigns. */
+  private def minRootComponents(edges: Iterator[(Long, Long)])
+      : Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) {
+        if (ra < rb) parent(rb) = ra else parent(ra) = rb
+      }
+    }
+    parent.keys.map(m => m -> find(m)).toMap
   }
 
   /** Shared survivor selection for the incremental near-dup tiers
     * ([[lshIncremental]] / [[simHashIncremental]]): given candidate
-    * pairs over SIDE-FOLDED ids (existing = 2·id, batch = 2·id + 1),
-    * keep the batch rows whose component touches no existing document
-    * and whose id is the component's minimum NEW id.
+    * pairs over side-folded ids (see the fold above), keep the batch
+    * rows whose component touches no existing document and whose id
+    * is the component's minimum NEW id.
     *
     * Components run on the NEW-NEW subgraph only — equivalent to the
     * full graph because an existing doc is reachable from a new doc
     * only over a new-old edge (no old-old pairs matter, see
-    * [[lshCandidatePairsAsym]]): any component member with an old
+    * [[asymPairsFromBands]]): any component member with an old
     * neighbor damns its whole new-new component, and a component with
     * no old contact is purely new, where the min-new doc IS the
     * component label. Old-old pairs in the input (the simhash path
@@ -928,42 +959,20 @@ object TextDedupOps {
     val head = pairs.select(col("id_a").cast("long"),
       col("id_b").cast("long")).limit(cap + 1).collect()
     if (head.length <= cap) {
-      val oldTouched = head.iterator
-        .filter(r => ((r.getLong(0) ^ r.getLong(1)) & 1L) == 1L)
-        .map(r => if ((r.getLong(0) & 1L) == 1L) r.getLong(0)
-                  else r.getLong(1))
+      val edges = head.map(r => (r.getLong(0), r.getLong(1)))
+      val oldTouched = edges.iterator
+        .collect { case (a, b) if isNewId(a) != isNewId(b) =>
+          if (isNewId(a)) a else b }
         .toSet
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (parent(c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      head.foreach { r =>
-        val a = r.getLong(0); val b = r.getLong(1)
-        if ((a & 1L) == 1L && (b & 1L) == 1L) { // new-new edges only
-          parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-          val ra = find(a); val rb = find(b)
-          if (ra != rb) {
-            if (ra < rb) parent(rb) = ra else parent(ra) = rb
-          }
-        }
-      }
-      val roots = parent.keys.map(m => m -> find(m)).toMap
-      val badRoots = oldTouched.iterator
-        .flatMap(roots.get).toSet
-      val losers = scala.collection.mutable.HashSet[Long]()
-      roots.foreach { case (m, r) =>
-        if (badRoots.contains(r) || m != r) { losers += m; () }
-      }
-      oldTouched.foreach { o =>
-        if (!roots.contains(o)) { losers += o; () }
-      }
+      val roots = minRootComponents(edges.iterator // new-new edges only
+        .filter { case (a, b) => isNewId(a) && isNewId(b) })
+      val badRoots = oldTouched.iterator.flatMap(roots.get).toSet
+      val losers = roots.iterator
+        .collect { case (m, r) if badRoots.contains(r) || m != r => m } ++
+        oldTouched.iterator.filterNot(roots.contains)
       val spark = newBatch.sparkSession
       import spark.implicits._
-      val losersDf = losers.iterator.map(_ >> 1).toSet.toSeq.sorted
+      val losersDf = losers.map(unfoldId).toSet.toSeq.sorted
         .toDF(idCol)
       return newBatch.join(broadcast(losersDf), Seq(idCol), "left_anti")
     }
@@ -976,12 +985,11 @@ object TextDedupOps {
     // lshIncrementalWithSignatures rationale; post-threshold pair sets
     // are small — the dedup savings, not the corpus)
     val p = pairs.localCheckpoint(true)
-    val newNew = p.filter(col("id_a").bitwiseAND(1) === 1 &&
-      col("id_b").bitwiseAND(1) === 1)
+    val newNew = p.filter(isNew(col("id_a")) && isNew(col("id_b")))
     // new ids with at least one existing neighbor
     val oldTouched = p
-      .filter(col("id_a").bitwiseAND(1) =!= col("id_b").bitwiseAND(1))
-      .select(when(col("id_a").bitwiseAND(1) === 1, col("id_a"))
+      .filter(sideBit(col("id_a")) =!= sideBit(col("id_b")))
+      .select(when(isNew(col("id_a")), col("id_a"))
         .otherwise(col("id_b")).as("id"))
       .distinct()
     // a micro-batch's pair graph is usually tiny: take the bounded
@@ -999,7 +1007,7 @@ object TextDedupOps {
         .unionByName(oldTouched.join(comps, Seq("id"), "left_anti")
           .select(col("id")))
         .distinct()
-        .select(shiftright(col("id"), 1).as(idCol))
+        .select(unfold(col("id")).as(idCol))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     newBatch.join(losers, Seq(idCol), "left_anti")
   }
@@ -1013,16 +1021,16 @@ object TextDedupOps {
     * replay over old ∪ new: a batch doc survives iff its component
     * over the ≤ maxHamming candidate graph touches no existing doc
     * and it is the minimum-id new doc of its component. Callers union
-    * the survivors' hashes into the index for the next ingest. Ids
-    * must be non-negative and < 2^62 (side bit folded into the id). */
+    * the survivors' hashes into the index for the next ingest. The
+    * side bit is folded into the id (see the side-bit fold's id
+    * contract). */
   def simHashIncremental(newBatch: DataFrame, existingHashes: DataFrame,
       idCol: String, textCol: String, maxHamming: Int = 3,
       bands: Int = 4, maxBucketSize: Int = Int.MaxValue): DataFrame = {
     val batchH = simHash(newBatch, idCol, textCol)
-    val ex = existingHashes.select(
-      (col(idCol).cast("long") * 2).as(idCol), col("simhash"))
-    val nw = batchH.select(
-      (col(idCol).cast("long") * 2 + 1).as(idCol), col("simhash"))
+    val ex = existingHashes.select(foldOld(col(idCol)).as(idCol),
+      col("simhash"))
+    val nw = batchH.select(foldNew(col(idCol)).as(idCol), col("simhash"))
     val pairs = simHashPairsOfHashes(ex.unionByName(nw), idCol,
       maxHamming, bands, maxBucketSize)
       .select("id_a", "id_b")
@@ -1153,26 +1161,24 @@ object TextDedupOps {
     *
     * Scale shape: identical to [[lshCandidatePairs]] (the union rides
     * the same banded bucket join — bucket-bounded, cappable); the side
-    * tag is one bit folded into the id (ids must be non-negative and
-    * < 2^62), decoded with shift/mask after pairing, so the bucket
-    * shuffle still carries 3 longs per row. */
+    * tag is one bit folded into the id (see the side-bit fold's id
+    * contract), decoded after pairing, so the bucket shuffle still
+    * carries 3 longs per row. */
   def crossCorpusNearDups(corpus: DataFrame, probes: DataFrame,
       idCol: String, textCol: String, shingleN: Int = 3, k: Int = 32,
       bands: Int = 8, threshold: Double = 0.7,
       maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    val c = corpus.select((col(idCol).cast("long") * 2).as(idCol),
-      col(textCol))
-    val p = probes.select((col(idCol).cast("long") * 2 + 1).as(idCol),
-      col(textCol))
+    val c = corpus.select(foldOld(col(idCol)).as(idCol), col(textCol))
+    val p = probes.select(foldNew(col(idCol)).as(idCol), col(textCol))
     val sigs = minHashSignatures(c.unionByName(p), idCol, textCol,
       shingleN, k)
     lshCandidatePairs(sigs, idCol, bands, threshold, maxBucketSize)
-      .filter(col("id_a").bitwiseAND(1) =!= col("id_b").bitwiseAND(1))
+      .filter(sideBit(col("id_a")) =!= sideBit(col("id_b")))
       .select(
-        shiftright(when(col("id_a").bitwiseAND(1) === 0, col("id_a"))
-          .otherwise(col("id_b")), 1).as("corpus_id"),
-        shiftright(when(col("id_a").bitwiseAND(1) === 1, col("id_a"))
-          .otherwise(col("id_b")), 1).as("probe_id"),
+        unfold(when(sideBit(col("id_a")) === 0, col("id_a"))
+          .otherwise(col("id_b"))).as("corpus_id"),
+        unfold(when(isNew(col("id_a")), col("id_a"))
+          .otherwise(col("id_b"))).as("probe_id"),
         col("est_jaccard"))
   }
 
@@ -1207,15 +1213,10 @@ object TextDedupOps {
       shingleN: Int = 3, maxShingleDocs: Int = Int.MaxValue): DataFrame = {
     val shAll = explodedShingles(df, idCol, textCol, shingleN)
       .select(col(idCol).as("id"), col("__sh").as("sh"))
-    val sh = if (maxShingleDocs == Int.MaxValue) shAll else {
-      // shingles are per-document distinct (shinglesFromWords
-      // array_distincts), so the per-shingle row count IS its
-      // document frequency; the count shuffles (sh, cnt) pairs only
-      val keep = shAll.groupBy("sh").agg(count(lit(1)).as("__df"))
-        .filter(col("__df") <= maxShingleDocs)
-        .select("sh")
-      shAll.join(keep, Seq("sh"), "left_semi")
-    }
+    // shingles are per-document distinct (shinglesFromWords
+    // array_distincts), so the per-shingle row count IS its document
+    // frequency; the count shuffles (sh, cnt) pairs only
+    val sh = bucketCap(shAll, Seq("sh"), maxShingleDocs)(shAll)
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("n"))
     val common = sh.select(col("id").as("id_a"), col("sh"))
       .join(sh.select(col("id").as("id_b"), col("sh")), Seq("sh"))
@@ -1245,12 +1246,7 @@ object TextDedupOps {
       shingleN: Int = 3, maxShingleDocs: Int = Int.MaxValue): DataFrame = {
     val shAll = explodedShingles(df, idCol, textCol, shingleN)
       .select(col(idCol).as("id"), col("__sh").as("sh"))
-    val sh = if (maxShingleDocs == Int.MaxValue) shAll else {
-      val keep = shAll.groupBy("sh").agg(count(lit(1)).as("__df"))
-        .filter(col("__df") <= maxShingleDocs)
-        .select("sh")
-      shAll.join(keep, Seq("sh"), "left_semi")
-    }
+    val sh = bucketCap(shAll, Seq("sh"), maxShingleDocs)(shAll)
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("n"))
     val common = sh.select(col("id").as("id_a"), col("sh"))
       .join(sh.select(col("id").as("id_b"), col("sh")), Seq("sh"))
@@ -1338,26 +1334,11 @@ object TextDedupOps {
         .select(col(aCol).cast("long"), col(bCol).cast("long"))
         .limit(collectBelow + 1).collect() // bounded: ≤ collectBelow+1
       if (rows.length <= collectBelow) {
-        val parent = scala.collection.mutable.Map[Long, Long]()
-        def find(x: Long): Long = {
-          var r = x
-          while (parent(r) != r) r = parent(r)
-          var c = x
-          while (parent(c) != c) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        rows.foreach { r =>
-          val a = r.getLong(0); val b = r.getLong(1)
-          parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-          val ra = find(a); val rb = find(b)
-          if (ra != rb) {
-            if (ra < rb) parent(rb) = ra else parent(ra) = rb
-          }
-        }
         val spark = pairs.sparkSession
         import spark.implicits._
-        return parent.keys.toSeq.sorted.map(idv => (idv, find(idv)))
-          .toDF("id", "cluster")
+        return minRootComponents(
+            rows.iterator.map(r => (r.getLong(0), r.getLong(1))))
+          .toSeq.sorted.toDF("id", "cluster")
       }
     }
     if (reliable)
@@ -1520,13 +1501,8 @@ object TextDedupOps {
       shiftrightunsigned(col("simhash"), i * width).bitwiseAND(lit(mask))): _*)
     val bandedAll = sh.select(col(idCol), col("simhash"),
       posexplode(chunks).as(Seq("band", "chunk")))
-    val banded = if (maxBucketSize == Int.MaxValue) bandedAll else {
-      val keep = bandedAll.groupBy("band", "chunk")
-        .agg(count(lit(1)).as("__bsz"))
-        .filter(col("__bsz") <= maxBucketSize)
-        .select("band", "chunk")
-      bandedAll.join(keep, Seq("band", "chunk"), "left_semi")
-    }
+    val banded =
+      bucketCap(bandedAll, Seq("band", "chunk"), maxBucketSize)(bandedAll)
     val a = banded.select(col(idCol).as("id_a"), col("simhash").as("h_a"),
       col("band"), col("chunk"))
     val b = banded.select(col(idCol).as("id_b"), col("simhash").as("h_b"),
@@ -1647,11 +1623,7 @@ object TextDedupOps {
         explode(array_distinct(transform(
           sequence(lit(1), length(col("s")) - (n - 1)),
           i => col("s").substr(i, lit(n))))).as("g"))
-    val blocked = if (maxGramDocs == Int.MaxValue) grams else {
-      val keep = grams.groupBy("g").agg(count(lit(1)).as("__df"))
-        .filter(col("__df") <= maxGramDocs).select("g")
-      grams.join(keep, Seq("g"), "left_semi")
-    }
+    val blocked = bucketCap(grams, Seq("g"), maxGramDocs)(grams)
     // Spark's THRESHOLDED levenshtein (3-arg, since 3.5) runs the
     // banded early-exit DP — O(len·maxDist), returns −1 above the
     // threshold — so ONE evaluation both filters candidates and

@@ -147,14 +147,6 @@ object TextStatsOps {
       lit(0.3) * least(nChars.cast("double") / 500.0, lit(1.0)) +
       lit(0.2) * least(avgTokenLen(text) / 10.0, lit(1.0))
 
-  /** BPE-ish sub-token count: whitespace tokens + an extra unit per 4
-    * chars of long tokens (a cheap deterministic proxy for tokenizer
-    * budget accounting; see [[bpeTokenCount]] for the real
-    * merge-table algorithm). */
-  def approxBpeTokenCount(text: Column): Column =
-    aggregate(tokens(text), lit(0L),
-      (acc, t) => acc + greatest(ceil(length(t) / 4.0), lit(1L)))
-
   /** Demo BPE merge table in RANK order (highest priority first) — in
     * production the caller supplies their tokenizer's learned merges;
     * this compact table exercises the algorithm's essential behaviors

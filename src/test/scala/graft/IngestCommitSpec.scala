@@ -810,6 +810,37 @@ class IngestCommitSpec extends SparkSpec {
       triDocs(Seq(50L)), 2L, corpus))
   }
 
+  test("corpus vacuum: a delete landing mid-maintenance (after the " +
+      "tombstone read, before the clear) stays pending and excluded, " +
+      "and the next vacuum folds it") {
+    val corpus = tmpDir("takedown-race")
+    assert(IngestCommit.exactDedupIngestBatch(
+      triDocs(0L until 20L), 0L, corpus))
+    IngestCommit.deleteFromCorpus(Seq(0L).toDF("doc_id"), corpus)
+    def view(): Set[Long] = IngestCommit.committedCorpus(spark, corpus,
+      s"$corpus/_commits").select("doc_id").as[Long].collect().toSet
+    def stored(): Set[Long] = spark.read.parquet(s"$corpus/ingest_id=0")
+      .select("doc_id").as[Long].collect().toSet
+    val tombDir = new org.apache.hadoop.fs.Path(s"$corpus/_tombstones")
+    val fs = tombDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    IngestCommit.vacuumCorpus(spark, corpus, failpoint = p =>
+      if (p == "before-tombstone-clear")
+        IngestCommit.deleteFromCorpus(Seq(5L).toDF("doc_id"), corpus))
+    assert(view() == (1L until 20L).toSet - 5L)
+    assert(stored() == (1L until 20L).toSet) // 5 is pending, not folded
+    IngestCommit.vacuumCorpus(spark, corpus)
+    assert(view() == (1L until 20L).toSet - 5L)
+    assert(stored() == (1L until 20L).toSet - 5L)
+    assert(!fs.exists(tombDir))
+    // a marker-only tombstone directory (a clear cut short between its
+    // files and its markers) means nothing pending
+    fs.mkdirs(tombDir)
+    fs.create(new org.apache.hadoop.fs.Path(tombDir, "_SUCCESS")).close()
+    assert(view() == (1L until 20L).toSet - 5L)
+    IngestCommit.vacuumCorpus(spark, corpus)
+    assert(stored() == (1L until 20L).toSet - 5L)
+  }
+
   test("corpus takedown composes with the index delete: the near-dup " +
       "shadow outlives the takedown until deleteFromLshIndex " +
       "reconciles it, and both vacuums fold cleanly") {

@@ -58,6 +58,31 @@ class LlmSpec extends SparkSpec {
       s"cap did not bound boilerplate pairs: $boilerCapped vs $boilerUncapped")
   }
 
+  test("minHashSignatures: documents shorter than shingleN hash as one " +
+      "whole-document shingle; NULL text keeps its all-NULL signature") {
+    val df = Seq[(Long, String)]((1L, ""), (2L, "!!! ..."), (3L, "hello"),
+      (4L, "two words"), (5L, "Two  words!"), (6L, "words two"),
+      (7L, null)).toDF("doc_id", "text")
+    val sigs = TextDedupOps.minHashSignatures(df, "doc_id", "text", 3, 32)
+    val byId = sigs.collect().map(r => r.getLong(0) -> r.getSeq[Any](1)).toMap
+    assert(byId.keySet == (1L to 7L).toSet)
+    (1L to 6L).foreach { i =>
+      assert(byId(i).size == 32 && byId(i).forall(_ != null), s"doc $i")
+    }
+    // NULL text: one NULL shingle, so every minimum is NULL
+    assert(byId(7L).size == 32 && byId(7L).forall(_ == null))
+    val pairs = TextDedupOps.lshCandidatePairs(sigs, "doc_id", bands = 8,
+        threshold = 0.0)
+      .select("id_a", "id_b", "est_jaccard").as[(Long, Long, Double)]
+      .collect().map(p => (p._1, p._2) -> p._3).toMap
+    // identical 2-word documents (after normalization) pair at 1.0, as
+    // do the empty and the punctuation-only text (both normalize to "")
+    assert(pairs.get((4L, 5L)) == Some(1.0), pairs)
+    assert(pairs.get((1L, 2L)) == Some(1.0), pairs)
+    // the whole-document shingle keeps word order
+    assert(byId(4L) != byId(6L))
+  }
+
   test("exact dedup keeps lowest id per content") {
     val out = TextDedupOps.exactDedup(docs, "text", "doc_id")
       .select("doc_id").as[Long].collect().toSet
