@@ -1,38 +1,26 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Benchmark main (driver contract): runs the HEADLINE query set from
-  * BASELINE.md — not the whole registry, which is sized for correctness
-  * coverage, not timing — and prints one JSON line.
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
+
+/** Benchmark main (driver contract): times the [[BenchTable]] workloads
+  * — the HEADLINE registry query set from BASELINE.md (not the whole
+  * registry, which is sized for correctness coverage, not timing), the
+  * stress entries and the stream≡batch witnesses — and prints the JSON
+  * record plus a compact summary line.
   *
   * Each query is materialized through the `noop` sink so every projected
   * column is actually computed (a bare `.count()` would let Catalyst
   * prune the aggregates away and time an empty scan).
+  *
+  * This object is the harness: warm-up, reps, noisy-retry, host guard,
+  * state-store provider pairs, env block and JSON output. The table
+  * says what runs; nothing here names an entry except the summary's
+  * legacy-9 split and the fixtures forced before the timed stress reps.
   */
 object Bench {
-  /** BASELINE.md "BENCH query set": scan+agg, 3-way join top-k, asof,
-    * resample, rolling, dedup, pivot — run only those that exist in the
-    * registry so the bench degrades gracefully mid-build.
-    *
-    * classifier_train joined in r14 (r13-verdict task #7): the nine
-    * legacy entries are TPC-H-shaped and frozen since r1 while the
-    * engine's center of mass moved to the curation stack, so one
-    * training-loop query (distributed gradient steps + scoring — the
-    * north-star path) now rides the timed set. Round-over-round
-    * totals therefore BREAK SERIES at r14; BENCH.md records the
-    * split (legacy-9 subtotal stays comparable). */
-  val headline: Seq[String] = Seq(
-    "q1_agg",
-    "q3_join_topk",
-    "asof_backward_by",
-    "resample_5min",
-    "rolling_fixed_100",
-    "dedup_keep_first",
-    "pivot_table_orders",
-    "minhash_near_dup",
-    "cosine_topk",
-    "classifier_train")
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default = ALL processors, matching the driver's official shape
@@ -50,28 +38,15 @@ object Bench {
     // Bench working sets are MBs at sf0.1 — tmpfs is safe; a real
     // cluster sizes local dirs deliberately, which is exactly why the
     // bench must not measure this host's disk instead of the engine.
-    val localDir = {
-      val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite) {
-        val d = new java.io.File(shm,
-          s"graft-bench-local-${ProcessHandle.current().pid()}")
-        d.mkdirs(); d.toString
-      } else sys.props("java.io.tmpdir")
-    }
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.local.dir", localDir)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // see Verify.scala: tz-less parquet micros read as UTC instants
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
+    val localDir = tmpfsDir("local")
+    val spark = LocalSession.start(cpus,
+      "spark.local.dir" -> localDir,
+      "spark.sql.adaptive.enabled" -> "true",
       // the stream witnesses read their own decomposition out of
       // recentProgress, which Spark caps (default 100 updates) — a
       // witness with more triggers would silently undercount batch_sum
       // and misattribute the gap to overhead
-      .config("spark.sql.streaming.numRecentProgressUpdates", "2000")
+      "spark.sql.streaming.numRecentProgressUpdates" -> "2000",
       // Fork-free local checkpoint filesystem (r17 — the stream-join
       // session-variable fix; see NioLocalFs's scaladoc + BENCH.md):
       // stock Hadoop local FS FORKS a process per checkpoint-file
@@ -82,436 +57,10 @@ object Bench {
       // rationale as the tmpfs scratch dirs: a production checkpoint
       // store (HDFS/S3) never forks per file. Spark's own checkpoint
       // checksum layer stays at its default.
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+      "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
         "graft.sources.NioLocalAfs")
-      .config("spark.ui.enabled", "false")
-    // Dev-only bisect knob (the stream-join hunt): semicolon-separated
-    // k=v pairs applied verbatim to the session, e.g.
-    // SPARK_GRAFT_CONF="spark.sql.streaming.checkpoint.fileChecksum
-    // .enabled=false". Official runs leave it unset.
-    val extraConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.nonEmpty)
-      .map { kv =>
-        val i = kv.indexOf('=')
-        require(i > 0, s"SPARK_GRAFT_CONF entry not k=v: $kv")
-        (kv.substring(0, i), kv.substring(i + 1))
-      }
-    val spark = extraConf
-      .foldLeft(builder0) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    if (extraConf.nonEmpty)
-      System.err.println(s"[bench] extra conf: $extraConf")
-    spark.sparkContext.setLogLevel("WARN")
 
-    val queries = SparkEntry.queries
-    val names = headline.filter(queries.contains)
-
-    /** Wall-clock witness for the LSH hot-bucket cap (r8 verdict task
-      * #8): every 10th document is rewritten into one boilerplate
-      * template cluster (shared chrome + unique tail — the site-chrome
-      * skew shape), then capped candidate generation + connected
-      * components run end-to-end. Uncapped, the boilerplate bucket
-      * pair count is quadratic in cluster size (10% of the corpus);
-      * the cap keeps the stage bucket-bounded, and this entry times
-      * that path at bench scale every round. */
-    def lshStressCapped(): DataFrame = {
-      import org.apache.spark.sql.functions._
-      import graft.llm.TextDedupOps
-      val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-      val boiler = "this page is protected by copyright terms of " +
-        "service apply to all visitors please review the policy "
-      val skewed = docs.withColumn("text",
-        when(pmod(col("doc_id"), lit(10)) === 0,
-          concat(lit(boiler * 4), col("doc_id").cast("string")))
-          .otherwise(col("text")))
-      val sigs = TextDedupOps.minHashSignatures(skewed, "doc_id", "text",
-        shingleN = 3, k = 32)
-      val pairs = TextDedupOps.lshCandidatePairs(sigs, "doc_id",
-        bands = 8, threshold = 0.8, maxBucketSize = 64)
-      TextDedupOps.connectedComponents(pairs, "id_a", "id_b",
-        checkpointEvery = 4)
-    }
-
-    /** Wall-clock witness for the custom AsofJoinExec under by-key skew
-      * (r9 verdict task #8): half of ALL events collapse onto one hot
-      * user_id before the two-pointer merge runs, so a single task owns
-      * ~50% of both join sides — the worst realistic key distribution.
-      * The exec is per-key linear (sort + one forward pass, no per-row
-      * window re-scan), so the hot task should cost ~n log n in its
-      * sort, not quadratic; this entry times exactly that every round. */
-    def asofStressHotKey(): DataFrame = {
-      import org.apache.spark.sql.functions._
-      import graft.operators.SelectionOps
-      val ev = Tables.events(spark, sfDir).withColumn("user_id",
-        when(pmod(col("event_id"), lit(2)) === 0, lit(0L))
-          .otherwise(col("user_id")))
-      val trades = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val quotes = SelectionOps.dropDuplicates(
-        ev.filter(col("event_type") === "view"),
-        Seq("user_id", "ts"), "last", Seq(col("event_id")))
-        .select(col("user_id"), col("ts"), col("value").as("q_value"))
-      graft.plans.AsofJoinPlan.asof(trades, quotes, "ts", Seq("user_id"),
-        Seq("q_value"))
-    }
-
-    /** Wall-clock witness for the skew-safe paragraph dedup (r11 verdict
-      * task #1): every 10th document is rewritten to one SHARED
-      * boilerplate paragraph plus a unique tail paragraph, so a single
-      * paragraph text recurs in 10% of the corpus — the hot-key shape
-      * that made the r11 window plan ship every copy to one unsplittable
-      * task. The r12 groupBy(min(struct)) plan partial-aggregates the
-      * hot key map-side; this entry times exactly that path. */
-    def paraDedupStressHot(): DataFrame = {
-      import org.apache.spark.sql.functions._
-      import graft.llm.TextDedupOps
-      val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-      val boiler = "subscribe to our newsletter for updates about new " +
-        "articles terms of use and privacy policy apply to all visitors"
-      val skewed = docs.withColumn("text",
-        when(pmod(col("doc_id"), lit(10)) === 0,
-          concat(lit(boiler), lit("\n\n"), col("doc_id").cast("string")))
-          .otherwise(col("text")))
-      TextDedupOps.paragraphDedup(skewed, "doc_id", "text")
-    }
-
-    /** Hot-bigram stress for the LM scoring tier: every 3rd document
-      * gets "of the" stitched between all its words, so one bigram key
-      * carries a large share of the probe stream — the boilerplate-
-      * n-gram shape a web corpus always has. The count side is
-      * pre-aggregated (one row per bigram) and the probe-side hot key
-      * is join skew AQE can split, so this must stay linear; a plan
-      * regression to a window or an unaggregated build side shows up
-      * as wall-clock here. */
-    def lmStressHotBigram(): DataFrame = {
-      import org.apache.spark.sql.functions._
-      val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-      val skewed = docs.withColumn("text",
-        when(pmod(col("doc_id"), lit(3)) === 0,
-          regexp_replace(col("text"), " ", " of the "))
-          .otherwise(col("text")))
-      val ref = skewed.filter(pmod(col("doc_id"), lit(7)) === 0)
-      graft.llm.LmOps.lmOverlapScore(skewed, ref, "doc_id", "text")
-    }
-
-    /** Wall-clock witness for the combined curation pipeline (r11
-      * verdict task #6 — the r11 flagship had no standing bench entry):
-      * Gopher quality gate (row-local) → Gopher repetition gate (the
-      * most expensive filter, composed by id semi-join the way a real
-      * pipeline chains frame-level filters) → cross-document paragraph
-      * dedup with reassembly. Filters-then-dedup is the canonical
-      * curation order; everything before the dedup's two shuffles runs
-      * at scan throughput. */
-    def curationStress(): DataFrame = {
-      import org.apache.spark.sql.functions._
-      import graft.llm.{TextDedupOps, TextStatsOps}
-      val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-      val quality = docs.filter(TextStatsOps.gopherKeep(col("text")))
-      // gopherRepetitionKept, NOT .filter(col("keep")): a raw filter
-      // pushes below the staged metric projections and re-expands the
-      // HOF trees per element (see the gopherRepetition scaladoc — this
-      // exact entry caught it at >800 s CPU per sf0.001 partition)
-      val kept = TextStatsOps.gopherRepetitionKept(quality, "doc_id", "text")
-      TextDedupOps.paragraphDedup(kept, "doc_id", "text")
-    }
-
-    /** BPE TRAINING wall-clock witness (r13): learn 12 merges from the
-      * real documents text. The training state is the unique-word
-      * frame (one map-side-combined collapse of the corpus), then 12
-      * rounds of pair-count aggregation + 1-row collect — the
-      * iterative-driver-loop shape whose cost is rounds × one job, NOT
-      * rounds × corpus scans; wall-clock here pins that the loop
-      * doesn't regress to rescanning or deep-lineage replans. The
-      * result feeds the same encoder the bpe gates pin, so only the
-      * loop's cost needs witnessing. */
-    def bpeTrainStress(): DataFrame = {
-      import org.apache.spark.sql.functions._
-      import graft.llm.TextStatsOps
-      val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-      val trained = TextStatsOps.bpeTrainMerges(docs, "text", numMerges = 12)
-      // encode a 1-row frame with the trained table so the timed unit
-      // ends in a materializable plan (the training cost dominates)
-      docs.limit(1).select(col("doc_id"),
-        TextStatsOps.bpeTokenCount(col("text"), trained).as("n"))
-    }
-
-    /** PRODUCTION-VOCAB BPE training wall-clock (r17 verdict task
-      * #5): 8 000 merges via bpeTrainMergesLocal with maxTrainRows
-      * bounding the histogram slice — the measured number behind the
-      * bounded-storage training claim. Cost model under witness: ONE
-      * distributed word-histogram aggregation (the only corpus-sized
-      * step) + a bounded collect + the in-memory incremental merge
-      * loop (pair→words index + lazy-revalidated heap); a regression
-      * that reintroduces per-round Spark jobs or super-linear
-      * round cost shows up here directly. */
-    /** The natural documents text EXHAUSTS at ~89 merges (its
-      * synthetic vocabulary is a small word pool — every word
-      * collapses to one symbol), so the corpus here is high-entropy
-      * by construction: 25 sixteen-hex-char words per document
-      * (xxhash64-derived, deterministic), giving a rich shared-
-      * substring space that genuinely sustains 8 000 merges. The
-      * histogram is bounded at 200k word types (count desc, word asc
-      * — the deterministic truncation). n_merges lands in the result
-      * so an early exhaustion can never masquerade as a fast run. */
-    def bpeTrain8kStress(): DataFrame = {
-      import org.apache.spark.sql.functions._
-      import graft.llm.TextStatsOps
-      val docs = Tables.documents(spark, sfDir).select("doc_id")
-        .withColumn("text", array_join(transform(
-          sequence(lit(0), lit(24)),
-          j => lower(hex(xxhash64(col("doc_id") * 31 + j * 7)))), " "))
-      val trained = TextStatsOps.bpeTrainMergesLocal(docs, "text",
-        numMerges = 8000, maxTrainRows = 200000,
-        maxTrainWords = 200000)
-      docs.limit(1).select(col("doc_id"),
-        lit(trained.size).as("n_merges"))
-    }
-
-    /** 32k-VOCAB unigram training wall-clock (same task): the
-      * SentencePiece-shape hard-EM at a production vocabulary —
-      * seed table ≤ 4·32 768 candidate pieces, TWO distributed
-      * Viterbi E-step passes over the unique words (the kernel tier),
-      * driver-side M-steps, maxTrainRows bounding. Pins that rounds
-      * stay rounds × one job at real vocab size. */
-    def unigramTrain32kStress(): DataFrame = {
-      import org.apache.spark.sql.functions._
-      import graft.llm.TextStatsOps
-      // same high-entropy corpus as bpeTrain8kStress — the natural
-      // text's candidate space caps out at ~54 pieces
-      val docs = Tables.documents(spark, sfDir).select("doc_id")
-        .withColumn("text", array_join(transform(
-          sequence(lit(0), lit(24)),
-          j => lower(hex(xxhash64(col("doc_id") * 31 + j * 7)))), " "))
-      val vocab = TextStatsOps.trainUnigramLm(docs, "text",
-        vocabSize = 32768, rounds = 2, maxTokenLen = 8, minCount = 2,
-        maxTrainRows = 200000)
-      docs.limit(1).select(col("doc_id"), lit(vocab.size).as("n_pieces"))
-    }
-
-    /** Production-table token-counting throughput (r14 verdict task
-      * #1's witness): rank-table BPE count over this SF's documents
-      * with a 33 024-entry merge table (24 demo rules + 33 000
-      * synthetic pads — bpePadMerges) riding a broadcast HashMap.
-      * This is the single most common daily operation of a
-      * training-data pipeline — budget accounting with the REAL
-      * tokenizer table — and the cost model under witness is pure
-      * scan throughput: zero shuffle, O(1) hash lookups per adjacent
-      * pair, table shipped once per executor (never in task binaries
-      * or plan literals — the plan stays O(1) in table size). */
-    def bpeRankCountStress(): DataFrame = {
-      import org.apache.spark.sql.functions._
-      import graft.llm.TextStatsOps
-      val merges = TextStatsOps.BpeDemoMerges ++
-        TextStatsOps.bpePadMerges(33000)
-      TextStatsOps.bpeTokenCountRanked(
-          Tables.documents(spark, sfDir), "doc_id", "text", merges)
-        .agg(sum(col("n_bpe")).as("total_bpe"),
-          count(lit(1)).as("n_docs"))
-    }
-
-    /** Unigram token-counting throughput at a production vocabulary
-      * size: the broadcast-HashMap Viterbi kernel over this SF's
-      * documents with a 32 794-entry vocabulary (26 chars + 32 768
-      * procedural 4-char pieces — the TRAINED path is gated in
-      * unigram_train_32k; this times the steady-state daily count).
-      * Zero shuffle, O(len·maxTokenLen) hash lookups per word. */
-    def unigramCountStress(): DataFrame = {
-      import org.apache.spark.sql.functions._
-      import graft.llm.TextStatsOps
-      val vocab = (('a' to 'z').map(c => c.toString -> -3000000L) ++
-        (0 until 32768).map { i =>
-          val w = new String(Array(
-            ('a' + i / 17576 % 26).toChar, ('a' + i / 676 % 26).toChar,
-            ('a' + i / 26 % 26).toChar, ('a' + i % 26).toChar))
-          w -> -14000000L
-        }).toMap
-      TextStatsOps.unigramEncodeDocsKernel(
-          Tables.documents(spark, sfDir), "doc_id", "text", vocab,
-          unkCharMicro = -20000000L, maxTokenLen = 4)
-        .agg(sum(col("n_tokens")).as("total_tokens"),
-          sum(col("n_unk_chars")).as("total_unk"))
-    }
-
-    /** Z-order layout rewrite wall-clock (late r13): Morton-key the
-      * events table on (user_id, event_id) and rewrite it across 8
-      * files. Cost model under witness: one bounded min/max agg + a
-      * scan-local interleave projection + ONE range exchange + the
-      * write — the same bill as the plain sorted-layout rewrite, with
-      * multi-column skipping bought for it. A regression that turns
-      * the interleave into a non-codegen path or adds a shuffle shows
-      * up here directly. */
-    def zorderStress(): DataFrame = {
-      import org.apache.spark.sql.functions._
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft-bench-zorder-${ProcessHandle.current().pid()}").toString
-      val ev = Tables.events(spark, sfDir)
-        .select("event_id", "ts", "user_id", "value")
-      graft.sources.ZOrder.writeZOrdered(ev, dir,
-        Seq("user_id", "event_id"), bits = 16, nFiles = 8)
-    }
-
-    /** Classifier-training wall-clock (late r13): two full-batch
-      * hard-sigmoid GD steps over this SF's documents at 64 buckets —
-      * per step a zero-shuffle logit pass and ONE map-side-combined
-      * bucket-gradient aggregation; the timed unit ends scoring the
-      * corpus with the trained weights. Iterative-driver-loop shape
-      * like bpe_train_stress: cost must stay steps × one job. */
-    def classifierTrainStress(): DataFrame = {
-      import org.apache.spark.sql.functions._
-      import graft.llm.ClassifierOps
-      val docs = Tables.documents(spark, sfDir).select(col("doc_id"),
-        col("text"), (col("lang") === "en").cast("int").as("y"))
-      // r19: scored off the materialized feature frame — same integer
-      // logits, one tokenize+md5 pass instead of three (the timed unit
-      // still spans training AND corpus scoring end to end)
-      ClassifierOps.trainHardLogisticScored(docs, "text", "y", "doc_id",
-        buckets = 64, iters = 2, lrDen = 100L)
-    }
-
-    /** Multimodal kernel throughput witness: per document, ENCODE and
-      * DECODE a real PNG (two ImageIO passes), a real WAV (AudioSystem
-      * both ways + exact sample stats), and an MP4 with a sample table
-      * (builder + box-tree walk + mdat frame slicing) — the whole
-      * decode tier the curation pipeline runs on binary columns, timed
-      * end to end. All batched mapPartitions, zero shuffle; wall-clock
-      * here is pure kernel + codec throughput. */
-    def multimodalStress(): DataFrame = {
-      import org.apache.spark.sql.functions._
-      import graft.llm.MultimodalOps
-      import spark.implicits._
-      val assets = Tables.documents(spark, sfDir).select(col("doc_id"))
-        .as[Long].mapPartitions(_.map { id =>
-          val png = MultimodalOps.syntheticPng(
-            16 + (id % 16).toInt, 16 + (id % 8).toInt, seed = id)
-          val wav = MultimodalOps.syntheticWav(
-            800 + (id % 200).toInt, 8000, seed = id)
-          val n = 4 + (id % 3).toInt
-          val mp4 = MultimodalOps.syntheticMp4("isom", 1000, n.toLong,
-            Seq(("vide", 64, 48)), videoSamples =
-              (0 until n).map(i => Array.tabulate(64)(j =>
-                ((id + i * 7 + j) % 256).toByte)))
-          (id, png, wav, mp4)
-        }).toDF("asset_id", "png", "wav", "mp4")
-      val img = MultimodalOps.decodeImageMeta(assets, payloadCol = "png")
-        .toDF().select(col("asset_id"), col("width"), col("height"))
-      val aud = MultimodalOps.decodeAudioMeta(assets, payloadCol = "wav")
-        .toDF().select(col("asset_id"), col("n_frames"), col("sum_sq"))
-      val vid = MultimodalOps.sampleVideoFrames(assets, everyNth = 2,
-          payloadCol = "mp4")
-        .groupBy("asset_id")
-        .agg(count(lit(1)).as("n_sampled"),
-          sum(octet_length(col("frame"))).as("frame_bytes"))
-      img.join(aud, "asset_id").join(vid, "asset_id")
-    }
-
-    /** WET-shard corpus, written ONCE (setup, untimed): the documents
-      * table replicated 16× and fanned into 8 gzipped shards — the
-      * Common Crawl drop shape at witness scale. */
-    lazy val wetShards: (String, Long, Long) = {
-      import org.apache.spark.sql.functions._
-      import graft.sources.WetIo
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-wet-bench").toString
-      val reps = 16
-      val docs = Tables.documents(spark, sfDir)
-        .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-        .withColumn("rep", explode(sequence(lit(0), lit(reps - 1))))
-        .select(concat(lit("http://bench/doc/"), col("doc_id"), lit("/"),
-            col("rep")).as("target_uri"),
-          col("text"),
-          pmod(col("doc_id") * reps + col("rep"), lit(8)).as("shard"))
-        .persist()
-      (0 until 8).foreach { k =>
-        WetIo.write(docs.filter(col("shard") === k)
-          .select("target_uri", "text").orderBy("target_uri"),
-          s"$dir/part-$k.wet.gz")
-      }
-      val st = docs.agg(count(lit(1)),
-        sum(octet_length(col("text")))).collect()(0)
-      docs.unpersist()
-      // warm the parser/gzip codepath once (JIT + classloading + the
-      // aggregate's codegen) so the timed reps measure ingest, not
-      // first-touch compilation — the same role the headline warmup
-      // loop plays for the registry queries
-      WetIo.read(spark, dir)
-        .agg(count(lit(1)), sum(col("content_length"))).collect()
-      (dir, st.getLong(0), st.getLong(1))
-    }
-
-    /** One-time persisted IVF-PQ index fixture for the ANN serving
-      * witness: trained + written ONCE outside the timed reps (the
-      * wetShards discipline — quantizer training is index BUILD cost,
-      * already scale-witnessed; the serving path is what needs a
-      * wall-clock number). */
-    lazy val ivfPqIndexDir: String = {
-      import graft.llm.SimilarityOps
-      val dir = s"${sys.props("java.io.tmpdir")}/graft-bench-ivfpq-" +
-        ProcessHandle.current().pid()
-      val emb = Tables.embeddings(spark, sfDir)
-      val cents = SimilarityOps.trainIvfCentroids(emb, "vec_id",
-        "embedding", 16)
-      val cbs = SimilarityOps.trainPqCodebooksResidual(emb, "vec_id",
-        "embedding", cents, m = 8, ksub = 64, iters = 1)
-      SimilarityOps.writeIvfPqIndex(emb, dir, cents, cbs)
-      dir
-    }
-
-    /** ANN SERVING witness: a 256-query batch probed against the
-      * persisted IVF-PQ index at nprobe 8/16 — cell-partition-pruned
-      * codes-only scans, ADC scoring, exact re-rank on floats joined
-      * back by id. This is the query-side wall-clock of the lake
-      * embedding store (the recall block measures quality; this
-      * measures speed). */
-    def ivfPqProbeStress(): DataFrame = {
-      import org.apache.spark.sql.functions._
-      import graft.llm.SimilarityOps
-      val emb = Tables.embeddings(spark, sfDir)
-      val queries = emb.filter(col("vec_id") < 256)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      SimilarityOps.ivfPqTopKIndexed(queries, ivfPqIndexDir, emb,
-        k = 10, nprobe = 8)
-    }
-
-    /** WET ingest throughput witness (r13): parse the 8 gzipped shards
-      * back per-file-parallel and aggregate — wall-clock is the record
-      * parser + gzip + aggregation path a crawl ingest runs. The diff
-      * (doc count AND total payload bytes vs the source corpus, exact)
-      * runs inside the witness: a framing or Content-Length bug fails
-      * loudly instead of reading quickly and wrongly. */
-    def wetIngestStress(): DataFrame = {
-      import org.apache.spark.sql.functions._
-      import graft.sources.WetIo
-      val (dir, n, bytes) = wetShards
-      val got = WetIo.read(spark, dir)
-        .agg(count(lit(1)), sum(col("content_length"))).collect()(0)
-      require(got.getLong(0) == n && got.getLong(1) == bytes,
-        s"wet ingest diff: read (${got.getLong(0)}, ${got.getLong(1)}) " +
-          s"vs source ($n, $bytes)")
-      spark.range(1).toDF("ok")
-    }
-
-    /** Wall-clock witness that the stream≡batch claim holds END TO END
-      * at bench scale (r10 verdict task #6 — it was spec-only): events
-      * are staged into 16 files, replayed through the parquet FILE
-      * SOURCE two files per trigger (8 genuine micro-batches, real
-      * state-store handoff between them), aggregated with the exact
-      * resample_5min expressions, and the complete-mode result is
-      * diffed against the registry's batch plan. The sum is
-      * decimal-exact, so micro-batch partial-aggregation order cannot
-      * move it: any nonzero diff is a real streaming-semantics bug and
-      * reports as -1. */
-    // Per-run decomposition of the stream-join witnesses (r15 verdict
-    // task #4: two same-host chains measured 4-6 s vs 15-18 s with
-    // reps AGREEING — something fixed-cost or I/O-mode-dependent, not
-    // rep noise): wall = query start → processAllAvailable returns;
-    // batch_sum = Σ per-trigger triggerExecution from the progress
-    // log; overhead = wall − batch_sum (stream startup, source
-    // listing, final no-data trigger). state_commit = Σ per-trigger
-    // stateOperators commit times — the disk-placement-sensitive
-    // slice (checkpoint state commits under java.io.tmpdir, which is
-    // DISK-backed here; CPU loadavg cannot see disk weather). The
-    // pair is printed per rep and shipped in the bench JSON so a
-    // divergent official run can be attributed without a re-run.
+    val table = new BenchTable(spark, sfDir)
     // Witness CHECKPOINTS pin to tmpfs (/dev/shm) when present — the
     // r15 verdict's 3× stream-join mode, reproduced here under an
     // fsync disk load on /tmp (CPU loadavg ~4): HDFS-provider walls
@@ -523,830 +72,12 @@ object Bench {
     // size here is MBs (bounded by watermark), so tmpfs is safe; the
     // per-batch/state_commit decomposition still records the commit
     // cost honestly. Falls back to java.io.tmpdir when no tmpfs.
-    val ckptBase = {
-      val shm = new java.io.File("/dev/shm")
-      val base = if (shm.isDirectory && shm.canWrite)
-        new java.io.File(shm,
-          s"graft-bench-ckpt-${ProcessHandle.current().pid()}")
-      else new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft-bench-ckpt-${ProcessHandle.current().pid()}")
-      base.mkdirs()
-      base.toString
-    }
-    val streamDecomp =
-      scala.collection.mutable.LinkedHashMap[String, String]()
-    def recordStreamDecomp(name: String, tag: String, t0: Long,
-        q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-      val wall = (System.nanoTime() - t0) / 1e9
-      val prog = q.recentProgress.toSeq
-      def r2(x: Double) = math.rint(x * 100) / 100
-      val batches = prog.map(p =>
-        Option(p.durationMs.get("triggerExecution"))
-          .fold(0.0)(_.toDouble / 1000))
-      val ops = prog.flatMap(_.stateOperators.toSeq)
-      val commit = ops.map(o => o.allUpdatesTimeMs + o.commitTimeMs)
-        .sum / 1000.0
-      // per-session attribution (the stream-join hunt): the state-store
-      // fan-out per trigger — shuffle partitions × stateful operators —
-      // and the final state row count, so a divergent run shows whether
-      // it did MORE state work or the SAME work slower
-      val shufParts = ops.headOption.fold(0)(_.numShufflePartitions.toInt)
-      val stateRows = prog.lastOption
-        .flatMap(_.stateOperators.headOption).fold(0L)(_.numRowsTotal)
-      val batchSum = batches.sum
-      val entry = s"""{"wall":${r2(wall)},"batch_sum":${r2(batchSum)},""" +
-        s""""overhead":${r2(wall - batchSum)},""" +
-        s""""state_commit":${r2(commit)},""" +
-        s""""shuffle_parts":$shufParts,"state_rows":$stateRows,""" +
-        s""""batches":[${batches.map(r2).mkString(",")}]}"""
-      streamDecomp(s"${name}_$tag") = entry
-      System.err.println(s"[bench] decomp ${name}_$tag: $entry")
-    }
-    // foreachBatch witnesses have no stateOperators and their cost
-    // lives in the sink lambda (jobs the progress log times as
-    // addBatch) — decompose them as wall vs Σ triggerExecution so the
-    // bench JSON attributes ALL EIGHT witnesses, not just the five
-    // memory-sink ones (r16 verdict task #7)
-    def recordForeachDecomp(name: String, tag: String, t0: Long,
-        q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-      val wall = (System.nanoTime() - t0) / 1e9
-      val prog = q.recentProgress.toSeq
-      def r2(x: Double) = math.rint(x * 100) / 100
-      val batches = prog.map(p =>
-        Option(p.durationMs.get("triggerExecution"))
-          .fold(0.0)(_.toDouble / 1000))
-      val batchSum = batches.sum
-      val entry = s"""{"wall":${r2(wall)},"batch_sum":${r2(batchSum)},""" +
-        s""""overhead":${r2(wall - batchSum)},""" +
-        s""""batches":[${batches.map(r2).mkString(",")}]}"""
-      streamDecomp(s"${name}_$tag") = entry
-      System.err.println(s"[bench] decomp ${name}_$tag: $entry")
-    }
-
-    def streamResampleWitness(tag: String): Double = {
-      import org.apache.spark.sql.functions._
-      import graft.queries.Q
-      val staged = s"${sys.props("java.io.tmpdir")}/graft-bench-stream-" +
-        ProcessHandle.current().pid()
-      val ev = Tables.events(spark, sfDir).select("ts", "value")
-      ev.repartition(16).write.mode("overwrite").parquet(staged)
-      val schema = spark.read.parquet(staged).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2).parquet(staged)
-      val agg = stream.groupBy(window(col("ts"), "5 minutes"))
-        .agg(count(lit(1)).as("cnt"), Q.dsum(col("value")).as("sum_value"))
-        .select(col("window.start").as("bucket"), col("cnt"), col("sum_value"))
-      val t0 = System.nanoTime()
-      val q = agg.writeStream.outputMode("complete").format("memory")
-        .option("checkpointLocation", s"$ckptBase/resample_$tag")
-        .queryName("graft_stream_resample_" + tag).start()
-      try { q.processAllAvailable()
-        recordStreamDecomp("stream_resample_5min", tag, t0, q)
-      } finally q.stop()
-      val secs = (System.nanoTime() - t0) / 1e9
-      val streamed = spark.table("graft_stream_resample_" + tag)
-      val batch = queries("resample_5min")(spark, sfDir)
-      val diff = streamed.exceptAll(batch).count() +
-        batch.exceptAll(streamed).count()
-      if (diff != 0) {
-        System.err.println(s"[bench] stream_resample_5min: $diff rows differ " +
-          "between streaming and batch — reporting -1")
-        -1.0
-      } else secs
-    }
-
-    /** Wall-clock witness for STREAMING dedup (r11 verdict task #8 —
-      * the watermarked-dedup claim was spec-only): every 5th event is
-      * planted as a duplicate copy 30 s later (same event_id and
-      * payload), the corpus is staged time-ordered into 16 range files
-      * and replayed 2 files per trigger (8 genuine micro-batches, so
-      * boundary-straddling duplicate pairs exercise cross-batch state),
-      * then `dropDuplicatesWithinWatermark("event_id")` under a
-      * 10-minute watermark dedups in append mode. The surviving
-      * (event_id, user_id, value) set is diffed against batch
-      * `dropDuplicates` over the same staged data — the copies carry
-      * identical payloads, so ANY row diff is a real streaming-state
-      * bug and reports as -1. ts is excluded from the diff (the batch
-      * pick between two otherwise-identical copies is arbitrary). */
-    def streamDedupWitness(tag: String): Double = {
-      import org.apache.spark.sql.functions._
-      val staged = s"${sys.props("java.io.tmpdir")}/graft-bench-sdedup-" +
-        ProcessHandle.current().pid()
-      val ev = Tables.events(spark, sfDir)
-        .select("event_id", "ts", "user_id", "value")
-      val dupes = ev.filter(pmod(col("event_id"), lit(5)) === 0)
-        .withColumn("ts", col("ts") + expr("INTERVAL 30 SECONDS"))
-      ev.unionAll(dupes)
-        .repartitionByRange(16, col("ts")).sortWithinPartitions("ts")
-        .write.mode("overwrite").parquet(staged)
-      // FileStreamSource replays in MODIFICATION-TIME order, and the 16
-      // parallel part writers finish in arbitrary ms order — left alone
-      // the ts ranges replay scrambled, the watermark leaps ahead on the
-      // first out-of-order file, and genuinely-early rows get dropped as
-      // late. Stamp mtimes in part order (= range order) so the replay
-      // is what it models: an event-time-ordered historical backfill.
-      new java.io.File(staged).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-        .zipWithIndex.foreach { case (f, i) =>
-          f.setLastModified((i + 1) * 60000L) }
-      val schema = spark.read.parquet(staged).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2).parquet(staged)
-      val dedup = stream.withWatermark("ts", "10 minutes")
-        .dropDuplicatesWithinWatermark("event_id")
-      val t0 = System.nanoTime()
-      val q = dedup.writeStream.outputMode("append").format("memory")
-        .option("checkpointLocation", s"$ckptBase/dedup_$tag")
-        .queryName("graft_stream_dedup_" + tag).start()
-      try { q.processAllAvailable()
-        recordStreamDecomp("stream_dedup_watermark", tag, t0, q)
-      } finally q.stop()
-      val secs = (System.nanoTime() - t0) / 1e9
-      val cols = Seq(col("event_id"), col("user_id"), col("value"))
-      val streamed = spark.table("graft_stream_dedup_" + tag).select(cols: _*)
-      // batch twin: the planted copies are payload-identical on the
-      // compared columns, so distinct == dropDuplicates(event_id) here
-      // (and plans as a plain Aggregate — Deduplicate + exceptAll trips
-      // an INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND in Spark 4.1's planner)
-      val batch = spark.read.parquet(staged).select(cols: _*).distinct()
-      val diff = streamed.exceptAll(batch).count() +
-        batch.exceptAll(streamed).count()
-      if (diff != 0) {
-        System.err.println(s"[bench] stream_dedup_watermark: $diff rows " +
-          "differ between streaming and batch dedup — reporting -1")
-        -1.0
-      } else secs
-    }
-
-    /** Wall-clock witness for STATEFUL SESSION WINDOWS under a
-      * watermark — the third streaming claim next to the aggregation
-      * (stream_resample_5min) and dedup (stream_dedup_watermark)
-      * witnesses: per-user 30-minute-gap sessions over the events
-      * table, streamed in APPEND mode through 8 micro-batches of the
-      * mtime-ordered file replay. Append emits a session only once the
-      * watermark passes its end (last event + gap), so the comparable
-      * set is sessions closed by the FINAL watermark — the batch twin
-      * computes the same session_window aggregate and filters to
-      * session end ≤ max(ts) − delay. Any row diff is a real
-      * session-state bug and reports as -1. */
-    def streamSessionWitness(tag: String): Double = {
-      import org.apache.spark.sql.functions._
-      import graft.queries.Q
-      val staged = s"${sys.props("java.io.tmpdir")}/graft-bench-ssess-" +
-        ProcessHandle.current().pid()
-      val ev = Tables.events(spark, sfDir).select("user_id", "ts", "value")
-      ev.repartitionByRange(16, col("ts")).sortWithinPartitions("ts")
-        .write.mode("overwrite").parquet(staged)
-      new java.io.File(staged).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-        .zipWithIndex.foreach { case (f, i) =>
-          f.setLastModified((i + 1) * 60000L) }
-      val schema = spark.read.parquet(staged).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2).parquet(staged)
-      val sess = stream.withWatermark("ts", "10 minutes")
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-        .agg(count(lit(1)).as("n"), Q.dsum(col("value")).as("sum_value"))
-        .select(col("user_id"), col("session_window.start").as("s"),
-          col("session_window.end").as("e"), col("n"), col("sum_value"))
-      val t0 = System.nanoTime()
-      val q = sess.writeStream.outputMode("append").format("memory")
-        .option("checkpointLocation", s"$ckptBase/session_$tag")
-        .queryName("graft_stream_session_" + tag).start()
-      try { q.processAllAvailable()
-        recordStreamDecomp("stream_session_window", tag, t0, q)
-      } finally q.stop()
-      val secs = (System.nanoTime() - t0) / 1e9
-      val streamed = spark.table("graft_stream_session_" + tag)
-      val batchSrc = spark.read.parquet(staged)
-      val hi = batchSrc.agg(max(col("ts"))).head().getTimestamp(0)
-      val cutoff = new java.sql.Timestamp(hi.getTime - 10 * 60 * 1000L)
-      // The closed-session filter MUST sit behind a materialization
-      // barrier: Catalyst treats session_window as a plain grouping
-      // expression and pushes `e <= cutoff` BELOW the session-merge
-      // aggregate, where it evaluates as `ts + gap <= cutoff` on RAW
-      // events — dropping the later half of a mergeable pair before the
-      // merge and leaving a bogus unmerged session that passes the
-      // cutoff (observed: 4 phantom rows at sf0.1). Sound for ordinary
-      // groupBy keys, unsound for session windows, whose grouping value
-      // is rewritten by the merge. localCheckpoint materializes the
-      // merged sessions so the filter can only see post-merge rows.
-      val batch = batchSrc
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-        .agg(count(lit(1)).as("n"), Q.dsum(col("value")).as("sum_value"))
-        .select(col("user_id"), col("session_window.start").as("s"),
-          col("session_window.end").as("e"), col("n"), col("sum_value"))
-        .localCheckpoint(true)
-        .filter(col("e") <= lit(cutoff))
-      val diff = streamed.exceptAll(batch).count() +
-        batch.exceptAll(streamed).count()
-      if (diff != 0) {
-        System.err.println(s"[bench] stream_session_window: $diff rows " +
-          "differ between streaming and batch sessions — reporting -1")
-        -1.0
-      } else secs
-    }
-
-    /** CRASH-RECOVERY witness for stateful streaming (r17 verdict
-      * task #3): the eight witnesses prove stream ≡ batch in ONE run;
-      * this one proves the semantics a 100 TB stream actually relies
-      * on — that a query KILLED mid-stream (an exception thrown out of
-      * the sink on an uncommitted batch, terminating the query) and
-      * restarted from its checkpoint completes to the SAME answer.
-      * Same session-window aggregate and staged replay as
-      * stream_session_window; the sink is a per-batch
-      * partition-overwrite parquet (idempotent on replay, so Spark's
-      * at-least-once foreachBatch redelivery of the killed batch
-      * cannot double rows), and the kill fires AFTER batch 3's rows
-      * are on disk but BEFORE its epoch commits — the restart must
-      * reload the session state as of batch 2, replay batch 3 to the
-      * identical emission, and run out the remaining batches. The
-      * final output diffs against the batch twin; wall time spans
-      * BOTH runs (kill + recovery — the number a failover budget
-      * needs). Runs under both state-store providers like every
-      * witness, so RocksDB's snapshot reload is covered too. */
-    def streamSessionRecoveryWitness(tag: String): Double = {
-      import org.apache.spark.sql.functions._
-      import graft.queries.Q
-      val staged = s"${sys.props("java.io.tmpdir")}/graft-bench-ssrec-" +
-        ProcessHandle.current().pid()
-      val out = s"$staged-out-$tag"
-      val fs = new org.apache.hadoop.fs.Path(out)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(out), true)
-      val ev = Tables.events(spark, sfDir).select("user_id", "ts", "value")
-      ev.repartitionByRange(16, col("ts")).sortWithinPartitions("ts")
-        .write.mode("overwrite").parquet(staged)
-      new java.io.File(staged).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-        .zipWithIndex.foreach { case (f, i) =>
-          f.setLastModified((i + 1) * 60000L) }
-      val schema = spark.read.parquet(staged).schema
-      @volatile var killed = false
-      val t0 = System.nanoTime()
-      def runStream(): Unit = {
-        val sess = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 2).parquet(staged)
-          .withWatermark("ts", "10 minutes")
-          .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-          .agg(count(lit(1)).as("n"), Q.dsum(col("value")).as("sum_value"))
-          .select(col("user_id"), col("session_window.start").as("s"),
-            col("session_window.end").as("e"), col("n"), col("sum_value"))
-        val q = sess.writeStream.outputMode("append")
-          .option("checkpointLocation", s"$ckptBase/sessrec_$tag")
-          .foreachBatch { (df: DataFrame, bid: Long) =>
-            df.write.mode("overwrite").parquet(s"$out/batch_id=$bid")
-            if (bid == 3L && !killed) { killed = true
-              sys.error("bench: injected crash after batch 3's rows " +
-                "landed, before its epoch commit") }
-          }
-          .queryName("graft_stream_sessrec_" + tag).start()
-        try { q.processAllAvailable()
-          recordForeachDecomp("stream_session_recovery", tag, t0, q)
-        } catch { case _: Exception => () } finally q.stop()
-      }
-      runStream() // dies mid-stream on the injected crash
-      if (!killed) {
-        System.err.println("[bench] stream_session_recovery: the kill " +
-          "never fired (input produced < 4 batches) — reporting -1")
-        return -1.0
-      }
-      runStream() // restart from the checkpoint, run to completion
-      val secs = (System.nanoTime() - t0) / 1e9
-      val streamed = spark.read.option("basePath", out).parquet(out)
-        .drop("batch_id")
-      val batchSrc = spark.read.parquet(staged)
-      val hi = batchSrc.agg(max(col("ts"))).head().getTimestamp(0)
-      val cutoff = new java.sql.Timestamp(hi.getTime - 10 * 60 * 1000L)
-      // same materialization barrier as stream_session_window: the
-      // closed-session filter must only see post-merge rows
-      val batch = batchSrc
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-        .agg(count(lit(1)).as("n"), Q.dsum(col("value")).as("sum_value"))
-        .select(col("user_id"), col("session_window.start").as("s"),
-          col("session_window.end").as("e"), col("n"), col("sum_value"))
-        .localCheckpoint(true)
-        .filter(col("e") <= lit(cutoff))
-      val diff = streamed.exceptAll(batch).count() +
-        batch.exceptAll(streamed).count()
-      if (diff != 0) {
-        System.err.println(s"[bench] stream_session_recovery: $diff " +
-          "rows differ between the killed-and-recovered stream and " +
-          "batch sessions — reporting -1")
-        -1.0
-      } else secs
-    }
-
-    /** Wall-clock witness for STREAM-STREAM INNER JOIN under
-      * watermarks — the fourth streaming claim next to aggregation,
-      * dedup, and session windows: even events ("impressions") join
-      * odd events ("conversions") by user within a forward 30-minute
-      * event-time bound, both sides watermarked 1 hour, through the
-      * same mtime-ordered file replay (each side is its
-      * own file source over the staged range files, so the join state
-      * genuinely hands off across triggers; FOUR batches — join-state
-      * commit overhead dominates this witness, and four triggers
-      * exercise the same cross-batch handoff at half the fixed cost).
-      * Append-mode inner join
-      * emits each match exactly once; the batch twin runs the identical
-      * join over the staged files. Any row diff is a real join-state
-      * bug and reports as -1. */
-    def streamJoinWitness(tag: String): Double = {
-      import org.apache.spark.sql.functions._
-      val staged = s"${sys.props("java.io.tmpdir")}/graft-bench-sjoin-" +
-        ProcessHandle.current().pid()
-      val ev = Tables.events(spark, sfDir).select("event_id", "ts", "user_id")
-      ev.repartitionByRange(16, col("ts")).sortWithinPartitions("ts")
-        .write.mode("overwrite").parquet(staged)
-      new java.io.File(staged).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-        .zipWithIndex.foreach { case (f, i) =>
-          f.setLastModified((i + 1) * 60000L) }
-      val schema = spark.read.parquet(staged).schema
-      def side(even: Boolean, df: DataFrame): DataFrame = {
-        val m = if (even) 0 else 1
-        val (u, t, id) = if (even) ("user_id", "lts", "lid")
-          else ("r_user", "rts", "rid")
-        df.filter(pmod(col("event_id"), lit(2)) === m)
-          .select(col("user_id").as(u), col("ts").as(t),
-            col("event_id").as(id))
-      }
-      def joined(l: DataFrame, r: DataFrame): DataFrame =
-        l.join(r, col("user_id") === col("r_user") &&
-            col("rts") >= col("lts") &&
-            col("rts") <= col("lts") + expr("INTERVAL 30 MINUTES"))
-          .select(col("user_id"), col("lid"), col("rid"))
-      def src(): DataFrame = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 4).parquet(staged)
-      val sj = joined(
-        side(even = true, src()).withWatermark("lts", "1 hour"),
-        side(even = false, src()).withWatermark("rts", "1 hour"))
-      val t0 = System.nanoTime()
-      val q = sj.writeStream.outputMode("append").format("memory")
-        .option("checkpointLocation", s"$ckptBase/join_$tag")
-        .queryName("graft_stream_join_" + tag).start()
-      try { q.processAllAvailable()
-        recordStreamDecomp("stream_join_interval", tag, t0, q)
-      } finally q.stop()
-      val secs = (System.nanoTime() - t0) / 1e9
-      val streamed = spark.table("graft_stream_join_" + tag)
-      val batchSrc = spark.read.parquet(staged)
-      val batch = joined(side(even = true, batchSrc),
-        side(even = false, batchSrc))
-      val diff = streamed.exceptAll(batch).count() +
-        batch.exceptAll(streamed).count()
-      if (diff != 0) {
-        System.err.println(s"[bench] stream_join_interval: $diff rows " +
-          "differ between streaming and batch interval join — reporting -1")
-        -1.0
-      } else secs
-    }
-
-    /** Wall-clock witness for STREAM-STREAM LEFT-OUTER JOIN under
-      * watermarks (r12 verdict task #8) — the state-EVICTION path the
-      * inner join never exercises: a null-padded row is emitted only
-      * when the watermark closes an unmatched left row's match window,
-      * so this pins the timeout/eviction machinery real attribution
-      * pipelines rely on (impressions with no conversion). Same sides,
-      * interval bound, and mtime-ordered replay as
-      * stream_join_interval (four batches, same fixed-cost rationale).
-      * The batch twin keeps matched rows
-      * unconditionally and filters UNMATCHED rows to match windows
-      * closed by the FINAL watermark (max event time − 1 h delay) —
-      * left rows still open when the stream ends legitimately never
-      * null-emit (in production, later data advances the watermark and
-      * flushes them). Any row diff is a real eviction-semantics bug
-      * and reports as -1. */
-    def streamJoinOuterWitness(tag: String): Double = {
-      import org.apache.spark.sql.functions._
-      val staged = s"${sys.props("java.io.tmpdir")}/graft-bench-sojoin-" +
-        ProcessHandle.current().pid()
-      val ev = Tables.events(spark, sfDir).select("event_id", "ts", "user_id")
-      ev.repartitionByRange(16, col("ts")).sortWithinPartitions("ts")
-        .write.mode("overwrite").parquet(staged)
-      new java.io.File(staged).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-        .zipWithIndex.foreach { case (f, i) =>
-          f.setLastModified((i + 1) * 60000L) }
-      val schema = spark.read.parquet(staged).schema
-      def side(even: Boolean, df: DataFrame): DataFrame = {
-        val m = if (even) 0 else 1
-        val (u, t, id) = if (even) ("user_id", "lts", "lid")
-          else ("r_user", "rts", "rid")
-        df.filter(pmod(col("event_id"), lit(2)) === m)
-          .select(col("user_id").as(u), col("ts").as(t),
-            col("event_id").as(id))
-      }
-      def joinedOuter(l: DataFrame, r: DataFrame): DataFrame =
-        l.join(r, col("user_id") === col("r_user") &&
-            col("rts") >= col("lts") &&
-            col("rts") <= col("lts") + expr("INTERVAL 30 MINUTES"),
-          "left_outer")
-      def src(): DataFrame = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 4).parquet(staged)
-      val sj = joinedOuter(
-        side(even = true, src()).withWatermark("lts", "1 hour"),
-        side(even = false, src()).withWatermark("rts", "1 hour"))
-        .select(col("user_id"), col("lid"), col("rid"))
-      val t0 = System.nanoTime()
-      val q = sj.writeStream.outputMode("append").format("memory")
-        .option("checkpointLocation", s"$ckptBase/ojoin_$tag")
-        .queryName("graft_stream_ojoin_" + tag).start()
-      try { q.processAllAvailable()
-        recordStreamDecomp("stream_join_left_outer", tag, t0, q)
-      } finally q.stop()
-      val secs = (System.nanoTime() - t0) / 1e9
-      val streamed = spark.table("graft_stream_ojoin_" + tag)
-      val batchSrc = spark.read.parquet(staged)
-      // the GLOBAL watermark is min over BOTH sides' watermarks, and
-      // each side only sees its own parity's events — using the overall
-      // max ts overstates the final watermark by the gap between the
-      // sides' maxima (caught at sf0.1: 2 batch-only rows whose windows
-      // closed under max-based cutoff but not under the real min-based
-      // watermark)
-      val his = batchSrc.agg(
-        max(when(pmod(col("event_id"), lit(2)) === 0, col("ts"))),
-        max(when(pmod(col("event_id"), lit(2)) === 1, col("ts")))).head()
-      val hi = Seq(his.getTimestamp(0), his.getTimestamp(1)).min(
-        Ordering.by((t: java.sql.Timestamp) => t.getTime))
-      val cutoff = new java.sql.Timestamp(hi.getTime - 60 * 60 * 1000L)
-      val batch = joinedOuter(side(even = true, batchSrc),
-          side(even = false, batchSrc))
-        .filter(col("rid").isNotNull ||
-          col("lts") + expr("INTERVAL 30 MINUTES") < lit(cutoff))
-        .select(col("user_id"), col("lid"), col("rid"))
-      val diff = streamed.exceptAll(batch).count() +
-        batch.exceptAll(streamed).count()
-      if (diff != 0) {
-        System.err.println(s"[bench] stream_join_left_outer: $diff rows " +
-          "differ between streaming and batch left-outer join — reporting -1")
-        -1.0
-      } else secs
-    }
-
-    /** CRASH-RECOVERY witness for STREAM-STREAM JOIN state (r18
-      * verdict task #3): session recovery proved the aggregate path;
-      * the join witnesses carry the HEAVIEST state this engine runs
-      * (both sides buffered under watermarks, state_commit 100-300 ms
-      * per batch across 128 stores per trigger), and reloading that
-      * state from a checkpoint — RocksDB snapshot + WAL replay under
-      * the rocksdb provider — is exactly where a 100 TB failover
-      * hurts. Same sides, interval bound, and mtime-ordered replay as
-      * stream_join_interval; the sink is a per-batch
-      * partition-overwrite parquet (idempotent on replay), and the
-      * kill fires after batch 2's rows land but BEFORE its epoch
-      * commits — the restart must reload both join buffers as of
-      * batch 1, replay batch 2 to the identical emission, and run out
-      * the rest. The final output diffs against the batch twin; wall
-      * time spans BOTH runs (kill + recovery — the failover budget
-      * number). Runs under both state-store providers. */
-    def streamJoinRecoveryWitness(tag: String): Double = {
-      import org.apache.spark.sql.functions._
-      val staged = s"${sys.props("java.io.tmpdir")}/graft-bench-sjrec-" +
-        ProcessHandle.current().pid()
-      val out = s"$staged-out-$tag"
-      val fs = new org.apache.hadoop.fs.Path(out)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(out), true)
-      val ev = Tables.events(spark, sfDir).select("event_id", "ts", "user_id")
-      ev.repartitionByRange(16, col("ts")).sortWithinPartitions("ts")
-        .write.mode("overwrite").parquet(staged)
-      new java.io.File(staged).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-        .zipWithIndex.foreach { case (f, i) =>
-          f.setLastModified((i + 1) * 60000L) }
-      val schema = spark.read.parquet(staged).schema
-      def side(even: Boolean, df: DataFrame): DataFrame = {
-        val m = if (even) 0 else 1
-        val (u, t, id) = if (even) ("user_id", "lts", "lid")
-          else ("r_user", "rts", "rid")
-        df.filter(pmod(col("event_id"), lit(2)) === m)
-          .select(col("user_id").as(u), col("ts").as(t),
-            col("event_id").as(id))
-      }
-      def joined(l: DataFrame, r: DataFrame): DataFrame =
-        l.join(r, col("user_id") === col("r_user") &&
-            col("rts") >= col("lts") &&
-            col("rts") <= col("lts") + expr("INTERVAL 30 MINUTES"))
-          .select(col("user_id"), col("lid"), col("rid"))
-      @volatile var killed = false
-      val t0 = System.nanoTime()
-      def runStream(): Unit = {
-        def src(): DataFrame = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 4).parquet(staged)
-        val sj = joined(
-          side(even = true, src()).withWatermark("lts", "1 hour"),
-          side(even = false, src()).withWatermark("rts", "1 hour"))
-        val q = sj.writeStream.outputMode("append")
-          .option("checkpointLocation", s"$ckptBase/jrec_$tag")
-          .foreachBatch { (df: DataFrame, bid: Long) =>
-            df.write.mode("overwrite").parquet(s"$out/batch_id=$bid")
-            if (bid == 2L && !killed) { killed = true
-              sys.error("bench: injected crash after batch 2's rows " +
-                "landed, before its epoch commit") }
-          }
-          .queryName("graft_stream_jrec_" + tag).start()
-        try { q.processAllAvailable()
-          recordForeachDecomp("stream_join_recovery", tag, t0, q)
-        } catch { case _: Exception => () } finally q.stop()
-      }
-      runStream() // dies mid-stream on the injected crash
-      if (!killed) {
-        System.err.println("[bench] stream_join_recovery: the kill " +
-          "never fired (input produced < 3 batches) — reporting -1")
-        return -1.0
-      }
-      runStream() // restart from the checkpoint, run to completion
-      val secs = (System.nanoTime() - t0) / 1e9
-      val streamed = spark.read.option("basePath", out).parquet(out)
-        .drop("batch_id")
-      val batchSrc = spark.read.parquet(staged)
-      val batch = joined(side(even = true, batchSrc),
-        side(even = false, batchSrc))
-      val diff = streamed.exceptAll(batch).count() +
-        batch.exceptAll(streamed).count()
-      if (diff != 0) {
-        System.err.println(s"[bench] stream_join_recovery: $diff rows " +
-          "differ between the killed-and-recovered stream and the " +
-          "batch interval join — reporting -1")
-        -1.0
-      } else secs
-    }
-
-    /** Wall-clock witness for the INCREMENTAL-INGEST loop — the
-      * steady-state shape of a production corpus (COVERAGE's
-      * dedupIncremental story) driven END TO END through streaming:
-      * documents with planted cross-batch duplicate texts (every 4th
-      * doc reuses the text of doc_id−2, so pairs straddle batch
-      * boundaries) are replayed as 8 id-ordered micro-batches into a
-      * foreachBatch sink that dedups each batch within itself AND
-      * against the corpus parquet accumulated so far, then appends the
-      * survivors. The final corpus is diffed against one-shot batch
-      * exactDedup over the same staged data — id-ordered replay makes
-      * keep-lowest-id deterministic on both paths, so ANY diff is a
-      * real incremental-state bug and reports as -1. */
-    def streamIncrementalIngestWitness(tag: String): Double = {
-      import org.apache.spark.sql.functions._
-      val root = s"${sys.props("java.io.tmpdir")}/graft-bench-singest-" +
-        ProcessHandle.current().pid()
-      val staged = s"$root/in"; val corpus = s"$root/corpus"
-      // fresh corpus dir per run (append mode accumulates)
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(corpus), true)
-      val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-      val planted = docs.alias("d").join(
-          docs.select(col("doc_id").as("src_id"), col("text").as("src_text")),
-          col("doc_id") - 2 === col("src_id"), "left")
-        .select(col("doc_id"),
-          when(pmod(col("doc_id"), lit(4)) === 0 && col("src_text").isNotNull,
-            col("src_text")).otherwise(col("text")).as("text"))
-      planted.repartitionByRange(16, col("doc_id"))
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite").parquet(staged)
-      new java.io.File(staged).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-        .zipWithIndex.foreach { case (f, i) =>
-          f.setLastModified((i + 1) * 60000L) }
-      val schema = spark.read.parquet(staged).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2).parquet(staged)
-      val t0 = System.nanoTime()
-      // EXACTLY-ONCE sink (r17 verdict task #1): each batch dedups
-      // against the COMMITTED corpus view and publishes through
-      // IngestCommit's partition-overwrite + commit-log protocol, so
-      // a foreachBatch crash-replay converges instead of
-      // double-appending (kill-restart proof in IngestCommitSpec)
-      val q = stream.writeStream.outputMode("append")
-        .option("checkpointLocation", s"$ckptBase/ingest_$tag")
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          graft.llm.IngestCommit
-            .exactDedupIngestBatch(batch, bid, corpus)
-          ()
-        }
-        .queryName("graft_stream_ingest_" + tag).start()
-      try { q.processAllAvailable()
-        recordForeachDecomp("stream_incremental_ingest", tag, t0, q)
-      } finally q.stop()
-      val secs = (System.nanoTime() - t0) / 1e9
-      val streamed = graft.llm.IngestCommit
-        .committedCorpus(spark, corpus, s"$corpus/_commits")
-      // batch twin = THE SAME OPERATOR run once over everything with an
-      // empty prior corpus — one-shot and incremental must agree by the
-      // operator's own contract, so the witness tracks its semantics
-      // (tie-breaks, null handling) instead of a hand copy that could
-      // silently diverge
-      val emptyExisting = spark.read.parquet(staged).limit(0)
-      val batchTwin = graft.llm.TextDedupOps.dedupIncremental(
-        spark.read.parquet(staged), emptyExisting, "doc_id", "text")
-      val diff = streamed.exceptAll(batchTwin).count() +
-        batchTwin.exceptAll(streamed).count()
-      if (diff != 0) {
-        System.err.println(s"[bench] stream_incremental_ingest: $diff rows " +
-          "differ between incremental and one-shot dedup — reporting -1")
-        -1.0
-      } else secs
-    }
-
-    /** foreachBatch witness for the INCREMENTAL NEAR-DUP loop (r12
-      * verdict task #7, beside stream_incremental_ingest): each
-      * micro-batch is MinHash-signatured and banded against the
-      * PERSISTED signature index read from parquet — exactly the
-      * artifact a production ingest keeps between runs — then the
-      * survivors append to the corpus AND their signatures append to
-      * the index; the accumulated corpus is never re-signatured. Same
-      * planted shape as the exact witness (every 4th doc reuses the
-      * text of doc_id−2, so duplicate pairs straddle batch boundaries
-      * and are only catchable via the index), id-ordered replay in
-      * FOUR micro-batches under an 8-way shuffle width: this witness's
-      * cost is per-batch JOB overhead (signature agg + banded join +
-      * component rounds + two parquet writes per batch — ~10 actions
-      * each), not data volume, so batch count and shuffle width are
-      * the honest knobs; the index-handoff semantics being witnessed
-      * are identical. The final corpus diffs against ONE-SHOT
-      * lshIncremental
-      * over everything with an empty index — equal by the operator's
-      * one-shot-replay contract, because exact-clone candidate graphs
-      * are transitive (each clone pair fully signature-collides) so
-      * sequential index consultation and one-shot components agree.
-      * Any diff is a real index-handoff bug and reports -1. */
-    def streamNearDupIngestWitness(tag: String): Double = {
-      import org.apache.spark.sql.functions._
-      val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-      // (Measured both ways after the r14 lineage-truncation fix: AQE
-      // ON wins ~2× here — its broadcast-join conversions beat the
-      // scheduler latency of its per-stage materialization once plan
-      // re-analysis is no longer the bottleneck. Keep it on.)
-      try streamNearDupIngestBody(tag)
-      finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    }
-
-    /** foreachBatch witness for CDC TABLE MAINTENANCE (late r13,
-      * beside the ingest witnesses): the orders change feed (key =
-      * o_custkey, seq = the globally-unique o_orderkey, every 7th key
-      * streaming deletes) arrives in FOUR seq-ordered micro-batches;
-      * each batch rewrites the maintained state table with
-      * MergeOps.applyChanges against the PREVIOUS state — the
-      * read-modify-swap loop a parquet lake actually runs under CDC
-      * (state dirs alternate per batch; immutable storage has no
-      * in-place update). Because batches partition the feed in
-      * nondecreasing seq ranges, the incremental fold must equal
-      * ONE-SHOT applyChanges over the whole feed by the operator's
-      * latest-wins contract — the final state is diffed against
-      * exactly that, so a tie-break or keep-semantics drift between
-      * the incremental and batch paths reports -1 instead of a
-      * timing. */
-    def streamCdcApplyWitness(tag: String): Double = {
-      import org.apache.spark.sql.functions._
-      val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-      try streamCdcApplyBody(tag)
-      finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    }
-    def streamCdcApplyBody(tag: String): Double = {
-      import org.apache.spark.sql.functions._
-      val root = s"${sys.props("java.io.tmpdir")}/graft-bench-scdc-" +
-        ProcessHandle.current().pid()
-      val staged = s"$root/changes"
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
-      val target = Tables.customer(spark, sfDir).select(
-        col("c_custkey").as("k"), col("c_name").as("name"),
-        col("c_acctbal").as("bal"))
-      val changes = Tables.orders(spark, sfDir).select(
-        col("o_custkey").as("k"),
-        concat(lit("ord-"), col("o_orderkey")).as("name"),
-        col("o_totalprice").as("bal"),
-        when(pmod(col("o_custkey"), lit(7)) === 0, "D")
-          .otherwise("U").as("op"),
-        col("o_orderkey").as("seq"))
-      changes.repartitionByRange(16, col("seq"))
-        .sortWithinPartitions("seq")
-        .write.mode("overwrite").parquet(staged)
-      new java.io.File(staged).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-        .zipWithIndex.foreach { case (f, i) =>
-          f.setLastModified((i + 1) * 60000L) }
-      val schema = spark.read.parquet(staged).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 4).parquet(staged)
-      // state-dir handoff: each batch reads state i, writes state i+1
-      var statePath: Option[String] = None
-      val t0 = System.nanoTime()
-      val q = stream.writeStream.outputMode("append")
-        .option("checkpointLocation", s"$ckptBase/cdc_$tag")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val prev = statePath.map(spark.read.parquet(_)).getOrElse(target)
-          val next = s"$root/state_$batchId"
-          graft.operators.MergeOps
-            .applyChanges(prev, batch, Seq("k"), "op", "seq")
-            .write.mode("overwrite").parquet(next)
-          statePath = Some(next)
-        }
-        .queryName("graft_stream_cdc_" + tag).start()
-      try { q.processAllAvailable()
-        recordForeachDecomp("stream_cdc_apply", tag, t0, q)
-      } finally q.stop()
-      val secs = (System.nanoTime() - t0) / 1e9
-      val streamed = spark.read.parquet(statePath.getOrElse(
-        sys.error("stream_cdc_apply: no batch ran")))
-      val batchTwin = graft.operators.MergeOps.applyChanges(
-        target, spark.read.parquet(staged), Seq("k"), "op", "seq")
-      val diff = streamed.exceptAll(batchTwin).count() +
-        batchTwin.exceptAll(streamed).count()
-      if (diff != 0) {
-        System.err.println(s"[bench] stream_cdc_apply: $diff rows differ " +
-          "between incremental and one-shot applyChanges — reporting -1")
-        -1.0
-      } else secs
-    }
-    def streamNearDupIngestBody(tag: String): Double = {
-      import org.apache.spark.sql.functions._
-      val root = s"${sys.props("java.io.tmpdir")}/graft-bench-snear-" +
-        ProcessHandle.current().pid()
-      val staged = s"$root/in"; val corpus = s"$root/corpus"
-      val index = s"$root/index"
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(corpus), true)
-      fs.delete(new org.apache.hadoop.fs.Path(index), true)
-      val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-      val planted = docs.alias("d").join(
-          docs.select(col("doc_id").as("src_id"), col("text").as("src_text")),
-          col("doc_id") - 2 === col("src_id"), "left")
-        .select(col("doc_id"),
-          when(pmod(col("doc_id"), lit(4)) === 0 && col("src_text").isNotNull,
-            col("src_text")).otherwise(col("text")).as("text"))
-      planted.repartitionByRange(16, col("doc_id"))
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite").parquet(staged)
-      new java.io.File(staged).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-        .zipWithIndex.foreach { case (f, i) =>
-          f.setLastModified((i + 1) * 60000L) }
-      val schema = spark.read.parquet(staged).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 4).parquet(staged)
-      import graft.llm.TextDedupOps
-      // Fully STORAGE-BACKED nightly shape (r14): the loop runs
-      // against the pre-banded persisted LSH index — each batch pays
-      // its own signatures plus a banded join against the slim
-      // (id, band, band_hash) triple on parquet; the index is never
-      // re-signatured, re-banded, or held in executor memory between
-      // batches, so a restart resumes from storage with zero warmup.
-      TextDedupOps.writeLshIndex(
-        TextDedupOps.minHashSignatures(
-          spark.read.parquet(staged).limit(0), "doc_id", "text", 3, 32),
-        index, "doc_id", bands = 8)
-      val t0 = System.nanoTime()
-      // EXACTLY-ONCE sink (r17 verdict tasks #1 + #2): the commit-log
-      // protocol makes a crash-replay converge (IngestCommitSpec), and
-      // the ingest kernel runs the banded join + component rounds ONCE
-      // per batch — the slim survivor-id set is checkpointed and the
-      // corpus write / bands append / sigs append all derive from
-      // checkpointed inputs, with the per-append k-probe job skipped —
-      // which is the r17 driver-cost reduction on this witness
-      val q = stream.writeStream.outputMode("append")
-        .option("checkpointLocation", s"$ckptBase/neardup_$tag")
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val bt0 = System.nanoTime()
-          graft.llm.IngestCommit.nearDupIngestBatch(batch, bid, index,
-            corpus, threshold = 0.99)
-          System.err.println(f"[bench]   near_dup_$tag batch $bid: " +
-            f"${(System.nanoTime() - bt0) / 1e9}%.2f s")
-          ()
-        }
-        .queryName("graft_stream_near_" + tag).start()
-      try { q.processAllAvailable()
-        recordForeachDecomp("stream_near_dup_ingest", tag, t0, q)
-      } finally q.stop()
-      val secs = (System.nanoTime() - t0) / 1e9
-      val streamed = graft.llm.IngestCommit
-        .committedCorpus(spark, corpus, s"$index/commits")
-      val all = spark.read.parquet(staged)
-      val emptyIdx = TextDedupOps.minHashSignatures(
-        all.limit(0), "doc_id", "text", 3, 32)
-      val batchTwin = TextDedupOps.lshIncremental(all, emptyIdx,
-        "doc_id", "text", threshold = 0.99)
-      val diff = streamed.exceptAll(batchTwin).count() +
-        batchTwin.exceptAll(streamed).count()
-      if (diff != 0) {
-        System.err.println(s"[bench] stream_near_dup_ingest: $diff rows " +
-          "differ between incremental and one-shot near-dup — reporting -1")
-        -1.0
-      } else secs
-    }
-
-    // Headline registry queries; the stress entries below are
-    // deliberately NOT registry queries (their outputs are
-    // xxhash64-dependent, which would reintroduce a no-oracle row in
-    // the correctness gate) and NOT part of `total` (they time an
-    // iterative pipeline, not a single plan — folding them in would
-    // break round-over-round total comparability).
+    val ckptBase = tmpfsDir("ckpt")
+    val harness = new WitnessHarness(spark, ckptBase)
+    val queries = SparkEntry.queries
     val entries: Seq[(String, () => DataFrame)] =
-      names.map(n => n -> (() => queries(n)(spark, sfDir)))
+      BenchTable.headline.filter(queries.contains)
+        .map(n => n -> (() => queries(n)(spark, sfDir)))
     // Dev-only iteration aid: SPARK_GRAFT_STRESS_FILTER=<substring>
     // restricts the stress + streaming-witness entries (and skips the
     // recall block unless the filter matches "recall") so one entry
@@ -1354,72 +85,9 @@ object Bench {
     // leave it unset — the JSON contract and entry set are unchanged.
     val stressFilter = sys.env.get("SPARK_GRAFT_STRESS_FILTER")
     def keepStress(n: String): Boolean = stressFilter.forall(n.contains)
-    val stressEntriesAll: Seq[(String, () => DataFrame)] =
-      Seq("lsh_stress_capped" -> (() => lshStressCapped()),
-        "asof_stress_hot_key" -> (() => asofStressHotKey()),
-        "para_dedup_stress_hot" -> (() => paraDedupStressHot()),
-        "curation_stress" -> (() => curationStress()),
-        "lm_stress_hot_bigram" -> (() => lmStressHotBigram()),
-        "multimodal_stress" -> (() => multimodalStress()),
-        "bpe_train_stress" -> (() => bpeTrainStress()),
-        "bpe_train_stress_8k" -> (() => bpeTrain8kStress()),
-        "unigram_train_stress_32k" -> (() => unigramTrain32kStress()),
-        "bpe_rank_count_stress" -> (() => bpeRankCountStress()),
-        "ivfpq_probe_stress" -> (() => ivfPqProbeStress()),
-        "unigram_count_stress" -> (() => unigramCountStress()),
-        "wet_ingest_stress" -> (() => wetIngestStress()),
-        "zorder_stress" -> (() => zorderStress()),
-        "classifier_train_stress" -> (() => classifierTrainStress()))
-    val stressEntries: Seq[(String, () => DataFrame)] =
-      stressEntriesAll.filter(e => keepStress(e._1))
+    val stressEntries = table.stress().filter(e => keepStress(e._1))
 
-    // Host-contention self-identification (the r7 lesson: one official
-    // run on a loaded host reported 48 s for a 5 s suite and stood
-    // unexplained): 1-minute load average sampled at start and end, and
-    // a `noisy` flag when any query's worst rep exceeds 3× its median.
-    def loadAvg(): Double =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString
-        .split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
-    // Pre-run HOST GUARD (r15 verdict task #5: the official run
-    // recorded 11.19 s at loadavg 13.46 and `noisy` did not trip
-    // because BOTH reps were equally loaded — the run must gate
-    // ITSELF, not just its rep spread): when the 1-minute load
-    // already exceeds ~2× cores/8 before any timing starts, wait
-    // once for the transient to drain and re-sample; a still-busy
-    // host proceeds (the driver needs a number) but the JSON carries
-    // host_busy=true so the series marks the contaminated point even
-    // when rep splits cannot see it.
-    val busyThreshold = math.max(2.0,
-      Runtime.getRuntime.availableProcessors() / 4.0)
-    val loadFirst = loadAvg()
-    val loadStart =
-      if (loadFirst > busyThreshold) {
-        System.err.println(f"[bench] loadavg $loadFirst%.2f > " +
-          f"$busyThreshold%.1f before start — sleeping 60s for the " +
-          "transient to drain")
-        Thread.sleep(60000)
-        loadAvg()
-      } else loadFirst
-    val hostBusyAtStart = loadStart > busyThreshold
-
-    // NOTE: DistScan.releaseCaches() is deliberately NOT called between
-    // warmup and measurement — Spark's CacheManager matches persisted
-    // plans structurally, so the measured run reusing the warmed
-    // range-partition cache IS the steady state a long-lived cluster
-    // sits in (releasing mid-bench re-times the one-off partitioning:
-    // +50% total, all of it warmup cost this harness exists to exclude).
-    def runOnce(name: String, frame: () => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try frame().write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        return -1.0
-      }
-      val secs = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[bench] $name: $secs%.2f s")
-      secs
-    }
+    val (loadStart, hostBusyAtStart) = hostGuard()
 
     // Warmup: pay one-time session/codegen/JIT/parquet-footer costs
     // outside the measured loop, as any long-lived cluster would have —
@@ -1433,19 +101,6 @@ object Bench {
     val warmupTimes: Seq[(String, Double)] =
       entries.map { case (n, f) => n -> runOnce(n, f) }
 
-    // Plan-shape signal: shuffle-exchange count per query (+1 = stage
-    // count on a non-adaptive run). Wall-time noise can hide a plan
-    // regression; an extra Exchange cannot hide from this.
-    // (shuffles print as "Exchange hashpartitioning/rangepartitioning";
-    // BroadcastExchange is not a stage boundary and ReusedExchange is a
-    // pointer to an already-counted one — both excluded)
-    def planStages(frame: () => DataFrame): Int = {
-      val plan = frame().queryExecution.executedPlan.toString
-      plan.linesIterator.count(l =>
-        l.contains("Exchange") && !l.contains("BroadcastExchange") &&
-          !l.contains("ReusedExchange")) + 1
-    }
-
     // Median of 3 reps per query: a single-shot number on a contended
     // host has misstated totals by 2-3x; the median is robust to one
     // noisy rep and the per-rep times are kept in the JSON for audit.
@@ -1454,59 +109,12 @@ object Bench {
     val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS")
       .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ >= 1)
       .getOrElse(3)
-    def measure(): Seq[(String, Double, Vector[Double])] =
-      entries.map { case (n, f) =>
-        val times = (1 to reps).map(_ => runOnce(n, f)).toVector
-        val ok = times.filter(_ >= 0).sorted
-        val median = if (ok.isEmpty) -1.0 else ok(ok.size / 2)
-        (n, median, times)
-      }
-    // TWO split tests per query (r18 verdict task #1): worst/median
-    // catches one slow rep; median/best catches the shape that poisoned
-    // the official r18 record — TWO contended reps and one clean one
-    // ([27.0, 29.9, 2.5]: max/median 1.1 passes, median/min 10.7 is
-    // the tell). Either ratio > 3 marks the attempt noisy.
-    def isNoisy(rs: Seq[(String, Double, Vector[Double])]): Boolean =
-      rs.exists { case (_, m, ts) =>
-        val ok = ts.filter(_ >= 0)
-        m > 0 && ok.nonEmpty &&
-          (ok.max / m > 3.0 || (ok.min > 0 && m / ok.min > 3.0))
-      }
-    def totalOf(rs: Seq[(String, Double, Vector[Double])]): Double =
-      rs.map(_._2).filter(_ >= 0).sum
-
-    // Noisy-retry (three straight rounds shipped a contention-poisoned
-    // official BENCH the harness merely flagged): when the first attempt
-    // trips the noise detector — OR the host was already busy before
-    // timing started (r18: host_busy=true flagged the 37.5 s record but
-    // did not retry, and equal load across reps is exactly what the rep
-    // splits cannot see) — wait for the transient load to drain and
-    // measure ONCE more, then report the cleaner attempt; both attempt
-    // totals stay in the JSON so nothing is hidden. Bounded at one
-    // retry: a persistently loaded host reports noisy/host_busy as
-    // before.
-    val attempt1 = measure()
     val (results, noisy, attemptTotals) =
-      if (!isNoisy(attempt1) && !hostBusyAtStart)
-        (attempt1, false, Seq(totalOf(attempt1)))
-      else {
-        val why = if (isNoisy(attempt1)) "noisy rep split" else
-          f"host busy at start (loadavg $loadStart%.2f)"
-        System.err.println(s"[bench] first attempt suspect ($why) — " +
-          "sleeping 30s and re-measuring once")
-        Thread.sleep(30000)
-        val attempt2 = measure()
-        val pick = if (totalOf(attempt2) <= totalOf(attempt1)) attempt2 else attempt1
-        (pick, isNoisy(pick), Seq(totalOf(attempt1), totalOf(attempt2)))
-      }
-    val qs = results.map { case (k, m, _) => "\"" + k + "\":" + m }
-      .mkString("{", ",", "}")
-    val rs = results.map { case (k, _, ts) =>
-      "\"" + k + "\":[" + ts.mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val st = entries.map { case (n, f) => "\"" + n + "\":" + planStages(f) }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
+      measureWithRetry(entries, reps, hostBusyAtStart, loadStart)
+    val qs = obj(results.map { case (k, m, _) => k -> m })
+    val rs = obj(results.map { case (k, _, ts) => k -> ts.mkString("[", ",", "]") })
+    val st = obj(entries.map { case (n, f) => n -> planStages(f) })
+    val total = totalOf(results)
 
     // Stress witnesses (r12 verdict task #2): TWO reps each, reporting
     // the MIN — twice the official single-rep stress numbers were 2×
@@ -1518,11 +126,29 @@ object Bench {
     // whose worst rep exceeds 3× its best. A diff failure in ANY rep
     // reports -1 (semantics failures must stay loud, never be
     // min'd away).
-    val stressRepCount = 2
     def stressReps(run: () => Double): Vector[Double] =
-      (1 to stressRepCount).map(_ => run()).toVector
-    // Streaming witnesses run once per STATE-STORE PROVIDER (r12
-    // verdict task #3): the default HDFS-backed provider keeps the
+      Vector.fill(2)(run())
+    val streamWitnesses = new BenchWitnesses(spark, sfDir, harness).all
+      .filter(e => keepStress(e._1))
+    // One-time witness fixtures (the WET shard write) materialize
+    // OUTSIDE the timed reps — otherwise rep 1 carries setup, the
+    // rep split trips the 3× noise detector, and min-of-reps silently
+    // absorbs a cost that was never ingest throughput.
+    System.err.println(s"[bench] wet shards staged at ${table.wetShards._1}")
+    if (keepStress("ivfpq_probe_stress")) {
+      // index build (quantizer training + write) is fixture cost, not
+      // serving cost — force it outside the timed reps
+      System.err.println(s"[bench] ivfpq index staged at ${table.ivfPqIndexDir}")
+    }
+    table.warmUp()
+    // Streaming witnesses get the SAME min-of-2-reps treatment the
+    // non-streaming stress entries got in r13 (r14 verdict task #8:
+    // the official single-rep stream_join numbers ran 19-21 s where
+    // an idle-host re-run measured 5-7 s — contention-dominated, so
+    // single-rep round-over-round comparison was noise-limited). Tags
+    // stay unique per rep: queryNames/temp tables are tag-derived.
+    // Each witness runs once per STATE-STORE PROVIDER (r12 verdict
+    // task #3): the default HDFS-backed provider keeps the
     // round-over-round series comparable with r12, and RocksDB — the
     // provider a 100 TB streaming state actually deploys (state
     // off-heap in a native LSM with incremental snapshots, instead of
@@ -1531,86 +157,6 @@ object Bench {
     // the streamed result against its batch twin, so stream≡batch is
     // witnessed under BOTH providers, and the pair doubles as two
     // timings of near-identical work for the contention check.
-    val RocksDb = "org.apache.spark.sql.execution.streaming.state." +
-      "RocksDBStateStoreProvider"
-    def withStateProvider[T](provider: Option[String])(body: => T): T = {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = spark.conf.getOption(key)
-      provider.foreach(spark.conf.set(key, _))
-      try body finally provider.foreach { _ =>
-        prev match {
-          case Some(v) => spark.conf.set(key, v)
-          case None => spark.conf.unset(key)
-        }
-      }
-    }
-    val streamWitnesses: Seq[(String, String => Double)] = Seq(
-      "stream_resample_5min" -> (streamResampleWitness _),
-      "stream_dedup_watermark" -> (streamDedupWitness _),
-      "stream_session_window" -> (streamSessionWitness _),
-      "stream_session_recovery" -> (streamSessionRecoveryWitness _),
-      "stream_join_interval" -> (streamJoinWitness _),
-      "stream_join_left_outer" -> (streamJoinOuterWitness _),
-      "stream_join_recovery" -> (streamJoinRecoveryWitness _),
-      "stream_incremental_ingest" -> (streamIncrementalIngestWitness _),
-      "stream_near_dup_ingest" -> (streamNearDupIngestWitness _),
-      "stream_cdc_apply" -> (streamCdcApplyWitness _))
-      .filter(e => keepStress(e._1))
-    // One-time witness fixtures (the WET shard write) materialize
-    // OUTSIDE the timed reps — otherwise rep 1 carries setup, the
-    // rep split trips the 3× noise detector, and min-of-reps silently
-    // absorbs a cost that was never ingest throughput.
-    val wetSetupDir: String = wetShards._1
-    System.err.println(s"[bench] wet shards staged at $wetSetupDir")
-    if (keepStress("ivfpq_probe_stress")) {
-      // index build (quantizer training + write) is fixture cost, not
-      // serving cost — force it outside the timed reps
-      System.err.println(s"[bench] ivfpq index staged at $ivfPqIndexDir")
-    }
-    // Warm the late-r13 entry codepaths outside the timer (zorder's
-    // interleave/write path and the training loop's HOF codegen are
-    // not exercised by the headline block; first-touch JIT alone is a
-    // 3-4× rep split that would trip the noise detector).
-    locally {
-      import org.apache.spark.sql.functions._
-      val warmDir = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft-bench-zorder-warm-${ProcessHandle.current().pid()}").toString
-      graft.sources.ZOrder.writeZOrdered(
-        Tables.events(spark, sfDir).limit(20000)
-          .select("event_id", "ts", "user_id", "value"),
-        warmDir, Seq("user_id", "event_id"), bits = 16, nFiles = 2)
-      graft.llm.ClassifierOps.trainHardLogistic(
-        Tables.documents(spark, sfDir).limit(200).select(col("doc_id"),
-          col("text"), (col("lang") === "en").cast("int").as("y")),
-        "text", "y", buckets = 8, iters = 1, lrDen = 100L)
-      // incremental near-dup loop (checkpoint + banded-join + CC
-      // codegen) — its first witness rep otherwise pays first-touch
-      // JIT that the second provider's rep never sees. Two chained
-      // iterations at a REAL batch size: a toy batch plans every join
-      // as a broadcast and leaves the witness's actual shuffle-join
-      // codegen cold.
-      locally {
-        val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-        val b1 = docs.filter(col("doc_id") % 4 === 0)
-        val b2 = docs.filter(col("doc_id") % 4 === 1)
-        val idx0 = graft.llm.TextDedupOps.minHashSignatures(
-          docs.limit(0), "doc_id", "text", 3, 32)
-        val (s1, g1) = graft.llm.TextDedupOps.lshIncrementalWithSignatures(
-          b1, idx0, "doc_id", "text", threshold = 0.99)
-        s1.write.format("noop").mode("overwrite").save()
-        val idx1 = g1.localCheckpoint(true)
-        val (s2, g2) = graft.llm.TextDedupOps.lshIncrementalWithSignatures(
-          b2, idx1, "doc_id", "text", threshold = 0.99)
-        s2.write.format("noop").mode("overwrite").save()
-        g2.write.format("noop").mode("overwrite").save()
-      }
-    }
-    // Streaming witnesses get the SAME min-of-2-reps treatment the
-    // non-streaming stress entries got in r13 (r14 verdict task #8:
-    // the official single-rep stream_join numbers ran 19-21 s where
-    // an idle-host re-run measured 5-7 s — contention-dominated, so
-    // single-rep round-over-round comparison was noise-limited). Tags
-    // stay unique per rep: queryNames/temp tables are tag-derived.
     val stressResults: Seq[(String, Vector[Double])] =
       stressEntries.map { case (n, f) =>
         (n, stressReps(() => runOnce(n, f)))
@@ -1618,14 +164,12 @@ object Bench {
       streamWitnesses.flatMap { case (n, w) =>
         Seq(
           n -> Vector(
-            withStateProvider(None)(w("h1")),
-            withStateProvider(None)(w("h2"))),
+            withStateProvider(spark, None)(w("h1")),
+            withStateProvider(spark, None)(w("h2"))),
           (n + "_rocksdb") -> Vector(
-            withStateProvider(Some(RocksDb))(w("r1")),
-            withStateProvider(Some(RocksDb))(w("r2"))))
+            withStateProvider(spark, Some(RocksDb))(w("r1")),
+            withStateProvider(spark, Some(RocksDb))(w("r2"))))
       }
-    def minOrFail(ts: Vector[Double]): Double =
-      if (ts.exists(_ < 0)) -1.0 else ts.min
     // Noise detection: within-entry (any 2-rep entry whose worst rep
     // exceeds 3× its best) AND across each streaming witness's
     // provider pair — the two provider runs do near-identical work
@@ -1642,308 +186,46 @@ object Bench {
         val ok = ts.filter(_ >= 0)
         ok.size >= 2 && ok.min > 0 && ok.max / ok.min > 3.0
     }
-    val str = stressResults.map { case (k, ts) =>
-      "\"" + k + "\":" + minOrFail(ts) }.mkString("{", ",", "}")
-    val strReps = stressResults.map { case (k, ts) =>
-      "\"" + k + "\":[" + ts.mkString(",") + "]" }.mkString("{", ",", "}")
+    val str = obj(stressResults.map { case (k, ts) => k -> minOrFail(ts) })
+    val strReps = obj(stressResults.map { case (k, ts) =>
+      k -> ts.mkString("[", ",", "]") })
 
     // OPTIONAL scaling probe (r20, r19 verdict task #7). At sf0.1
     // every headline query is overhead-bound — the driver's 8-core vs
     // 32-core ratios all sit near 1 because per-job fixed cost
     // dominates sub-second queries, so the scaling block cannot
     // witness parallelism. SPARK_GRAFT_BENCH_SCALE=k (k ≥ 1) times
-    // three headline shapes with the FACT side amplified k×: every
-    // fact row is replicated k times through a broadcast cross join
-    // with range(k), so k× rows flow through the filters, join probes,
-    // aggregate update loops and the classifier kernel — per-row work
-    // truly grows k-fold and is computed fresh per run (no caching, no
-    // precomputation; the probe witnesses COMPUTE parallelism — the
-    // parquet bytes are still read once). A k-way UNION was measured
-    // first and rejected: its k-scan plan costs seconds of
-    // single-threaded driver analysis, which swamped the ratio at
-    // every k. Results go in a SEPARATE `scale_probe` field (min of 2
-    // reps, like stress): the official `queries`/total series is
-    // untouched, and the driver's contract output is byte-identical
-    // when the env var is unset. Run the bench twice
-    // (SPARK_GRAFT_CPUS=32 then =8) with the same k and compare
-    // scale_probe entries — at k=100 the shapes are seconds-long
-    // compute and the 8→32-core ratio witnesses parallel speedup
-    // (measured ≥ 2× — OPTIMIZATION_r20.md).
-    val scaleK = sys.env.get("SPARK_GRAFT_BENCH_SCALE")
-      .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ >= 1)
-    val scaleProbe: Seq[(String, Vector[Double])] = scaleK match {
-      case None => Seq.empty
-      case Some(k) =>
-        import org.apache.spark.sql.functions._
-        // sf0.1 fact tables are ONE parquet split, so an in-place
-        // amplification would run in one task no matter the core
-        // count: hash-repartition the slim BASE rows first
-        // (deterministic key — guide §2.5), then replicate each row k×
-        // locally via a broadcast cross join with range(k), so every
-        // partition amplifies and aggregates its own k× share in
-        // parallel. The partition count is EXPLICIT: the base rows are
-        // a few MB, and AQE would otherwise coalesce the pre-
-        // amplification exchange to one partition (64 MB advisory) —
-        // re-serializing the whole probe, which is exactly what this
-        // first implementation did at every core count.
-        val probeParts = spark.sessionState.conf.numShufflePartitions
-        def amp(df: DataFrame, key: String): DataFrame =
-          df.repartition(probeParts, col(key)).crossJoin(broadcast(
-            spark.range(k).select(col("id").as("__rep"))))
-        val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-        import graft.queries.Q
-        val q1k = () => {
-          // q1_agg's exact shape over a k×-amplified lineitem scan
-          val li = amp(Tables.lineitem(spark, sfDir), "l_orderkey")
-          li.filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
-            .groupBy(col("l_returnflag"), col("l_linestatus"))
-            .agg(Q.dsum(col("l_quantity")).as("sum_qty"),
-              Q.dsum(col("l_extendedprice")).as("sum_base_price"),
-              Q.davg(col("l_discount")).as("avg_disc"),
-              count(lit(1)).as("count_order"))
-            .orderBy("l_returnflag", "l_linestatus")
-        }
-        val q3k = () => {
-          // q3_join_topk's exact shape, fact side amplified k×
-          val cutoff = lit("1998-01-01").cast("timestamp")
-          val cust = Tables.customer(spark, sfDir)
-            .filter(col("c_mktsegment") === "BUILDING")
-          val ords = Tables.orders(spark, sfDir)
-            .filter(col("o_orderdate") < cutoff)
-          val li = amp(Tables.lineitem(spark, sfDir), "l_orderkey")
-            .filter(col("l_shipdate") > cutoff)
-          val pc = Q.cents(col("l_extendedprice"))
-          val dc = Q.cents(col("l_discount"))
-          cust.join(ords, col("c_custkey") === col("o_custkey"))
-            .join(li, col("o_orderkey") === col("l_orderkey"))
-            .groupBy(col("o_orderkey"), col("o_orderdate"))
-            .agg((sum((pc * (lit(100L) - dc)).cast(d38)) / lit(10000))
-              .cast("double").as("revenue"))
-            .orderBy(col("revenue").desc, col("o_orderkey").asc)
-            .limit(10)
-        }
-        val clsK = () => {
-          // classifier feature kernel + GD over a k×-amplified corpus
-          val docs = amp(Tables.documents(spark, sfDir)
-            .select(col("doc_id"), col("text"),
-              (col("lang") === "en").cast("int").as("__y")), "doc_id")
-          graft.llm.ClassifierOps.trainHardLogisticScored(
-            docs, "text", "__y", "doc_id", buckets = 16, iters = 2)
-        }
-        Seq(s"q1_agg_x$k" -> q1k, s"q3_join_topk_x$k" -> q3k,
-          s"classifier_train_x$k" -> clsK).map { case (n, f) =>
-          n -> stressReps(() => runOnce(n, f))
-        }
-    }
-    val scaleProbeJson = scaleProbe.map { case (k, ts) =>
-      "\"" + k + "\":" + minOrFail(ts) }.mkString("{", ",", "}")
+    // three headline shapes with the FACT side amplified k×
+    // ([[BenchTable.scaleProbe]]). Results go in a SEPARATE
+    // `scale_probe` field (min of 2 reps, like stress): the official
+    // `queries`/total series is untouched, and the driver's contract
+    // output is byte-identical when the env var is unset. Run the
+    // bench twice (SPARK_GRAFT_CPUS=32 then =8) with the same k and
+    // compare scale_probe entries — at k=100 the shapes are
+    // seconds-long compute and the 8→32-core ratio witnesses parallel
+    // speedup (measured ≥ 2× — OPTIMIZATION_r20.md).
+    val scaleProbe: Seq[(String, Vector[Double])] =
+      sys.env.get("SPARK_GRAFT_BENCH_SCALE")
+        .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ >= 1)
+        .toSeq.flatMap(table.scaleProbe)
+        .map { case (n, f) => n -> stressReps(() => runOnce(n, f)) }
+    val scaleProbeJson = obj(scaleProbe.map { case (k, ts) =>
+      k -> minOrFail(ts) })
 
-    // Measured shortlist recall@10 of the approximate ANN tiers in
-    // PRODUCTION configurations (r12 verdict task #5 — the oracle
-    // gates run covering/exhaustive configs where recall = 1 by
-    // construction, so nothing had measured the approximation): pq
-    // (8×16 codebooks, rerankFactor 4), ivf (nprobe 4 of 16 cells),
-    // int8 (rerankFactor 2), each vs bruteForceTopK over this SF's
-    // embeddings with 32 query vectors. Recall = |approx ∩ exact| /
-    // |exact| over (q_id, vec_id) pairs. NOTE these embeddings are
-    // near-uniform synthetic — the hardest regime for coarse codes —
-    // so these are conservative floors; the clustered-fixture recall
-    // floor is asserted in PqSpec/IvfSpec.
-    def annRecall(): Seq[(String, Double)] = {
-      import org.apache.spark.sql.functions._
-      import graft.llm.SimilarityOps
-      val emb = Tables.embeddings(spark, sfDir)
-      val queries = emb.filter(col("vec_id") < 32)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val k = 10
-      val exact = SimilarityOps.bruteForceTopK(queries, emb, k)
-        .select("q_id", "vec_id").persist()
-      val nExact = exact.count().toDouble
-      def recallOf(approx: DataFrame): Double = {
-        val hit = approx.select("q_id", "vec_id")
-          .join(exact, Seq("q_id", "vec_id"), "left_semi").count()
-        math.rint(hit / nExact * 10000) / 10000
-      }
-      val cbs = SimilarityOps.trainPqCodebooks(emb, "vec_id", "embedding",
-        m = 8, ksub = 16, iters = 2)
-      val pq = recallOf(SimilarityOps.pqTopK(queries, emb, k, cbs,
-        rerankFactor = 4))
-      val cents = SimilarityOps.trainIvfCentroids(emb, "vec_id",
-        "embedding", 16)
-      val ivf = recallOf(SimilarityOps.ivfTopK(queries, emb, k, cents,
-        nprobe = 4))
-      val int8 = recallOf(SimilarityOps.quantizedTopK(queries, emb, k,
-        rerankFactor = 2))
-      // r14 recall lift: these embeddings are ISOTROPIC (unit-norm,
-      // mean pairwise cosine ≈ 0), so the 32-bit m=8×ksub=16 config
-      // above is rate-distortion-bound near 0.43 — no encoding fixes
-      // that (residual coding moved it < 0.03 in a driver-side study;
-      // OPQ rotation is a no-op on isotropic data by symmetry). The
-      // production answer is the code BUDGET: at 64 bits (m=8
-      // ksub=256 — FAISS's standard 8-byte PQ8, still a 32× storage
-      // cut vs float32) plain PQ clears 0.75 and residual IVF-PQ
-      // (IVFADC) clears 0.8 at full probe / 0.7 at half probe. The
-      // legacy keys stay for round-over-round comparability.
-      val cbs256 = SimilarityOps.trainPqCodebooks(emb, "vec_id",
-        "embedding", m = 8, ksub = 256, iters = 2)
-      val pq256 = recallOf(SimilarityOps.pqTopK(queries, emb, k, cbs256,
-        rerankFactor = 4))
-      val rcbs = SimilarityOps.trainPqCodebooksResidual(emb, "vec_id",
-        "embedding", cents, m = 8, ksub = 256, iters = 2)
-      val ivfpq8 = recallOf(SimilarityOps.ivfPqTopK(queries, emb, k,
-        cents, rcbs, nprobe = 8, rerankFactor = 4))
-      val ivfpq16 = recallOf(SimilarityOps.ivfPqTopK(queries, emb, k,
-        cents, rcbs, nprobe = 16, rerankFactor = 4))
-      exact.unpersist(false)
-      // CLUSTERED-corpus recall (r14 verdict task #5): the isotropic
-      // numbers above are the residual encoding's worst case — the
-      // coarse quantizer absorbs nothing. Real embedding corpora are
-      // clustered, so measure the SAME 8-byte config on a
-      // mixture-of-16-Gaussians synthetic over the same 64 dims
-      // (deterministic hash-noise; centers spread ±1, points ±0.15
-      // around them). Here the coarse centroid absorbs the cluster
-      // structure and the residual codes spend their budget on the
-      // tight remainder — the "residual coding is worth far more on
-      // clustered corpora" claim, previously spec-only, as a measured
-      // bench number beside its isotropic twin.
-      val dim = 64
-      import org.apache.spark.sql.Column
-      def h(seed: Column): Column =
-        (sin(seed) * 43758.5453) - floor(sin(seed) * 43758.5453)
-      val cl = spark.range(4096).select(col("id").cast("long").as("vec_id"),
-        transform(sequence(lit(0), lit(dim - 1)), dd => {
-          val j = pmod(col("id"), lit(16)).cast("double")
-          val center = h(j * 12.9898 + dd.cast("double") * 78.233) * 2 - 1
-          val noise = h(col("id").cast("double") * 7.919 +
-            dd.cast("double") * 104.729 + 0.5) * 2 - 1
-          center + noise * 0.15
-        }).as("embedding")).persist()
-      cl.count()
-      val clQueries = cl.filter(col("vec_id") < 32)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val clExact = SimilarityOps.bruteForceTopK(clQueries, cl, k)
-        .select("q_id", "vec_id").persist()
-      val nClExact = clExact.count().toDouble
-      def clRecallOf(approx: DataFrame): Double = {
-        val hit = approx.select("q_id", "vec_id")
-          .join(clExact, Seq("q_id", "vec_id"), "left_semi").count()
-        math.rint(hit / nClExact * 10000) / 10000
-      }
-      val clCents = SimilarityOps.trainIvfCentroids(cl, "vec_id",
-        "embedding", 16)
-      val clRcbs = SimilarityOps.trainPqCodebooksResidual(cl, "vec_id",
-        "embedding", clCents, m = 8, ksub = 256, iters = 2)
-      val clIvfpq8 = clRecallOf(SimilarityOps.ivfPqTopK(clQueries, cl, k,
-        clCents, clRcbs, nprobe = 8, rerankFactor = 4))
-      val clCbs256 = SimilarityOps.trainPqCodebooks(cl, "vec_id",
-        "embedding", m = 8, ksub = 256, iters = 2)
-      val clPq256 = clRecallOf(SimilarityOps.pqTopK(clQueries, cl, k,
-        clCbs256, rerankFactor = 4))
-      clExact.unpersist(false)
-      cl.unpersist(false)
-      Seq("pq_m8k16_r4" -> pq, "ivf_probe4of16" -> ivf, "int8_r2" -> int8,
-        "pq_m8k256_r4" -> pq256, "ivfpq_m8k256_np8of16" -> ivfpq8,
-        "ivfpq_m8k256_np16of16" -> ivfpq16,
-        "ivfpq_clustered_np8" -> clIvfpq8,
-        "pq256_clustered_r4" -> clPq256)
-    }
     val recallJson =
-      (if (keepStress("recall")) annRecall() else Seq.empty)
-        .map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
+      obj(if (keepStress("recall")) table.annRecall() else Seq.empty)
 
     // the IVF-PQ fixture is a full per-cell code layout under tmp —
     // don't leave it accumulating across runs (pid-keyed dirs pile up)
-    if (keepStress("ivfpq_probe_stress")) {
-      val p = new org.apache.hadoop.fs.Path(ivfPqIndexDir)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(p, true); ()
-    }
+    if (keepStress("ivfpq_probe_stress"))
+      deleteTree(spark, table.ivfPqIndexDir)
 
     // tmpfs checkpoint litter is RAM — always clean it up (the
-    // spark.local.dir tree under /dev/shm is cleaned after
-    // spark.stop() below; Spark holds it until shutdown)
-    locally {
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmrf))
-        f.delete(); ()
-      }
-      rmrf(new java.io.File(ckptBase))
-    }
+    // spark.local.dir tree is cleaned after spark.stop() below; Spark
+    // holds it until shutdown)
+    rmrf(new java.io.File(ckptBase))
     val loadEnd = loadAvg()
-    // Session-environment attribution block (the stream-join hunt —
-    // three environments measured 15-25 s where a fourth measured
-    // 4-6 s on the same HEAD, with overhead ≈ 0 and uniformly
-    // inflated task time; loadavg alone cannot attribute that): record
-    // the variables that can differ per session, plus a direct CPU
-    // throughput probe. `cpu_1t` is the seconds one thread needs for a
-    // fixed integer spin; `cpu_scale` is the aggregate speedup when
-    // every vCPU spins at once — on dedicated cores it sits near the
-    // processor count, and a low value is host-level CPU
-    // oversubscription (vCPU steal), which guest loadavg and /proc
-    // cannot see when steal accounting is off (Firecracker).
-    def slurp(p: String): String =
-      try scala.io.Source.fromFile(p).mkString.trim
-      catch { case _: Throwable => "" }
-    def spinOnce(iters: Long): Double = {
-      val t0 = System.nanoTime()
-      var x = 0L; var i = 0L
-      while (i < iters) { x += i * 31 + 7; i += 1 }
-      if (x == 42) System.err.print("") // keep the loop live
-      (System.nanoTime() - t0) / 1e9
-    }
-    // fork+exec latency probe — THE stream-witness variable (r17
-    // finding): state-store commits on local checkpoints fork a chmod
-    // per file (RawLocalFileSystem without native libhadoop) plus the
-    // Spark 4.1 checksum sidecars, so join-witness wall time is
-    // fork-throughput-bound and fork latency varies 3-4× across
-    // Firecracker guest kernels. ~20 forks ≈ tens of ms.
-    def forkMs(): Double = {
-      try {
-        def one(): Unit = {
-          val p = new ProcessBuilder("/bin/true").start()
-          p.waitFor(); ()
-        }
-        (1 to 5).foreach(_ => one()) // warm the spawn path
-        val t0 = System.nanoTime()
-        val n = 20
-        (1 to n).foreach(_ => one())
-        math.rint((System.nanoTime() - t0) / 1e6 / n * 100) / 100
-      } catch { case _: Throwable => -1.0 }
-    }
-    val envJson = {
-      val procs = Runtime.getRuntime.availableProcessors()
-      spinOnce(20000000L) // JIT warmup
-      val spinIters = 400000000L
-      // min of 3: a single 0.1-0.3 s sample is descheduling-noisy and
-      // an inflated t1 reads as a nonsense >procs cpu_scale
-      val t1 = (1 to 3).map(_ => spinOnce(spinIters)).min
-      val threads = (0 until procs).map { _ =>
-        new Thread(() => { spinOnce(spinIters); () })
-      }
-      val tm0 = System.nanoTime()
-      threads.foreach(_.start()); threads.foreach(_.join())
-      val tMulti = (System.nanoTime() - tm0) / 1e9
-      val scale = if (tMulti > 0) procs * t1 / tMulti else -1.0
-      def r2(x: Double) = math.rint(x * 100) / 100
-      val cpu = slurp("/proc/cpuinfo").linesIterator
-        .find(_.startsWith("model name")).fold("")(
-          _.split(":").drop(1).mkString(":").trim)
-      val uptime = slurp("/proc/uptime").split(" ").headOption
-        .flatMap(s => scala.util.Try(s.toDouble.toLong).toOption)
-        .getOrElse(-1L)
-      val quota = slurp("/sys/fs/cgroup/cpu.max")
-      val gov =
-        slurp("/sys/devices/system/cpu/cpu0/cpufreq/scaling_governor")
-      s"""{"procs":$procs,"cpus_env":"$cpus",""" +
-        s""""heap_gb":${r2(Runtime.getRuntime.maxMemory / 1e9)},""" +
-        s""""jvm":"${System.getProperty("java.version")}",""" +
-        s""""kernel":"${System.getProperty("os.version")}",""" +
-        s""""cpu":"$cpu","uptime_s":$uptime,""" +
-        s""""cpu_quota":"$quota","governor":"$gov",""" +
-        s""""cpu_1t":${r2(t1)},"cpu_scale":${r2(scale)},""" +
-        s""""fork_ms":${forkMs()}}"""
-    }
+    val envJson = envBlock(cpus)
     val at = attemptTotals.mkString("[", ",", "]")
     // Previous-run comparison (r15 verdict task #5's second half):
     // a >1.5× total jump joins the load guard in host_busy — the flag
@@ -1979,13 +261,9 @@ object Bench {
     // the two signals that see EXTERNAL contamination: pre-run load
     // and the jump vs the previous official total.
     val hostBusy = hostBusyAtStart || vsPrev.exists(_ > 1.5)
-    val vsPrevJson = vsPrev.map(r => (math.rint(r * 100) / 100).toString)
-      .getOrElse("null")
-    val decompJson = streamDecomp
-      .map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val wu = warmupTimes.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    val vsPrevJson = vsPrev.map(r => r2(r).toString).getOrElse("null")
+    val decompJson = obj(harness.decomp.toSeq)
+    val wu = obj(warmupTimes)
     val scaleField =
       if (scaleProbe.isEmpty) "" else s""""scale_probe":$scaleProbeJson,"""
     val benchJson = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"reps":$rs,"warmup":$wu,"stages":$st,"stress":$str,"stress_reps":$strReps,"stress_noisy":$stressNoisy,$scaleField"recall":$recallJson,"stream_decomp":$decompJson,"env":$envJson,"loadavg":[$loadStart,$loadEnd],"noisy":$noisy,"host_busy":$hostBusy,"vs_prev":$vsPrevJson,"attempts":$at,"sf":"$sfDir"}"""
@@ -1999,19 +277,14 @@ object Bench {
     // totals, and the host-state digest that the round-over-round
     // comparison rules require reading first). Same driver contract
     // shape: metric/value/unit/queries/sf.
-    val legacy9 = results.filter(_._1 != "classifier_train")
-      .map(_._2).filter(_ >= 0).sum
-    def r2d(x: Double): Double = math.rint(x * 100) / 100
-    val cpuScaleRe = "\"cpu_scale\":([0-9.]+)".r
-    val forkMsRe = "\"fork_ms\":([0-9.]+)".r
-    val envDigest =
-      cpuScaleRe.findFirstMatchIn(envJson).map(m =>
-        s""","cpu_scale":${m.group(1)}""").getOrElse("") +
-      forkMsRe.findFirstMatchIn(envJson).map(m =>
-        s""","fork_ms":${m.group(1)}""").getOrElse("")
+    val legacy9 = totalOf(results.filter(_._1 != "classifier_train"))
+    val envDigest = Seq("cpu_scale", "fork_ms").flatMap { k =>
+      s""""$k":([0-9.]+)""".r.findFirstMatchIn(envJson)
+        .map(m => s""","$k":${m.group(1)}""")
+    }.mkString
     val summaryJson =
-      s"""{"metric":"total","value":${r2d(total)},"unit":"sec",""" +
-      s""""summary":true,"legacy9":${r2d(legacy9)},"queries":$qs,""" +
+      s"""{"metric":"total","value":${r2(total)},"unit":"sec",""" +
+      s""""summary":true,"legacy9":${r2(legacy9)},"queries":$qs,""" +
       s""""noisy":$noisy,"host_busy":$hostBusy,"attempts":$at,""" +
       s""""vs_prev":$vsPrevJson,"loadavg":[$loadStart,$loadEnd]""" +
       s"""$envDigest,"sf":"$sfDir"}"""
@@ -2029,12 +302,413 @@ object Bench {
       try w.write(benchJson + "\n") finally w.close()
     } catch { case _: Throwable => () }
     spark.stop()
-    if (localDir.startsWith("/dev/shm")) {
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmrf))
-        f.delete(); ()
-      }
-      rmrf(new java.io.File(localDir))
+    rmrf(new java.io.File(localDir))
+  }
+
+  /** `{"k":v,...}` in the given order; values print with `toString`. */
+  private def obj(kvs: Seq[(String, Any)]): String =
+    kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+
+  private[graft] def r2(x: Double): Double = math.rint(x * 100) / 100
+
+  /** `<java.io.tmpdir>/graft-bench-<kind>-<pid>`: a per-process path for
+    * an entry's staged input or fixture. */
+  private[graft] def tmpPath(kind: String): String =
+    s"${sys.props("java.io.tmpdir")}/graft-bench-$kind-" +
+      ProcessHandle.current().pid()
+
+  /** A fresh per-process `graft-bench-<kind>-<pid>` directory on tmpfs
+    * (/dev/shm) when it is writable, else under java.io.tmpdir. */
+  private def tmpfsDir(kind: String): String = {
+    val shm = new java.io.File("/dev/shm")
+    val parent =
+      if (shm.isDirectory && shm.canWrite) shm
+      else new java.io.File(sys.props("java.io.tmpdir"))
+    val d = new java.io.File(parent,
+      s"graft-bench-$kind-${ProcessHandle.current().pid()}")
+    d.mkdirs()
+    d.toString
+  }
+
+  private def rmrf(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmrf))
+    f.delete(); ()
+  }
+
+  /** Recursively deletes `dir` through the session's Hadoop filesystem. */
+  private[graft] def deleteTree(spark: SparkSession, dir: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    ()
+  }
+
+  // Host-contention self-identification (the r7 lesson: one official
+  // run on a loaded host reported 48 s for a 5 s suite and stood
+  // unexplained): 1-minute load average sampled at start and end, and
+  // a `noisy` flag when any query's worst rep exceeds 3× its median.
+  private def loadAvg(): Double =
+    try scala.io.Source.fromFile("/proc/loadavg").mkString
+      .split(" ")(0).toDouble
+    catch { case _: Throwable => -1.0 }
+
+  /** Pre-run HOST GUARD (r15 verdict task #5: the official run
+    * recorded 11.19 s at loadavg 13.46 and `noisy` did not trip
+    * because BOTH reps were equally loaded — the run must gate
+    * ITSELF, not just its rep spread): when the 1-minute load
+    * already exceeds ~2× cores/8 before any timing starts, wait
+    * once for the transient to drain and re-sample; a still-busy
+    * host proceeds (the driver needs a number) but the JSON carries
+    * host_busy=true so the series marks the contaminated point even
+    * when rep splits cannot see it. Returns (load at start, busy). */
+  private def hostGuard(): (Double, Boolean) = {
+    val busyThreshold = math.max(2.0,
+      Runtime.getRuntime.availableProcessors() / 4.0)
+    val loadFirst = loadAvg()
+    val loadStart =
+      if (loadFirst > busyThreshold) {
+        System.err.println(f"[bench] loadavg $loadFirst%.2f > " +
+          f"$busyThreshold%.1f before start — sleeping 60s for the " +
+          "transient to drain")
+        Thread.sleep(60000)
+        loadAvg()
+      } else loadFirst
+    (loadStart, loadStart > busyThreshold)
+  }
+
+  // NOTE: DistScan.releaseCaches() is deliberately NOT called between
+  // warmup and measurement — Spark's CacheManager matches persisted
+  // plans structurally, so the measured run reusing the warmed
+  // range-partition cache IS the steady state a long-lived cluster
+  // sits in (releasing mid-bench re-times the one-off partitioning:
+  // +50% total, all of it warmup cost this harness exists to exclude).
+  private def runOnce(name: String, frame: () => DataFrame): Double = {
+    val t0 = System.nanoTime()
+    try frame().write.format("noop").mode("overwrite").save()
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      return -1.0
     }
+    val secs = (System.nanoTime() - t0) / 1e9
+    System.err.println(f"[bench] $name: $secs%.2f s")
+    secs
+  }
+
+  // Plan-shape signal: shuffle-exchange count per query (+1 = stage
+  // count on a non-adaptive run). Wall-time noise can hide a plan
+  // regression; an extra Exchange cannot hide from this.
+  // (shuffles print as "Exchange hashpartitioning/rangepartitioning";
+  // BroadcastExchange is not a stage boundary and ReusedExchange is a
+  // pointer to an already-counted one — both excluded)
+  private def planStages(frame: () => DataFrame): Int = {
+    val plan = frame().queryExecution.executedPlan.toString
+    plan.linesIterator.count(l =>
+      l.contains("Exchange") && !l.contains("BroadcastExchange") &&
+        !l.contains("ReusedExchange")) + 1
+  }
+
+  /** (name, median of the ok reps or -1, every rep). */
+  private type Reps = Seq[(String, Double, Vector[Double])]
+
+  private def measure(entries: Seq[(String, () => DataFrame)],
+      reps: Int): Reps =
+    entries.map { case (n, f) =>
+      val times = (1 to reps).map(_ => runOnce(n, f)).toVector
+      val ok = times.filter(_ >= 0).sorted
+      val median = if (ok.isEmpty) -1.0 else ok(ok.size / 2)
+      (n, median, times)
+    }
+
+  // TWO split tests per query (r18 verdict task #1): worst/median
+  // catches one slow rep; median/best catches the shape that poisoned
+  // the official r18 record — TWO contended reps and one clean one
+  // ([27.0, 29.9, 2.5]: max/median 1.1 passes, median/min 10.7 is
+  // the tell). Either ratio > 3 marks the attempt noisy.
+  private def isNoisy(rs: Reps): Boolean =
+    rs.exists { case (_, m, ts) =>
+      val ok = ts.filter(_ >= 0)
+      m > 0 && ok.nonEmpty &&
+        (ok.max / m > 3.0 || (ok.min > 0 && m / ok.min > 3.0))
+    }
+
+  private def totalOf(rs: Reps): Double = rs.map(_._2).filter(_ >= 0).sum
+
+  /** Noisy-retry (three straight rounds shipped a contention-poisoned
+    * official BENCH the harness merely flagged): when the first attempt
+    * trips the noise detector — OR the host was already busy before
+    * timing started (r18: host_busy=true flagged the 37.5 s record but
+    * did not retry, and equal load across reps is exactly what the rep
+    * splits cannot see) — wait for the transient load to drain and
+    * measure ONCE more, then report the cleaner attempt; both attempt
+    * totals stay in the JSON so nothing is hidden. Bounded at one
+    * retry: a persistently loaded host reports noisy/host_busy as
+    * before. Returns (results, noisy, attempt totals). */
+  private def measureWithRetry(entries: Seq[(String, () => DataFrame)],
+      reps: Int, hostBusyAtStart: Boolean,
+      loadStart: Double): (Reps, Boolean, Seq[Double]) = {
+    val attempt1 = measure(entries, reps)
+    if (!isNoisy(attempt1) && !hostBusyAtStart)
+      (attempt1, false, Seq(totalOf(attempt1)))
+    else {
+      val why = if (isNoisy(attempt1)) "noisy rep split" else
+        f"host busy at start (loadavg $loadStart%.2f)"
+      System.err.println(s"[bench] first attempt suspect ($why) — " +
+        "sleeping 30s and re-measuring once")
+      Thread.sleep(30000)
+      val attempt2 = measure(entries, reps)
+      val pick = if (totalOf(attempt2) <= totalOf(attempt1)) attempt2 else attempt1
+      (pick, isNoisy(pick), Seq(totalOf(attempt1), totalOf(attempt2)))
+    }
+  }
+
+  private val RocksDb = "org.apache.spark.sql.execution.streaming.state." +
+    "RocksDBStateStoreProvider"
+
+  private def withStateProvider[T](spark: SparkSession,
+      provider: Option[String])(body: => T): T = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    provider.foreach(spark.conf.set(key, _))
+    try body finally provider.foreach { _ =>
+      prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    }
+  }
+
+  private def minOrFail(ts: Vector[Double]): Double =
+    if (ts.exists(_ < 0)) -1.0 else ts.min
+
+  /** Session-environment attribution block (the stream-join hunt —
+    * three environments measured 15-25 s where a fourth measured
+    * 4-6 s on the same HEAD, with overhead ≈ 0 and uniformly
+    * inflated task time; loadavg alone cannot attribute that): record
+    * the variables that can differ per session, plus a direct CPU
+    * throughput probe. `cpu_1t` is the seconds one thread needs for a
+    * fixed integer spin; `cpu_scale` is the aggregate speedup when
+    * every vCPU spins at once — on dedicated cores it sits near the
+    * processor count, and a low value is host-level CPU
+    * oversubscription (vCPU steal), which guest loadavg and /proc
+    * cannot see when steal accounting is off (Firecracker). */
+  private def envBlock(cpus: String): String = {
+    def slurp(p: String): String =
+      try scala.io.Source.fromFile(p).mkString.trim
+      catch { case _: Throwable => "" }
+    def spinOnce(iters: Long): Double = {
+      val t0 = System.nanoTime()
+      var x = 0L; var i = 0L
+      while (i < iters) { x += i * 31 + 7; i += 1 }
+      if (x == 42) System.err.print("") // keep the loop live
+      (System.nanoTime() - t0) / 1e9
+    }
+    // fork+exec latency probe — THE stream-witness variable (r17
+    // finding): state-store commits on local checkpoints fork a chmod
+    // per file (RawLocalFileSystem without native libhadoop) plus the
+    // Spark 4.1 checksum sidecars, so join-witness wall time is
+    // fork-throughput-bound and fork latency varies 3-4× across
+    // Firecracker guest kernels. ~20 forks ≈ tens of ms.
+    def forkMs(): Double = {
+      try {
+        def one(): Unit = {
+          val p = new ProcessBuilder("/bin/true").start()
+          p.waitFor(); ()
+        }
+        (1 to 5).foreach(_ => one()) // warm the spawn path
+        val t0 = System.nanoTime()
+        val n = 20
+        (1 to n).foreach(_ => one())
+        r2((System.nanoTime() - t0) / 1e6 / n)
+      } catch { case _: Throwable => -1.0 }
+    }
+    val procs = Runtime.getRuntime.availableProcessors()
+    spinOnce(20000000L) // JIT warmup
+    val spinIters = 400000000L
+    // min of 3: a single 0.1-0.3 s sample is descheduling-noisy and
+    // an inflated t1 reads as a nonsense >procs cpu_scale
+    val t1 = (1 to 3).map(_ => spinOnce(spinIters)).min
+    val threads = (0 until procs).map { _ =>
+      new Thread(() => { spinOnce(spinIters); () })
+    }
+    val tm0 = System.nanoTime()
+    threads.foreach(_.start()); threads.foreach(_.join())
+    val tMulti = (System.nanoTime() - tm0) / 1e9
+    val scale = if (tMulti > 0) procs * t1 / tMulti else -1.0
+    val cpu = slurp("/proc/cpuinfo").linesIterator
+      .find(_.startsWith("model name")).fold("")(
+        _.split(":").drop(1).mkString(":").trim)
+    val uptime = slurp("/proc/uptime").split(" ").headOption
+      .flatMap(s => scala.util.Try(s.toDouble.toLong).toOption)
+      .getOrElse(-1L)
+    val quota = slurp("/sys/fs/cgroup/cpu.max")
+    val gov =
+      slurp("/sys/devices/system/cpu/cpu0/cpufreq/scaling_governor")
+    s"""{"procs":$procs,"cpus_env":"$cpus",""" +
+      s""""heap_gb":${r2(Runtime.getRuntime.maxMemory / 1e9)},""" +
+      s""""jvm":"${System.getProperty("java.version")}",""" +
+      s""""kernel":"${System.getProperty("os.version")}",""" +
+      s""""cpu":"$cpu","uptime_s":$uptime,""" +
+      s""""cpu_quota":"$quota","governor":"$gov",""" +
+      s""""cpu_1t":${r2(t1)},"cpu_scale":${r2(scale)},""" +
+      s""""fork_ms":${forkMs()}}"""
+  }
+}
+
+/** The stream-witness harness: stages a witness's input, runs its
+  * query to completion, records the run's decomposition, and diffs the
+  * streamed result against its batch twin. Checkpoints live under
+  * `ckptBase/<sub>_<tag>` and queries are named
+  * `graft_stream_<sub>_<tag>` (a foreachBatch run may name its query
+  * apart), so every tag gets fresh ones. */
+final class WitnessHarness(spark: SparkSession, ckptBase: String) {
+  // Per-run decomposition of the witnesses (r15 verdict task #4: two
+  // same-host chains measured 4-6 s vs 15-18 s with reps AGREEING —
+  // something fixed-cost or I/O-mode-dependent, not rep noise):
+  // wall = query start → processAllAvailable returns; batch_sum = Σ
+  // per-trigger triggerExecution from the progress log; overhead =
+  // wall − batch_sum (stream startup, source listing, final no-data
+  // trigger). Memory-sink runs add state_commit = Σ per-trigger
+  // stateOperators commit times — the disk-placement-sensitive slice —
+  // plus, for per-session attribution (the stream-join hunt), the
+  // state-store fan-out per trigger (shuffle partitions × stateful
+  // operators) and the final state row count, so a divergent run
+  // shows whether it did MORE state work or the SAME work slower.
+  // foreachBatch runs keep their cost in the sink lambda (jobs the
+  // progress log times as addBatch), so they record wall vs Σ
+  // triggerExecution only (r16 verdict task #7). The entries are
+  // printed per run and shipped in the bench JSON so a divergent
+  // official run can be attributed without a re-run.
+  /** `<witness>_<tag>` → decomposition JSON, in run order. */
+  val decomp = scala.collection.mutable.LinkedHashMap[String, String]()
+
+  private def record(name: String, tag: String, t0: Long, q: StreamingQuery,
+      state: Boolean): Unit = {
+    val wall = (System.nanoTime() - t0) / 1e9
+    val prog = q.recentProgress.toSeq
+    val batches = prog.map(p =>
+      Option(p.durationMs.get("triggerExecution"))
+        .fold(0.0)(_.toDouble / 1000))
+    val batchSum = batches.sum
+    val stateFields = if (!state) "" else {
+      val ops = prog.flatMap(_.stateOperators.toSeq)
+      val commit = ops.map(o => o.allUpdatesTimeMs + o.commitTimeMs)
+        .sum / 1000.0
+      val shufParts = ops.headOption.fold(0)(_.numShufflePartitions.toInt)
+      val stateRows = prog.lastOption
+        .flatMap(_.stateOperators.headOption).fold(0L)(_.numRowsTotal)
+      s""""state_commit":${Bench.r2(commit)},""" +
+        s""""shuffle_parts":$shufParts,"state_rows":$stateRows,"""
+    }
+    val entry =
+      s"""{"wall":${Bench.r2(wall)},"batch_sum":${Bench.r2(batchSum)},""" +
+        s""""overhead":${Bench.r2(wall - batchSum)},""" + stateFields +
+        s""""batches":[${batches.map(Bench.r2).mkString(",")}]}"""
+    decomp(s"${name}_$tag") = entry
+    System.err.println(s"[bench] decomp ${name}_$tag: $entry")
+  }
+
+  /** Writes `df` to `dir` as 16 files range-partitioned and sorted on
+    * `key`, and returns the staged schema. FileStreamSource replays in
+    * MODIFICATION-TIME order, and the 16 parallel part writers finish
+    * in arbitrary ms order — left alone the ranges replay scrambled,
+    * the watermark leaps ahead on the first out-of-order file, and
+    * genuinely-early rows get dropped as late. So the mtimes are
+    * stamped in part order (= range order): the replay is what it
+    * models, an ordered historical backfill. */
+  def stage16(df: DataFrame, key: String, dir: String): StructType = {
+    df.repartitionByRange(16, col(key)).sortWithinPartitions(key)
+      .write.mode("overwrite").parquet(dir)
+    new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+      .zipWithIndex.foreach { case (f, i) =>
+        f.setLastModified((i + 1) * 60000L) }
+    spark.read.parquet(dir).schema
+  }
+
+  /** The staged files as a parquet file-source stream,
+    * `filesPerTrigger` files per micro-batch. */
+  def replay(dir: String, schema: StructType,
+      filesPerTrigger: Int): DataFrame =
+    spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", filesPerTrigger).parquet(dir)
+
+  /** Runs `df` into the memory sink `graft_stream_<sub>_<tag>` until
+    * all input is processed and records its decomposition with the
+    * state fields. Returns the seconds since `t0`, taken once the query
+    * stopped, and the sink's table. */
+  def toMemory(name: String, tag: String, t0: Long, df: DataFrame,
+      mode: String, sub: String): (Double, DataFrame) = {
+    val table = s"graft_stream_${sub}_$tag"
+    val q = df.writeStream.outputMode(mode).format("memory")
+      .option("checkpointLocation", s"$ckptBase/${sub}_$tag")
+      .queryName(table).start()
+    try { q.processAllAvailable()
+      record(name, tag, t0, q, state = true)
+    } finally q.stop()
+    ((System.nanoTime() - t0) / 1e9, spark.table(table))
+  }
+
+  /** Runs `df` in append mode into `sink` (checkpoint `<sub>_<tag>`,
+    * query `graft_stream_<query>_<tag>`) until all input is processed
+    * and records its decomposition without the state fields. Returns
+    * the seconds since `t0`, taken once the query stopped. */
+  def toForeach(name: String, tag: String, t0: Long, df: DataFrame,
+      sub: String, query: String)(sink: (DataFrame, Long) => Unit): Double = {
+    val q = df.writeStream.outputMode("append")
+      .option("checkpointLocation", s"$ckptBase/${sub}_$tag")
+      .foreachBatch(sink)
+      .queryName(s"graft_stream_${query}_$tag").start()
+    try { q.processAllAvailable()
+      record(name, tag, t0, q, state = false)
+    } finally q.stop()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** The crash-recovery loop: streams `frame()` into a per-batch
+    * partition-overwrite parquet sink under `out` (idempotent on
+    * replay), throws out of the sink once, after batch `killAt`'s rows
+    * landed and before its epoch commits, then restarts from the same
+    * checkpoint and runs to completion. The seconds span BOTH runs;
+    * None when the kill never fired. */
+  def killThenRestart(name: String, tag: String, sub: String, out: String,
+      killAt: Long)(frame: () => DataFrame): Option[Double] = {
+    @volatile var killed = false
+    val t0 = System.nanoTime()
+    def run(): Unit =
+      try toForeach(name, tag, t0, frame(), sub, sub) { (df, bid) =>
+        df.write.mode("overwrite").parquet(s"$out/batch_id=$bid")
+        if (bid == killAt && !killed) { killed = true
+          sys.error(s"bench: injected crash after batch $killAt's rows " +
+            "landed, before its epoch commit") }
+      } catch { case _: Exception => () }
+    run() // dies mid-stream on the injected crash
+    if (!killed) {
+      System.err.println(s"[bench] $name: the kill never fired (input " +
+        s"produced < ${killAt + 1} batches) — reporting -1")
+      None
+    } else {
+      run() // restart from the checkpoint, run to completion
+      Some((System.nanoTime() - t0) / 1e9)
+    }
+  }
+
+  /** `secs` when `streamed` and `batch` hold the same rows (as
+    * multisets), else -1, logging how many rows differ. */
+  def sameRows(name: String, between: String, streamed: DataFrame,
+      batch: DataFrame, secs: Double): Double = {
+    val diff = streamed.exceptAll(batch).count() +
+      batch.exceptAll(streamed).count()
+    if (diff == 0) secs
+    else {
+      System.err.println(s"[bench] $name: $diff rows differ between " +
+        s"$between — reporting -1")
+      -1.0
+    }
+  }
+
+  /** Runs `body` at `n` shuffle partitions, then restores the session's. */
+  def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 }

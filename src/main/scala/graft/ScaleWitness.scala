@@ -1,10 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** DATA-SCALING witness (r13-verdict stretch task): times the dedup,
-  * curation, and classifier-training paths on this SF's documents and
+  * curation, and classifier-training paths — the bench's
+  * `lsh_stress_capped`, `curation_stress` and `classifier_train_stress`
+  * entries from [[BenchTable]] — on this SF's documents and
   * on a synthesized `factor`× corpus, and prints per-stage wall-clock
   * with the scaling ratio — the first DIRECT evidence that the capped
   * paths scale sub-quadratically in data, complementing the per-plan
@@ -32,17 +34,8 @@ object ScaleWitness {
     val factor = if (args.nonEmpty) args(0).toInt else 10
     require(factor >= 2, s"factor must be >= 2: $factor")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.llm.{ClassifierOps, TextDedupOps, TextStatsOps}
+    val spark = LocalSession.start(cpus, "spark.sql.adaptive.enabled" -> "true")
+    import graft.llm.TextDedupOps
 
     val base = Tables.documents(spark, sfDir)
       .select("doc_id", "text", "lang")
@@ -66,41 +59,10 @@ object ScaleWitness {
     val n10 = scaled.count()
     System.err.println(s"[scale] corpus: $n1 -> $n10 rows (factor $factor)")
 
-    val boiler = "this page is protected by copyright terms of " +
-      "service apply to all visitors please review the policy "
-    def plantSkew(docs: DataFrame): DataFrame =
-      docs.withColumn("text",
-        when(pmod(col("doc_id"), lit(10)) === 0,
-          concat(lit(boiler * 4), col("doc_id").cast("string")))
-          .otherwise(col("text")))
-
-    // the three stress paths, parameterized by corpus (the bench
-    // entries' exact shapes — see Bench.scala lshStressCapped /
-    // curationStress / classifierTrainStress)
-    def dedup(docs: DataFrame): DataFrame = {
-      val sigs = TextDedupOps.minHashSignatures(
-        plantSkew(docs.select("doc_id", "text")), "doc_id", "text",
-        shingleN = 3, k = 32)
-      val pairs = TextDedupOps.lshCandidatePairs(sigs, "doc_id",
-        bands = 8, threshold = 0.8, maxBucketSize = 64)
-      TextDedupOps.connectedComponents(pairs, "id_a", "id_b",
-        checkpointEvery = 4)
-    }
-    def curation(docs: DataFrame): DataFrame = {
-      val d = docs.select("doc_id", "text")
-      val quality = d.filter(TextStatsOps.gopherKeep(col("text")))
-      val kept = TextStatsOps.gopherRepetitionKept(quality, "doc_id", "text")
-      TextDedupOps.paragraphDedup(kept, "doc_id", "text")
-    }
-    def classifier(docs: DataFrame): DataFrame = {
-      val d = docs.select(col("doc_id"), col("text"),
-        (col("lang") === "en").cast("int").as("y"))
-      val w = ClassifierOps.trainHardLogistic(d, "text", "y",
-        buckets = 64, iters = 2, lrDen = 100L)
-      d.select(col("doc_id"),
-        ClassifierOps.logitMicro(col("text"), w.take(64).toSeq, w(64))
-          .as("logit_micro"))
-    }
+    // the bench's own stress entries, run over a given corpus
+    val table = new BenchTable(spark, sfDir)
+    def entry(name: String): DataFrame => DataFrame =
+      docs => table.stress(() => docs).toMap.apply(name)()
 
     // STORAGE-BACKED loops (r14 verdict task #6 — the 100× witness
     // covered one-shot paths only): the indexed incremental near-dup
@@ -175,9 +137,9 @@ object ScaleWitness {
       (System.nanoTime() - t0) / 1e9
     }
     val stages: Seq[(String, DataFrame => DataFrame)] = Seq(
-      "dedup_capped_lsh_cc" -> (dedup _),
-      "curation_gopher_paradedup" -> (curation _),
-      "classifier_train_2step" -> (classifier _),
+      "dedup_capped_lsh_cc" -> entry("lsh_stress_capped"),
+      "curation_gopher_paradedup" -> entry("curation_stress"),
+      "classifier_train_2step" -> entry("classifier_train_stress"),
       "dedup_incremental_indexed" -> (dedupIndexed _),
       "dedup_delete_vacuum" -> (dedupDeleteVacuum _))
     // factor× embeddings: copy k shifts vec_id by k·n and perturbs
@@ -230,14 +192,7 @@ object ScaleWitness {
       s""""rows1":$n1,"rowsN":$n10,"stages":$json,"sf":"$sfDir"}""")
     // the factor-x corpora are multi-GB at factor 100 — don't leave
     // them (or the stage artifacts) accumulating under tmp across runs
-    (Seq(bigDir, embDir) ++ cleanup).foreach { d =>
-      fsOf(spark, d).delete(new org.apache.hadoop.fs.Path(d), true); ()
-    }
+    (Seq(bigDir, embDir) ++ cleanup).foreach(Bench.deleteTree(spark, _))
     spark.stop()
   }
-
-  private def fsOf(spark: SparkSession, dir: String)
-      : org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
 }

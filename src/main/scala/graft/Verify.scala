@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,20 +10,7 @@ object Verify {
     val filter: String => Boolean =
       if (args.length > 2) (n: String) => n.startsWith(args(2)) else _ => true
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Timezone-less parquet timestamps (isAdjustedToUTC=false) read as
-      // instants under the UTC session, not TIMESTAMP_NTZ: the engine's
-      // temporal algebra (unix_micros offsets, resample grids, asof) is
-      // defined over instants, and the DuckDB oracle reads the same
-      // micros as naive-UTC — identical wall-clock values on both sides.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.start(cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => filter(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

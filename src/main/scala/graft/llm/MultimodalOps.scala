@@ -1,26 +1,26 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing (north-star LLM pipeline): media as opaque
-  * `binary` payloads + typed metadata, processed per-partition in
-  * batches.
+  * `binary` payloads + typed metadata, processed per partition.
   *
   * IMAGE decode/resize are REAL (JDK `javax.imageio` — PNG/JPEG/GIF/BMP
   * ship with the JRE, no external dependency): [[decodeImageMeta]] and
-  * [[resizeImages]] run actual codecs inside the batched mapPartitions
-  * path. AUDIO decode/decimate are REAL too (JDK `javax.sound.sampled`
-  * — the WAV/PCM container codec ships with the JRE):
+  * [[resizeImages]] run actual codecs inside the per-payload
+  * mapPartitions path. AUDIO decode/decimate are REAL too (JDK
+  * `javax.sound.sampled` — the WAV/PCM container codec ships with the
+  * JRE):
   * [[decodeAudioMeta]] and [[decimateAudio]]. VIDEO container parsing
   * is REAL too (ISO-BMFF/MP4 box walking, sample tables, MJPEG frame
   * decode via ImageIO); only non-MJPEG PIXEL decode remains honestly
   * stubbed (no inter-frame video codec exists in the JRE or this
   * container — see [[decodeVideoFrames]]'s status column). Everything
   * Spark-side is real throughout:
-  * the schema convention, the batched mapPartitions shape (the Scala
-  * analog of mapInPandas: one iterator per partition, amortized
-  * per-batch setup), and the partitioning story (payloads never shuffle
+  * the schema convention, the mapPartitions shape (the Scala
+  * analog of mapInPandas: one iterator per partition), and the
+  * partitioning story (payloads never shuffle
   * unless the caller repartitions on a grouping key first).
   */
 object MultimodalOps {
@@ -82,6 +82,21 @@ object MultimodalOps {
     * keeps the (large) payload out of the scan entirely. */
   def metadataOnly(assets: DataFrame): DataFrame =
     assets.select("asset_id", "media_type", "meta_width", "meta_height")
+
+  /** A payload kernel's shape: `kernel` maps each partition's
+    * (id cast to long, payload bytes) pairs; no shuffle, so it runs
+    * wherever the payloads already live. */
+  private def perPayload[T: Encoder](assets: DataFrame, idCol: String,
+      payloadCol: String)(
+      kernel: Iterator[(Long, Array[Byte])] => Iterator[T]): Dataset[T] = {
+    val spark = assets.sparkSession
+    import spark.implicits._
+    assets
+      .select(col(idCol).cast("long").as("asset_id"),
+        col(payloadCol).as("payload"))
+      .as[(Long, Array[Byte])]
+      .mapPartitions(kernel)
+  }
 
   // ---- REAL video CONTAINER parsing (ISO-BMFF / MP4 box structure per
   // the public ISO 14496-12 layout). Parsing the box tree gives the
@@ -184,24 +199,18 @@ object MultimodalOps {
   /** REAL MP4 container metadata over a binary payload column: walks
     * the ISO-BMFF box tree (ftyp brand, mvhd timescale/duration with
     * exact-integer micros, per-trak tkhd dims + hdlr handler census).
-    * Batched mapPartitions, no shuffle, like the image/audio kernels. */
+    * mapPartitions, no shuffle, like the image/audio kernels. */
   def decodeVideoMeta(assets: DataFrame, idCol: String = "asset_id",
-      payloadCol: String = "payload", batchSize: Int = 64): Dataset[VideoMeta] = {
+      payloadCol: String = "payload"): Dataset[VideoMeta] = {
     val spark = assets.sparkSession
     import spark.implicits._
-    assets
-      .select(col(idCol).cast("long").as("asset_id"),
-        col(payloadCol).as("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map { case (id, bytes) =>
-          parseMp4(bytes) match {
-            case Some(m) => m.copy(asset_id = id)
-            case None => VideoMeta(id, "", -1, -1, -1, -1, -1, -1, -1,
-              "undecodable")
-          }
-        })
+    perPayload(assets, idCol, payloadCol)(_.map { case (id, bytes) =>
+      parseMp4(bytes) match {
+        case Some(m) => m.copy(asset_id = id)
+        case None => VideoMeta(id, "", -1, -1, -1, -1, -1, -1, -1,
+          "undecodable")
       }
+    })
   }
 
   /** (sample-entry codec, byte ranges (offset, size)) of the FIRST
@@ -272,30 +281,23 @@ object MultimodalOps {
     * video codec in the JRE). Keeps every `everyNth` sample, 0-based
     * frame_no over the sample index. Payloads without a parseable
     * video sample table emit one (frame_no = -1, null frame) row —
-    * keyed rows survive, like [[resizeImages]]. Batched mapPartitions,
-    * no shuffle. */
+    * keyed rows survive, like [[resizeImages]]. mapPartitions, no
+    * shuffle. */
   def sampleVideoFrames(assets: DataFrame, everyNth: Int,
-      idCol: String = "asset_id", payloadCol: String = "payload",
-      batchSize: Int = 64): DataFrame = {
+      idCol: String = "asset_id", payloadCol: String = "payload"): DataFrame = {
     require(everyNth > 0, s"everyNth must be positive: $everyNth")
     val spark = assets.sparkSession
     import spark.implicits._
-    assets
-      .select(col(idCol).cast("long").as("asset_id"),
-        col(payloadCol).as("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.flatMap { case (id, bytes) =>
-          parseMp4VideoSamples(bytes) match {
-            case Some((_, ranges)) =>
-              ranges.zipWithIndex.collect {
-                case ((o, s), i) if i % everyNth == 0 =>
-                  (id, i.toLong, java.util.Arrays.copyOfRange(bytes, o, o + s))
-              }
-            case None => Seq((id, -1L, null: Array[Byte]))
+    perPayload(assets, idCol, payloadCol)(_.flatMap { case (id, bytes) =>
+      parseMp4VideoSamples(bytes) match {
+        case Some((_, ranges)) =>
+          ranges.zipWithIndex.collect {
+            case ((o, s), i) if i % everyNth == 0 =>
+              (id, i.toLong, java.util.Arrays.copyOfRange(bytes, o, o + s))
           }
-        })
-      }.toDF("asset_id", "frame_no", "frame")
+        case None => Seq((id, -1L, null: Array[Byte]))
+      }
+    }).toDF("asset_id", "frame_no", "frame")
   }
 
   /** Decoded-frame facts; status "ok" (MJPEG frame decoded), "stub"
@@ -322,57 +324,51 @@ object MultimodalOps {
     * width/height/channels plus `pix_sum` (Σ over pixels of R+G+B, an
     * exact integer pixel statistic). Other codecs keep the honest
     * stub: samples extracted, dims/stats -1, status "stub" (no video
-    * codec beyond JPEG exists in the JRE). Batched mapPartitions, no
+    * codec beyond JPEG exists in the JRE). mapPartitions, no
     * shuffle — decode runs wherever the payloads live. */
   def decodeVideoFrames(assets: DataFrame, everyNth: Int,
-      idCol: String = "asset_id", payloadCol: String = "payload",
-      batchSize: Int = 64): Dataset[VideoFrameMeta] = {
+      idCol: String = "asset_id",
+      payloadCol: String = "payload"): Dataset[VideoFrameMeta] = {
     require(everyNth > 0, s"everyNth must be positive: $everyNth")
     val spark = assets.sparkSession
     import spark.implicits._
-    assets
-      .select(col(idCol).cast("long").as("asset_id"),
-        col(payloadCol).as("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.flatMap { case (id, bytes) =>
-          parseMp4VideoSamples(bytes) match {
-            case Some((codec, ranges)) =>
-              val mjpeg = MjpegCodecs.contains(codec)
-              ranges.zipWithIndex.collect {
-                case ((o, s), i) if i % everyNth == 0 =>
-                  if (!mjpeg)
-                    VideoFrameMeta(id, i.toLong, codec, -1, -1, -1, -1L,
-                      "stub")
-                  else readImage(
-                      java.util.Arrays.copyOfRange(bytes, o, o + s)) match {
-                    case Some(img) =>
-                      var sum = 0L
-                      var y = 0
-                      while (y < img.getHeight) {
-                        var x = 0
-                        while (x < img.getWidth) {
-                          val rgb = img.getRGB(x, y)
-                          sum += ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) +
-                            (rgb & 0xff)
-                          x += 1
-                        }
-                        y += 1
-                      }
-                      VideoFrameMeta(id, i.toLong, codec, img.getWidth,
-                        img.getHeight,
-                        img.getColorModel.getNumComponents, sum, "ok")
-                    case None =>
-                      VideoFrameMeta(id, i.toLong, codec, -1, -1, -1, -1L,
-                        "bad_frame")
+    perPayload(assets, idCol, payloadCol)(_.flatMap { case (id, bytes) =>
+      parseMp4VideoSamples(bytes) match {
+        case Some((codec, ranges)) =>
+          val mjpeg = MjpegCodecs.contains(codec)
+          ranges.zipWithIndex.collect {
+            case ((o, s), i) if i % everyNth == 0 =>
+              if (!mjpeg)
+                VideoFrameMeta(id, i.toLong, codec, -1, -1, -1, -1L,
+                  "stub")
+              else readImage(
+                  java.util.Arrays.copyOfRange(bytes, o, o + s)) match {
+                case Some(img) =>
+                  var sum = 0L
+                  var y = 0
+                  while (y < img.getHeight) {
+                    var x = 0
+                    while (x < img.getWidth) {
+                      val rgb = img.getRGB(x, y)
+                      sum += ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) +
+                        (rgb & 0xff)
+                      x += 1
+                    }
+                    y += 1
                   }
+                  VideoFrameMeta(id, i.toLong, codec, img.getWidth,
+                    img.getHeight,
+                    img.getColorModel.getNumComponents, sum, "ok")
+                case None =>
+                  VideoFrameMeta(id, i.toLong, codec, -1, -1, -1, -1L,
+                    "bad_frame")
               }
-            case None =>
-              Seq(VideoFrameMeta(id, -1L, "", -1, -1, -1, -1L,
-                "undecodable"))
           }
-        })
+        case None =>
+          Seq(VideoFrameMeta(id, -1L, "", -1, -1, -1, -1L,
+            "undecodable"))
       }
+    })
   }
 
   /** Spec-conformant minimal MP4 builder (fixture producer): ftyp +
@@ -489,64 +485,50 @@ object MultimodalOps {
     catch { case _: java.io.IOException => None }
 
   /** REAL image decode over a binary payload column: actual ImageIO
-    * codec per payload, batched mapPartitions (per-batch amortization
-    * slot for codec/reader reuse), no shuffle — decodes run wherever the
+    * codec per payload, mapPartitions, no shuffle — decodes run wherever the
     * payloads already live, the mapInPandas shape. */
   def decodeImageMeta(assets: DataFrame, idCol: String = "asset_id",
-      payloadCol: String = "payload", batchSize: Int = 64): DataFrame = {
+      payloadCol: String = "payload"): DataFrame = {
     val spark = assets.sparkSession
     import spark.implicits._
-    assets
-      .select(col(idCol).cast("long").as("asset_id"),
-        col(payloadCol).as("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map { case (id, bytes) =>
-          readImage(bytes) match {
-            case Some(img) => ImageMeta(id, img.getWidth, img.getHeight,
-              img.getColorModel.getNumComponents, "ok")
-            case None => ImageMeta(id, -1, -1, -1, "undecodable")
-          }
-        })
-      }.toDF()
+    perPayload(assets, idCol, payloadCol)(_.map { case (id, bytes) =>
+      readImage(bytes) match {
+        case Some(img) => ImageMeta(id, img.getWidth, img.getHeight,
+          img.getColorModel.getNumComponents, "ok")
+        case None => ImageMeta(id, -1, -1, -1, "undecodable")
+      }
+    }).toDF()
   }
 
   /** REAL resize: decode → Graphics2D bilinear rescale → re-encode PNG,
-    * in the same batched no-shuffle mapPartitions shape. Undecodable
+    * in the same no-shuffle mapPartitions shape. Undecodable
     * payloads pass through null (left-typed: the caller filters or
     * routes them; silently dropping rows would corrupt joins keyed on
     * asset_id). */
   def resizeImages(assets: DataFrame, targetWidth: Int, targetHeight: Int,
-      idCol: String = "asset_id", payloadCol: String = "payload",
-      batchSize: Int = 64): DataFrame = {
+      idCol: String = "asset_id", payloadCol: String = "payload"): DataFrame = {
     require(targetWidth > 0 && targetHeight > 0,
       s"target dims must be positive: ${targetWidth}x$targetHeight")
     val spark = assets.sparkSession
     import spark.implicits._
-    assets
-      .select(col(idCol).cast("long").as("asset_id"),
-        col(payloadCol).as("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map { case (id, bytes) =>
-          val out = readImage(bytes).map { img =>
-            val dst = new java.awt.image.BufferedImage(
-              targetWidth, targetHeight,
-              java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
-            val g = dst.createGraphics()
-            try {
-              g.setRenderingHint(
-                java.awt.RenderingHints.KEY_INTERPOLATION,
-                java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-              g.drawImage(img, 0, 0, targetWidth, targetHeight, null)
-            } finally g.dispose()
-            val bos = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(dst, "png", bos)
-            bos.toByteArray
-          }.orNull
-          (id, out)
-        })
-      }.toDF("asset_id", "payload")
+    perPayload(assets, idCol, payloadCol)(_.map { case (id, bytes) =>
+      val out = readImage(bytes).map { img =>
+        val dst = new java.awt.image.BufferedImage(
+          targetWidth, targetHeight,
+          java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
+        val g = dst.createGraphics()
+        try {
+          g.setRenderingHint(
+            java.awt.RenderingHints.KEY_INTERPOLATION,
+            java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
+          g.drawImage(img, 0, 0, targetWidth, targetHeight, null)
+        } finally g.dispose()
+        val bos = new java.io.ByteArrayOutputStream()
+        javax.imageio.ImageIO.write(dst, "png", bos)
+        bos.toByteArray
+      }.orNull
+      (id, out)
+    }).toDF("asset_id", "payload")
   }
 
   /** Deterministic RGB PNG fixture producer (test harness — a real
@@ -555,22 +537,8 @@ object MultimodalOps {
     * decode gates can state expected dimensions/channels in ANY engine
     * from the seed alone while the bytes still exercise a genuine codec
     * round trip. */
-  def syntheticPng(width: Int, height: Int, seed: Long): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(width, height,
-      java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
-    var y = 0
-    while (y < height) {
-      var x = 0
-      while (x < width) {
-        img.setRGB(x, y, ((x * 31 + y * 17 + seed) & 0xffffff).toInt)
-        x += 1
-      }
-      y += 1
-    }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
-  }
+  def syntheticPng(width: Int, height: Int, seed: Long): Array[Byte] =
+    syntheticImage(width, height, seed, "png")
 
   /** Deterministic JPEG fixture (the JRE's real JPEG ENCODER): same
     * procedural pixels as [[syntheticPng]], written through
@@ -579,7 +547,13 @@ object MultimodalOps {
     * for a fixed JRE, and the DIMENSIONS always round-trip exactly,
     * which is what the closed-form video_frames_decoded oracle pins
     * (pixel statistics are spec-pinned, not oracle-pinned). */
-  def syntheticJpeg(width: Int, height: Int, seed: Long): Array[Byte] = {
+  def syntheticJpeg(width: Int, height: Int, seed: Long): Array[Byte] =
+    syntheticImage(width, height, seed, "jpg")
+
+  /** The procedural pixels of [[syntheticPng]]/[[syntheticJpeg]],
+    * encoded through the ImageIO writer for `format`. */
+  private def syntheticImage(width: Int, height: Int, seed: Long,
+      format: String): Array[Byte] = {
     val img = new java.awt.image.BufferedImage(width, height,
       java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
     var y = 0
@@ -592,13 +566,13 @@ object MultimodalOps {
       y += 1
     }
     val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "jpg", bos)
+    javax.imageio.ImageIO.write(img, format, bos)
     bos.toByteArray
   }
 
   /** Resize stub: crop the payload to the target byte budget and update
     * the metadata accordingly (a real kernel decodes + rescales inside
-    * the batched mapPartitions path above; the crop keeps schema flow
+    * the mapPartitions path above; the crop keeps schema flow
     * and pruning behavior identical). */
   def resizeStub(assets: DataFrame, targetWidth: Int, targetHeight: Int): DataFrame =
     assets
@@ -609,7 +583,7 @@ object MultimodalOps {
 
   // ---- REAL audio kernels (JDK `javax.sound.sampled`; the WAV/PCM
   // container codec ships with the JRE — no external dependency, no
-  // display needed). Same batched no-shuffle mapPartitions shape as the
+  // display needed). Same no-shuffle mapPartitions shape as the
   // image kernels: payloads decode wherever they already live. ----
 
   /** Decoded audio facts. All-integer by design: `duration_us` is exact
@@ -709,37 +683,31 @@ object MultimodalOps {
 
   /** REAL audio decode over a binary payload column: the JRE's WAVE
     * reader parses each payload, and the kernel emits exact-integer
-    * facts (see [[AudioMeta]]). Batched mapPartitions, no shuffle. */
+    * facts (see [[AudioMeta]]). mapPartitions, no shuffle. */
   def decodeAudioMeta(assets: DataFrame, idCol: String = "asset_id",
-      payloadCol: String = "payload", batchSize: Int = 64): Dataset[AudioMeta] = {
+      payloadCol: String = "payload"): Dataset[AudioMeta] = {
     val spark = assets.sparkSession
     import spark.implicits._
-    assets
-      .select(col(idCol).cast("long").as("asset_id"),
-        col(payloadCol).as("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map { case (id, bytes) =>
-          readPcm16(bytes) match {
-            case Some((f, s)) =>
-              val ch = f.getChannels
-              val rate = f.getSampleRate.toLong
-              val frames = s.length / ch
-              var peak = 0L; var sumSq = 0L; var i = 0
-              while (i < s.length) {
-                val v = s(i).toLong
-                val a = math.abs(v)
-                if (a > peak) peak = a
-                sumSq += v * v
-                i += 1
-              }
-              AudioMeta(id, rate, ch, 16, frames,
-                frames * 1000000L / rate, peak, sumSq, "ok")
-            case None =>
-              AudioMeta(id, -1, -1, -1, -1, -1, -1, -1, "undecodable")
+    perPayload(assets, idCol, payloadCol)(_.map { case (id, bytes) =>
+      readPcm16(bytes) match {
+        case Some((f, s)) =>
+          val ch = f.getChannels
+          val rate = f.getSampleRate.toLong
+          val frames = s.length / ch
+          var peak = 0L; var sumSq = 0L; var i = 0
+          while (i < s.length) {
+            val v = s(i).toLong
+            val a = math.abs(v)
+            if (a > peak) peak = a
+            sumSq += v * v
+            i += 1
           }
-        })
+          AudioMeta(id, rate, ch, 16, frames,
+            frames * 1000000L / rate, peak, sumSq, "ok")
+        case None =>
+          AudioMeta(id, -1, -1, -1, -1, -1, -1, -1, "undecodable")
       }
+    })
   }
 
   /** REAL audio decimation: decode → keep every `everyNth` frame (all
@@ -748,37 +716,30 @@ object MultimodalOps {
     * resampler of curation pipelines (no interpolation — an anti-alias
     * filter is a modeling choice this engine leaves to the caller);
     * undecodable payloads pass through null, left-typed like
-    * [[resizeImages]]. Batched mapPartitions, no shuffle. */
+    * [[resizeImages]]. mapPartitions, no shuffle. */
   def decimateAudio(assets: DataFrame, everyNth: Int,
-      idCol: String = "asset_id", payloadCol: String = "payload",
-      batchSize: Int = 64): DataFrame = {
+      idCol: String = "asset_id", payloadCol: String = "payload"): DataFrame = {
     require(everyNth > 0, s"everyNth must be positive: $everyNth")
     val spark = assets.sparkSession
     import spark.implicits._
-    assets
-      .select(col(idCol).cast("long").as("asset_id"),
-        col(payloadCol).as("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map { case (id, bytes) =>
-          val out = readPcm16(bytes).map { case (f, s) =>
-            val ch = f.getChannels
-            val frames = s.length / ch
-            val kept = Array.newBuilder[Short]
-            var fr = 0
-            while (fr < frames) {
-              if (fr % everyNth == 0) {
-                var c = 0
-                while (c < ch) { kept += s(fr * ch + c); c += 1 }
-              }
-              fr += 1
-            }
-            encodeWavPcm16(kept.result(),
-              math.max(1, f.getSampleRate.toInt / everyNth), ch)
-          }.orNull
-          (id, out)
-        })
-      }.toDF("asset_id", "payload")
+    perPayload(assets, idCol, payloadCol)(_.map { case (id, bytes) =>
+      val out = readPcm16(bytes).map { case (f, s) =>
+        val ch = f.getChannels
+        val frames = s.length / ch
+        val kept = Array.newBuilder[Short]
+        var fr = 0
+        while (fr < frames) {
+          if (fr % everyNth == 0) {
+            var c = 0
+            while (c < ch) { kept += s(fr * ch + c); c += 1 }
+          }
+          fr += 1
+        }
+        encodeWavPcm16(kept.result(),
+          math.max(1, f.getSampleRate.toInt / everyNth), ch)
+      }.orNull
+      (id, out)
+    }).toDF("asset_id", "payload")
   }
 
   /** 64-bit DCT perceptual hash of one decoded image — the classic
@@ -859,28 +820,21 @@ object MultimodalOps {
 
   /** Perceptual-hash column for a binary image payload column — the
     * image near-dup tier of the curation pipeline (exact-byte dedup
-    * misses re-encodes and resizes; pHash groups them). Batched
+    * misses re-encodes and resizes; pHash groups them).
     * mapPartitions codec kernel like [[decodeImageMeta]], zero
     * shuffle; undecodable payloads yield ok=false with phash 0 so
     * callers route them instead of losing rows. Dedup downstream is a
     * plain groupBy(phash) — or a banded Hamming join via
     * the SimHash machinery for near-match tolerance. */
   def imagePHash(assets: DataFrame, idCol: String = "asset_id",
-      payloadCol: String = "payload", batchSize: Int = 64): DataFrame = {
+      payloadCol: String = "payload"): DataFrame = {
     val spark = assets.sparkSession
     import spark.implicits._
-    assets
-      .select(col(idCol).cast("long").as("id"), col(payloadCol).as("p"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map { case (id, bytes) =>
-          readImage(bytes) match {
-            case Some(img) => (id, pHash64(img), true)
-            case None => (id, 0L, false)
-          }
-        })
+    perPayload(assets, idCol, payloadCol)(_.map { case (id, bytes) =>
+      readImage(bytes) match {
+        case Some(img) => (id, pHash64(img), true)
+        case None => (id, 0L, false)
       }
-      .toDF("id", "phash", "ok")
-      .withColumnRenamed("id", idCol)
+    }).toDF("id", "phash", "ok").withColumnRenamed("id", idCol)
   }
 }

@@ -1,16 +1,17 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round tooling: dump `.explain("formatted")` for named
-  * registry queries to `plans/<tag>/<name>_<suffix>.txt`, using the
-  * SAME session shape as Bench so the captured plans are the plans the
-  * bench actually runs (shuffle partitions = cpus, AQE on, UTC, nanos
-  * as long, NTZ inference off).
+  * registry queries or bench stress entries to
+  * `plans/<tag>/<name>_<suffix>.txt`, using the same session shape as
+  * Bench for planning (shuffle partitions = cpus, AQE on, UTC, nanos
+  * as long, NTZ inference off) so the captured plans are the plans the
+  * bench actually runs.
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> [q...]
-  * (no query names = the Bench headline set). Not part of the driver
-  * contract; read-only against the testdata.
+  * (no names = the Bench headline set). A name that is not a registry
+  * query is looked up in [[graft.BenchTable]]'s stress entries; entries
+  * whose frame build runs jobs (training loops, fixtures) run them. Not
+  * part of the driver contract.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -18,54 +19,17 @@ object PlanDump {
     val outDir = args.lift(1).getOrElse("plans/r19")
     val suffix = args.lift(2).getOrElse("before")
     val names =
-      if (args.length > 3) args.drop(3).toSeq else graft.Bench.headline
+      if (args.length > 3) args.drop(3).toSeq else graft.BenchTable.headline
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Bench-internal stress shapes (not registry queries), rebuilt
-    // here verbatim so their plans are dumpable like declared queries.
-    def stressShape(n: String): Option[org.apache.spark.sql.DataFrame] = {
-      import org.apache.spark.sql.functions._
-      import graft.llm.{TextDedupOps, TextStatsOps}
-      n match {
-        case "curation_stress" =>
-          val docs = graft.Tables.documents(spark, sfDir)
-            .select("doc_id", "text")
-          val quality = docs.filter(TextStatsOps.gopherKeep(col("text")))
-          Some(TextDedupOps.paragraphDedup(
-            TextStatsOps.gopherRepetitionKept(quality, "doc_id", "text"),
-            "doc_id", "text"))
-        case "lsh_stress_capped" =>
-          val docs = graft.Tables.documents(spark, sfDir)
-            .select("doc_id", "text")
-          val boiler = "this page is protected by copyright terms of " +
-            "service apply to all visitors please review the policy "
-          val skewed = docs.withColumn("text",
-            when(pmod(col("doc_id"), lit(10)) === 0,
-              concat(lit(boiler * 4), col("doc_id").cast("string")))
-              .otherwise(col("text")))
-          val sigs = TextDedupOps.minHashSignatures(skewed, "doc_id",
-            "text", shingleN = 3, k = 32)
-          val pairs = TextDedupOps.lshCandidatePairs(sigs, "doc_id",
-            bands = 8, threshold = 0.8, maxBucketSize = 64)
-          Some(TextDedupOps.connectedComponents(pairs, "id_a", "id_b",
-            checkpointEvery = 4))
-        case _ => None
-      }
-    }
+    val spark = graft.LocalSession.start(cpus,
+      "spark.sql.adaptive.enabled" -> "true")
     val queries = graft.SparkEntry.queries
+    val stress = new graft.BenchTable(spark, sfDir).stress().toMap
     new java.io.File(outDir).mkdirs()
     names.foreach { n =>
-      queries.get(n).map(f => f(spark, sfDir)).orElse(stressShape(n)) match {
+      queries.get(n).map(f => f(spark, sfDir))
+          .orElse(stress.get(n).map(_())) match {
         case None => System.err.println(s"[plandump] no such query: $n")
         case Some(df) =>
           val txt = df.queryExecution.explainString(
