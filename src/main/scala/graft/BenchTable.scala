@@ -108,10 +108,10 @@ object BenchTable {
     import graft.llm.{TextDedupOps, TextStatsOps}
     val docs = documents.select("doc_id", "text")
     val quality = docs.filter(TextStatsOps.gopherKeep(col("text")))
-    // gopherRepetitionKept, NOT .filter(col("keep")): a raw filter
-    // pushes below the staged metric projections and re-expands the
-    // HOF trees per element (see the gopherRepetition scaladoc — this
-    // exact entry caught it at >800 s CPU per sf0.001 partition)
+    // gopherRepetitionKept: the row-local kernel filter, keeping every
+    // input column (this entry once caught a pushed-down filter
+    // re-expanding per-element expression trees at >800 s CPU per
+    // sf0.001 partition)
     val kept = TextStatsOps.gopherRepetitionKept(quality, "doc_id", "text")
     TextDedupOps.paragraphDedup(kept, "doc_id", "text")
   }

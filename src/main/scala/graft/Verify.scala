@@ -4,11 +4,13 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // args: sfDir outDir [queryNamePrefix] — the optional third arg
-    // restricts the dump to matching queries (dev iteration aid).
+    // args: sfDir outDir [prefix,prefix,...] — the optional third arg
+    // restricts the dump to queries whose name starts with any of the
+    // comma-separated prefixes (dev iteration aid).
     val sfDir = args(0); val outDir = args(1)
+    val prefixes = args.lift(2).toSeq.flatMap(_.split(",")).filter(_.nonEmpty)
     val filter: String => Boolean =
-      if (args.length > 2) (n: String) => n.startsWith(args(2)) else _ => true
+      n => prefixes.isEmpty || prefixes.exists(n.startsWith)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = LocalSession.start(cpus)
     new java.io.File(outDir).mkdirs()

@@ -6,9 +6,11 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Text analysis for training-data curation (north-star LLM pipeline):
-  * token statistics, quality scoring, n-gram language ID. Pure codegen'd
-  * column expressions — they run inside the scan's WholeStageCodegen,
-  * no shuffle, no UDF.
+  * token statistics, quality scoring, n-gram language ID, tokenizers.
+  * Row-local and shuffle-free: codegen'd column expressions that run
+  * inside the scan's WholeStageCodegen, and JVM kernels (the BPE and
+  * unigram tokenizers, the Gopher repetition pass) where a per-row loop
+  * beats an interpreted expression tree.
   */
 object TextStatsOps {
 
@@ -164,9 +166,10 @@ object TextStatsOps {
     "a" -> "r", "o" -> "f", "i" -> "s", "i" -> "t", "a" -> "l",
     "e" -> "d", "c" -> "o", "t" -> "o", "l" -> "e")
 
-  /** (search, replacement) strings for a merge list: the tokenizer
-    * state is the word's symbols space-joined with a leading/trailing
-    * space (symbols come from whitespace-split words, so they can never
+  /** (search, replacement) strings for a merge list, the replace form
+    * of the BPE fixpoint that the DuckDB oracles replay: the state is
+    * the word's symbols space-joined with a leading/trailing space
+    * (symbols come from whitespace-split words, so they can never
     * contain the space delimiter), and merging pair (a,b) is the exact
     * non-overlapping left-to-right string replace " a b " → " ab " —
     * semantics both Java's String.replace and DuckDB's replace()
@@ -175,53 +178,23 @@ object TextStatsOps {
     merges.map { case (a, b) => (s" $a $b ", s" $a$b ") }
 
   /** REAL byte-pair-encoding token count (replaces the length/4 proxy
-    * as the gate algorithm): per word, start from characters and
-    * repeatedly apply the LOWEST-RANK merge whose pair is adjacent
+    * as the gate algorithm): per whitespace word, start from characters
+    * and repeatedly apply the LOWEST-RANK merge whose pair is adjacent
     * somewhere in the word (merging every non-overlapping occurrence
     * left-to-right), until no rule applies — the standard GPT-2-family
     * tokenizer loop, which rank-order-once application does NOT equal
     * (a later merge can create an earlier rule's pair). Token count =
-    * surviving symbols, summed over the document's words.
+    * surviving symbols, summed over the document's words; NULL text
+    * counts NULL, empty text 0.
     *
-    * Scale shape: row-local HOF arithmetic, zero shuffle — the merge
-    * table rides the plan as an array literal (broadcast with tasks).
-    * Per word the step count is bounded by len−1 (every applied merge
-    * removes ≥1 symbol), each step scanning the M rules with a
-    * contains() — O(M·len²) worst case on short word strings. The
-    * budget sampler takes any count column, so feeding
-    * `sampleTokenBudget` real-BPE counts instead of the proxy is just
-    * passing this column. */
+    * Scale shape: a row-local `udf` over [[bpeMergeRanked]], zero
+    * shuffle — the merge table ships as a broadcast rank map, O(1)
+    * lookups per step. The budget sampler takes any count column, so
+    * feeding `sampleTokenBudget` real-BPE counts instead of the proxy
+    * is just passing this column. */
   def bpeTokenCount(text: Column,
-      merges: Seq[(String, String)] = BpeDemoMerges): Column = {
-    val rules = typedLit(bpeMergePatterns(merges))
-    // count = size of the encoding, BY CONSTRUCTION: one fixpoint loop
-    // ([[bpeWordSymbols]]) serves both ops, so they cannot disagree
-    aggregate(
-      transform(words(text),
-        w => size(bpeWordSymbols(w, rules)).cast("long")),
-      lit(0L), (a, b) => a + b)
-  }
-
-  /** Final BPE symbol array of ONE word — the same fixpoint loop as
-    * [[bpeTokenCount]], finishing with the surviving symbols instead of
-    * their count. `rules` is the `typedLit(bpeMergePatterns(...))`
-    * array (hoisted by the caller so one literal serves every row). */
-  def bpeWordSymbols(w: Column, rules: Column): Column = {
-    val init = concat(lit(" "),
-      array_join(transform(sequence(lit(1), length(w)),
-        i => w.substr(i, lit(1))), " "), lit(" "))
-    aggregate(
-      sequence(lit(1), greatest(length(w) - 1, lit(1))),
-      init,
-      (st, _) => {
-        val applicable = filter(rules, r => contains(st, r.getField("_1")))
-        when(size(applicable) > 0,
-          replace(st, element_at(applicable, 1).getField("_1"),
-            element_at(applicable, 1).getField("_2")))
-          .otherwise(st)
-      },
-      st => split(trim(st), " "))
-  }
+      merges: Seq[(String, String)] = BpeDemoMerges): Column =
+    bpeCountUdf(broadcastTable(rankMap(merges)), byteLevel = false)(text)
 
   /** GPT-2-shape pretokenizer regex (Radford et al. 2019, the
     * `gpt2.encoder` pattern) in RE2-safe form: contraction suffixes
@@ -244,41 +217,22 @@ object TextStatsOps {
     "'(?:s|t|re|ve|m|ll|d)| ?[\\p{L}]+| ?[\\p{N}]+" +
       "| ?[^ \\t\\n\\f\\r\\p{L}\\p{N}]+|[ \\t\\n\\f\\r]+"
 
-  /** Pretoken array of a text column under [[Gpt2PretokenRe]] —
-    * row-local regex scan, zero shuffle. */
-  def gpt2Pretokens(text: Column): Column =
-    regexp_extract_all(text, lit(Gpt2PretokenRe), lit(0))
-
-  /** GPT-2 byte-encoder images for the whitespace/control bytes a
-    * pretoken can contain: space→Ġ (288 = 256+32), tab→ĉ (265 =
-    * 256+9), LF→Ċ (266), VT→ċ (267), FF→Č (268), CR→č (269) —
-    * exactly `bytes_to_unicode`'s mapping for those bytes (printable
-    * ASCII maps to itself, also the GPT-2 convention). This keeps
-    * every symbol space-free, so the space-separated merge state of
-    * [[bpeWordSymbols]] stays unambiguous even for space-carrying
-    * pretokens. Non-ASCII text is treated per CHARACTER with
-    * codepoint ids — a documented simplification of full UTF-8 byte
-    * fallback (the corpus tables are ASCII; a production vocab
-    * assigns ids from its vocab file, not from codepoints). */
-  def byteMark(tok: Column): Column =
-    translate(tok, " \t\n\u000B\u000C\r", "ĠĉĊċČč")
+  /** [[Gpt2PretokenRe]] compiled once per JVM (a Pattern is
+    * thread-safe; every scan takes its own Matcher). */
+  private val Gpt2Pattern =
+    java.util.regex.Pattern.compile(Gpt2PretokenRe)
 
   /** BYTE-LEVEL BPE token count — [[bpeTokenCount]] with the GPT-2
     * pretokenizer in front (r12 verdict task #4): the whitespace-word
     * path undercounts punctuation-adjacent text ("it's" is ONE
     * whitespace word but three pretokens it/'s/... — budget sampling
     * mis-sizes on exactly the text web corpora are full of). Merge
-    * rules apply WITHIN a pretoken only, the GPT-2 contract. Same
-    * scale shape: row-local HOF arithmetic, zero shuffle, merge table
-    * rides the plan as a literal. */
+    * rules apply WITHIN a pretoken only, the GPT-2 contract, and
+    * whitespace is byte-marked first (see [[byteMarkStr]]). Same scale
+    * shape and NULL/empty results as [[bpeTokenCount]]. */
   def bpeTokenCountBytes(text: Column,
-      merges: Seq[(String, String)] = BpeDemoMerges): Column = {
-    val rules = typedLit(bpeMergePatterns(merges))
-    aggregate(
-      transform(gpt2Pretokens(text),
-        t => size(bpeWordSymbols(byteMark(t), rules)).cast("long")),
-      lit(0L), (a, b) => a + b)
-  }
+      merges: Seq[(String, String)] = BpeDemoMerges): Column =
+    bpeCountUdf(broadcastTable(rankMap(merges)), byteLevel = true)(text)
 
   /** BYTE-LEVEL BPE token-id encoding — [[bpeEncodeTokens]] over
     * GPT-2 pretokens instead of whitespace words: one output row per
@@ -288,8 +242,9 @@ object TextStatsOps {
     * their GPT-2 byte-encoder codepoints for free — and 256+rank for
     * merge results; NOTE a table of ≥33 rules would collide rank id
     * 288 with Ġ, so production tables must carry their own vocab ids,
-    * as real tokenizers do). Zero shuffle: two scan-local generators
-    * with the fixpoint as row-local HOF arithmetic. */
+    * as real tokenizers do — [[bpeEncodeRanked]] takes them). Runs
+    * [[bpeEncodeRanked]] with [[bpeVocab]]; the id column keeps its
+    * input type. */
   def bpeEncodeTokensBytes(df: org.apache.spark.sql.DataFrame,
       idCol: String, textCol: String,
       merges: Seq[(String, String)] = BpeDemoMerges)
@@ -297,35 +252,68 @@ object TextStatsOps {
     require(merges.size <= 32,
       s"codepoint-id demo vocab collides with byte-marker ids above 32 " +
         s"rules (got ${merges.size}); supply explicit vocab ids instead")
-    val rules = typedLit(bpeMergePatterns(merges))
-    val vocab = typedLit(bpeVocab(merges))
-    df.select(col(idCol), posexplode(gpt2Pretokens(col(textCol)))
-        .as(Seq("tok_idx", "__t")))
-      .select(col(idCol), col("tok_idx"),
-        posexplode(bpeWordSymbols(byteMark(col("__t")), rules))
-          .as(Seq("sym_idx", "token")))
-      .withColumn("token_id",
-        when(length(col("token")) === 1, ascii(col("token")))
-          .otherwise(element_at(vocab, col("token"))).cast("int"))
+    bpeEncodeDemo(df, idCol, textCol, merges, byteLevel = true)
   }
 
-  // ───── PRODUCTION-SCALE tokenizer encode (r14 verdict task #1):
-  // the regexp-fixpoint encoder above re-scans its merge table as a
-  // plan-literal array per step — O(M·len) per step, unusable past toy
-  // tables (and fenced at 32 rules by the demo id scheme). The rank-
-  // table kernel below is the actual GPT-2/tiktoken-family algorithm
-  // (Radford et al. 2019 encoder.py `bpe()`): per word, repeatedly
-  // find the LOWEST-RANK adjacent symbol pair via O(1) hash lookups
-  // and merge its non-overlapping occurrences left-to-right — same
-  // fixpoint, O(len) scan per step. The table rides a REAL broadcast
-  // variable (one copy per executor, never in task binaries or plan
-  // literals), so a 50k-merge production table costs what it weighs:
-  // one ~MB broadcast. Batched mapPartitions, zero shuffle — token
-  // counting 100 TB is scan throughput. Spec-pinned exactly equal to
-  // the regexp-fixpoint tier on shared configurations. ─────
+  // ───── The BPE kernel: one implementation of the GPT-2/tiktoken-
+  // family algorithm (Radford et al. 2019 encoder.py `bpe()`): per
+  // word, repeatedly find the LOWEST-RANK adjacent symbol pair via O(1)
+  // hash lookups and merge its non-overlapping occurrences
+  // left-to-right — O(len) scan per step. The table rides a REAL
+  // broadcast variable (one copy per executor, never in task binaries
+  // or plan literals), so a 50k-merge production table costs what it
+  // weighs: one ~MB broadcast. The Column functions above are `udf`s
+  // and the DataFrame encoders below are mapPartitions, all over
+  // [[bpeMergeRanked]]; zero shuffle — token counting 100 TB is scan
+  // throughput. ─────
 
-  /** Split into code points (the unit the column tier's substr(i, 1)
-    * iterates) — identical symbols for any input, incl. emoji. */
+  /** Ships a kernel table to the executors as a broadcast, for the
+    * Column functions, which have no frame to take a session from. */
+  private def broadcastTable[T: scala.reflect.ClassTag](t: T)
+      : org.apache.spark.broadcast.Broadcast[T] =
+    org.apache.spark.sql.SparkSession.active.sparkContext.broadcast(t)
+
+  /** Whitespace words of one text — the `\s+` split [[words]] runs in
+    * Catalyst, empty fragments dropped. */
+  private def wordsOf(text: String): Array[String] =
+    text.split("\\s+").filter(_.nonEmpty)
+
+  /** The units BPE merges within: GPT-2 pretokens (`byteLevel`) or
+    * whitespace words. */
+  private def bpeUnits(text: String, byteLevel: Boolean): Array[String] =
+    if (byteLevel) {
+      val m = Gpt2Pattern.matcher(text)
+      val buf = scala.collection.mutable.ArrayBuffer[String]()
+      while (m.find()) buf += m.group
+      buf.toArray
+    } else wordsOf(text)
+
+  /** BPE token count of one text — the per-text loop behind
+    * [[bpeTokenCount]], [[bpeTokenCountBytes]] and
+    * [[bpeTokenCountRanked]]. */
+  private def bpeCountText(text: String,
+      rank: java.util.HashMap[String, Integer], byteLevel: Boolean): Long = {
+    var n = 0L
+    bpeUnits(text, byteLevel).foreach { u =>
+      n += bpeMergeRanked(
+        splitCodePoints(if (byteLevel) byteMarkStr(u) else u), rank).length
+    }
+    n
+  }
+
+  /** Per-row token count over a broadcast rank map; NULL text → NULL. */
+  private def bpeCountUdf(
+      bRank: org.apache.spark.broadcast.Broadcast[
+        java.util.HashMap[String, Integer]],
+      byteLevel: Boolean)
+      : org.apache.spark.sql.expressions.UserDefinedFunction =
+    udf((t: String) =>
+      if (t == null) null
+      else java.lang.Long.valueOf(bpeCountText(t, bRank.value, byteLevel)))
+
+  /** Split into code points (the unit Spark's substr(i, 1) and the
+    * oracles' substr iterate) — identical symbols for any input, incl.
+    * emoji. */
   private def splitCodePoints(s: String): Array[String] = {
     val n = s.codePointCount(0, s.length)
     val out = new Array[String](n)
@@ -339,7 +327,17 @@ object TextStatsOps {
     out
   }
 
-  /** JVM-side twin of [[byteMark]] (same 6-char translate table). */
+  /** GPT-2 byte-encoder images for the whitespace/control bytes a
+    * pretoken can contain: space→Ġ (288 = 256+32), tab→ĉ (265 =
+    * 256+9), LF→Ċ (266), VT→ċ (267), FF→Č (268), CR→č (269) —
+    * exactly `bytes_to_unicode`'s mapping for those bytes (printable
+    * ASCII maps to itself, also the GPT-2 convention; the oracles
+    * replay it as one `translate`). This keeps every symbol
+    * space-free, so merge pairs stay unambiguous even for
+    * space-carrying pretokens. Non-ASCII text is treated per CHARACTER
+    * with codepoint ids — a documented simplification of full UTF-8
+    * byte fallback (the corpus tables are ASCII; a production vocab
+    * assigns ids from its vocab file, not from codepoints). */
   private def byteMarkStr(tok: String): String = {
     val sb = new java.lang.StringBuilder(tok.length)
     var i = 0
@@ -420,13 +418,19 @@ object TextStatsOps {
     }
   }
 
-  /** One word's rank-table BPE fixpoint: find the lowest-rank adjacent
-    * pair (hash lookups on "a b" keys — symbols never contain spaces,
-    * the same delimiter argument the string-state tier makes), merge
-    * every non-overlapping occurrence left-to-right, repeat until no
-    * rule applies. Exactly [[bpeWordSymbols]]' semantics (spec-pinned
-    * equal): "lowest rank whose pair occurs" ≡ "first rule whose
-    * pattern is contained", and the L2R replace is shared. */
+  /** One word's rank-table BPE fixpoint — THE BPE merge loop: find the
+    * lowest-rank adjacent pair (hash lookups on "a b" keys — symbols
+    * never contain spaces, the [[bpeMergePatterns]] delimiter
+    * argument), merge every non-overlapping occurrence left-to-right,
+    * repeat until no rule applies. The oracles' replace fixpoint
+    * reaches the same symbols ("lowest rank whose pair occurs" ≡ "first
+    * rule whose pattern is contained"; spec-pinned against a test-scope
+    * replay) with one documented exception: a replace step leaves a
+    * back-to-back repeat " a b a b " half-merged (" ab a b ") for the
+    * next step, so a junction rule (ab, a) or (b, ab) that OUTRANKS
+    * (a, b) fires there and nowhere here. Neither the demo table nor
+    * a trained table (which ranks every merge after its inputs) has
+    * such a rule. */
   private[graft] def bpeMergeRanked(syms0: Array[String],
       rank: java.util.HashMap[String, Integer]): Array[String] = {
     var syms = syms0
@@ -500,16 +504,17 @@ object TextStatsOps {
     }
   }
 
-  /** Rank-table BPE token-ID ENCODING over a broadcast merge table —
-    * the no-fence replacement for [[bpeEncodeTokensBytes]] (which is
-    * id-fenced at 32 rules): one row per surviving symbol,
+  /** Rank-table BPE token-ID ENCODING over a broadcast merge table
+    * with caller-supplied vocabulary ids (the demo-id encoders
+    * [[bpeEncodeTokens]]/[[bpeEncodeTokensBytes]] run it with
+    * [[bpeVocab]]): one row per surviving symbol,
     * (idCol, tok_idx, sym_idx, token, token_id); `byteLevel` selects
     * GPT-2 pretokens + byte-marking (true) or whitespace words
     * (false). Ids: single code points price at their codepoint (the
     * shared demo convention; byte markers Ġ/ĉ/Ċ included), multi-char
-    * symbols look up `vocabIds` (miss → NULL, matching the column
-    * tier's element_at). Zero shuffle; the table is an executor-side
-    * broadcast HashMap, plan size O(1) in the table.
+    * symbols look up `vocabIds` (miss → NULL, never guessed). Zero
+    * shuffle; the table is an executor-side broadcast HashMap, plan
+    * size O(1) in the table.
     *
     * `byteFallback = true` switches single-code-point pricing to the
     * 256-byte BASE-ALPHABET mode production byte-level vocabs use
@@ -552,26 +557,16 @@ object TextStatsOps {
     vocabIds.foreach { case (t, i) => vids.put(t, Integer.valueOf(i)); () }
     val bRank = spark.sparkContext.broadcast(rankMap(merges))
     val bVids = spark.sparkContext.broadcast(vids)
-    val re = Gpt2PretokenRe
     val bl = byteLevel
     val bf = byteFallback
     df.select(col(idCol).cast("long"), col(textCol).cast("string"))
       .as[(Long, String)]
       .mapPartitions { it =>
         val rk = bRank.value; val vv = bVids.value
-        val pat = java.util.regex.Pattern.compile(re)
         it.flatMap { case (id, text) =>
           if (text == null) Iterator.empty
           else {
-            val toks =
-              if (bl) {
-                val m = pat.matcher(text)
-                val buf = scala.collection.mutable.ArrayBuffer[String]()
-                while (m.find()) buf += m.group
-                buf
-              } else scala.collection.mutable.ArrayBuffer[String](
-                text.split("\\s+").filter(_.nonEmpty).toIndexedSeq: _*)
-            toks.iterator.zipWithIndex.flatMap { case (tok0, ti) =>
+            bpeUnits(text, bl).iterator.zipWithIndex.flatMap { case (tok0, ti) =>
               val syms0 =
                 if (bf && bl) byteFallbackSymbols(tok0)
                 else if (bl) splitCodePoints(byteMarkStr(tok0))
@@ -645,47 +640,27 @@ object TextStatsOps {
       .toDF(idCol, "tok_idx", "sym_idx", "token", "token_id")
   }
 
+  /** [[bpeEncodeRanked]] under the demo ids of [[bpeVocab]], with the id
+    * column back at its input type — the body of [[bpeEncodeTokens]]
+    * and [[bpeEncodeTokensBytes]]. */
+  private def bpeEncodeDemo(df: org.apache.spark.sql.DataFrame,
+      idCol: String, textCol: String, merges: Seq[(String, String)],
+      byteLevel: Boolean): org.apache.spark.sql.DataFrame =
+    bpeEncodeRanked(df, idCol, textCol, merges, bpeVocab(merges), byteLevel)
+      .withColumn(idCol, col(idCol).cast(df.schema(idCol).dataType))
+
   /** Rank-table BPE token COUNT — (idCol, n_bpe) per document, the
     * budget-accounting pass a training pipeline runs daily over its
-    * whole corpus with its REAL tokenizer table. Same kernel as
-    * [[bpeEncodeRanked]], counting instead of materializing; NULL
-    * text counts 0. Zero shuffle, broadcast table, scan throughput. */
+    * whole corpus with its REAL tokenizer table. The same per-text
+    * loop as [[bpeTokenCount]]/[[bpeTokenCountBytes]]; NULL text
+    * counts 0. Zero shuffle, broadcast table, scan throughput. */
   def bpeTokenCountRanked(df: org.apache.spark.sql.DataFrame,
       idCol: String, textCol: String, merges: Seq[(String, String)],
       byteLevel: Boolean = true): org.apache.spark.sql.DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val bRank = spark.sparkContext.broadcast(rankMap(merges))
-    val re = Gpt2PretokenRe
-    val bl = byteLevel
-    df.select(col(idCol).cast("long"), col(textCol).cast("string"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        val rk = bRank.value
-        val pat = java.util.regex.Pattern.compile(re)
-        it.map { case (id, text) =>
-          if (text == null) (id, 0L)
-          else {
-            var n = 0L
-            if (bl) {
-              val m = pat.matcher(text)
-              while (m.find())
-                n += bpeMergeRanked(
-                  splitCodePoints(byteMarkStr(m.group)), rk).length
-            } else {
-              val ws = text.split("\\s+")
-              var i = 0
-              while (i < ws.length) {
-                if (ws(i).nonEmpty)
-                  n += bpeMergeRanked(splitCodePoints(ws(i)), rk).length
-                i += 1
-              }
-            }
-            (id, n)
-          }
-        }
-      }
-      .toDF(idCol, "n_bpe")
+    val bRank = df.sparkSession.sparkContext.broadcast(rankMap(merges))
+    df.select(col(idCol).cast("long").as(idCol),
+      coalesce(bpeCountUdf(bRank, byteLevel)(col(textCol).cast("string")),
+        lit(0L)).as("n_bpe"))
   }
 
   /** DECODE [[bpeEncodeRanked]] output back to text — the inspection/
@@ -1201,31 +1176,22 @@ object TextStatsOps {
   /** REAL BPE token-ID ENCODING — the artifact a training pipeline
     * actually materializes (bpeTokenCount only budgets it). One output
     * row per surviving symbol: (id, word_idx, sym_idx, token,
-    * token_id), 0-based positions, ids per [[bpeVocab]].
+    * token_id), 0-based positions over the whitespace words, ids per
+    * [[bpeVocab]]; the id column keeps its input type (it must cast to
+    * BIGINT, as for [[bpeEncodeRanked]], which this runs).
     *
-    * Scale shape: two scan-local generators (words, then per-word
-    * symbols) with the merge fixpoint as row-local HOF arithmetic —
-    * zero shuffle; the merge table and vocabulary ride the plan as
-    * literals. A repeated word re-runs its fixpoint per occurrence:
-    * that trade keeps the op shuffle-free, where a distinct-word
-    * pre-pass would buy cached merges with a corpus-wide shuffle —
-    * the wrong default for the scan-throughput tier (callers with
-    * pathological word skew can still compose words→distinct→encode→
-    * join themselves). */
+    * Scale shape: one scan-local kernel pass, zero shuffle; the merge
+    * table is a broadcast rank map. A repeated word re-runs its
+    * fixpoint per occurrence: that trade keeps the op shuffle-free,
+    * where a distinct-word pre-pass would buy cached merges with a
+    * corpus-wide shuffle — the wrong default for the scan-throughput
+    * tier (callers with pathological word skew can still compose
+    * words→distinct→encode→join themselves). */
   def bpeEncodeTokens(df: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, merges: Seq[(String, String)] = BpeDemoMerges)
-      : org.apache.spark.sql.DataFrame = {
-    val rules = typedLit(bpeMergePatterns(merges))
-    val vocab = typedLit(bpeVocab(merges))
-    df.select(col(idCol), posexplode(words(col(textCol)))
-        .as(Seq("word_idx", "__w")))
-      .select(col(idCol), col("word_idx"),
-        posexplode(bpeWordSymbols(col("__w"), rules))
-          .as(Seq("sym_idx", "token")))
-      .withColumn("token_id",
-        when(length(col("token")) === 1, ascii(col("token")))
-          .otherwise(element_at(vocab, col("token"))).cast("int"))
-  }
+      : org.apache.spark.sql.DataFrame =
+    bpeEncodeDemo(df, idCol, textCol, merges, byteLevel = false)
+      .withColumnRenamed("tok_idx", "word_idx")
 
   /** Demo weight table for [[hashedClassifierLogit]] — in production
     * the caller supplies their TRAINED weights (fastText-style quality
@@ -1344,6 +1310,25 @@ object TextStatsOps {
   val GopherDupNgramRules: Seq[(Int, Double)] =
     Seq(5 -> 0.15, 6 -> 0.14, 7 -> 0.13, 8 -> 0.12, 9 -> 0.11, 10 -> 0.10)
 
+  /** All 13 repetition rules in [[gopherRepetition]]'s column order —
+    * (metric column, audit-boolean column, threshold): line and
+    * paragraph duplicates (Table A1: 0.30 by count, 0.20 by chars),
+    * then [[GopherTopNgramRules]] and [[GopherDupNgramRules]]. */
+  val GopherRepetitionRules: Seq[(String, String, Double)] =
+    Seq(("dup_line_frac", "ok_dup_line", 0.30),
+      ("dup_line_cfrac", "ok_dup_line_chars", 0.20),
+      ("dup_para_frac", "ok_dup_para", 0.30),
+      ("dup_para_cfrac", "ok_dup_para_chars", 0.20)) ++
+    GopherTopNgramRules.map { case (n, th) =>
+      (s"top_${n}gram_cfrac", s"ok_top_${n}gram", th) } ++
+    GopherDupNgramRules.map { case (n, th) =>
+      (s"dup_${n}gram_cfrac", s"ok_dup_${n}gram", th) }
+
+  private val GopherTopNs: Array[Int] = GopherTopNgramRules.map(_._1).toArray
+  private val GopherDupNs: Array[Int] = GopherDupNgramRules.map(_._1).toArray
+  private val GopherThresholds: Array[Double] =
+    GopherRepetitionRules.map(_._3).toArray
+
   /** Gopher repetition filters (Rae et al. 2021, appendix A1.2 — the
     * other half of the Gopher gate next to `gopherQualityFlags`):
     * per-document fractions + audit booleans + the conjunction `keep`.
@@ -1369,224 +1354,38 @@ object TextStatsOps {
     *     public implementations use (which counts a position twice when
     *     overlapping duplicates straddle it and depends on scan order).
     *
-    * Every metric is an int/int IEEE division of exactly-summed integer
-    * masses, so the doubles AND booleans face the DuckDB oracle
-    * bit-exactly (gopher_repetition gate). Empty documents are the one
-    * fence: length(text)=0 makes the char fractions 0/0=NaN.
+    * Every metric is an int/int (or long/int) IEEE division of
+    * exactly-counted integer masses, so the doubles AND booleans face
+    * the DuckDB oracle bit-exactly (gopher_repetition gate): word
+    * splitting is the same `\s+` Java regex `words` compiles, lengths
+    * are code-point counts (Spark `length` semantics, NOT UTF-16 units
+    * — an astral-plane fixture pins this), n-gram identity is exact
+    * word-sequence equality (interned word ids, open-address table
+    * with full key compare — no hash-only identity anywhere), and the
+    * most-frequent-n-gram (count, char-mass) maximum has a
+    * tie-invariant result mass. NULL text yields an all-NULL metric
+    * row. EMPTY text makes the char fractions 0/0 = NaN, as in the
+    * DuckDB oracle twin — NaN fails every `<= threshold` rule, so
+    * empty documents drop cleanly (keep = false).
     *
-    * Scale shape (100 TB): zero shuffle — every metric is row-local, so
-    * the filter runs at scan throughput and parallelizes per-split. Per
-    * row the cost is O(Σn m·(n + log m)): duplicate n-gram detection
-    * sorts (value, position) pairs and marks adjacent equals — no
-    * per-element array scans, so even an A1.1-cap-sized 100k-word
-    * document stays in the tens of millions of comparisons, not 10¹⁰.
-    * Intermediates are staged as real columns because HOF lambdas
-    * re-evaluate captured non-attribute trees per element (the
-    * `shingles` materialization rule below), and every fraction is
-    * projected ONCE before the ok_/keep booleans derive from it
-    * (HOF trees are exempt from Spark's subexpression elimination —
-    * re-stating them per boolean would triple the row cost). Memory
-    * shape: each dup-n's staging arrays (~15× text size transiently)
-    * are dropped before the next n's are built, so peak per-row
-    * amplification is one n's staging plus six longs — not six n's
-    * staging at once (an r11 ADVICE finding).
-    *
-    * WARNING — do NOT `.filter` directly on this output's columns:
-    * Catalyst pushes a deterministic predicate below every staging
-    * Project, substituting the full HOF trees into the filter — and
-    * once `__cov` inlines `__ds` inlines `__sp` inlines `__g`, each
-    * aggregate/transform lambda re-evaluates its captured tree PER
-    * ELEMENT, turning the staged O(m log m) row cost into O(m³)-ish
-    * (measured: a single sf0.001 partition burned >800 s CPU). Use
-    * [[gopherRepetitionKept]] to filter a corpus, or funnel your own
-    * predicate through an aggregation barrier first
-    * (`.groupBy(id).agg(max(keep))` — a filter on an aggregate result
-    * cannot be pushed below the Aggregate).
-    *
-    * r20: this column-expression tier is now the REFERENCE
-    * implementation — [[gopherRepetition]] computes the identical
-    * frame in one mapPartitions kernel (bit-equality pinned in
-    * GopherKernelSpec); the expression form stays for that spec and
-    * for callers that need the metrics as composable Columns.
-    */
-  private[graft] def gopherRepetitionExpr(df: org.apache.spark.sql.DataFrame,
-      idCol: String, textCol: String): org.apache.spark.sql.DataFrame = {
-    val text = col(textCol)
-    val emptyS = array().cast("array<string>")
-    def ngramsOf(ws: Column, n: Int): Column =
-      when(size(ws) >= n,
-        transform(sequence(lit(1), size(ws) - (n - 1)),
-          j => array_join(slice(ws, j, lit(n)), " "))).otherwise(emptyS)
-
-    val dupNs = GopherDupNgramRules.map(_._1)
-    // Stage the arrays the later lambdas capture — __ws, then PER n the
-    // n-grams, their (value, position)-sorted twin, and per-start dup
-    // flags — and DROP each n's staging before the next n starts, so
-    // only one n's intermediates are ever live in a row at once: peak
-    // transient row memory is ~3 arrays ≈ 15× text size, not the ~90×
-    // that staging all six n simultaneously would pin at the A1.1
-    // 100k-word cap. (The __cov columns that survive are one long
-    // each.) Dup-flag algorithm: a start is duplicated iff its sorted
-    // neighbor holds the same value; flags computed in sorted order
-    // (O(m) adjacent compares), then scattered back to original
-    // positions by re-sorting on the index field — O(m log m) total,
-    // never a per-element array scan.
-    val covStage = dupNs.foldLeft(df.withColumn("__ws", words(text))) {
-      case (acc, n) =>
-        val g = col("__g")
-        val sp = col("__sp")
-        val m = size(sp)
-        val ds = col("__ds")
-        acc
-          .withColumn("__g", ngramsOf(col("__ws"), n))
-          .withColumn("__sp",
-            when(size(g) >= 1, array_sort(
-              transform(sequence(lit(1), size(g)),
-                k => struct(element_at(g, k).as("v"), k.as("i")))))
-            .otherwise(array().cast("array<struct<v:string,i:int>>")))
-          .withColumn("__ds",
-            when(m >= 1, transform(
-              array_sort(transform(sequence(lit(1), m), k => {
-                val v = element_at(sp, k).getField("v")
-                val dup = ((k > 1) && (element_at(sp, k - 1).getField("v") === v)) ||
-                  ((k < m) && (element_at(sp, k + 1).getField("v") === v))
-                struct(element_at(sp, k).getField("i").as("i"), dup.as("d"))
-              })),
-              p => p.getField("d")))
-            .otherwise(array().cast("array<boolean>")))
-          .withColumn(s"__cov$n",
-            when(size(col("__ws")) >= n,
-              aggregate(sequence(lit(1), size(col("__ws"))), lit(0L), (a, i) => {
-                val lo = greatest(i - (n - 1), lit(1))
-                val hi = least(i, size(ds))
-                a + when(exists(slice(ds, lo, hi - lo + lit(1)), b => b),
-                  length(element_at(col("__ws"), i)).cast("long")).otherwise(lit(0L))
-              })).otherwise(lit(0L)))
-          .drop("__g", "__sp", "__ds")
-    }
-
-    // most-frequent-n-gram char mass: one pass over the sorted array
-    // tracking (run length, run char mass), best by (count, mass)
-    def topMass(n: Int): Column = {
-      val sorted = array_sort(ngramsOf(col("__ws"), n))
-      aggregate(sorted,
-        struct(lit("").as("prev"), lit(0).as("run"),
-          lit(0).as("bc"), lit(0L).as("bm")),
-        (st, x) => {
-          val run = when(x === st.getField("prev"),
-            st.getField("run") + 1).otherwise(lit(1))
-          val mass = run.cast("long") * length(x)
-          val better = (run > st.getField("bc")) ||
-            (run === st.getField("bc") && mass > st.getField("bm"))
-          struct(x.as("prev"), run.as("run"),
-            when(better, run).otherwise(st.getField("bc")).as("bc"),
-            when(better, mass).otherwise(st.getField("bm")).as("bm"))
-        },
-        st => st.getField("bm"))
-    }
-
-    val tlen = length(text)
-    val lines = filter(split(text, "\n"), l => l =!= "")
-    val paras = filter(split(text, "\n{2,}"), p => p =!= "")
-    def sumLen(arr: Column): Column =
-      aggregate(arr, lit(0L), (a, x) => a + length(x))
-    // all-blank input leaves zero elements: define the fraction as 0
-    // (ANSI would otherwise throw on the 0-denominator divide)
-    def dupFrac(arr: Column): Column =
-      when(size(arr) === 0, lit(0.0)).otherwise(
-        (size(arr) - size(array_distinct(arr))).cast("double") / size(arr))
-    def dupCharFrac(arr: Column): Column =
-      (sumLen(arr) - sumLen(array_distinct(arr))).cast("double") / tlen
-
-    val metrics: Seq[(String, Column, String, Double)] =
-      Seq(("dup_line_frac", dupFrac(lines), "ok_dup_line", 0.30),
-        ("dup_line_cfrac", dupCharFrac(lines), "ok_dup_line_chars", 0.20),
-        ("dup_para_frac", dupFrac(paras), "ok_dup_para", 0.30),
-        ("dup_para_cfrac", dupCharFrac(paras), "ok_dup_para_chars", 0.20)) ++
-      GopherTopNgramRules.map { case (n, th) =>
-        (s"top_${n}gram_cfrac", topMass(n).cast("double") / tlen,
-          s"ok_top_${n}gram", th)
-      } ++
-      GopherDupNgramRules.map { case (n, th) =>
-        (s"dup_${n}gram_cfrac", col(s"__cov$n").cast("double") / tlen,
-          s"ok_dup_${n}gram", th)
-      }
-    // project each fraction exactly once, then derive the booleans from
-    // the projected attribute (cheap multi-reference; the HOF trees
-    // behind the fractions never re-evaluate)
-    covStage.select(col(idCol) +:
-        metrics.map { case (fn, c, _, _) => c.as(fn) }: _*)
-      .select(col(idCol) +:
-        (metrics.map { case (fn, _, _, _) => col(fn) } ++
-          metrics.map { case (fn, _, on, th) => (col(fn) <= th).as(on) } :+
-          metrics.map { case (fn, _, _, th) => col(fn) <= th }
-            .reduce(_ && _).as("keep")): _*)
-  }
-
-  /** Per-document Gopher repetition metrics as ONE mapPartitions
-    * kernel (r20 optimization, guide §1.2 "per-task work" / §4.2 "do
-    * the heavy lifting in native code"): identical output frame to
-    * [[gopherRepetitionExpr]] — same 13 fractions, 13 audit booleans
-    * and `keep`, bit for bit (GopherKernelSpec pins doubleToLongBits
-    * equality on the gate corpus and adversarial fixtures; the
-    * gopher_repetition DuckDB oracle re-verifies independently) — but
-    * each row is computed by primitive-array passes instead of staged
-    * Catalyst HOF lambdas, which evaluate interpreted expression trees
-    * per array element (measured at sf0.1: the expression tier was
-    * ~5.3 s of the 5.9 s curation_stress; the kernel computes the same
-    * metrics in ~0.2 s).
-    *
-    * Exactness: every fraction is an int/int (or long/int) IEEE double
-    * division of exactly-counted integer masses, and the kernel counts
-    * the SAME integers — word splitting is the same `\s+` Java regex
-    * `words` compiles, lengths are code-point counts (Spark `length`
-    * semantics, NOT UTF-16 units — an astral-plane fixture pins this),
-    * n-gram identity is exact word-sequence equality (interned word
-    * ids, open-address table with full key compare — no hash-only
-    * identity anywhere), and the most-frequent-n-gram tie-break is the
-    * expression tier's (count, char-mass) maximum, whose result mass
-    * is tie-invariant. NULL text produces the same all-NULL metric row
-    * the expression tier's null propagation yields. ONE deliberate
-    * divergence (pinned in GopherKernelSpec): EMPTY text makes the
-    * char fractions 0/0, which the expression tier's ANSI Divide
-    * throws on (DIVIDE_BY_ZERO — one empty document would fail a
-    * 100 TB curation job) while the kernel computes the IEEE NaN the
-    * DuckDB oracle twin also computes — NaN fails every `<= threshold`
-    * rule, so empty documents drop cleanly (keep = false).
-    *
-    * Scale shape: unchanged — zero shuffle, row-local, runs at scan
-    * throughput; per row O(Σn m·n) table fills replace the expression
-    * tier's O(Σn m log m) sorts WITH their per-element interpreter
-    * overhead. Peak transient per-row memory is one n's id/count
-    * tables (~4 ints per word) — strictly less than the staged-array
-    * form. Unlike the expression tier, the output is safe to `.filter`
+    * Scale shape (100 TB): ONE mapPartitions kernel (r20), zero
+    * shuffle, row-local at scan throughput; per row O(Σn m·n)
+    * primitive-array table fills, peak transient memory one n's
+    * id/count tables (~4 ints per word). GopherKernelSpec pins it
+    * doubleToLongBits-equal to a test-scope replay of the metrics as
+    * staged Catalyst expressions. The output is safe to `.filter`
     * directly: metrics exist only as kernel results, so Catalyst has
-    * no HOF tree to duplicate below a pushed predicate. */
+    * no expression tree to duplicate below a pushed predicate. */
   def gopherRepetition(df: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val in = df.select(col(idCol), col(textCol).cast("string"))
-    val metricNames =
-      Seq("dup_line_frac", "dup_line_cfrac", "dup_para_frac",
-        "dup_para_cfrac") ++
-      GopherTopNgramRules.map { case (n, _) => s"top_${n}gram_cfrac" } ++
-      GopherDupNgramRules.map { case (n, _) => s"dup_${n}gram_cfrac" }
-    val okNames =
-      Seq("ok_dup_line", "ok_dup_line_chars", "ok_dup_para",
-        "ok_dup_para_chars") ++
-      GopherTopNgramRules.map { case (n, _) => s"ok_top_${n}gram" } ++
-      GopherDupNgramRules.map { case (n, _) => s"ok_dup_${n}gram" }
-    val thresholds: Array[Double] =
-      (Seq(0.30, 0.20, 0.30, 0.20) ++ GopherTopNgramRules.map(_._2) ++
-        GopherDupNgramRules.map(_._2)).toArray
-    val nMetrics = thresholds.length
+    val nMetrics = GopherRepetitionRules.size
     val outSchema = StructType(in.schema.fields(0) +:
-      (metricNames.map(StructField(_, DoubleType, nullable = true)) ++
-        okNames.map(StructField(_, BooleanType, nullable = true)) :+
-        StructField("keep", BooleanType, nullable = true)))
-    val topNs = GopherTopNgramRules.map(_._1).toArray
-    val dupNs = GopherDupNgramRules.map(_._1).toArray
+      (GopherRepetitionRules.map(r => StructField(r._1, DoubleType)) ++
+        GopherRepetitionRules.map(r => StructField(r._2, BooleanType)) :+
+        StructField("keep", BooleanType)))
     // Dataset mapPartitions (NOT .rdd): the kernel must lift to
     // STREAMING frames unchanged (StreamingSpec pins it) — .rdd is a
     // batch-only materialization, while MapPartitions is an ordinary
@@ -1595,18 +1394,19 @@ object TextStatsOps {
     in.mapPartitions { it: Iterator[Row] =>
       it.map { r =>
         if (r.isNullAt(1)) {
-          // NULL text: the expression tier null-propagates every
-          // metric, boolean and keep (length(NULL) denominator)
+          // NULL text: every metric, boolean and keep is NULL
+          // (length(NULL) denominator)
           Row.fromSeq(r.get(0) +: Seq.fill(2 * nMetrics + 1)(null))
         } else {
-          val ms = gopherDocMetrics(r.getString(1), topNs, dupNs)
+          val ms = gopherDocMetrics(r.getString(1))
           val cells = new Array[Any](2 * nMetrics + 2)
           cells(0) = r.get(0)
           var keep = true
           var j = 0
           while (j < nMetrics) {
-            val ok = ms(j) <= thresholds(j) // NaN <= th is false in
-            cells(1 + j) = ms(j)            // both engines
+            // NaN <= th is false in both engines
+            val ok = ms(j) <= GopherThresholds(j)
+            cells(1 + j) = ms(j)
             cells(1 + nMetrics + j) = ok
             keep &&= ok
             j += 1
@@ -1640,9 +1440,9 @@ object TextStatsOps {
     * dup_line_cfrac, dup_para_frac, dup_para_cfrac, top_{2,3,4}gram_
     * cfrac, dup_{5..10}gram_cfrac. All lengths are CODE POINTS (Spark
     * `length`); n-gram char mass is word mass + (n−1) joiner spaces
-    * (the expression tier measures the space-joined string). */
-  private def gopherDocMetrics(t: String, topNs: Array[Int],
-      dupNs: Array[Int]): Array[Double] = {
+    * (the oracle measures the space-joined string). */
+  private def gopherDocMetrics(t: String): Array[Double] = {
+    val topNs = GopherTopNs; val dupNs = GopherDupNs
     val tlen = t.codePointCount(0, t.length).toDouble
 
     // lines (split "\n") / paragraphs (split "\n{2,}"), blanks dropped:
@@ -1729,8 +1529,8 @@ object TextStatsOps {
       (slotS, slotC, slotOf)
     }
 
-    // most-frequent n-gram char mass: max by (count, mass); the
-    // expression tier's sorted-run scan yields the same maximum
+    // most-frequent n-gram char mass: max by (count, mass) — the
+    // same maximum a sorted-run scan yields
     def topMass(n: Int): Long = {
       if (m < n) return 0L
       val (slotS, slotC, _) = fillTable(n)
@@ -1810,22 +1610,17 @@ object TextStatsOps {
     import org.apache.spark.sql.Row
     val schema = df.schema
     val ti = schema.fieldIndex(textCol)
-    val topNs = GopherTopNgramRules.map(_._1).toArray
-    val dupNs = GopherDupNgramRules.map(_._1).toArray
-    val thresholds: Array[Double] =
-      (Seq(0.30, 0.20, 0.30, 0.20) ++ GopherTopNgramRules.map(_._2) ++
-        GopherDupNgramRules.map(_._2)).toArray
     // Dataset mapPartitions, not .rdd — lifts to streaming frames and
     // keeps the source scan in the SQL plan (see gopherRepetition)
     df.mapPartitions { it: Iterator[Row] =>
       it.filter { r =>
         !r.isNullAt(ti) && {
-          val ms = gopherDocMetrics(r.getString(ti), topNs, dupNs)
+          val ms = gopherDocMetrics(r.getString(ti))
           var keep = true
           var j = 0
-          while (keep && j < thresholds.length) {
-            keep = ms(j) <= thresholds(j) // NaN fails, like the metric
-            j += 1                        // tier's booleans
+          while (keep && j < GopherThresholds.length) {
+            keep = ms(j) <= GopherThresholds(j) // NaN fails, like the
+            j += 1                              // metric booleans
           }
           keep
         }
@@ -2055,9 +1850,9 @@ object TextStatsOps {
 
   /** Unigram-LM tokenizer inference (the SentencePiece family —
     * Kudo 2018 — the OTHER production tokenizer beside BPE): per word,
-    * the VITERBI segmentation maximizing the sum of token log-probs,
-    * as a row-local HOF dynamic program — zero shuffle, the vocabulary
-    * rides the plan as one map literal.
+    * the VITERBI segmentation maximizing the sum of token log-probs
+    * ([[viterbiSegment]]) — a row-local `udf`, zero shuffle, the
+    * vocabulary ships as a broadcast HashMap.
     *
     * `vocab` maps token → log-prob in NEGATIVE micro units (higher =
     * likelier); unknown single chars fall back to `unkCharMicro`
@@ -2066,147 +1861,74 @@ object TextStatsOps {
     * beyond that length are unreachable — size the bound to the
     * longest vocab entry. Integer scores make the DP exact and
     * layout/engine-invariant (the DSIR/classifier discipline). Ties on
-    * total score resolve to the FEWEST tokens (then the DP's
-    * lexicographic struct max, which is deterministic).
+    * total score resolve to the FEWEST tokens.
     *
-    * DP state: best (score, −ntok) per prefix, appended position by
-    * position via `aggregate` over the char index — O(len·maxTokenLen)
-    * work per word, all inside codegen'd HOFs like the BPE fixpoint.
     * Returns the best-path token COUNT (what budget sampling
     * consumes); NULL/empty words count 0. */
   def unigramTokenCount(w: Column, vocab: Map[String, Long],
       unkCharMicro: Long, maxTokenLen: Int = 8): Column = {
-    require(vocab.nonEmpty, "unigramTokenCount: empty vocabulary")
-    require(maxTokenLen >= 1, "unigramTokenCount: maxTokenLen >= 1")
-    val vlit = typedLit(vocab)
-    val negInf = -(1L << 50) // headroom: never overflows when summed
-    val n = length(w)
-    val state = aggregate(
-      sequence(lit(1), greatest(n, lit(1))), // n=0 guarded below
-      array(struct(lit(0L).as("score"), lit(0).as("negntok"))),
-      (acc, i) => {
-        val jStart = greatest(i - maxTokenLen, lit(0))
-        val cands = transform(sequence(jStart, i - 1), j => {
-          val tok = w.substr(j + 1, i - j)
-          val prev = element_at(acc, j + 1)
-          val tokScore = coalesce(element_at(vlit, tok),
-            when(i - j === 1, lit(unkCharMicro)).otherwise(lit(negInf)))
-          struct((prev.getField("score") + tokScore).as("score"),
-            (prev.getField("negntok") - 1).as("negntok"))
-        })
-        concat(acc, array(array_max(cands)))
-      },
-      acc => element_at(acc, -1))
-    when(w.isNull || n === 0, lit(0))
-      .otherwise(-state.getField("negntok"))
+    val bVocab = unigramVocab("unigramTokenCount", vocab, maxTokenLen)
+    udf((s: String) =>
+      if (s == null) 0
+      else viterbiSegment(s, bVocab.value, unkCharMicro, maxTokenLen).length)
+      .apply(w)
   }
 
   /** Document-level unigram token count: [[unigramTokenCount]] summed
-    * over whitespace words — still one row-local expression. NULL text
-    * counts 0 (the documented NULL/empty contract): words(NULL) is
-    * NULL and aggregate() would null-propagate without the coalesce. */
+    * over whitespace words. NULL text counts 0 (the documented
+    * NULL/empty contract). */
   def unigramTokenCountDoc(text: Column, vocab: Map[String, Long],
-      unkCharMicro: Long, maxTokenLen: Int = 8): Column =
-    aggregate(words(coalesce(text, lit(""))), lit(0L),
-      (a, w) => a + unigramTokenCount(w, vocab, unkCharMicro, maxTokenLen))
-      .cast("long")
-
-  /** The Viterbi segmentation ITSELF (array of pieces), not just its
-    * length — the E-step primitive of [[trainUnigramLm]]: the same DP
-    * as [[unigramTokenCount]] with a BACKPOINTER (the split position
-    * `j` of the best last token) carried per prefix instead of the
-    * path itself, so the state is O(len) and each step O(maxTokenLen)
-    * — O(len·maxTokenLen) per word total, which is what makes a
-    * space-free (CJK/Thai) document, where `\s+`-splitting yields ONE
-    * multi-kilochar "word", linear instead of quadratic. The (score,
-    * −ntok) ordering — and therefore the returned COUNT — is identical
-    * to the counting twin by construction (spec-pinned); residual full
-    * ties resolve to the LARGEST split position (the shortest final
-    * token at each cell), the deterministic O(1)-comparable rule both
-    * tiers and [[viterbiSegment]] share. Unknown single chars appear
-    * in the output as themselves (callers see coverage gaps
-    * explicitly). The pieces are reconstructed by a second aggregate
-    * walking the backpointer chain from the end. */
-  def unigramViterbiPieces(w: Column, vocab: Map[String, Long],
       unkCharMicro: Long, maxTokenLen: Int = 8): Column = {
-    require(vocab.nonEmpty, "unigramViterbiPieces: empty vocabulary")
-    require(maxTokenLen >= 1, "unigramViterbiPieces: maxTokenLen >= 1")
-    val vlit = typedLit(vocab)
-    val negInf = -(1L << 50)
-    val n = length(w)
-    val empty = array().cast("array<string>")
-    val emptyCuts = array().cast("array<int>")
-    // ONE aggregate whose finish lambda owns the whole pipeline, so
-    // the forward DP array is bound once (a repeated Column reference
-    // would re-run the DP per use)
-    val pieces = aggregate(
-      sequence(lit(1), greatest(n, lit(1))),
-      // forward DP: acc(i+1) = best (score, −ntok, bp) for prefix [0, i)
-      array(struct(lit(0L).as("score"), lit(0).as("negntok"),
-        lit(0).as("bp"))),
-      (acc, i) => {
-        val jStart = greatest(i - maxTokenLen, lit(0))
-        val cands = transform(sequence(jStart, i - 1), j => {
-          val tok = w.substr(j + 1, i - j)
-          val prev = element_at(acc, j + 1)
-          val tokScore = coalesce(element_at(vlit, tok),
-            when(i - j === 1, lit(unkCharMicro)).otherwise(lit(negInf)))
-          struct((prev.getField("score") + tokScore).as("score"),
-            (prev.getField("negntok") - 1).as("negntok"),
-            j.cast("int").as("bp"))
-        })
-        concat(acc, array(array_max(cands)))
-      },
-      acc => {
-        // backward walk: cut positions n, bp(n), bp(bp(n)), … — exactly
-        // ntok hops reach 0, so the walk iterates ntok times and the
-        // growing cuts array costs O(ntok²) shallow int copies with
-        // O(len) live memory (vs the pre-r16 O(len²) string state);
-        // cuts come out ascending and end at n
-        val ntokN = -element_at(acc, -1).getField("negntok")
-        val cuts = aggregate(
-          sequence(lit(1), greatest(ntokN, lit(1))),
-          struct(n.as("pos"), emptyCuts.as("cuts")),
-          (s, _) => {
-            val pos = s.getField("pos")
-            when(pos > 0, struct(
-              element_at(acc, pos + 1).getField("bp").as("pos"),
-              concat(array(pos), s.getField("cuts")).as("cuts")))
-              .otherwise(s)
-          },
-          s => s.getField("cuts"))
-        // bind bounds = 0 ++ cuts once via a 1-element transform, then
-        // slice the word piece by piece
-        flatten(transform(array(concat(array(lit(0)), cuts)), bs =>
-          transform(sequence(lit(1), size(bs) - 1), k =>
-            w.substr(element_at(bs, k) + 1,
-              element_at(bs, k + 1) - element_at(bs, k)))))
-      })
-    when(w.isNull || n === 0, empty).otherwise(pieces)
+    val bVocab = unigramVocab("unigramTokenCountDoc", vocab, maxTokenLen)
+    udf((t: String) =>
+      if (t == null) 0L
+      else wordsOf(t).iterator.map(w => viterbiSegment(w, bVocab.value,
+        unkCharMicro, maxTokenLen).length.toLong).sum)
+      .apply(text)
   }
 
-  // ───── Broadcast-vocab unigram kernel (r14 verdict task #1, the
-  // vocab-axis twin of the rank-table BPE kernel): the column DP above
-  // rides its vocabulary as a typedLit MAP LITERAL, and Catalyst's
-  // GetMapValue on a literal map is a LINEAR scan — at a production
-  // 32–64k-piece vocabulary that is both a per-task plan-binary tax
-  // and an O(|vocab|) cost per lookup. The kernel below is the SAME
-  // integer-exact Viterbi DP as a JVM loop over a broadcast HashMap:
-  // O(1) lookups, one executor-side copy of the table, zero shuffle.
-  // Tie-breaking replicates the column tier bit-for-bit — (score,
-  // −ntok, path) lexicographic max with path compared in UTF-8 byte
-  // order (Spark's array<string> ordering) — and UnigramKernelSpec
-  // pins kernel ≡ column on shared vocabularies. ─────
+  /** The Viterbi segmentation ITSELF (array of pieces), not just its
+    * length: the pieces of [[viterbiSegment]], whose count is
+    * [[unigramTokenCount]] by construction. Unknown single chars
+    * appear in the output as themselves (callers see coverage gaps
+    * explicitly); NULL/empty words give []. */
+  def unigramViterbiPieces(w: Column, vocab: Map[String, Long],
+      unkCharMicro: Long, maxTokenLen: Int = 8): Column = {
+    val bVocab = unigramVocab("unigramViterbiPieces", vocab, maxTokenLen)
+    udf((s: String) =>
+      if (s == null) Array.empty[String]
+      else viterbiSegment(s, bVocab.value, unkCharMicro, maxTokenLen))
+      .apply(w)
+  }
 
-  /** One word's Viterbi segmentation over a HashMap vocabulary — the
-    * kernel twin of [[unigramViterbiPieces]] (same DP, same
-    * (score, −ntok, max split position) tie order, same unk-char
-    * fallback; pieces are code points exactly like the column tier's
-    * substr). Backpointer DP: O(n·maxTokenLen) time and O(n) memory
-    * per word, so a space-free (CJK/Thai) document that survives
-    * `\s+`-splitting as ONE multi-kilochar word costs linear, not
-    * quadratic, work — the production property the r15 path-copying
-    * version lacked. */
+  /** Checks a unigram Column function's arguments and broadcasts its
+    * vocabulary. */
+  private def unigramVocab(op: String, vocab: Map[String, Long],
+      maxTokenLen: Int)
+      : org.apache.spark.broadcast.Broadcast[
+        java.util.HashMap[String, java.lang.Long]] = {
+    require(vocab.nonEmpty, s"$op: empty vocabulary")
+    require(maxTokenLen >= 1, s"$op: maxTokenLen >= 1")
+    broadcastTable(vocabHashMap(vocab))
+  }
+
+  // ───── The unigram kernel: one integer-exact Viterbi DP over a
+  // broadcast HashMap vocabulary — O(1) lookups, one executor-side
+  // copy of the table, zero shuffle. The Column functions above, the
+  // encode kernels below and the trainer's E-step all run it; its
+  // (score, −ntok, max split position) tie order is spec-pinned
+  // against a test-scope replay of the same DP as Catalyst
+  // expressions. ─────
+
+  /** One word's Viterbi segmentation over a HashMap vocabulary —
+    * maximize the summed micro-log-probs; ties on score go to the
+    * fewest tokens, then to the LARGEST split position (the shortest
+    * final token at each cell); unknown single chars price at
+    * `unkCharMicro`; pieces are code points (Spark substr semantics).
+    * Backpointer DP: O(n·maxTokenLen) time and O(n) memory per word,
+    * so a space-free (CJK/Thai) document that survives `\s+`-splitting
+    * as ONE multi-kilochar word costs linear, not quadratic, work —
+    * the production property the r15 path-copying version lacked. */
   private[graft] def viterbiSegment(w: String,
       vocab: java.util.HashMap[String, java.lang.Long],
       unkCharMicro: Long, maxTokenLen: Int): Array[String] = {
@@ -2237,8 +1959,7 @@ object TextStatsOps {
         val s = score(j) + ts
         val nt = ntok(j) + 1
         // lexicographic max on (score, −ntok, j): j descends, so a
-        // FULL tie keeps the incumbent (the larger j) — identical to
-        // the column tier's array_max over struct(score, negntok, bp)
+        // FULL tie keeps the incumbent (the larger j)
         val better =
           s > bestS || (s == bestS && nt < bestN)
         if (bestJ < 0 || better) { bestS = s; bestN = nt; bestJ = j }
@@ -2409,7 +2130,7 @@ object TextStatsOps {
         it.map { case (id, text) =>
           if (text == null) (id, 0L, 0L, 0L, 0L, "")
           else {
-            val ws = text.split("\\s+").filter(_.nonEmpty)
+            val ws = wordsOf(text)
             var nw = 0L; var nc = 0L; var nt = 0L; var nu = 0L
             val sb = new java.lang.StringBuilder(text.length)
             var i = 0
@@ -2473,20 +2194,19 @@ object TextStatsOps {
         val vm = bVocab.value
         it.flatMap { case (id, text) =>
           if (text == null) Iterator.empty
-          else text.split("\\s+").iterator.filter(_.nonEmpty)
-            .zipWithIndex.flatMap { case (w, wi) =>
-              val segs = viterbiSegment(w, vm, unk, mtl)
-              val pieces: Iterator[String] =
-                if (!bf) segs.iterator
-                else segs.iterator.flatMap { p =>
-                  if (vm.containsKey(p)) Iterator(p)
-                  else p.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-                    .iterator.map(b => f"<0x${b & 0xff}%02X>")
-                }
-              pieces.zipWithIndex.map { case (p, pi) =>
-                (id, wi, pi, p, vm.containsKey(p))
+          else wordsOf(text).iterator.zipWithIndex.flatMap { case (w, wi) =>
+            val segs = viterbiSegment(w, vm, unk, mtl)
+            val pieces: Iterator[String] =
+              if (!bf) segs.iterator
+              else segs.iterator.flatMap { p =>
+                if (vm.containsKey(p)) Iterator(p)
+                else p.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+                  .iterator.map(b => f"<0x${b & 0xff}%02X>")
               }
+            pieces.zipWithIndex.map { case (p, pi) =>
+              (id, wi, pi, p, vm.containsKey(p))
             }
+          }
         }
       }
       .toDF(idCol, "word_idx", "piece_idx", "piece", "in_vocab")
@@ -2560,7 +2280,8 @@ object TextStatsOps {
     *            unique WORDS (types, weighted by multiplicity — the
     *            SentencePiece reduction; the corpus is never
     *            re-scanned) under the current scores with
-    *            [[unigramViterbiPieces]] and sum piece usage.
+    *            [[viterbiSegment]] over a broadcast vocabulary, and
+    *            sum piece usage.
     *   M-step — driver-side on the ≤ 4·vocabSize-row count table (the
     *            BPE-trainer state convention): drop zero-usage
     *            multi-char pieces, re-rank by (usage desc, piece asc),
@@ -2642,8 +2363,7 @@ object TextStatsOps {
   def trainUnigramLm(corpus: org.apache.spark.sql.DataFrame,
       textCol: String, vocabSize: Int, rounds: Int = 2,
       maxTokenLen: Int = 8, minCount: Long = 2,
-      unkCharMicro: Long = -20000000L,
-      kernelThreshold: Int = 512, em: String = "hard",
+      unkCharMicro: Long = -20000000L, em: String = "hard",
       maxTrainRows: Int = 0, byteFallback: Boolean = false)
       : Map[String, Long] = {
     require(em == "hard" || em == "soft", s"trainUnigramLm: em=$em")
@@ -2713,48 +2433,26 @@ object TextStatsOps {
     val spark = corpus.sparkSession
     import spark.implicits._
     for (r <- 1 to rounds) {
-      // E-step: above `kernelThreshold` vocabulary entries the column
-      // DP's typedLit map becomes a per-task plan literal with LINEAR
-      // lookups — switch to the broadcast-HashMap kernel (spec-pinned
-      // bit-identical to the column tier, so the threshold can never
-      // change a trained vocabulary, only its cost)
-      val counted = (if (em == "soft") {
-        // SOFT E-step (em = "soft"): forward-backward expected
-        // counts instead of best-path counts — SentencePiece's
-        // actual E-step, which trains low-probability pieces the
-        // Viterbi counts starve. Per-word micro-integer rounding
-        // keeps the aggregation layout-invariant (see
-        // softExpectedCounts); counts flow through the SAME M-step
-        // in micro units (ratios cancel in the log re-score).
-        val bVocab = spark.sparkContext.broadcast(vocabHashMap(vocab))
-        val mtl = maxTokenLen; val unk = unkCharMicro
-        wordCounts.select(col("__w").cast("string"), col("__cnt"))
-          .as[(String, Long)]
-          .mapPartitions { it =>
-            val vm = bVocab.value
-            it.flatMap { case (w, cnt) =>
-              softExpectedCounts(w, vm, unk, mtl).iterator.map {
-                case (p, micro) => (p, micro * cnt) }
-            }
+      val bVocab = spark.sparkContext.broadcast(vocabHashMap(vocab))
+      val mtl = maxTokenLen; val unk = unkCharMicro; val soft = em == "soft"
+      val counted = wordCounts.select(col("__w").cast("string"), col("__cnt"))
+        .as[(String, Long)]
+        .mapPartitions { it =>
+          val vm = bVocab.value
+          it.flatMap { case (w, cnt) =>
+            // SOFT E-step (em = "soft"): forward-backward expected
+            // counts instead of best-path counts — SentencePiece's
+            // actual E-step, which trains low-probability pieces the
+            // Viterbi counts starve. Per-word micro-integer rounding
+            // keeps the aggregation layout-invariant (see
+            // softExpectedCounts); counts flow through the SAME M-step
+            // in micro units (ratios cancel in the log re-score).
+            if (soft) softExpectedCounts(w, vm, unk, mtl).iterator.map {
+              case (p, micro) => (p, micro * cnt) }
+            else viterbiSegment(w, vm, unk, mtl).iterator.map(p => (p, cnt))
           }
-          .toDF("p", "__cnt")
-      } else if (vocab.size > kernelThreshold) {
-        val bVocab = spark.sparkContext.broadcast(vocabHashMap(vocab))
-        val mtl = maxTokenLen; val unk = unkCharMicro
-        wordCounts.select(col("__w").cast("string"), col("__cnt"))
-          .as[(String, Long)]
-          .mapPartitions { it =>
-            val vm = bVocab.value
-            it.flatMap { case (w, cnt) =>
-              viterbiSegment(w, vm, unk, mtl).iterator.map(p =>
-                (p, cnt))
-            }
-          }
-          .toDF("p", "__cnt")
-      } else wordCounts.select(
-        explode(unigramViterbiPieces(col("__w"), vocab, unkCharMicro,
-          maxTokenLen)).as("p"),
-        col("__cnt")))
+        }
+        .toDF("p", "__cnt")
         .groupBy("p").agg(sum(col("__cnt")).as("c"))
         .collect().map(r2 => (r2.getString(0), r2.getLong(1))).toMap
       // the "never unencodable" floor is ONE OBSERVATION — in soft

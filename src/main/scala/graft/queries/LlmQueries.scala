@@ -139,8 +139,8 @@ object LlmQueries extends QueryModule {
   /** DuckDB twin of `TextStatsOps.gopherRepetition` over the planted
     * corpus (see the gopher_repetition QueryDef). Recomputes every
     * metric by a DIFFERENT algorithm — explode + window counts + a
-    * range cross-join for positional coverage — against Spark's
-    * row-local sorted-run and coverage HOFs; agreement is therefore a
+    * range cross-join for positional coverage — against the kernel's
+    * per-row n-gram tables; agreement is therefore a
     * real differential check, not a shared-code echo. Generated from
     * the same threshold tables so the two sides cannot drift. */
   private def gopherRepOracle: String = {
@@ -1349,7 +1349,7 @@ object LlmQueries extends QueryModule {
     // fraction is an int/int IEEE division of exactly-summed character
     // masses, so doubles AND booleans hash-compare bit-exactly. The
     // DuckDB oracle recomputes all twelve metrics independently
-    // (explode+window, vs Spark's row-local sorted-run/coverage HOFs).
+    // (explode+window, vs the kernel's per-row n-gram tables).
     QueryDef("gopher_repetition",
       (s, d) => {
         val g5 = array_join(
@@ -1640,13 +1640,16 @@ object LlmQueries extends QueryModule {
     // REAL merge-table BPE (r11 verdict task 3 — retires the length/4
     // proxy as the gate algorithm): per word, iteratively apply the
     // lowest-rank adjacent-pair merge until fixpoint (the GPT-2-family
-    // loop; TextStatsOps.bpeTokenCount), demo merge table shared from
-    // TextStatsOps.BpeDemoMerges. The oracle replays the SAME loop in a
-    // recursive CTE over the DISTINCT word set: state = space-joined
-    // symbols, one step = replace() of the best-rank pattern (both
-    // engines' replace is exact-string, non-overlapping, left-to-right),
-    // finished words are those where no pattern applies; per-doc counts
-    // re-join word multiplicities. LlmSpec pins known word→count
+    // loop; TextStatsOps.bpeTokenCount, a udf over the rank-table
+    // kernel), demo merge table shared from TextStatsOps.BpeDemoMerges.
+    // The oracle replays the loop in its replace form
+    // (TextStatsOps.bpeMergePatterns) in a recursive CTE over the
+    // DISTINCT word set: state = space-joined symbols, one step =
+    // replace() of the best-rank pattern (exact-string, non-overlapping,
+    // left-to-right), finished words are those where no pattern
+    // applies; per-doc counts re-join word multiplicities (the demo
+    // table reaches the kernel's symbols this way — see
+    // bpeMergeRanked's one exception). LlmSpec pins known word→count
     // vectors including a merge whose result feeds an earlier rule.
     QueryDef("bpe_token_count",
       (s, d) => T.documents(s, d).select(col("doc_id"),
@@ -1949,13 +1952,14 @@ object LlmQueries extends QueryModule {
 
     // RANK-TABLE BPE encoder (TextStatsOps.bpeEncodeRanked — the
     // GPT-2/tiktoken-family kernel over a broadcast merge-rank map,
-    // replacing the regexp-fixpoint's 32-rule fence) run on the SAME
-    // corpus + planted pretokenizer rows as bpe_byte_encode and
+    // with caller-supplied ids, here the demo bpeVocab) run on the
+    // SAME corpus + planted pretokenizer rows as bpe_byte_encode and
     // differentially checked against the SAME independent DuckDB
     // recursive-CTE fixpoint: a rank-priority bug, a wrong L2R merge,
     // a pretokenizer or byte-marking drift, or an id drift each
-    // hash-fail. BpeRankSpec additionally pins ranked ≡ regexp-
-    // fixpoint in-engine on both the byte-level and whitespace tiers.
+    // hash-fail. TokenizerKernelSpec additionally pins the kernel
+    // in-engine against the test-scope replace-fixpoint reference on
+    // both the byte-level and whitespace paths.
     QueryDef("bpe_rank_encode",
       (s, d) => {
         import s.implicits._
@@ -3357,8 +3361,9 @@ object LlmQueries extends QueryModule {
              |FROM documents""".stripMargin)),
 
     // Unigram-LM (SentencePiece-family) tokenizer inference — the
-    // Viterbi DP runs for real in the engine (row-local HOF dynamic
-    // program, vocabulary as one map literal, zero shuffle); the gate
+    // Viterbi DP runs for real in the engine (a row-local udf over the
+    // viterbiSegment kernel, vocabulary as a broadcast HashMap, zero
+    // shuffle); the gate
     // corpus is planted from SEVEN words whose optimal segmentations
     // are hand-derived below (the bpe_train_encode closed-form trick),
     // so the oracle states counts without replaying the DP:
@@ -3716,10 +3721,10 @@ object LlmQueries extends QueryModule {
     //   theory→[theory](0 unk), thematic→[the,matic](0),
     //   cats→[cat,s](0), dog→[d,o,g](3 of 3 chars unk), ab→[ab](0),
     //   theorys→[theory,s](0), zq→[z,q](2 of 2 unk).
-    // This gate runs the broadcast-HashMap KERNEL
-    // (unigramEncodeDocsKernel), so it doubles as the kernel's own
-    // closed-form DP gate next to the column tier's unigram_tokenize —
-    // the two tiers are additionally pinned equal in UnigramKernelSpec.
+    // This gate runs the DataFrame kernel (unigramEncodeDocsKernel)
+    // where unigram_tokenize runs the Column udf — the same Viterbi DP,
+    // which TokenizerKernelSpec also pins against a test-scope
+    // reference.
     QueryDef("unigram_coverage", {
       val vocab = Map(
         "the" -> -1000000L, "theory" -> -1500000L, "ory" -> -1200000L,
@@ -3809,14 +3814,14 @@ object LlmQueries extends QueryModule {
     // encodings of 0..49999 — enough distinct Viterbi-used pieces that
     // the final prune fills the full 32 768; require()d in-gate), then
     // the broadcast-HashMap kernel encodes the REAL documents table
-    // with it. The trainer's E-steps themselves run the kernel path
-    // (vocab > 512 entries). The oracle pins the vocab-independent
+    // with it. The trainer's E-steps run the same kernel. The oracle
+    // pins the vocab-independent
     // no-corruption contract — every word's pieces concatenate back to
     // the word, in order, with counts — which is exactly what a
     // 33k-entry typedLit plan literal or a lost/duplicated piece row
     // would break; segmentation OPTIMALITY at this scale is pinned by
     // unigram_coverage (closed-form kernel gate) and
-    // UnigramKernelSpec's kernel ≡ column equality.
+    // TokenizerKernelSpec's kernel ≡ reference equality.
     QueryDef("unigram_train_32k",
       (s, d) => {
         val corpus = s.range(50000).select(expr(

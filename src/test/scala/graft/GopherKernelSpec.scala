@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * downstream (every fraction is an int/int IEEE division), so this
   * spec pins the kernel EXACTLY equal — doubleToLongBits on every
   * fraction, strict equality (incl. nullness) on every boolean — to
-  * the expression tier kept verbatim as `gopherRepetitionExpr`, on
+  * the expression tier, `ReferenceTiers.gopherRepetitionExpr`, on
   * (a) the planted gate corpus the gopher_repetition oracle query
   * uses, and (b) adversarial fixtures: NULL text, empty text (the
   * 0/0 = NaN fence), whitespace-only, all-blank lines, heavy line/
@@ -22,7 +22,7 @@ class GopherKernelSpec extends SparkSpec {
 
   private def assertBitEqual(df: org.apache.spark.sql.DataFrame): Unit = {
     val kern = TextStatsOps.gopherRepetition(df, "doc_id", "text")
-    val expr = TextStatsOps.gopherRepetitionExpr(df, "doc_id", "text")
+    val expr = ReferenceTiers.gopherRepetitionExpr(df, "doc_id", "text")
     assert(kern.columns.toSeq == expr.columns.toSeq)
     assert(kern.schema.map(f => (f.name, f.dataType)) ==
       expr.schema.map(f => (f.name, f.dataType)))
@@ -97,7 +97,7 @@ class GopherKernelSpec extends SparkSpec {
       "expression tier throws under ANSI") {
     val df = Seq((1L, "")).toDF("doc_id", "text")
     val thrown = intercept[Throwable] {
-      TextStatsOps.gopherRepetitionExpr(df, "doc_id", "text").collect()
+      ReferenceTiers.gopherRepetitionExpr(df, "doc_id", "text").collect()
     }
     assert(thrown.getMessage.contains("DIVIDE_BY_ZERO"),
       s"expected ANSI divide-by-zero, got: ${thrown.getMessage}")
@@ -121,7 +121,7 @@ class GopherKernelSpec extends SparkSpec {
         .otherwise(col("text")))
     val kept = TextStatsOps.gopherRepetitionKept(docs, "doc_id", "text")
     val viaBarrier = docs.join(
-      TextStatsOps.gopherRepetitionExpr(docs, "doc_id", "text")
+      ReferenceTiers.gopherRepetitionExpr(docs, "doc_id", "text")
         .groupBy(col("doc_id")).agg(max(col("keep")).as("__keep"))
         .filter(col("__keep")).select("doc_id"),
       Seq("doc_id"), "left_semi")

@@ -350,7 +350,8 @@ class LlmSpec extends SparkSpec {
     // r20: the gate is a row-local kernel filter — the plan is one
     // RDD scan with NO exchange, no aggregation barrier, no semi-join
     // and no HOF trees (the >800s pushdown pathology documented on
-    // gopherRepetitionExpr is structurally impossible here)
+    // ReferenceTiers.gopherRepetitionExpr is structurally impossible
+    // here)
     val plan = kept.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan.take(3000))
     assert(!plan.contains("HashAggregate"), plan.take(3000))

@@ -3,13 +3,12 @@ package graft
 import graft.llm.TextStatsOps
 import org.apache.spark.sql.functions._
 
-/** The production-scale tokenizer kernels (rank-table BPE over a
-  * broadcast merge map; broadcast-HashMap unigram Viterbi) pinned
-  * exactly equal to their column-expression twins — the equality that
-  * lets the engine switch tiers by table size without ever changing a
-  * result — plus the trained-table integration the r14 verdict asked
-  * for (bpeTrainMerges at numMerges ≥ 1000 feeding the ranked
-  * encoder). */
+/** The tokenizer kernels (rank-table BPE over a broadcast merge map;
+  * broadcast-HashMap unigram Viterbi) — and the Column functions and
+  * DataFrame encoders built on them — pinned exactly equal to the
+  * independent Catalyst-expression replays in [[ReferenceTiers]], plus
+  * the trained-table integration the r14 verdict asked for
+  * (bpeTrainMerges at numMerges ≥ 1000 feeding the ranked encoder). */
 class TokenizerKernelSpec extends SparkSpec {
   import spark.implicits._
 
@@ -69,29 +68,39 @@ class TokenizerKernelSpec extends SparkSpec {
   test("rank-table BPE encoder ≡ regexp-fixpoint encoder, byte-level " +
     "and whitespace tiers, counts included") {
     val df = lcgTexts(300).toDF("doc_id", "text")
+    val refBytes = ReferenceTiers.bpeEncodeTokensBytes(df, "doc_id", "text")
+    val refWords = ReferenceTiers.bpeEncodeTokens(df, "doc_id", "text")
     // byte-level encode
     assertFrameEqual(
       TextStatsOps.bpeEncodeRanked(df, "doc_id", "text",
-        TextStatsOps.BpeDemoMerges, TextStatsOps.bpeVocab()),
-      TextStatsOps.bpeEncodeTokensBytes(df, "doc_id", "text"))
-    // whitespace-word encode (column tier names the position word_idx)
+        TextStatsOps.BpeDemoMerges, TextStatsOps.bpeVocab()), refBytes)
+    assertFrameEqual(
+      TextStatsOps.bpeEncodeTokensBytes(df, "doc_id", "text"), refBytes)
+    // whitespace-word encode (bpeEncodeTokens names the position
+    // word_idx)
     assertFrameEqual(
       TextStatsOps.bpeEncodeRanked(df, "doc_id", "text",
         TextStatsOps.BpeDemoMerges, TextStatsOps.bpeVocab(),
         byteLevel = false),
-      TextStatsOps.bpeEncodeTokens(df, "doc_id", "text")
-        .withColumnRenamed("word_idx", "tok_idx"))
-    // counting twin equals the column counter on both tiers
+      refWords.withColumnRenamed("word_idx", "tok_idx"))
+    assertFrameEqual(
+      TextStatsOps.bpeEncodeTokens(df, "doc_id", "text"), refWords)
+    // counting: the DataFrame kernel and both Column functions
+    val refCountBytes = df.select(col("doc_id"),
+      ReferenceTiers.bpeTokenCountBytes(col("text")).as("n_bpe"))
+    val refCountWords = df.select(col("doc_id"),
+      ReferenceTiers.bpeTokenCount(col("text")).as("n_bpe"))
     assertFrameEqual(
       TextStatsOps.bpeTokenCountRanked(df, "doc_id", "text",
-        TextStatsOps.BpeDemoMerges),
-      df.select(col("doc_id"),
-        TextStatsOps.bpeTokenCountBytes(col("text")).as("n_bpe")))
+        TextStatsOps.BpeDemoMerges), refCountBytes)
     assertFrameEqual(
       TextStatsOps.bpeTokenCountRanked(df, "doc_id", "text",
-        TextStatsOps.BpeDemoMerges, byteLevel = false),
-      df.select(col("doc_id"),
-        TextStatsOps.bpeTokenCount(col("text")).as("n_bpe")))
+        TextStatsOps.BpeDemoMerges, byteLevel = false), refCountWords)
+    assertFrameEqual(df.select(col("doc_id"),
+      TextStatsOps.bpeTokenCountBytes(col("text")).as("n_bpe")),
+      refCountBytes)
+    assertFrameEqual(df.select(col("doc_id"),
+      TextStatsOps.bpeTokenCount(col("text")).as("n_bpe")), refCountWords)
   }
 
   test("bpeMergeRanked: lowest-rank-first (not leftmost-first), L2R " +
@@ -179,12 +188,15 @@ class TokenizerKernelSpec extends SparkSpec {
     }.distinct
     val df = words.zipWithIndex.map { case (w, i) => (i.toLong, w) }
       .toDF("id", "w")
-    // piece-level: kernel segmentation == column Viterbi pieces
-    val colPieces = df.select(col("id"),
-        TextStatsOps.unigramViterbiPieces(col("w"), vocab,
-          unkCharMicro = -10000000L, maxTokenLen = 6).as("p"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toSeq)
-      .toMap
+    // piece-level: kernel segmentation and the Column function ==
+    // the reference DP's pieces
+    def pieces(f: (org.apache.spark.sql.Column, Map[String, Long], Long,
+        Int) => org.apache.spark.sql.Column) =
+      df.select(col("id"), f(col("w"), vocab, -10000000L, 6).as("p"))
+        .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toSeq)
+        .toMap
+    val colPieces = pieces(ReferenceTiers.unigramViterbiPieces)
+    assert(pieces(TextStatsOps.unigramViterbiPieces) === colPieces)
     words.zipWithIndex.foreach { case (w, i) =>
       val k = TextStatsOps.viterbiSegment(w, vm, -10000000L, 6).toSeq
       assert(k === colPieces(i.toLong), s"word '$w'")
@@ -195,20 +207,23 @@ class TokenizerKernelSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val kern = TextStatsOps.unigramEncodeDocsKernel(docs, "doc_id",
       "text", vocab, unkCharMicro = -10000000L, maxTokenLen = 6)
-    assertFrameEqual(
-      kern.select("doc_id", "n_tokens"),
-      docs.select(col("doc_id"),
-        TextStatsOps.unigramTokenCountDoc(col("text"), vocab,
-          unkCharMicro = -10000000L, maxTokenLen = 6).as("n_tokens")))
+    val refCounts = docs.select(col("doc_id"),
+      ReferenceTiers.unigramTokenCountDoc(col("text"), vocab,
+        unkCharMicro = -10000000L, maxTokenLen = 6).as("n_tokens"))
+    assertFrameEqual(kern.select("doc_id", "n_tokens"), refCounts)
+    assertFrameEqual(docs.select(col("doc_id"),
+      TextStatsOps.unigramTokenCountDoc(col("text"), vocab,
+        unkCharMicro = -10000000L, maxTokenLen = 6).as("n_tokens")),
+      refCounts)
     assertFrameEqual(
       kern.select("doc_id", "recon"),
       docs.select(col("doc_id"), col("text").as("recon")))
-    // unk chars: pieces outside the vocab, re-derived via the column
-    // tier's pieces
+    // unk chars: pieces outside the vocab, re-derived via the
+    // reference pieces
     val colUnk = docs.select(col("doc_id"),
       aggregate(TextStatsOps.words(col("text")), lit(0L), (acc, w0) =>
         acc + size(filter(
-          TextStatsOps.unigramViterbiPieces(w0, vocab, -10000000L, 6),
+          ReferenceTiers.unigramViterbiPieces(w0, vocab, -10000000L, 6),
           p => element_at(typedLit(vocab), p).isNull)).cast("long"))
         .as("n_unk_chars"))
     assertFrameEqual(kern.select("doc_id", "n_unk_chars"), colUnk)
@@ -275,22 +290,6 @@ class TokenizerKernelSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       TextStatsOps.writeBpeMerges(spark, s"$dir/bm2", Nil)
     }
-  }
-
-  test("trainUnigramLm: kernel E-step (threshold 0) trains the " +
-    "bit-identical vocabulary to the column E-step") {
-    val wl1 = Seq("banana", "bandana", "cabana", "nacho")
-    val wl2 = Seq("anna", "cab", "nan")
-    val docs = (0 until 500).map { i =>
-      (i.toLong, wl1(i % 4) + " " + wl2((i + 1) % 3))
-    }.toDF("doc_id", "text")
-    val viaColumn = TextStatsOps.trainUnigramLm(docs, "text",
-      vocabSize = 14, rounds = 2, maxTokenLen = 4, minCount = 2,
-      unkCharMicro = -20000000L, kernelThreshold = Int.MaxValue)
-    val viaKernel = TextStatsOps.trainUnigramLm(docs, "text",
-      vocabSize = 14, rounds = 2, maxTokenLen = 4, minCount = 2,
-      unkCharMicro = -20000000L, kernelThreshold = 0)
-    assert(viaColumn === viaKernel)
   }
 
   test("bpeTrainMergesLocal ≡ bpeTrainMerges: same merges, same order " +
