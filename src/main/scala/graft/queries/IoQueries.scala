@@ -28,6 +28,22 @@ object IoQueries extends QueryModule {
 
   private val T = Tables
 
+  /** Local path of the committed sas7bdat fixture `name`: copied once
+    * per JVM from the classpath (src/main/resources/sas7bdat — a
+    * directory under `sbt test`, a jar under a forked `run`) into the
+    * scratch root, so Verify and the test suite read the same bytes;
+    * fails naming the missing file. */
+  private[graft] def sasFixture(name: String): String = synchronized {
+    val f = new java.io.File(scratch, s"$name.sas7bdat")
+    if (!f.isFile) {
+      val in = getClass.getResourceAsStream(s"/sas7bdat/$name.sas7bdat")
+      require(in != null, s"sas7bdat fixture /sas7bdat/$name.sas7bdat " +
+        "not on the classpath (src/main/resources/sas7bdat)")
+      try java.nio.file.Files.copy(in, f.toPath) finally in.close()
+    }
+    f.getPath
+  }
+
   /** Per-JVM scratch root (tmpdir is executor-local on a real cluster;
     * these round trips are driver-side gates, not data-lake layouts). */
   private lazy val scratch: String = {
@@ -311,29 +327,22 @@ object IoQueries extends QueryModule {
 
     // read_sas(format='sas7bdat') — the native SAS dataset format, the
     // one §2.1 source a real SAS shop hits that r11 still lacked
-    // (read-only, uncompressed pages; SasBdatIo). The input is a REAL
-    // SAS-written file (the reference's own productsales fixture:
-    // 1440 rows of strings + truncated-width numerics + a MONNAME date
-    // column), so this is an interop gate, not a self-roundtrip. The
-    // compared row is a panel of aggregates whose constants were stated
-    // ONCE from the independent reader of record — any offset, width,
-    // truncated-double, trimming, or 1960-epoch bug moves a sum, a
-    // distinct count, a char mass, or a date bound and hash-fails.
-    // Cell-level fidelity across 4 fixtures (incl. the 100-column
-    // missing-values one and the epoch-extremes datetime one) is pinned
-    // in SasBdatSpec against committed golden dumps.
+    // (read-only; SasBdatIo). The input is the committed productsales
+    // fixture (src/main/resources/sas7bdat: 1440 rows of strings +
+    // truncated-width numerics + a MONNAME date column, rows on a mix
+    // page and data pages), written by the test-scope SasBdatWriter from the
+    // golden cell dump of the SAS-written original. The compared row is
+    // a panel of aggregates whose constants were stated ONCE from the
+    // independent reader of record on the SAS original, so they still
+    // state SAS ground truth — any offset, width, truncated-double,
+    // trimming, or 1960-epoch bug moves a sum, a distinct count, a char
+    // mass, or a date bound and hash-fails. A fault the writer shares
+    // with the reader passes here; SasBdatSpec's real-file tier and
+    // tools/sas7bdat_pandas_check.py are the legs that catch one.
     QueryDef("sas7bdat_read",
       (s, d) => {
-        // environment-coupled input (the one gate that reads a REAL
-        // SAS-written file rather than generated tables): fail with a
-        // clear message if the fixture tree isn't mounted — Verify's
-        // per-query catch keeps that from poisoning the rest of the run
-        val fixture =
-          "/root/reference/pandas/tests/io/sas/data/productsales.sas7bdat"
-        require(new java.io.File(fixture).isFile,
-          s"sas7bdat interop fixture not found: $fixture")
-        val df = graft.sources.SasBdatIo.read(s, fixture,
-          splitBytes = 32768)
+        val df = graft.sources.SasBdatIo.read(s,
+          sasFixture("productsales"), splitBytes = 32768)
         df.agg(
           count(lit(1)).as("n_rows"),
           sum(col("ACTUAL")).cast("long").as("actual_sum"),
@@ -361,20 +370,17 @@ object IoQueries extends QueryModule {
 
     // sas7bdat codec matrix gate: the SAME aggregates computed from one
     // RLE (SASYZCRL), one RDC (SASYZCR2), and one big-endian 64-bit RLE
-    // file — three REAL SAS-written fixtures that all encode the same
-    // 10×100 frame, so the oracle states one constant panel per file
-    // tag (from the golden frame, independently). Any decompressor,
-    // endianness, or truncated-double bug moves a sum and hash-fails.
-    // Cell-level fidelity across the FULL 16-file matrix is pinned in
-    // SasBdatSpec.
+    // encoding of the test1 golden frame (10×100, missing doubles AND
+    // strings, 3- and 4-byte truncated numerics) — committed fixtures
+    // written by SasBdatWriter, so the oracle states one constant panel
+    // per file tag (from the golden frame, independently). Any
+    // decompressor, endianness, or truncated-double bug moves a sum and
+    // hash-fails. Cell-level fidelity across the full 12-layout matrix
+    // is pinned in SasBdatSpec.
     QueryDef("sas7bdat_codec_read",
       (s, d) => {
-        val dir = "/root/reference/pandas/tests/io/sas/data"
-        require(new java.io.File(dir).isDirectory,
-          s"sas7bdat interop fixtures not found under $dir")
-        Seq("test2" -> "rle_le32", "test3" -> "rdc_le32",
-          "test15" -> "rle_be64").map { case (f, tag) =>
-          graft.sources.SasBdatIo.read(s, s"$dir/$f.sas7bdat",
+        Seq("rle_le32", "rdc_le32", "rle_be64").map { tag =>
+          graft.sources.SasBdatIo.read(s, sasFixture(s"test1_$tag"),
             splitBytes = 32768)
             .agg(
               count(lit(1)).as("n_rows"),

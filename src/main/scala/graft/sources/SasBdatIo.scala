@@ -337,9 +337,9 @@ object SasBdatIo {
   /** RLE codec SASYZCRL (control nibble + count nibble; documented in
     * the CRAN sas7bdat vignette). Literal runs: 0x0_ (count byte + 64),
     * 0x8/9/A/B_ (low + 1/17/33/49). Single-byte repeats: 0x4_
-    * (low·16 + count byte) and 0xC_ (low + 3). Constant fills: 0x6_/7_
-    * = blank/NUL · (low·256 + count byte + 17), 0xD/E/F_ =
-    * '@'/blank/NUL · (low + 2). */
+    * (low·256 + count byte + 18, as the reference reader decodes it)
+    * and 0xC_ (low + 3). Constant fills: 0x6_/7_ = blank/NUL ·
+    * (low·256 + count byte + 17), 0xD/E/F_ = '@'/blank/NUL · (low + 2). */
   private[sources] def rleDecompress(in: Array[Byte], off: Int, len: Int,
       outLen: Int): Array[Byte] = {
     val out = new Array[Byte](outLen)
@@ -356,7 +356,7 @@ object SasBdatIo {
           val n = (in(ip) & 0xff) + 64; ip += 1
           System.arraycopy(in, ip, out, op, n); ip += n; op += n
         case 0x40 =>
-          val n = low * 16 + (in(ip) & 0xff); ip += 1
+          val n = low * 256 + (in(ip) & 0xff) + 18; ip += 1
           java.util.Arrays.fill(out, op, op + n, in(ip)); ip += 1; op += n
         case 0x60 =>
           val n = low * 256 + (in(ip) & 0xff) + 17; ip += 1
