@@ -491,17 +491,23 @@ object IngestCommit {
     * Concurrent under [[NoFailpoint]], sequential (with the
     * "after-corpus" / "after-index" crash points) otherwise; a failure
     * rethrows only AFTER both writes settle, so no stray in-flight
-    * write may outlive this batch into the next. */
+    * write may outlive this batch into the next. The concurrent index
+    * append runs on [[writePool]] with the caller's session and local
+    * properties (job group, scheduler pool, tags), so its jobs carry
+    * the same attribution as the corpus write on the caller's thread. */
   private def publishAndCommit(spark: SparkSession, logDir: String,
       batchId: Long, failpoint: String => Unit)(writeCorpus: => Unit)
       (writeIndex: => Unit): Boolean = {
     if (failpoint eq NoFailpoint) {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val f1 = Future(writeCorpus); val f2 = Future(writeIndex)
-      val r1 = scala.util.Try(Await.result(f1, Duration.Inf))
-      val r2 = scala.util.Try(Await.result(f2, Duration.Inf))
+      val index = org.apache.spark.sql.execution.SQLExecution
+        .withThreadLocalCaptured(
+          spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+          writePool)(writeIndex)
+      val r1 = scala.util.Try(writeCorpus)
+      val r2 = scala.util.Try(
+        try index.join()
+        catch { case e: java.util.concurrent.CompletionException =>
+          throw e.getCause })
       r1.get; r2.get
     } else {
       writeCorpus; failpoint("after-corpus")
@@ -510,6 +516,15 @@ object IngestCommit {
     appendLog(spark, logDir, batchId, "commit")
     true
   }
+
+  /** Daemon threads for [[publishAndCommit]]'s index append; each task
+    * installs its captured local properties on entry. */
+  private lazy val writePool: java.util.concurrent.ExecutorService =
+    java.util.concurrent.Executors.newCachedThreadPool { (r: Runnable) =>
+      val t = new Thread(r, "graft-ingest-index-append")
+      t.setDaemon(true)
+      t
+    }
 
   /** The COMMITTED corpus view: partition directories with
     * `ingest_id` at or below the high-water-mark, stamp dropped — a
@@ -834,12 +849,14 @@ object IngestCommit {
     * order is a convention, not a correctness dependency. Returns
     * false (no storage writes) for an already-committed batch.
     *
-    * Driver-cost shape (the r17 witness measured ~10 actions per
-    * micro-batch): here the banded join + component rounds run ONCE —
-    * the slim survivor-ID set is checkpointed and the corpus write,
-    * bands append, and sigs append all derive from checkpointed
-    * inputs — and `kKnown` skips the per-append signature-length
-    * probe job.
+    * Driver-cost shape: `batch` (the caller's lineage, typically
+    * gated, exact-deduped and scored) is evaluated ONCE, into an eager
+    * localCheckpoint; signatures, survivors, the corpus write and the
+    * sigs append all read it, so corpus partition and index append
+    * come from the same rows by construction. The survivor step
+    * collects (or, past its cap, checkpoints) the pair set eagerly, so
+    * the survivor frame is a cheap anti-join over materialized inputs.
+    * `kKnown` skips the per-append signature-length probe job.
     *
     * `failpoint` is a test hook invoked at the named crash points
     * ("after-survivors", "after-corpus", "after-index"); production
@@ -857,20 +874,20 @@ object IngestCommit {
       case None => return false
       case Some(r) => r
     }
+    val docs = batch.localCheckpoint(true) // the ONE batch evaluation
     // Core filters the index to rows committed at the hwm — the
     // crashed attempt's own stamped rows are invisible, making the
     // survivor set identical on every replay (the determinism the
     // recovery subtraction in appendSigsToIndex relies on)
     val (batchSigs, survivors) = TextDedupOps.lshIncrementalIndexedCore(
-      batch, indexDir, idCol, textCol, shingleN, k, bands, threshold,
+      docs, indexDir, idCol, textCol, shingleN, k, bands, threshold,
       maxBucketSize)
-    val ids = survivors.select(col(idCol).cast("long").as(idCol))
-      .localCheckpoint(true) // slim; the ONE pair computation per batch
     failpoint("after-survivors")
-    val surv = batch.join(ids, Seq(idCol), "left_semi")
-    val survSigs = batchSigs.join(ids, Seq(idCol), "left_semi")
+    val survSigs = batchSigs.join(
+      survivors.select(col(idCol).cast("long").as(idCol)), Seq(idCol),
+      "left_semi")
     publishAndCommit(spark, logDir, batchId, failpoint) {
-      surv.write.mode("overwrite")
+      survivors.write.mode("overwrite")
         .parquet(s"$corpusDir/ingest_id=$batchId")
     } {
       TextDedupOps.appendSigsToIndex(survSigs, indexDir, idCol, bands,

@@ -1,8 +1,10 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.Platform
 
 import IngestCommit.{lshStore, minusTombstones, readTombstones,
   simHashStore}
@@ -13,9 +15,9 @@ import IngestCommit.{lshStore, minusTombstones, readTombstones,
   *
   * Scale design: every path is shuffle-on-key only —
   *   exact:   one shuffle on the content hash;
-  *   minhash: explode shingles (flatMap), hash-agg per doc, explode
-  *            bands, shuffle on (band, bandHash) buckets, pair-join
-  *            INSIDE buckets only (never all-pairs);
+  *   minhash: row-local signatures (no shuffle), explode bands,
+  *            shuffle on (band, bandHash) buckets, pair-join INSIDE
+  *            buckets only (never all-pairs);
   *   simhash: flatMap tokens + one hash-agg.
   * At 100 TB none of these materialize a cross join; candidate pairs are
   * bounded by bucket co-membership, and skewed buckets (boilerplate
@@ -161,52 +163,84 @@ object TextDedupOps {
       rnd.nextInt(HashP.toInt).toLong))
   }
 
-  /** Shingle hashes WITHOUT building shingle strings: hash each word
-    * once, then combine n consecutive word hashes polynomially mod the
-    * Mersenne prime (a different but equally uniform hash family than
-    * hashing the joined string — MinHash only needs consistency).
-    * Per shingle: n array lookups + n mod-multiplies, no string
-    * allocation; every intermediate stays < 2^62 (ANSI-safe). Shingle
-    * multiplicity is NOT deduped — min() is idempotent, so duplicate
-    * shingles cannot change a signature. */
-  /** `wordHashes` MUST be a materialized column (attribute), not an
-    * inline transform(...) expression: HOF lambdas re-evaluate captured
-    * subtrees per element, which would re-hash every word per shingle
-    * (O(words²)).
-    *
-    * A document of m < n words (empty text normalizes to one empty
-    * word) yields ONE shingle, the same polynomial over its m words:
-    * terms past the end count 0 (a guard ≥ n-word documents never
-    * hit). A NULL word array yields one NULL shingle. */
-  def shingleHashesFromWordHashes(wordHashes: Column, n: Int): Column = {
-    val coeffs = Seq(1299709L, 15485863L, 32452843L, 49979687L, 67867967L)
-    transform(
-      sequence(lit(0), greatest(size(wordHashes) - n, lit(0))),
-      i => pmod((0 until n).map { j =>
-        val t = pmod(element_at(wordHashes, i + j + 1) *
-          lit(coeffs(j % coeffs.size)), lit(HashP))
-        if (j == 0) t else when(size(wordHashes) > i + j, t).otherwise(0L)
-      }.reduce(_ + _), lit(HashP)))
-  }
+  /** Polynomial coefficients of the shingle hash: word j of a shingle
+    * weighs `ShingleCoeffs(j % 5)`. Part of the persisted signature
+    * format, like [[HashP]] and [[hashParams]]. */
+  private val ShingleCoeffs: Array[Long] =
+    Array(1299709L, 15485863L, 32452843L, 49979687L, 67867967L)
 
-  /** MinHash signatures: doc_id → array of k minima of permuted shingle
-    * hashes. Exploded flatMap + map-side-combined hash aggregation; only
-    * k minima per doc ever shuffle, never shingles. */
+  /** MinHash signatures: idCol → array of k minima of permuted shingle
+    * hashes (`array<bigint>`, NULL-able elements). `normalize` runs as
+    * a Column expression and the signature as one row-local kernel
+    * ([[minHashKernel]]): a document's shingles all live in its row, so
+    * nothing explodes and nothing shuffles. One output row per input
+    * row — `idCol` must be a KEY of `df` (rows sharing an id are not
+    * merged). NULL text yields an all-NULL signature. */
   def minHashSignatures(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, k: Int = 32, seed: Long = 42L): DataFrame = {
-    val params = hashParams(k, seed)
-    val exploded = df
-      .withColumn("__words", split(normalize(col(textCol)), " "))
-      .withColumn("__wh", transform(col("__words"),
-        w => pmod(xxhash64(w), lit(HashP))))
-      .select(col(idCol),
-        explode(shingleHashesFromWordHashes(col("__wh"), shingleN)).as("__h"))
-    val mins = params.zipWithIndex.map { case ((a, b), i) =>
-      min(pmod(col("__h") * lit(a) + lit(b), lit(HashP))).as(s"__m$i")
+    require(shingleN >= 1 && k >= 1,
+      s"minHashSignatures: shingleN ($shingleN) and k ($k) must be >= 1")
+    val (a, b) = hashParams(k, seed).toArray.unzip
+    val sign = udf((t: String) => minHashKernel(t, shingleN, a, b))
+      .asNonNullable()
+    df.select(col(idCol), sign(normalize(col(textCol))).as("signature"))
+  }
+
+  /** The k MinHash minima of one NORMALIZED text. Words are the text's
+    * " "-separated runs, each hashed once as Spark's `xxhash64` (seed
+    * 42) of its UTF-8 bytes, mod [[HashP]]. Shingle s combines words
+    * s..s+n-1 polynomially, Σ_j floorMod(wh(s+j)·c(j % 5), P) mod P,
+    * with no shingle string built (a different but equally uniform
+    * family than hashing the joined string; MinHash only needs
+    * consistency). A text of m < n words (the empty text is one empty
+    * word) is ONE shingle over its m words. Minimum t is
+    * min_s floorMod(h_s·a(t) + b(t), P); every intermediate stays below
+    * 2^62. NULL text gives k NULL minima. */
+  private def minHashKernel(text: String, n: Int, a: Array[Long],
+      b: Array[Long]): Array[java.lang.Long] = {
+    val k = a.length
+    val out = new Array[java.lang.Long](k)
+    if (text == null) return out
+    val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    var m = 1
+    var i = 0
+    while (i < bytes.length) { if (bytes(i) == ' ') m += 1; i += 1 }
+    val wh = new Array[Long](m)
+    var w = 0
+    var start = 0
+    i = 0
+    while (i <= bytes.length) {
+      if (i == bytes.length || bytes(i) == ' ') {
+        wh(w) = Math.floorMod(XXH64.hashUnsafeBytes(bytes,
+          Platform.BYTE_ARRAY_OFFSET + start, i - start, 42L), HashP)
+        w += 1
+        start = i + 1
+      }
+      i += 1
     }
-    exploded.groupBy(col(idCol)).agg(mins.head, mins.tail: _*)
-      .select(col(idCol),
-        array((0 until k).map(i => col(s"__m$i")): _*).as("signature"))
+    val mins = Array.fill(k)(Long.MaxValue)
+    val last = math.max(m - n, 0)
+    var s = 0
+    while (s <= last) {
+      var h = 0L
+      var j = 0
+      while (j < n && s + j < m) {
+        h += Math.floorMod(wh(s + j) * ShingleCoeffs(j % ShingleCoeffs.length),
+          HashP)
+        j += 1
+      }
+      h = Math.floorMod(h, HashP)
+      var t = 0
+      while (t < k) {
+        val v = Math.floorMod(h * a(t) + b(t), HashP)
+        if (v < mins(t)) mins(t) = v
+        t += 1
+      }
+      s += 1
+    }
+    var t = 0
+    while (t < k) { out(t) = mins(t); t += 1 }
+    out
   }
 
   /** LSH banding: candidate pairs whose signatures collide in ≥1 of
@@ -333,9 +367,8 @@ object TextDedupOps {
   /** [[lshIncremental]] plus the SURVIVORS' signature frame — the rows
     * a production ingest loop appends to its persisted index: a
     * semi-join of the batch's checkpointed signatures, since
-    * re-signaturing the survivors from text would repeat the
-    * shingle-explode + k-way min aggregation, the dominant per-batch
-    * cost of the loop. `existingSignatures` is RE-EXECUTED per consumer
+    * re-signaturing the survivors from text would re-run the batch
+    * lineage and the signature kernel. `existingSignatures` is RE-EXECUTED per consumer
     * — fine for a parquet read or a checkpointed in-session index; an
     * expensive un-materialized lineage should be persisted first, or
     * use [[lshIncrementalIndexed]] where storage IS the index. */
@@ -359,7 +392,7 @@ object TextDedupOps {
     *
     * The pair join consumes the batch signatures THREE times (band
     * explode + two re-attach joins): an EAGER localCheckpoint runs the
-    * shingle-explode + k-way min aggregation once and TRUNCATES the
+    * batch lineage and the signature kernel once and TRUNCATES the
     * plan to an RDD scan — the point, since per-batch driver time in
     * the ingest loop was Catalyst re-analysis of the nested copies, not
     * Spark jobs. The existing side is storage-backed and cheap to
@@ -784,11 +817,10 @@ object TextDedupOps {
 
   /** [[lshIncrementalIndexed]] minus the survivor-signature join —
     * returns (the batch's checkpointed signature frame, the survivor
-    * frame) so the exactly-once ingest loop can materialize the SLIM
-    * survivor-id set once and derive the corpus
-    * write, the bands append, and the sigs append from checkpointed
-    * inputs (one pair computation per batch instead of one per
-    * consumer). When the index carries a commit log
+    * frame) so the exactly-once ingest loop derives the corpus write,
+    * the bands append and the sigs append from its materialized batch
+    * (one pair computation per batch instead of one per consumer).
+    * When the index carries a commit log
     * (`indexDir/commits`, see [[IngestCommit]]), the index reads are
     * filtered to the COMMITTED view: rows stamped above the
     * high-water-mark — a crashed ingest attempt's partial append —

@@ -2886,9 +2886,10 @@ object LlmQueries extends QueryModule {
     // positives / near-dup candidates stay covered by LlmSpec's
     // planted-dup recall test.
     // Signatures persist MEMORY_AND_DISK: the plan consumes them three
-    // times (band explode + two pair-side re-attach joins), and the
-    // shingle-explode+32-way min agg is the expensive stage — at any
-    // scale you materialize signatures once, never recompute per use.
+    // times (band explode + two pair-side re-attach joins), and each
+    // consumer would otherwise re-run the corpus scan, the 2-regex
+    // normalize and the row-local signature kernel — at any scale you
+    // materialize signatures once, never recompute per use.
     // Registered with DistScan's release queue so the application's
     // step-boundary releaseCaches() frees them.
     QueryDef("minhash_near_dup",

@@ -494,7 +494,11 @@ object SasBdatIo {
     } else throw new IllegalStateException(s"unknown page type $pType")
   }
 
-  private def decodeRow(m: BdatMeta, buf: Array[Byte], base: Int): Row = {
+  /** One row; `kinds(i)` is column i's [[sparkTypeOf]], computed once
+    * per read, which picks the numeric decode (timestamp, date or plain
+    * double). */
+  private def decodeRow(m: BdatMeta, kinds: Array[DataType],
+      buf: Array[Byte], base: Int): Row = {
     val arr = new Array[Any](m.columns.size)
     var i = 0
     while (i < m.columns.size) {
@@ -516,9 +520,8 @@ object SasBdatIo {
           else System.arraycopy(buf, off, b8, 0, c.width)
           val v = ByteBuffer.wrap(b8).order(ord(m.le)).getDouble
           if (java.lang.Double.isNaN(v)) null
-          else {
-            val f = formatName(c.format)
-            if (DatetimeFormats.contains(f)) {
+          else kinds(i) match {
+            case TimestampType =>
               // seconds serial since 1960; snap to the ms boundary
               // within ±2 µs (SasXportIo rationale)
               val raw = math.round(v * 1e6) + SasEpochMs * 1000L
@@ -528,10 +531,10 @@ object SasBdatIo {
               val t = new Timestamp(Math.floorDiv(micros, 1000000L) * 1000L)
               t.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
               t
-            } else if (DateFormats.contains(f)) {
+            case DateType =>
               Date.valueOf(LocalDate.ofEpochDay(
                 math.round(v) + SasEpochDay))
-            } else v
+            case _ => v
           }
         }
       i += 1
@@ -557,6 +560,7 @@ object SasBdatIo {
     val meta = parseMeta(() => fs.open(new Path(files.head)), encoding)
     val schema = StructType(meta.columns.map(c =>
       StructField(c.name, sparkTypeOf(c), nullable = true)))
+    val kinds = schema.fields.map(_.dataType)
 
     val targetBytes = math.min(math.max(1L, splitBytes), 1L << 30)
     // Per-FILE metadata: only the column layout must agree across a
@@ -595,7 +599,7 @@ object SasBdatIo {
             in.readFully(m.headerLength + (pageStart + k) * m.pageSize,
               page)
             pageRows(m, page).map { case (buf, base) =>
-              decodeRow(m, buf, base)
+              decodeRow(m, kinds, buf, base)
             }.toVector
           }
         } finally in.close()

@@ -212,6 +212,32 @@ class IngestCommitSpec extends SparkSpec {
     assertIndexConsistent(index, corpus)
   }
 
+  test("near-dup ingest evaluates its input lineage once per batch") {
+    val root = tmpDir("near-once")
+    val (index, corpus) = (s"$root/index", s"$root/corpus")
+    initIndex(index)
+    // every row the batch lineage produces passes this filter once per
+    // evaluation of the lineage; parquet input keeps the optimizer from
+    // folding the filter into a driver-side local relation
+    val evals = spark.sparkContext.longAccumulator("near-dup-batch-rows")
+    val seen = udf(() => { evals.add(1); true }).asNondeterministic()
+    batches.zipWithIndex.foreach { case (b, i) =>
+      val in = s"$root/in-$i"
+      b.write.parquet(in)
+      val rows = spark.read.parquet(in).count()
+      evals.reset()
+      assert(IngestCommit.nearDupIngestBatch(
+        spark.read.parquet(in).filter(seen()), i.toLong, index, corpus,
+        threshold = 0.99))
+      assert(evals.value == rows, s"batch $i: ${evals.value} row " +
+        s"evaluations for $rows rows")
+    }
+    assertFrameEqual(
+      IngestCommit.committedCorpus(spark, corpus, s"$index/commits"),
+      oneShotOracle)
+    assertIndexConsistent(index, corpus)
+  }
+
   test("simhash ingest: kills at both crash points replay to the " +
       "one-shot result; committed batches skip; hash index consistent") {
     val root = tmpDir("simhash")

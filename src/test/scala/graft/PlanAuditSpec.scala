@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
 
 /** Physical-plan audits: SCALE.md's claims pinned as assertions so a
   * refactor cannot silently reintroduce a full scan, a lost broadcast,
@@ -375,6 +376,15 @@ class PlanAuditSpec extends SparkSpec {
     assert(ex <= 6, s"substring_dedup shuffles too much ($ex):\n${p.take(3000)}")
   }
 
+  /** The Spark plan of every registry query, built and planned once
+    * for both registry-wide guards below. A query that fails to plan
+    * fails the guard that reads the map first. */
+  private lazy val registryPlans: Seq[(String, SparkPlan)] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (n, fn) =>
+      n -> (try fn(spark, d).queryExecution.sparkPlan
+        catch { case e: Throwable => fail(s"$n failed to plan: $e") })
+    }
+
   /** Registry-wide guard: WindowExec with an empty partition spec moves
     * ALL rows to one partition — fatal at 100 TB unless the input is
     * provably bounded (top-k frames, O(groups) aggregates). The exact
@@ -387,13 +397,9 @@ class PlanAuditSpec extends SparkSpec {
   test("registry-wide: queries with an unpartitioned WindowExec are " +
       "exactly the pinned bounded-input set") {
     import org.apache.spark.sql.execution.window.WindowExec
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (n, fn) =>
-        val sp =
-          try fn(spark, d).queryExecution.sparkPlan
-          catch { case e: Throwable => fail(s"$n failed to plan: $e") }
-        val bad = sp.collect { case w: WindowExec if w.partitionSpec.isEmpty => w }
-        if (bad.nonEmpty) Some(n) else None
+    val offenders = registryPlans.collect {
+      case (n, sp) if sp.collect {
+          case w: WindowExec if w.partitionSpec.isEmpty => w }.nonEmpty => n
     }.toSet
     val allowed: Set[String] = Set(
       "iloc_slice",             // window input is orderBy.limit(110)
@@ -417,13 +423,9 @@ class PlanAuditSpec extends SparkSpec {
     // broadcast of a bounded literal/query side — never corpus×corpus.
     // A new query joining without keys lands here loudly instead of
     // shipping a quadratic plan at 100 TB.
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (n, fn) =>
-        val p =
-          try fn(spark, d).queryExecution.sparkPlan.toString
-          catch { case e: Throwable => fail(s"$n failed to plan: $e") }
-        if (p.contains("CartesianProduct") ||
-            p.contains("BroadcastNestedLoopJoin")) Some(n) else None
+    val offenders = registryPlans.collect {
+      case (n, sp) if Seq("CartesianProduct", "BroadcastNestedLoopJoin")
+          .exists(sp.toString.contains) => n
     }.toSet
     val allowed: Set[String] = Set(
       "join_cross",            // the cross-join operator itself

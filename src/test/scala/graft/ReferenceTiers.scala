@@ -1,6 +1,6 @@
 package graft
 
-import graft.llm.TextStatsOps
+import graft.llm.{TextDedupOps, TextStatsOps}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -14,7 +14,9 @@ import org.apache.spark.sql.functions._
   *   - unigram: the Viterbi DP as an `aggregate` over prefix cells,
   *     against `TextStatsOps.viterbiSegment`;
   *   - Gopher repetition: the staged expression form, against
-  *     `TextStatsOps.gopherRepetition`.
+  *     `TextStatsOps.gopherRepetition`;
+  *   - MinHash: the shingle explode + k-way `min` aggregation, against
+  *     `TextDedupOps.minHashSignatures`.
   * Every table rides the plan as a literal and every loop is an
   * interpreted higher-order function: fine for spec-sized inputs,
   * O(len²) and worse per word. */
@@ -302,5 +304,54 @@ object ReferenceTiers {
           rules.map { case (fn, on, th) => (col(fn) <= th).as(on) } :+
           rules.map { case (fn, _, th) => col(fn) <= th }
             .reduce(_ && _).as("keep")): _*)
+  }
+
+  // ───── MinHash ─────
+
+  /** Shingle hashes WITHOUT building shingle strings: each word hashed
+    * once, then n consecutive word hashes combined polynomially mod
+    * `HashP`, coefficients cycling j % 5. Per shingle: n array lookups
+    * + n mod-multiplies; every intermediate stays < 2^62 (ANSI-safe).
+    * Shingle multiplicity is NOT deduped — min() is idempotent.
+    *
+    * `wordHashes` MUST be a materialized column (attribute), not an
+    * inline transform(...) expression: HOF lambdas re-evaluate
+    * captured subtrees per element (O(words²)).
+    *
+    * A document of m < n words (empty text normalizes to one empty
+    * word) yields ONE shingle, the same polynomial over its m words:
+    * terms past the end count 0. A NULL word array yields one NULL
+    * shingle. The coefficients are restated here, not read from main:
+    * they are part of the persisted signature format. */
+  def shingleHashesFromWordHashes(wordHashes: Column, n: Int): Column = {
+    val coeffs = Seq(1299709L, 15485863L, 32452843L, 49979687L, 67867967L)
+    transform(
+      sequence(lit(0), greatest(size(wordHashes) - n, lit(0))),
+      i => pmod((0 until n).map { j =>
+        val t = pmod(element_at(wordHashes, i + j + 1) *
+          lit(coeffs(j % coeffs.size)), lit(TextDedupOps.HashP))
+        if (j == 0) t else when(size(wordHashes) > i + j, t).otherwise(0L)
+      }.reduce(_ + _), lit(TextDedupOps.HashP)))
+  }
+
+  /** MinHash signatures as an explode + map-side-combined `min`
+    * aggregation: one row per shingle, k minima per doc behind one
+    * exchange. Rows sharing an id merge into one signature. */
+  def minHashSignatures(df: DataFrame, idCol: String, textCol: String,
+      shingleN: Int = 3, k: Int = 32, seed: Long = 42L): DataFrame = {
+    val p = TextDedupOps.HashP
+    val exploded = df
+      .withColumn("__words", split(TextDedupOps.normalize(col(textCol)), " "))
+      .withColumn("__wh", transform(col("__words"),
+        w => pmod(xxhash64(w), lit(p))))
+      .select(col(idCol),
+        explode(shingleHashesFromWordHashes(col("__wh"), shingleN)).as("__h"))
+    val mins = TextDedupOps.hashParams(k, seed).zipWithIndex.map {
+      case ((a, b), i) =>
+        min(pmod(col("__h") * lit(a) + lit(b), lit(p))).as(s"__m$i")
+    }
+    exploded.groupBy(col(idCol)).agg(mins.head, mins.tail: _*)
+      .select(col(idCol),
+        array((0 until k).map(i => col(s"__m$i")): _*).as("signature"))
   }
 }
