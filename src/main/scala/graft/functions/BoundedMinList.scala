@@ -7,12 +7,15 @@ import org.apache.spark.sql.expressions.Aggregator
   * elements — the skew-safe primitive behind per-key top-N
   * (`GroupOps.headPerKey` / pandas groupby.head(n)/nth(n)).
   *
-  * Why not a window: `row_number().over(partitionBy(key))` ships every
-  * row of a hot key to ONE task (the r11 paragraph-dedup lesson —
-  * WindowExec cannot partial-aggregate). This Aggregator's reduce and
-  * merge both cap the state at n, so map-side partial aggregation
-  * collapses a 10⁸-row domain to n values per map partition before the
-  * shuffle — the same plan shape that makes min() skew-immune.
+  * Why not a window: a `row_number()` (or, for `headPerKey`'s
+  * boundary ties, `rank()`) `<= n` window gets a map-side `Partial`
+  * WindowGroupLimit only while n ≤ 1000
+  * (`spark.sql.optimizer.windowGroupLimitThreshold`); above it the
+  * window ships every row of a hot key to ONE task (the r11
+  * paragraph-dedup lesson). This Aggregator's reduce and merge cap the
+  * state at n for every n, so map-side partial aggregation collapses a
+  * 10⁸-row domain to n values per map partition before the shuffle —
+  * the same plan shape that makes min() skew-immune.
   *
   * The buffer is a sorted ascending Array[Long]. Cost shape: once the
   * buffer holds n values, any input ≥ its maximum is rejected in O(1)

@@ -17,12 +17,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * four times through generic ArrayData plumbing; this expression is a
   * single fused loop inside whole-stage codegen — no allocation, no
   * virtual calls in the hot path. Produces bit-identical results to the
-  * sequential-fold composition (same per-accumulator add order).
+  * sequential-fold composition (same per-accumulator add order), and
+  * its zero-norm rule: a 0 norm product gives NULL, not 0/0 = NaN.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
   extends BinaryExpression {
 
   override def nullIntolerant: Boolean = true
+
+  override def nullable: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult = {
     def ok(dt: DataType): Boolean = dt match {
@@ -51,7 +54,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
       dot += xi * yi; na += xi * xi; nb += yi * yi
       i += 1
     }
-    dot / (math.sqrt(na) * math.sqrt(nb))
+    val den = math.sqrt(na) * math.sqrt(nb)
+    if (den == 0.0) null else dot / den
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -64,6 +68,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
       val dot = ctx.freshName("dot")
       val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
       val xi = ctx.freshName("xi"); val yi = ctx.freshName("yi")
+      val den = ctx.freshName("den")
       s"""
          |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
          |double $dot = 0.0, $na = 0.0, $nb = 0.0;
@@ -72,7 +77,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
          |  double $yi = (double) $b.getFloat($i);
          |  $dot += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
          |}
-         |${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
+         |double $den = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
+         |${ev.isNull} = $den == 0.0;
+         |if (!${ev.isNull}) ${ev.value} = $dot / $den;
        """.stripMargin
     })
 

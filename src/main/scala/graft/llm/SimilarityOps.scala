@@ -4,16 +4,23 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Embedding similarity search (north-star LLM pipeline).
+/** Embedding similarity search (north-star LLM pipeline): exact, LSH,
+  * IVF, int8, PQ and IVF-PQ top-k, in memory and over persisted
+  * indexes, plus MMR, SemDeDup and the quantizer trainers.
   *
-  * Two tiers:
-  *   - bruteForceTopK: broadcast the (small) query set against the
-  *     corpus scan — exact, one pass, no shuffle of the corpus. The
-  *     baseline and the verifier for the approximate tier.
-  *   - lshTopK: bucket vectors by sign-bit sketch (random-hyperplane
-  *     LSH), join queries to corpus within buckets only — the 100 TB
-  *     path: candidate count scales with bucket occupancy, not corpus
-  *     size. Recall is tunable via sketch bits / multiple tables.
+  * The top-k tiers share one core. [[topKPerQuery]] is the only
+  * per-query rank: a window row number over (score desc NULLS LAST,
+  * id asc), kept to 1..k. For k up to
+  * `spark.sql.optimizer.windowGroupLimitThreshold` (1000) Spark plans
+  * a `Partial` WindowGroupLimit below the query-id exchange and a
+  * `Final` one above it — a local top-k per map partition, then a
+  * global merge; above the threshold (the corpus-covering PQ
+  * shortlists) every candidate of a query reaches one task. On it sit
+  * the exact step ([[exactTopK]]: drop self-pairs, [[cosine]], rank),
+  * which the brute-force, LSH and IVF tiers feed candidate pairs, and
+  * the shortlist + re-rank step ([[rerankTopK]]) of the int8, PQ and
+  * IVF-PQ tiers. [[probeCells]] picks the nprobe nearest cells for the
+  * four IVF tiers.
   *
   * All arithmetic in double via codegen'd higher-order functions
   * (zip_with + aggregate) — no UDF, no collect.
@@ -28,22 +35,58 @@ object SimilarityOps {
 
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
 
+  /** Cosine similarity, NULL when either side has zero norm: such a
+    * candidate ranks after every scored one (`score desc` is NULLS
+    * LAST) instead of failing the query with an ANSI divide-by-zero.
+    * [[graft.functions.CosineSimilarity]] follows the same rule. */
   def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (l2Norm(a) * l2Norm(b))
+    try_divide(dot(a, b), l2Norm(a) * l2Norm(b))
+
+  /** The per-query top-k: rank `scored` within each `qId` by
+    * `scoreCol` descending (NULLs last), ties by `cId` ascending, and
+    * keep ranks 1..k in `rnCol`. The one rank window of the ANN and
+    * search tiers; the object header describes its plan. */
+  def topKPerQuery(scored: DataFrame, qId: String, cId: String, k: Long,
+      scoreCol: String = "score", rnCol: String = "rn"): DataFrame = {
+    require(k >= 1, s"topKPerQuery: k must be >= 1: $k")
+    val w = Window.partitionBy(qId).orderBy(col(scoreCol).desc, col(cId).asc)
+    scored.withColumn(rnCol, row_number().over(w)).filter(col(rnCol) <= k)
+  }
+
+  /** The exact step: drop self-pairs from the candidate `pairs`, score
+    * them with [[cosine]] and keep the top k per query as
+    * (qId, cId, score, rn). */
+  private def exactTopK(pairs: DataFrame, k: Int, qId: String, cId: String,
+      qEmb: String = "q_emb", embCol: String = "embedding"): DataFrame =
+    topKPerQuery(pairs.filter(col(qId) =!= col(cId))
+        .withColumn("score",
+          cosine(toDoubleArr(col(qEmb)), toDoubleArr(col(embCol)))),
+      qId, cId, k)
+      .select(col(qId), col(cId), col("score"), col("rn"))
+
+  /** The shortlist + re-rank step: keep the top rerankFactor·k
+    * candidates per query by the approximate `__ascore` (self-pairs
+    * dropped), join the float vectors back by id when `rerankFrom` is
+    * given (the persisted-index shape: the probe scan never touches
+    * them), then run the exact step. Approximation affects candidate
+    * selection only. */
+  private def rerankTopK(approx: DataFrame, k: Int, rerankFactor: Int,
+      rerankFrom: Option[DataFrame], qId: String, cId: String,
+      qEmb: String, embCol: String): DataFrame = {
+    require(rerankFactor >= 1, s"rerankFactor must be >= 1: $rerankFactor")
+    val shortlist = topKPerQuery(approx.filter(col(qId) =!= col(cId)),
+      qId, cId, rerankFactor.toLong * k, "__ascore", "__arn")
+    val withFloats = rerankFrom.fold(shortlist)(corpus => shortlist
+      .select(col(qId), col(qEmb), col(cId))
+      .join(corpus.select(col(cId), col(embCol)), Seq(cId)))
+    exactTopK(withFloats, k, qId, cId, qEmb, embCol)
+  }
 
   /** Exact top-k neighbors for each query vector (self excluded).
     * Queries are expected to be broadcast-sized. */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-      qId: String = "q_id", cId: String = "vec_id"): DataFrame = {
-    val scored = broadcast(queries).crossJoin(corpus)
-      .filter(col(qId) =!= col(cId))
-      .withColumn("score",
-        cosine(toDoubleArr(col("q_emb")), toDoubleArr(col("embedding"))))
-    val w = Window.partitionBy(qId).orderBy(col("score").desc, col(cId).asc)
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col(qId), col(cId), col("score"), col("rn"))
-  }
+      qId: String = "q_id", cId: String = "vec_id"): DataFrame =
+    exactTopK(broadcast(queries).crossJoin(corpus), k, qId, cId)
 
   /** Sign-bit sketch on the first `bits` dimensions (a fixed axis-
     * aligned hyperplane family — deterministic, oracle-friendly;
@@ -58,14 +101,7 @@ object SimilarityOps {
       qId: String = "q_id", cId: String = "vec_id"): DataFrame = {
     val qb = queries.withColumn("bucket", signBucket(col("q_emb"), bits))
     val cb = corpus.withColumn("bucket", signBucket(col("embedding"), bits))
-    val scored = broadcast(qb).join(cb, Seq("bucket"))
-      .filter(col(qId) =!= col(cId))
-      .withColumn("score",
-        cosine(toDoubleArr(col("q_emb")), toDoubleArr(col("embedding"))))
-    val w = Window.partitionBy(qId).orderBy(col("score").desc, col(cId).asc)
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col(qId), col(cId), col("score"), col("rn"))
+    exactTopK(broadcast(qb).join(cb, Seq("bucket")), k, qId, cId)
   }
 
   // ---- IVF (inverted-file) tier ----
@@ -171,20 +207,48 @@ object SimilarityOps {
     centroids
   }
 
-  /** Nearest-centroid cell id: one codegen'd HOF argmax over the
-    * broadcast centroid frame (no UDF, no per-centroid plan literals;
-    * strict-greater keeps the LOWEST cell on ties, matching the previous
-    * when-fold). Centroids are unit-agnostic under cosine. */
-  def assignCells(df: DataFrame, embCol: String,
-      centroids: Array[Array[Double]]): DataFrame = {
-    val spark = df.sparkSession
-    val best = aggregate(centScores(toDoubleArr(col(embCol))),
+  /** Nearest-centroid cell id of `embCol`: one codegen'd HOF argmax
+    * over the broadcast centroid frame's `__cents` (no UDF, no
+    * per-centroid plan literals; strict-greater keeps the LOWEST cell
+    * on ties). −1 when every score is NULL. */
+  private def nearestCell(embCol: String): Column =
+    aggregate(centScores(toDoubleArr(col(embCol))),
       struct(lit(Double.NegativeInfinity).as("score"), lit(-1).as("cell")),
       (acc, sc) => when(sc.getField("score") > acc.getField("score"), sc)
-        .otherwise(acc))
-    df.crossJoin(broadcast(centroidsFrame(spark, centroids)))
-      .withColumn("__cell", best.getField("cell"))
+        .otherwise(acc)).getField("cell")
+
+  /** Each row's [[nearestCell]] as `__cell`. Centroids are
+    * unit-agnostic under cosine. */
+  def assignCells(df: DataFrame, embCol: String,
+      centroids: Array[Array[Double]]): DataFrame =
+    df.crossJoin(broadcast(centroidsFrame(df.sparkSession, centroids)))
+      .withColumn("__cell", nearestCell(embCol))
       .drop("__cents")
+
+  /** Each query's `nprobe` nearest cells, shared by the four IVF
+    * tiers: `queries` joined to the broadcast centroid frame, and the
+    * array<struct<negdot, cell>> of its nearest cells over it — one HOF
+    * sort of the per-centroid scores, arity O(1) in the cell count.
+    * `tier` names the caller in the nprobe check. */
+  private def probeCells(queries: DataFrame, centroids: Array[Array[Double]],
+      nprobe: Int, qEmb: String, tier: String): (DataFrame, Column) = {
+    require(nprobe >= 1, s"$tier: nprobe must be >= 1: $nprobe")
+    val cellScores = transform(centScores(toDoubleArr(col(qEmb))), sc =>
+      struct((-sc.getField("score")).as("negdot"),
+        sc.getField("cell").as("cell")))
+    (queries.crossJoin(broadcast(
+        centroidsFrame(queries.sparkSession, centroids))),
+      slice(array_sort(cellScores), 1, nprobe))
+  }
+
+  /** A persisted cell-partitioned layout cut to the cells `probed`
+    * names in `cellCol`: the distinct probed ids (≤ nlist, from the
+    * broadcast-sized probe frame) are collected and pushed as a
+    * partition filter, so the scan reads only those directories. */
+  private def probedPartitions(cells: DataFrame, probed: DataFrame,
+      cellCol: String): DataFrame = {
+    val ids = probed.select(cellCol).distinct().collect().map(_.getInt(0))
+    cells.filter(col("cell").isin(ids.map(c => c: Any): _*))
   }
 
   /** IVF top-k: probe the query's `nprobe` nearest cells only — the
@@ -194,26 +258,13 @@ object SimilarityOps {
   def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       centroids: Array[Array[Double]], nprobe: Int,
       qId: String = "q_id", cId: String = "vec_id"): DataFrame = {
-    val spark = queries.sparkSession
-    // nprobe nearest cells per query: negate+sort the per-centroid score
-    // structs from the broadcast centroid frame (one HOF chain, arity
-    // O(1) in k)
-    val cellScores = transform(centScores(toDoubleArr(col("q_emb"))), sc =>
-      struct((-sc.getField("score")).as("negdot"), sc.getField("cell").as("cell")))
-    val probed = queries
-      .crossJoin(broadcast(centroidsFrame(spark, centroids)))
-      .withColumn("__cells", slice(array_sort(cellScores), 1, nprobe))
+    val (withCents, nearest) =
+      probeCells(queries, centroids, nprobe, "q_emb", "ivfTopK")
+    val probed = withCents.withColumn("__cells", nearest)
       .select(col(qId), col("q_emb"),
         explode(transform(col("__cells"), s => s.getField("cell"))).as("__cell"))
     val assigned = assignCells(corpus, "embedding", centroids)
-    val scored = broadcast(probed).join(assigned, Seq("__cell"))
-      .filter(col(qId) =!= col(cId))
-      .withColumn("score",
-        cosine(toDoubleArr(col("q_emb")), toDoubleArr(col("embedding"))))
-    val w = Window.partitionBy(qId).orderBy(col("score").desc, col(cId).asc)
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col(qId), col(cId), col("score"), col("rn"))
+    exactTopK(broadcast(probed).join(assigned, Seq("__cell")), k, qId, cId)
   }
 
   /** Persist the IVF index as a LAKE ARTIFACT — build once, query many
@@ -245,38 +296,25 @@ object SimilarityOps {
       .map(_.getSeq[Double](1).toArray)
 
   /** [[ivfTopK]] against a PERSISTED index: probe each query's nprobe
-    * nearest cells, scan ONLY those cells' partitions (the probed-cell
-    * union — bounded by the cell count — is collected from the
-    * broadcast-sized query side and pushed as a partition filter), and
-    * score/rank exactly as the in-memory tier. IvfSpec pins both the
-    * result equivalence and the PartitionFilters pruning. */
+    * nearest cells, scan ONLY those cells' partitions
+    * ([[probedPartitions]]), and score/rank exactly as the in-memory
+    * tier. IvfSpec pins both the result equivalence and the
+    * PartitionFilters pruning. */
   def ivfTopKIndexed(queries: DataFrame, indexDir: String, k: Int,
       nprobe: Int, qId: String = "q_id", cId: String = "vec_id",
       qEmb: String = "q_emb", embCol: String = "embedding"): DataFrame = {
     val spark = queries.sparkSession
     val centroids = readIvfCentroids(spark, indexDir)
     require(centroids.nonEmpty, s"ivfTopKIndexed: empty index at $indexDir")
-    val cellScores = transform(centScores(toDoubleArr(col(qEmb))), sc =>
-      struct((-sc.getField("score")).as("negdot"),
-        sc.getField("cell").as("cell")))
-    val probed = queries
-      .crossJoin(broadcast(centroidsFrame(spark, centroids)))
-      .withColumn("__cells", slice(array_sort(cellScores), 1, nprobe))
+    val (withCents, nearest) =
+      probeCells(queries, centroids, nprobe, qEmb, "ivfTopKIndexed")
+    val probed = withCents.withColumn("__cells", nearest)
       .select(col(qId), col(qEmb),
-        explode(transform(col("__cells"), s => s.getField("cell")))
-          .as("cell"))
-    val probedCells = probed.select("cell").distinct().collect()
-      .map(_.getInt(0)) // bounded: ≤ nlist values
-    val cells = spark.read.parquet(s"$indexDir/cells")
-      .filter(col("cell").isin(probedCells.map(c => c: Any): _*))
-    val scored = broadcast(probed).join(cells, Seq("cell"))
-      .filter(col(qId) =!= col(cId))
-      .withColumn("score",
-        cosine(toDoubleArr(col(qEmb)), toDoubleArr(col(embCol))))
-    val w = Window.partitionBy(qId).orderBy(col("score").desc, col(cId).asc)
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col(qId), col(cId), col("score"), col("rn"))
+        explode(transform(col("__cells"), s => s.getField("cell"))).as("cell"))
+    val cells = probedPartitions(spark.read.parquet(s"$indexDir/cells"),
+      probed, "cell")
+    exactTopK(broadcast(probed).join(cells, Seq("cell")), k, qId, cId,
+      qEmb, embCol)
   }
 
   /** Maximal-marginal-relevance top-k (Carbonell & Goldstein 1998) —
@@ -347,7 +385,6 @@ object SimilarityOps {
   def quantizedTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       rerankFactor: Int = 4, qId: String = "q_id", cId: String = "vec_id")
       : DataFrame = {
-    require(rerankFactor >= 1, s"rerankFactor must be >= 1: $rerankFactor")
     def codesOf(emb: Column): Column = {
       val e = toDoubleArr(emb)
       val scale = array_max(transform(e, x => abs(x))) / lit(127.0)
@@ -361,23 +398,13 @@ object SimilarityOps {
         sqrt(aggregate(col("__ccodes"), lit(0L), (a, x) => a + x * x)
           .cast("double")))
     val approx = qc.crossJoin(cc)
-      .filter(col(qId) =!= col(cId))
       .withColumn("__adot",
         aggregate(zip_with(col("__qcodes"), col("__ccodes"), _ * _),
           lit(0L), (a, x) => a + x))
       .withColumn("__ascore",
         when(col("__cnorm") > 0, col("__adot") / col("__cnorm"))
           .otherwise(lit(Double.NegativeInfinity)))
-    val wa = Window.partitionBy(qId)
-      .orderBy(col("__ascore").desc, col(cId).asc)
-    val shortlist = approx.withColumn("__arn", row_number().over(wa))
-      .filter(col("__arn") <= rerankFactor.toLong * k)
-    val rescored = shortlist.withColumn("score",
-      cosine(toDoubleArr(col("q_emb")), toDoubleArr(col("embedding"))))
-    val w = Window.partitionBy(qId).orderBy(col("score").desc, col(cId).asc)
-    rescored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col(qId), col(cId), col("score"), col("rn"))
+    rerankTopK(approx, k, rerankFactor, None, qId, cId, "q_emb", "embedding")
   }
 
   /** Per-vector symmetric int8 quantization (the standard ANN storage
@@ -709,6 +736,24 @@ object SimilarityOps {
       .drop(stagingCols: _*).drop("__cbs", "__cbn")
   }
 
+  /** `queries` plus `__lut`, the m×ksub table of subspace dots of
+    * each query against the codebooks, built once per query from the
+    * broadcast codebook frame. Shared by [[pqTopK]] and
+    * [[ivfPqProbe]]. */
+  private def withQueryLut(queries: DataFrame,
+      codebooks: Array[Array[Array[Double]]], qEmb: String): DataFrame = {
+    val (staged, stagingCols) = stageSubvectors(queries, qEmb,
+      codebooks.length, codebooks(0)(0).length, "__pqq")
+    val lut = array(codebooks.indices.map { mi =>
+      transform(element_at(col("__cbs"), mi + 1),
+        c => dot(col(s"__pqq$mi"), c))
+    }: _*)
+    staged.crossJoin(broadcast(codebooksFrame(queries.sparkSession,
+        codebooks)))
+      .withColumn("__lut", lut)
+      .drop(stagingCols: _*).drop("__cbs", "__cbn")
+  }
+
   /** PQ asymmetric-distance top-k: each (broadcast-sized) query builds
     * an m×ksub lookup table of subspace dots against the plan-literal
     * codebooks ONCE; every corpus row is then scored by m array lookups
@@ -731,19 +776,8 @@ object SimilarityOps {
       codebooks: Array[Array[Array[Double]]], rerankFactor: Int = 4,
       qId: String = "q_id", cId: String = "vec_id",
       qEmb: String = "q_emb", embCol: String = "embedding"): DataFrame = {
-    require(rerankFactor >= 1, s"rerankFactor must be >= 1: $rerankFactor")
     val spark = queries.sparkSession
-    val sub = codebooks(0)(0).length
-    val (qStaged, qStagingCols) =
-      stageSubvectors(queries, qEmb, codebooks.length, sub, "__pqq")
-    val lut = array(codebooks.indices.map { mi =>
-      transform(element_at(col("__cbs"), mi + 1),
-        c => dot(col(s"__pqq$mi"), c))
-    }: _*)
-    val qc = broadcast(qStaged
-      .crossJoin(broadcast(codebooksFrame(spark, codebooks)))
-      .withColumn("__lut", lut)
-      .drop(qStagingCols: _*).drop("__cbs", "__cbn"))
+    val qc = broadcast(withQueryLut(queries, codebooks, qEmb))
     // reconstructed ‖·‖² per candidate: per-code ‖cₖ‖² looked up from
     // the broadcast norm table at encode time, reused across every query
     val cc = pqEncode(corpus, embCol, codebooks)
@@ -754,7 +788,6 @@ object SimilarityOps {
         lit(0.0), (a, x) => a + x))
       .drop("__cbs", "__cbn")
     val approx = qc.crossJoin(cc)
-      .filter(col(qId) =!= col(cId))
       .withColumn("__adot", aggregate(
         zip_with(col("__lut"), col("pq_codes"),
           (l, c) => element_at(l, c + 1)),
@@ -762,16 +795,7 @@ object SimilarityOps {
       .withColumn("__ascore",
         when(col("__cnormsq") > 0, col("__adot") / sqrt(col("__cnormsq")))
           .otherwise(lit(Double.NegativeInfinity)))
-    val wa = Window.partitionBy(qId)
-      .orderBy(col("__ascore").desc, col(cId).asc)
-    val shortlist = approx.withColumn("__arn", row_number().over(wa))
-      .filter(col("__arn") <= rerankFactor.toLong * k)
-    val rescored = shortlist.withColumn("score",
-      cosine(toDoubleArr(col(qEmb)), toDoubleArr(col(embCol))))
-    val w = Window.partitionBy(qId).orderBy(col("score").desc, col(cId).asc)
-    rescored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col(qId), col(cId), col("score"), col("rn"))
+    rerankTopK(approx, k, rerankFactor, None, qId, cId, qEmb, embCol)
   }
 
   // ───── IVF-PQ with RESIDUAL encoding (the IVFADC layout of Jégou,
@@ -796,12 +820,8 @@ object SimilarityOps {
     * index downstream. */
   private def withCellAndCentroid(df: DataFrame, embCol: String,
       centroids: Array[Array[Double]], cellCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val best = aggregate(centScores(toDoubleArr(col(embCol))),
-      struct(lit(Double.NegativeInfinity).as("score"), lit(-1).as("cell")),
-      (acc, sc) => when(sc.getField("score") > acc.getField("score"), sc)
-        .otherwise(acc)).getField("cell")
-    df.crossJoin(broadcast(centroidsFrame(spark, centroids)))
+    val best = nearestCell(embCol)
+    df.crossJoin(broadcast(centroidsFrame(df.sparkSession, centroids)))
       .withColumn(cellCol,
         when(best === -1,
           raise_error(lit("ivfpq: null or wrong-dimension embedding")))
@@ -866,21 +886,6 @@ object SimilarityOps {
       .drop("__res", "__cemb", "__xhat", "__cbs", "__cbn")
   }
 
-  /** Query-side probe frames shared by the in-memory and persisted
-    * IVF-PQ tiers — returned as a PAIR so each piece broadcasts at
-    * its own cardinality:
-    *   - probes: one SLIM row per (query, probed cell) — (qId,
-    *     __cell, __qc) with the EXACT q·ĉ for that cell; 3 scalars,
-    *     O(queries·nprobe) rows but O(1) row width;
-    *   - qlut:   ONE row per query — (qId, qEmb, __lut) carrying the
-    *     m×ksub residual LUT and the float embedding (re-rank input).
-    * The LUT is CELL-INDEPENDENT because residual codebooks are
-    * shared across cells (the IVFADC property that keeps query-side
-    * work O(m·ksub), not O(nlist·m·ksub)) — so carrying it on the
-    * per-(query, cell) frame would broadcast it nprobe× over (at 1k
-    * queries × nprobe 16 × ~16 KB LUT ≈ 256 MB vs 16 MB; the r14
-    * verdict's one residual inefficiency). [[ivfPqScore]] joins the
-    * LUT back BY QUERY after the cell join. */
   /** Bounded registrar for [[ivfPqProbe]]'s query-frame caches: a
     * long-lived serving session probes thousands of batches, and each
     * call's lazy persist would otherwise sit in the cache manager
@@ -904,10 +909,26 @@ object SimilarityOps {
       }
     }
 
+  /** Query-side probe frames shared by the in-memory and persisted
+    * IVF-PQ tiers — returned as a PAIR so each piece broadcasts at
+    * its own cardinality:
+    *   - probes: one SLIM row per (query, probed cell) — (qId,
+    *     __cell, __qc) with the EXACT q·ĉ for that cell; 3 scalars,
+    *     O(queries·nprobe) rows but O(1) row width;
+    *   - qlut:   ONE row per query — (qId, qEmb, __lut) carrying the
+    *     m×ksub residual LUT and the float embedding (re-rank input).
+    * The LUT is CELL-INDEPENDENT because residual codebooks are
+    * shared across cells (the IVFADC property that keeps query-side
+    * work O(m·ksub), not O(nlist·m·ksub)) — so carrying it on the
+    * per-(query, cell) frame would broadcast it nprobe× over (at 1k
+    * queries × nprobe 16 × ~16 KB LUT ≈ 256 MB vs 16 MB; the r14
+    * verdict's one residual inefficiency). [[ivfPqScore]] joins the
+    * LUT back BY QUERY after the cell join. `tier` names the caller in
+    * [[probeCells]]' nprobe check. */
   private[graft] def ivfPqProbe(queries0: DataFrame,
       centroids: Array[Array[Double]],
       codebooks: Array[Array[Array[Double]]], nprobe: Int,
-      qId: String, qEmb: String): (DataFrame, DataFrame) = {
+      qId: String, qEmb: String, tier: String): (DataFrame, DataFrame) = {
     // the query frame feeds BOTH returned frames (and, in the indexed
     // tier, a probed-cells collect) — cache it so a caller's
     // non-trivial query lineage doesn't re-execute per consumer. A
@@ -921,37 +942,19 @@ object SimilarityOps {
     val queries = queries0.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     registerProbeCache(queries)
-    val spark = queries.sparkSession
-    val m = codebooks.length
-    val sub = codebooks(0)(0).length
-    val (qStaged, qStagingCols) =
-      stageSubvectors(queries, qEmb, m, sub, "__pqq")
-    val lut = array(codebooks.indices.map { mi =>
-      transform(element_at(col("__cbs"), mi + 1),
-        c => dot(col(s"__pqq$mi"), c))
-    }: _*)
-    val qlut = qStaged
-      .crossJoin(broadcast(codebooksFrame(spark, codebooks)))
-      .withColumn("__lut", lut)
-      .drop(qStagingCols: _*).drop("__cbs", "__cbn")
-    val cellScores = transform(centScores(toDoubleArr(col(qEmb))), sc =>
-      struct((-sc.getField("score")).as("negdot"),
-        sc.getField("cell").as("cell")))
-    val probes = queries
-      .crossJoin(broadcast(centroidsFrame(spark, centroids)))
-      .withColumn("__p", explode(slice(array_sort(cellScores), 1, nprobe)))
+    val qlut = withQueryLut(queries, codebooks, qEmb)
+    val (withCents, nearest) =
+      probeCells(queries, centroids, nprobe, qEmb, tier)
+    val probes = withCents.withColumn("__p", explode(nearest))
       .select(col(qId),
         col("__p").getField("cell").as("__cell"),
         (-col("__p").getField("negdot")).as("__qc"))
     (probes, qlut)
   }
 
-  /** ADC scoring + shortlist + exact re-rank shared by both IVF-PQ
-    * tiers. `cc` must carry (cId, __cell, __codes, __cnormsq) plus —
-    * when `rerankFrom` is None — the float `embCol` itself; with
-    * `rerankFrom` = Some(corpus) the shortlist joins the floats back
-    * BY ID (the persisted-index shape: the probe scan never touches
-    * full-precision vectors). */
+  /** ADC scoring shared by both IVF-PQ tiers, then the shortlist +
+    * re-rank step. `cc` must carry (cId, __cell, __codes, __cnormsq)
+    * plus — when `rerankFrom` is None — the float `embCol` itself. */
   private def ivfPqScore(probed: DataFrame, qlut: DataFrame,
       cc: DataFrame, k: Int,
       rerankFactor: Int, rerankFrom: Option[DataFrame], qId: String,
@@ -961,7 +964,6 @@ object SimilarityOps {
     // never O(queries·nprobe) (see ivfPqProbe)
     val approx = broadcast(probed).join(cc, Seq("__cell"))
       .join(broadcast(qlut), Seq(qId))
-      .filter(col(qId) =!= col(cId))
       .withColumn("__adot", col("__qc") + aggregate(
         zip_with(col("__lut"), col("__codes"),
           (l, c) => element_at(l, c + 1)),
@@ -969,22 +971,7 @@ object SimilarityOps {
       .withColumn("__ascore",
         when(col("__cnormsq") > 0, col("__adot") / sqrt(col("__cnormsq")))
           .otherwise(lit(Double.NegativeInfinity)))
-    val wa = Window.partitionBy(qId)
-      .orderBy(col("__ascore").desc, col(cId).asc)
-    val short0 = approx.withColumn("__arn", row_number().over(wa))
-      .filter(col("__arn") <= rerankFactor.toLong * k)
-    val shortlist = rerankFrom match {
-      case None => short0
-      case Some(corpus) => short0
-        .select(col(qId), col(qEmb), col(cId))
-        .join(corpus.select(col(cId), col(embCol)), Seq(cId))
-    }
-    val rescored = shortlist.withColumn("score",
-      cosine(toDoubleArr(col(qEmb)), toDoubleArr(col(embCol))))
-    val w = Window.partitionBy(qId).orderBy(col("score").desc, col(cId).asc)
-    rescored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col(qId), col(cId), col("score"), col("rn"))
+    rerankTopK(approx, k, rerankFactor, rerankFrom, qId, cId, qEmb, embCol)
   }
 
   /** IVF-PQ asymmetric-distance top-k: probe the query's `nprobe`
@@ -1003,12 +990,10 @@ object SimilarityOps {
       codebooks: Array[Array[Array[Double]]], nprobe: Int,
       rerankFactor: Int = 4, qId: String = "q_id", cId: String = "vec_id",
       qEmb: String = "q_emb", embCol: String = "embedding"): DataFrame = {
-    require(rerankFactor >= 1, s"rerankFactor must be >= 1: $rerankFactor")
-    require(nprobe >= 1, s"nprobe must be >= 1: $nprobe")
     val cc = pqEncodeResidual(corpus, embCol, centroids, codebooks,
       "__cell", "__codes", "__cnormsq")
     val (probed, qlut) = ivfPqProbe(queries, centroids, codebooks,
-      nprobe, qId, qEmb)
+      nprobe, qId, qEmb, "ivfPqTopK")
     ivfPqScore(probed, qlut, cc, k, rerankFactor, None, qId, cId,
       qEmb, embCol)
   }
@@ -1235,8 +1220,6 @@ object SimilarityOps {
       corpus: DataFrame, k: Int, nprobe: Int, rerankFactor: Int = 4,
       qId: String = "q_id", cId: String = "vec_id",
       qEmb: String = "q_emb", embCol: String = "embedding"): DataFrame = {
-    require(rerankFactor >= 1, s"rerankFactor must be >= 1: $rerankFactor")
-    require(nprobe >= 1, s"nprobe must be >= 1: $nprobe")
     val spark = queries.sparkSession
     checkIvfPqMeta(spark, indexDir)
     val centroids = readIvfCentroids(spark, indexDir)
@@ -1244,9 +1227,7 @@ object SimilarityOps {
     require(centroids.nonEmpty && codebooks.nonEmpty,
       s"ivfPqTopKIndexed: empty index at $indexDir")
     val (probed, qlut) = ivfPqProbe(queries, centroids, codebooks,
-      nprobe, qId, qEmb)
-    val probedCells = probed.select("__cell").distinct().collect()
-      .map(_.getInt(0)) // bounded: ≤ nlist values
+      nprobe, qId, qEmb, "ivfPqTopKIndexed")
     // tombstoned ids (deleteFromIvfPqIndex) leave the scan logically —
     // a deleted vector must not reach the ADC shortlist, exactly as
     // if vacuumed; the anti-join rides the partition-pruned code scan.
@@ -1258,9 +1239,8 @@ object SimilarityOps {
     // (legacy behavior, plan unchanged).
     val store = IngestCommit.ivfPqStore(indexDir)
     val hwmOpt = IngestCommit.committedHwm(spark, store.logDir)
-    val rawCells = spark.read.schema(ivfPqCellsSchema(cId))
-      .parquet(s"$indexDir/cells")
-      .filter(col("cell").isin(probedCells.map(c => c: Any): _*))
+    val rawCells = probedPartitions(spark.read.schema(ivfPqCellsSchema(cId))
+      .parquet(s"$indexDir/cells"), probed, "__cell")
     val committedCells = hwmOpt.fold(rawCells)(h =>
       rawCells.filter(col("ingest_id").isNull || col("ingest_id") <= h))
     val cc = IngestCommit.minusTombstones(committedCells,

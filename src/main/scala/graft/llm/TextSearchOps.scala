@@ -85,11 +85,11 @@ object TextSearchOps {
     * rn ∈ [1,n], ties broken by ascending term. One token explode → one
     * map-side-combined (doc, term) count; df aggregates FROM that count
     * (already term-clustered) and joins back broadcast (vocabulary ≪
-    * corpus); top-n is a doc-partitioned rank — no unpartitioned window.
+    * corpus); top-n is [[SimilarityOps.topKPerQuery]] keyed by document
+    * — no unpartitioned window.
     */
   def tfIdfTopTerms(docs: DataFrame, idCol: String, textCol: String,
       n: Int, maxBroadcastTerms: Long = 4000000L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val tokenized = docs
       .withColumn("__toks", TextStatsOps.tokens(col(textCol)))
       .select(col(idCol), explode(col("__toks")).as("term"),
@@ -117,9 +117,7 @@ object TextSearchOps {
       .withColumn("tfidf", round(
         col("__tf").cast("double") / col("__dl") * log(col("__n") / col("__df")),
         6))
-    val w = Window.partitionBy(col(idCol))
-      .orderBy(col("tfidf").desc, col("term").asc)
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= n)
+    SimilarityOps.topKPerQuery(scored, idCol, "term", n, "tfidf")
       .select(col(idCol), col("term"), col("tfidf"), col("rn"))
   }
 

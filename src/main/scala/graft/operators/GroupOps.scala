@@ -83,10 +83,12 @@ object GroupOps {
     * Scale shape — the skew-safe top-N: one hash aggregation with the
     * bounded [[graft.functions.BoundedMinList]] buffer (state capped at
     * n, so map-side partial aggregation collapses hot keys exactly like
-    * min() — NOT a row_number window, which would ship every row of a
-    * hot key to one unsplittable task; this is the per-domain document
-    * cap of a 100 TB curation pipeline), then one left-semi join of the
-    * corpus against the exploded winners on (keys, orderCol). */
+    * min() at any n — a rank window is cut map-side only up to
+    * Spark's 1000-row group-limit threshold and above it ships every
+    * row of a hot key to one unsplittable task; this is the per-domain
+    * document cap of a 100 TB curation pipeline), then one left-semi
+    * join of the corpus against the exploded winners on (keys,
+    * orderCol). */
   /** Fail-fast preconditions shared by headPerKey/nthPerKey, plus the
     * EXACT long order key for the bounded-buffer aggregate (r12
     * verdict task #9 — the integral-only restriction forced callers to

@@ -4103,9 +4103,7 @@ object LlmQueries extends QueryModule {
         val scored = broadcast(queries).crossJoin(emb)
           .filter(col("q_id") =!= col("vec_id"))
           .withColumn("score", expr("cosine_sim(q_emb, embedding)"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("q_id").orderBy(col("score").desc, col("vec_id").asc)
-        scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+        SimilarityOps.topKPerQuery(scored, "q_id", "vec_id", 3)
           .select(col("q_id"), col("vec_id"), round(col("score"), 6).as("score"),
             col("rn"))
       },

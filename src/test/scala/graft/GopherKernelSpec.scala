@@ -21,27 +21,8 @@ class GopherKernelSpec extends SparkSpec {
   import spark.implicits._
 
   private def assertBitEqual(df: org.apache.spark.sql.DataFrame): Unit = {
-    val kern = TextStatsOps.gopherRepetition(df, "doc_id", "text")
-    val expr = ReferenceTiers.gopherRepetitionExpr(df, "doc_id", "text")
-    assert(kern.columns.toSeq == expr.columns.toSeq)
-    assert(kern.schema.map(f => (f.name, f.dataType)) ==
-      expr.schema.map(f => (f.name, f.dataType)))
-    val k = kern.collect().map(r => r.getLong(0) -> r).toMap
-    val e = expr.collect().map(r => r.getLong(0) -> r).toMap
-    assert(k.keySet == e.keySet, "row sets differ")
-    val nCols = kern.columns.length
-    for ((id, kr) <- k; er = e(id); c <- 1 until nCols) {
-      val (kv, ev) = (kr.get(c), er.get(c))
-      (kv, ev) match {
-        case (kd: Double, ed: Double) =>
-          assert(java.lang.Double.doubleToLongBits(kd) ==
-            java.lang.Double.doubleToLongBits(ed),
-            s"doc $id col ${kern.columns(c)}: kernel=$kd expr=$ed")
-        case _ =>
-          assert(kv == ev,
-            s"doc $id col ${kern.columns(c)}: kernel=$kv expr=$ev")
-      }
-    }
+    val bad = GopherKernelSpec.mismatches(df)
+    assert(bad.isEmpty, bad.take(20).mkString("\n"))
   }
 
   test("kernel ≡ expression tier on the planted gate corpus (sf0.001)") {
@@ -148,5 +129,38 @@ class GopherKernelSpec extends SparkSpec {
       }
       assert(e.getMessage.contains(s"$starts words"), e.getMessage)
     }
+  }
+}
+
+object GopherKernelSpec {
+
+  /** Every difference between the kernel and the expression tier on
+    * `df` (doc_id, text): column names and types, the row ids, then
+    * doubleToLongBits on each fraction and strict equality (incl.
+    * nullness) on each boolean. Empty when the two agree exactly. */
+  def mismatches(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    val kern = TextStatsOps.gopherRepetition(df, "doc_id", "text")
+    val expr = ReferenceTiers.gopherRepetitionExpr(df, "doc_id", "text")
+    def typed(d: org.apache.spark.sql.DataFrame) =
+      d.schema.map(f => (f.name, f.dataType))
+    if (typed(kern) != typed(expr))
+      return Seq(s"schemas differ: ${typed(kern)} vs ${typed(expr)}")
+    val k = kern.collect().map(r => r.getLong(0) -> r).toMap
+    val e = expr.collect().map(r => r.getLong(0) -> r).toMap
+    if (k.keySet != e.keySet)
+      return Seq(s"row sets differ: ${k.keySet.diff(e.keySet)} vs " +
+        s"${e.keySet.diff(k.keySet)}")
+    def same(kv: Any, ev: Any): Boolean = (kv, ev) match {
+      case (kd: Double, ed: Double) =>
+        java.lang.Double.doubleToLongBits(kd) ==
+          java.lang.Double.doubleToLongBits(ed)
+      case _ => kv == ev
+    }
+    for {
+      (id, kr) <- k.toSeq.sortBy(_._1)
+      c <- 1 until kern.columns.length
+      if !same(kr.get(c), e(id).get(c))
+    } yield s"doc $id col ${kern.columns(c)}: kernel=${kr.get(c)} " +
+      s"expr=${e(id).get(c)}"
   }
 }

@@ -317,6 +317,42 @@ class PlanAuditSpec extends SparkSpec {
       p.take(2000))
   }
 
+  /** Whether some hash exchange on `q_id` in `name`'s plan has a
+    * `Partial` WindowGroupLimit directly below it: the per-query top-k
+    * is cut to k rows per map partition before the shuffle. */
+  private def partialTopKBelowExchange(name: String): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.{WindowGroupLimitExec,
+      Partial => WglPartial}
+    val p = SparkEntry.queries(name)(spark, d).queryExecution.executedPlan
+    val physical = p match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan // the initial plan
+      case other => other
+    }
+    physical.collect {
+      case e: ShuffleExchangeExec => (e.outputPartitioning, e.child)
+    }.exists {
+      case (h: HashPartitioning, w: WindowGroupLimitExec) =>
+        w.mode == WglPartial &&
+          h.expressions.exists(_.references.exists(_.name == "q_id"))
+      case _ => false
+    }
+  }
+
+  test("ANN top-k: a Partial WindowGroupLimit sits below the q_id " +
+      "exchange; the covering PQ shortlists (rerankFactor 1000000, " +
+      "above the 1000-row threshold) are the unpruned windows") {
+    val pruned = Seq("cosine_topk", "cosine_lsh_topk", "cosine_ivf_topk",
+      "cosine_topk_quantized", "cosine_topk_native", "ivf_index_topk")
+    val unpruned = Seq("cosine_pq_topk", "cosine_ivfpq_topk",
+      "ivfpq_index_topk")
+    val got = (pruned ++ unpruned).filterNot(partialTopKBelowExchange)
+    assert(got.toSet == unpruned.toSet,
+      s"queries without a partial top-k: $got; pinned: $unpruned")
+  }
+
   test("dsir_select: scoring rides the scan (the ratio table is a plan " +
       "literal) and selection is TakeOrderedAndProject — the only " +
       "shuffles in the FINAL query are the top-k's singlePartition") {

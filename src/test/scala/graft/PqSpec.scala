@@ -112,7 +112,7 @@ class PqSpec extends SparkSpec {
     val cbs = SimilarityOps.trainPqCodebooksResidual(emb, "vec_id",
       "embedding", cents, m = 4, ksub = 4, iters = 1)
     val (probes, qlut) = SimilarityOps.ivfPqProbe(queries, cents, cbs,
-      nprobe = 3, "q_id", "q_emb")
+      nprobe = 3, "q_id", "q_emb", "ivfPqProbe")
     // the per-(query, cell) frame carries NO LUT and NO float
     // embedding — the r14 finding was exactly these riding nprobe×
     assert(probes.columns.toSet === Set("q_id", "__cell", "__qc"),
