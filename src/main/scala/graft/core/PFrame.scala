@@ -301,8 +301,11 @@ final case class PFrame(
       s"update needs matching index columns: $indexCols vs ${other.indexCols}")
     // pandas raises on duplicate labels in `other`; a silent left join
     // would instead FAN OUT matching base rows. One cheap count-agg on
-    // the same key (same shuffle) guards the invariant.
-    val dup = other.df.groupBy(other.indexCols.map(col): _*)
+    // the same key (same shuffle) guards the invariant. It joins
+    // nothing, so a caller's broadcast hint on `other` is dropped here
+    // (it still steers the join below).
+    val dup = org.apache.spark.sql.graftbridge.Bridge.withoutHints(other.df)
+      .groupBy(other.indexCols.map(col): _*)
       .count().filter(col("count") > 1).limit(1).collect()
     require(dup.isEmpty,
       s"update: duplicate index labels in other (e.g. ${dup.headOption})")

@@ -51,7 +51,7 @@ object ClassifierOps {
     TextStatsOps.hashedClassifierLogit(coalesce(text, lit("")), w) + lit(wb)
 
   /** Per-document bucket-count feature frame, persisted and
-    * materialized eagerly (by the `count()` every trainer runs), so
+    * materialized by the first gradient pass, so
     * the iterative loop and the scorer never touch text again (r19
     * optimization, guide §1.2 "per-task work" + §2.3 "aggregate
     * before you shuffle"): the md5 word
@@ -87,15 +87,15 @@ object ClassifierOps {
     * it exactly as before (r19 ADVICE: the first kernel cut called
     * getLong on the label and crashed on a single NULL-label row).
     *
-    * Materialization (r20, guide §5): persist(MEMORY_AND_DISK) — made
-    * eager by the `n = feat.count()` every trainer performs anyway —
-    * replaces r19's `localCheckpoint(true)`. The checkpoint truncated
+    * Materialization (r20, guide §5): persist(MEMORY_AND_DISK) —
+    * filled by the first gradient pass, which also counts `n` — replaces
+    * r19's `localCheckpoint(true)`. The checkpoint truncated
     * lineage to executor-local blocks with NO recompute path: on a
     * real cluster one lost executor mid-GD-loop failed the job. The
     * persisted frame keeps its (deterministic) kernel lineage, so a
     * lost block recomputes; plan and timing shape are unchanged (same
     * one eager job, every GD step still reads materialized blocks). */
-  private def bucketCountFeatures(df: DataFrame, textCol: String,
+  private[graft] def bucketCountFeatures(df: DataFrame, textCol: String,
       labelCol: String, keep: Seq[String], buckets: Int): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
@@ -157,24 +157,30 @@ object ClassifierOps {
     (0 until buckets).map(b => element_at(col("__hs"), b + 1) * lit(w(b)))
       .reduceOption(_ + _).getOrElse(lit(0L)) + lit(w(buckets))
 
-  /** One full-batch hard-sigmoid GD loop over a materialized feature
+  /** One full-batch hard-sigmoid GD loop over a persisted feature
     * frame; mutates nothing, returns the weights. Each iteration is
     * ONE codegen'd global aggregation (buckets+1 sums — word gradients
     * Σ err·h_b and the bias gradient Σ err ride the same map-side
-    * combine) over the materialized features; no text, no explode. */
+    * combine) over the materialized features; no text, no explode.
+    * The document count `n` rides the same aggregation (the first
+    * pass scans every row anyway), so no separate count job runs; it
+    * is the same count, so the weights are unchanged. `caller` names
+    * the trainer in the empty-corpus error. */
   private def trainOnFeatures(feat: DataFrame, buckets: Int, iters: Int,
-      lrDen: Long, n: Long): Array[Long] = {
+      lrDen: Long, caller: String): Array[Long] = {
     val w = Array.fill(buckets + 1)(0L) // [word buckets..., bias]
     for (_ <- 1 to iters) {
       val err = (hardSigmoidMicro(featLogit(w, buckets)) -
         col("__y") * Micro).as("__err")
       val sums = (0 until buckets).map(b =>
         sum(col("__err") * element_at(col("__hs"), b + 1)).as(s"__g$b")) :+
-        sum(col("__err")).as("__gb")
+        sum(col("__err")).as("__gb") :+ count(lit(1)).as("__n")
       val row = feat
         .select(err, col("__hs"))
         .agg(sums.head, sums.tail: _*)
-        .collect()(0) // bounded: one row of buckets+1 longs
+        .collect()(0) // bounded: one row of buckets+2 longs
+      val n = row.getLong(buckets + 1)
+      require(n > 0, s"$caller: empty corpus")
       for (j <- 0 to buckets)
         w(j) -= row.getLong(j) / (lrDen * n) // truncating, like //
     }
@@ -192,9 +198,7 @@ object ClassifierOps {
     require(buckets >= 1 && iters >= 1 && lrDen >= 1,
       s"trainHardLogistic: bad hyperparameters ($buckets, $iters, $lrDen)")
     val feat = bucketCountFeatures(df, textCol, labelCol, Nil, buckets)
-    val n = feat.count() // one scalar; also materializes the persisted frame
-    require(n > 0, "trainHardLogistic: empty corpus")
-    trainOnFeatures(feat, buckets, iters, lrDen, n)
+    trainOnFeatures(feat, buckets, iters, lrDen, "trainHardLogistic")
   }
 
   /** [[trainHardLogistic]] plus the trained scoring pass over the SAME
@@ -209,9 +213,8 @@ object ClassifierOps {
     require(buckets >= 1 && iters >= 1 && lrDen >= 1,
       s"trainHardLogisticScored: bad hyperparameters ($buckets, $iters, $lrDen)")
     val feat = bucketCountFeatures(df, textCol, labelCol, Seq(idCol), buckets)
-    val n = feat.count()
-    require(n > 0, "trainHardLogisticScored: empty corpus")
-    val w = trainOnFeatures(feat, buckets, iters, lrDen, n)
+    val w = trainOnFeatures(feat, buckets, iters, lrDen,
+      "trainHardLogisticScored")
     feat.select(col(idCol), featLogit(w, buckets).as("logit_micro"))
   }
 

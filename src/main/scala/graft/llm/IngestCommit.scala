@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** EXACTLY-ONCE ingest for the incremental curation loops.
   *
@@ -851,11 +852,16 @@ object IngestCommit {
     *
     * Driver-cost shape: `batch` (the caller's lineage, typically
     * gated, exact-deduped and scored) is evaluated ONCE, into an eager
-    * localCheckpoint; signatures, survivors, the corpus write and the
-    * sigs append all read it, so corpus partition and index append
-    * come from the same rows by construction. The survivor step
-    * collects (or, past its cap, checkpoints) the pair set eagerly, so
-    * the survivor frame is a cheap anti-join over materialized inputs.
+    * checkpoint that reports its stored size
+    * ([[Bridge.sizedLocalCheckpoint]]); the signatures and the corpus
+    * write read it, so corpus partition and index append come from the
+    * same rows by construction. The loser step collects (or, past its
+    * cap, checkpoints) the pair set eagerly and hands back the losing
+    * ids, so the corpus write, the bands append and the sigs append are
+    * each one narrow job: the checkpointed batch or its checkpointed
+    * signatures anti-joined with the losers (a broadcast literal on
+    * the collected path). A NULL-id document matches no loser: it
+    * reaches the corpus but, having no id to index, not the index.
     * `kKnown` skips the per-append signature-length probe job.
     *
     * `failpoint` is a test hook invoked at the named crash points
@@ -874,23 +880,22 @@ object IngestCommit {
       case None => return false
       case Some(r) => r
     }
-    val docs = batch.localCheckpoint(true) // the ONE batch evaluation
+    val docs = Bridge.sizedLocalCheckpoint(batch) // the ONE evaluation
     // Core filters the index to rows committed at the hwm — the
     // crashed attempt's own stamped rows are invisible, making the
-    // survivor set identical on every replay (the determinism the
+    // loser set identical on every replay (the determinism the
     // recovery subtraction in appendSigsToIndex relies on)
-    val (batchSigs, survivors) = TextDedupOps.lshIncrementalIndexedCore(
+    val (batchSigs, losers) = TextDedupOps.lshIncrementalIndexedCore(
       docs, indexDir, idCol, textCol, shingleN, k, bands, threshold,
       maxBucketSize)
     failpoint("after-survivors")
-    val survSigs = batchSigs.join(
-      survivors.select(col(idCol).cast("long").as(idCol)), Seq(idCol),
-      "left_semi")
     publishAndCommit(spark, logDir, batchId, failpoint) {
-      survivors.write.mode("overwrite")
-        .parquet(s"$corpusDir/ingest_id=$batchId")
+      docs.join(losers, Seq(idCol), "left_anti").write
+        .mode("overwrite").parquet(s"$corpusDir/ingest_id=$batchId")
     } {
-      TextDedupOps.appendSigsToIndex(survSigs, indexDir, idCol, bands,
+      TextDedupOps.appendSigsToIndex(
+        TextDedupOps.survivorSignatures(batchSigs, losers, idCol),
+        indexDir, idCol, bands,
         shingleN, ingestId = Some(batchId), recover = recover,
         kKnown = Some(k))
     }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.unsafe.Platform
 
 import IngestCommit.{lshStore, minusTombstones, readTombstones,
@@ -365,8 +366,8 @@ object TextDedupOps {
       textCol, shingleN, k, bands, threshold, maxBucketSize)._1
 
   /** [[lshIncremental]] plus the SURVIVORS' signature frame — the rows
-    * a production ingest loop appends to its persisted index: a
-    * semi-join of the batch's checkpointed signatures, since
+    * a production ingest loop appends to its persisted index: the
+    * batch's checkpointed signatures minus the losers, since
     * re-signaturing the survivors from text would re-run the batch
     * lineage and the signature kernel. `existingSignatures` is RE-EXECUTED per consumer
     * — fine for a parquet read or a checkpointed in-session index; an
@@ -377,34 +378,45 @@ object TextDedupOps {
       shingleN: Int = 3, k: Int = 32, bands: Int = 8,
       threshold: Double = 0.7, maxBucketSize: Int = Int.MaxValue)
       : (DataFrame, DataFrame) = {
-    val (batchSigs, survivors) = incrementalMinHash(newBatch,
+    val (batchSigs, losers) = incrementalMinHash(newBatch,
       existingSignatures, bandFrame(existingSignatures, idCol, bands),
       idCol, textCol, shingleN, k, bands, threshold, maxBucketSize)
-    (survivors, batchSigs.join(survivors.select(col(idCol)), Seq(idCol),
-      "left_semi"))
+    (newBatch.join(losers, Seq(idCol), "left_anti"),
+      survivorSignatures(batchSigs, losers, idCol))
   }
+
+  /** The survivors' rows of the batch signature frame: NULL ids
+    * dropped, then the losers anti-joined. A NULL id matches no loser,
+    * so the anti-join alone would keep a NULL-id document, which
+    * survives into the corpus but is never indexed. */
+  private[llm] def survivorSignatures(batchSigs: DataFrame,
+      losers: DataFrame, idCol: String): DataFrame =
+    batchSigs.filter(col(idCol).isNotNull)
+      .join(losers, Seq(idCol), "left_anti")
 
   /** The one incremental MinHash body of the in-memory and the
     * persisted-index tier, which differ only in where the existing side
     * comes from: `exSigs` (idCol, signature) and `exBands` (idCol,
     * band, band_hash), keyed by plain ids. Returns (the batch's
-    * checkpointed signatures, plain ids; the survivor frame).
+    * checkpointed signatures, plain ids; the losers, see
+    * [[incrementalLosers]]).
     *
     * The pair join consumes the batch signatures THREE times (band
-    * explode + two re-attach joins): an EAGER localCheckpoint runs the
+    * explode + two re-attach joins): an EAGER checkpoint runs the
     * batch lineage and the signature kernel once and TRUNCATES the
-    * plan to an RDD scan — the point, since per-batch driver time in
-    * the ingest loop was Catalyst re-analysis of the nested copies, not
-    * Spark jobs. The existing side is storage-backed and cheap to
-    * re-scan, so it does not checkpoint (that would cost index-sized
-    * executor storage per batch). */
+    * plan to an RDD scan. It is sized ([[Bridge.sizedLocalCheckpoint]]),
+    * so a batch below the broadcast threshold plans its bands and
+    * signatures as broadcast sides and the index scans stream past
+    * them with no exchange. The existing side is storage-backed and
+    * cheap to re-scan, so it does not checkpoint (that would cost
+    * index-sized executor storage per batch). */
   private def incrementalMinHash(newBatch: DataFrame, exSigs: DataFrame,
       exBands: DataFrame, idCol: String, textCol: String, shingleN: Int,
       k: Int, bands: Int, threshold: Double,
       maxBucketSize: Int): (DataFrame, DataFrame) = {
-    val nwSigs = minHashSignatures(newBatch, idCol, textCol, shingleN, k)
-      .select(foldNew(col(idCol)).as(idCol), col("signature"))
-      .localCheckpoint(true)
+    val nwSigs = Bridge.sizedLocalCheckpoint(
+      minHashSignatures(newBatch, idCol, textCol, shingleN, k)
+        .select(foldNew(col(idCol)).as(idCol), col("signature")))
     val nwBands = bandFrame(nwSigs, idCol, bands)
     val ex = exSigs.select(foldOld(col(idCol)).as(idCol), col("signature"))
     val exB = exBands.select(foldOld(col(idCol)).as(idCol), col("band"),
@@ -412,7 +424,7 @@ object TextDedupOps {
     val pairs = asymPairsFromBands(exB.unionByName(nwBands), nwBands,
       ex.unionByName(nwSigs), idCol, threshold, maxBucketSize)
     (nwSigs.select(unfold(col(idCol)).as(idCol), col("signature")),
-      incrementalSurvivors(newBatch, pairs, idCol))
+      incrementalLosers(pairs, idCol))
   }
 
   /** Persist an LSH signature index PRE-BANDED — the steady-state
@@ -549,9 +561,9 @@ object TextDedupOps {
           .parquet(s"$dir/bands")
           .filter(col("ingest_id") === b)
           .select(col(idCol), col("band_hash"), col("band"))
-        val visS = sigsMergedRead(spark, dir)
+        val visS = sigsRead(spark, dir, idCol)
           .filter(col("ingest_id") === b)
-          .select(col(idCol).cast("long").as(idCol), col("signature"))
+          .select(col(idCol), col("signature"))
         (newBands.exceptAll(visB), sigsLong.exceptAll(visS))
       }
     // ALWAYS write the stamp column (null for legacy appends) — a
@@ -589,20 +601,27 @@ object TextDedupOps {
       org.apache.spark.sql.types.StructField("band",
         org.apache.spark.sql.types.IntegerType)))
 
-  /** Sigs read that SEES the `ingest_id` column whenever any file
-    * carries it: a plain parquet read infers from one footer, and an
-    * index whose init predates the exactly-once path would otherwise
-    * read back WITHOUT the stamp — silently making uncommitted rows
-    * visible. mergeSchema unions all footers (manifest-sized cost,
-    * only paid on exactly-once reads); a never-stamped store gets the
-    * column added as all-NULL so downstream filters stay uniform. */
-  private[graft] def sigsMergedRead(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val df = spark.read.option("mergeSchema", "true")
-      .parquet(s"$dir/sigs")
-    if (df.columns.contains("ingest_id")) df
-    else df.withColumn("ingest_id", lit(null).cast("long"))
-  }
+  /** The sigs layout's explicit read schema, the twin of
+    * [[bandsReadSchema]]: ids and signatures as every format-2 write
+    * stores them, and `ingest_id` reading NULL from any file written
+    * without the stamp (an index initialized before the exactly-once
+    * path, or a legacy append) — null = committed-at-any-watermark,
+    * so no footer needs inferring or merging to decide visibility. */
+  private[graft] def sigsReadSchema(idCol: String)
+      : org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField(idCol,
+        org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("signature",
+        org.apache.spark.sql.types.ArrayType(
+          org.apache.spark.sql.types.LongType)),
+      org.apache.spark.sql.types.StructField("ingest_id",
+        org.apache.spark.sql.types.LongType)))
+
+  /** `dir/sigs` read with [[sigsReadSchema]]. */
+  private[graft] def sigsRead(spark: org.apache.spark.sql.SparkSession,
+      dir: String, idCol: String): DataFrame =
+    spark.read.schema(sigsReadSchema(idCol)).parquet(s"$dir/sigs")
 
   /** Persisted-LSH-index layout version. 2 = the r15+ layout (bands
     * PARTITIONED BY band, ids stored as long) plus the r16 tombstone
@@ -669,10 +688,8 @@ object TextDedupOps {
     // the rewrite FOLDS ingest stamps to NULL: every surviving row is
     // committed (the maintenance entry's in-flight guard), and a
     // null-stamped row is visible at any high-water-mark. The COLUMN
-    // itself is kept — every r18+ write carries it, and the ingest
-    // loop's plain (non-merged) sigs read rejects a logged store
-    // whose files lack the stamp, so dropping it here would brick
-    // post-compaction ingest (caught by the r19 interleave spec)
+    // itself is kept, so every file of a rewritten store carries the
+    // same schema every r18+ write does
     val nullStamp = lit(null).cast("long")
     val exBands = spark.read.schema(bandsReadSchema(idCol))
       .parquet(s"$dir/bands").withColumn("ingest_id", nullStamp)
@@ -682,10 +699,7 @@ object TextDedupOps {
         .sortWithinPartitions("band", "band_hash")
         .write.partitionBy("band").parquet(tmp)
     }
-    // mergeSchema (sigsMergedRead), NOT a one-footer inferred read: a
-    // store whose later files carry ingest_id must not have the column
-    // silently dropped-or-kept by footer pick order
-    val exSigs = sigsMergedRead(spark, dir)
+    val exSigs = sigsRead(spark, dir, idCol)
       .withColumn("ingest_id", nullStamp)
     swapIn("sigs") { tmp =>
       minusTombstones(exSigs, tomb).write.parquet(tmp)
@@ -716,8 +730,8 @@ object TextDedupOps {
     // are gone either way
     val tomb = readTombstones(spark, lshStore(dir), idCol)
     val sigIds = minusTombstones(
-        committed(sigsMergedRead(spark, dir)), tomb)
-      .select(col(idCol).cast("long").as(idCol)).distinct()
+        committed(sigsRead(spark, dir, idCol)), tomb)
+      .select(col(idCol)).distinct()
     // schema-pinned like lshIncrementalIndexed's read: a vacuum that
     // deleted every row leaves dir/bands with no data files to infer
     // from, and reconciliation of an emptied index must still work
@@ -808,23 +822,24 @@ object TextDedupOps {
       idCol: String, textCol: String, shingleN: Int = 3, k: Int = 32,
       bands: Int = 8, threshold: Double = 0.7,
       maxBucketSize: Int = Int.MaxValue): (DataFrame, DataFrame) = {
-    val (batchSigs, survivors) = lshIncrementalIndexedCore(newBatch,
+    val (batchSigs, losers) = lshIncrementalIndexedCore(newBatch,
       indexDir, idCol, textCol, shingleN, k, bands, threshold,
       maxBucketSize)
-    (survivors, batchSigs.join(survivors.select(col(idCol)), Seq(idCol),
-      "left_semi"))
+    (newBatch.join(losers, Seq(idCol), "left_anti"),
+      survivorSignatures(batchSigs, losers, idCol))
   }
 
-  /** [[lshIncrementalIndexed]] minus the survivor-signature join —
-    * returns (the batch's checkpointed signature frame, the survivor
-    * frame) so the exactly-once ingest loop derives the corpus write,
-    * the bands append and the sigs append from its materialized batch
-    * (one pair computation per batch instead of one per consumer).
+  /** [[lshIncrementalIndexed]] before the survivors are derived —
+    * returns (the batch's checkpointed signature frame, the losers,
+    * see [[incrementalLosers]]) so the exactly-once ingest loop
+    * derives the corpus write, the bands append and the sigs append
+    * from its materialized batch with one anti-join each (one pair
+    * computation per batch instead of one per consumer).
     * When the index carries a commit log
     * (`indexDir/commits`, see [[IngestCommit]]), the index reads are
     * filtered to the COMMITTED view: rows stamped above the
     * high-water-mark — a crashed ingest attempt's partial append —
-    * are invisible, which keeps the survivor computation DETERMINISTIC
+    * are invisible, which keeps the loser computation DETERMINISTIC
     * across foreachBatch replays. Without a log the view is the raw
     * store (legacy behavior, bit-identical plans). */
   private[llm] def lshIncrementalIndexedCore(newBatch: DataFrame,
@@ -841,25 +856,13 @@ object TextDedupOps {
     // BEFORE the fold — a deleted doc must neither band-match nor
     // est-jaccard-join, exactly as if vacuumed
     val tomb = readTombstones(spark, lshStore(indexDir), idCol)
-    // plain read, not mergeSchema: every r18+ write (init AND append)
-    // carries the ingest_id column, so inference always sees it —
-    // a per-batch footer-merge job was the first cut's main overhead.
-    // A pre-r18 init under a commit log is the one shape inference
-    // can't serve deterministically; reject it loudly.
-    val rawSigs0 = spark.read.parquet(s"$indexDir/sigs")
-    val rawSigs = hwmOpt.fold(rawSigs0) { _ =>
-      require(rawSigs0.columns.contains("ingest_id"),
-        s"lshIncrementalIndexed: index at $indexDir has a commit log " +
-          "but its sigs lack the ingest_id column (initialized by a " +
-          "pre-exactly-once build) — rebuild with writeLshIndex")
-      committed(rawSigs0)
-    }
-    // explicit schema: a band-partitioned EMPTY index (fresh init) has
-    // no data files to infer from, and the partition column must read
-    // back typed either way
+    // both layouts read with pinned schemas: no footer-inference job
+    // per batch, and a sigs file without the stamp (written before the
+    // exactly-once path) reads NULL = committed
+    val exSigs = committed(sigsRead(spark, indexDir, idCol))
     val exBands = committed(
       spark.read.schema(bandsReadSchema(idCol)).parquet(s"$indexDir/bands"))
-    incrementalMinHash(newBatch, minusTombstones(rawSigs, tomb),
+    incrementalMinHash(newBatch, minusTombstones(exSigs, tomb),
       minusTombstones(exBands, tomb), idCol, textCol, shingleN, k, bands,
       threshold, maxBucketSize)
   }
@@ -962,11 +965,15 @@ object TextDedupOps {
     parent.keys.map(m => m -> find(m)).toMap
   }
 
-  /** Shared survivor selection for the incremental near-dup tiers
+  /** Shared loser selection for the incremental near-dup tiers
     * ([[lshIncremental]] / [[simHashIncremental]]): given candidate
-    * pairs over side-folded ids (see the fold above), keep the batch
-    * rows whose component touches no existing document and whose id
-    * is the component's minimum NEW id.
+    * pairs over side-folded ids (see the fold above), the batch ids
+    * that do NOT survive — those whose component touches an existing
+    * document, and those that are not their component's minimum NEW
+    * id — as one plain-id column `idCol` (long). Survivors are the
+    * batch anti-joined with these; publishing from the loser
+    * set lets the ingest loop anti-join its checkpointed batch and
+    * signatures against it directly.
     *
     * Components run on the NEW-NEW subgraph only — equivalent to the
     * full graph because an existing doc is reachable from a new doc
@@ -976,14 +983,16 @@ object TextDedupOps {
     * no old contact is purely new, where the min-new doc IS the
     * component label. Old-old pairs in the input (the simhash path
     * still generates them) fall out of both filters. */
-  private def incrementalSurvivors(newBatch: DataFrame, pairs: DataFrame,
+  private def incrementalLosers(pairs: DataFrame,
       idCol: String): DataFrame = {
+    val spark = pairs.sparkSession
     // FULL driver fast path (r18 — the ingest witness's per-batch cost
     // is fixed job overhead, not data): a micro-batch's post-threshold
     // pair graph is usually tiny, so ONE bounded collect resolves
     // new-new components, old-touched ids, and the loser set entirely
     // on the driver — no pair checkpoint, no component jobs, no loser
-    // persist — and the losers ride back as a broadcast literal.
+    // persist — and the losers ride back as a broadcast literal
+    // (bounded: at most two ids per collected pair).
     // Semantics identical to the distributed body below (union-by-min
     // root = connectedComponents' cluster pick; same three loser
     // classes); one row past the cap falls back, so scale is safe.
@@ -1002,11 +1011,8 @@ object TextDedupOps {
       val losers = roots.iterator
         .collect { case (m, r) if badRoots.contains(r) || m != r => m } ++
         oldTouched.iterator.filterNot(roots.contains)
-      val spark = newBatch.sparkSession
       import spark.implicits._
-      val losersDf = losers.map(unfoldId).toSet.toSeq.sorted
-        .toDF(idCol)
-      return newBatch.join(broadcast(losersDf), Seq(idCol), "left_anti")
+      return broadcast(losers.map(unfoldId).toSet.toSeq.sorted.toDF(idCol))
     }
     // pairs feed THREE consumers (new-new edges into components,
     // old-touched extraction, and — through losers — every downstream
@@ -1031,7 +1037,7 @@ object TextDedupOps {
     // components with any old-touched member die whole
     val compBad = comps.join(oldTouched, Seq("id"), "left_semi")
       .select("cluster").distinct()
-    val losers = graft.operators.DistScan.registerCache(
+    graft.operators.DistScan.registerCache(
       comps.join(compBad, Seq("cluster"), "left_semi")
         .select(col("id"))
         .unionByName(comps.filter(col("id") =!= col("cluster"))
@@ -1041,7 +1047,6 @@ object TextDedupOps {
         .distinct()
         .select(unfold(col("id")).as(idCol))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    newBatch.join(losers, Seq(idCol), "left_anti")
   }
 
   /** INCREMENTAL SimHash near-dup dedup — the banded-Hamming twin of
@@ -1066,7 +1071,7 @@ object TextDedupOps {
     val pairs = simHashPairsOfHashes(ex.unionByName(nw), idCol,
       maxHamming, bands, maxBucketSize)
       .select("id_a", "id_b")
-    incrementalSurvivors(newBatch, pairs, idCol)
+    newBatch.join(incrementalLosers(pairs, idCol), Seq(idCol), "left_anti")
   }
 
   // ----- SimHash STORE lifecycle (r19) ------------------------------

@@ -1,7 +1,9 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan,
+  ResolvedHint, Statistics}
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Minimal access bridge: `Dataset.ofRows` is private[sql], and a custom
@@ -13,6 +15,43 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** An eager `localCheckpoint` of `df` whose plan reports the bytes
+    * the checkpoint actually stored. A plain checkpoint's `LogicalRDD`
+    * carries its origin plan's size ESTIMATE (a join's is the product
+    * of its sides), so the planner cannot broadcast a batch-sized
+    * checkpoint and AQE only rescues the join after both shuffle stages
+    * ran. Here the relation is re-wrapped with `originStats` set to the
+    * block manager's memory + disk bytes for the checkpointed RDD:
+    * joins against it broadcast below
+    * `spark.sql.autoBroadcastJoinThreshold` and shuffle above it, by
+    * size alone. Falls back to the plain checkpoint when the storage
+    * info is missing (nothing stored). */
+  def sizedLocalCheckpoint(df: DataFrame): DataFrame = {
+    val cp = df.localCheckpoint(true)
+    cp.queryExecution.logical match {
+      case r: LogicalRDD =>
+        val spark = df.sparkSession
+        spark.sparkContext.getRDDStorageInfo.find(_.id == r.rdd.id)
+          .fold(cp) { info =>
+            ofRows(spark, r.copy()(
+              spark.asInstanceOf[classic.SparkSession],
+              Some(Statistics(sizeInBytes = BigInt(
+                info.memSize + info.diskSize))),
+              Some(r.constraints)))
+          }
+      case _ => cp
+    }
+  }
+
+  /** `df` with its resolved hints removed — for a query that reads a
+    * hinted frame without joining it (a `broadcast` side's own
+    * validation aggregate, say), where Spark would log the hint as
+    * attached to no join and drop it anyway. */
+  def withoutHints(df: DataFrame): DataFrame =
+    ofRows(df.sparkSession, df.queryExecution.analyzed.transformUp {
+      case h: ResolvedHint => h.child
+    })
 
   /** Test-only visibility shim: SparkSessionExtensions' builders are
     * private[sql]; specs use this to assert what an extensions installer

@@ -1,0 +1,134 @@
+package graft
+
+import graft.llm.ClassifierOps
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
+
+/** Property tests for the hashed quality classifier: the histogram
+  * kernel (`ClassifierOps.bucketCountFeatures`) against the
+  * per-occurrence explode `ReferenceTiers.classifierHistogram`, and the
+  * trainer, which folds the document count into its first gradient
+  * pass, against the count-then-pass loop
+  * `ReferenceTiers.trainHardLogistic` — on generated documents: NULL,
+  * empty, all-whitespace, non-BMP (accented and astral code points)
+  * and ASCII word soups, with NULL labels among the 0/1 ones, plus one
+  * document above 1 MB. Fixed seeds, as in [[GopherPropertySpec]]. */
+class ClassifierPropertySpec extends SparkSpec {
+  import spark.implicits._
+
+  private val ascii: Gen[String] = Gen.oneOf("abcxyz".map(_.toString))
+  private val nonBmp: Gen[String] = Gen.frequency(
+    4 -> ascii,
+    1 -> Gen.oneOf("é", "ñ", "ü"),
+    2 -> Gen.oneOf("𝕏", "😀", "𠀋", "🌍"))
+  private val Spaces = Seq(" ", "\t", "\n", "\r", "\u000B", "\u000C")
+
+  private def wordOf(ch: Gen[String]): Gen[String] =
+    Gen.chooseNum(1, 4).flatMap(n => Gen.listOfN(n, ch).map(_.mkString))
+
+  /** 1–40 words joined by runs of 1–3 whitespace characters, with
+    * optional leading and trailing whitespace. */
+  private def docOf(ch: Gen[String]): Gen[String] = for {
+    n <- Gen.chooseNum(1, 40)
+    ws <- Gen.listOfN(n, wordOf(ch))
+    seps <- Gen.listOfN(n + 1, Gen.chooseNum(1, 3).flatMap(k =>
+      Gen.listOfN(k, Gen.oneOf(Spaces)).map(_.mkString)))
+    edges <- Gen.oneOf(true, false)
+  } yield {
+    val body = ws.zip(seps.tail).map { case (w, s) => w + s }.mkString
+    if (edges) seps.head + body else body.trim
+  }
+
+  private val docGen: Gen[String] = Gen.frequency(
+    1 -> Gen.const(null: String),
+    1 -> Gen.const(""),
+    1 -> Gen.chooseNum(1, 6).flatMap(n =>
+      Gen.listOfN(n, Gen.oneOf(Spaces)).map(_.mkString)),
+    4 -> docOf(ascii),
+    4 -> docOf(nonBmp))
+
+  private val labelGen: Gen[Option[Int]] =
+    Gen.frequency(1 -> Gen.const(None), 6 -> Gen.oneOf(0, 1).map(Some(_)))
+
+  private def sample[T](g: Gen[T], seed: Long): T =
+    g.pureApply(Gen.Parameters.default, Seed(seed))
+
+  /** 200 generated documents (ids 0..199) plus one of each edge class
+    * pinned by id: 1000 NULL, 1001 empty, 1002 all-whitespace. */
+  private lazy val docs: DataFrame =
+    ((0 until 200).map(i => (i.toLong, sample(docGen, 8000L + i),
+        sample(labelGen, 9000L + i))) ++
+      Seq((1000L, null, Some(1)), (1001L, "", Some(0)),
+        (1002L, " \t\n\u000B\r ", None)))
+      .toDF("doc_id", "text", "y").cache()
+
+  /** The kernel's histogram as (doc_id, bucket, n) for nonzero counts,
+    * and the number of documents it emitted a row for. */
+  private def kernelHistogram(df: DataFrame, buckets: Int)
+      : (Set[(Long, Long, Long)], Long) = {
+    val feat = ClassifierOps.bucketCountFeatures(df, "text", "y",
+      Seq("doc_id"), buckets)
+    val rows = feat.select(col("doc_id"), col("__hs")).collect()
+    val hist = rows.flatMap { r =>
+      val hs = r.getSeq[Long](1)
+      hs.indices.filter(hs(_) > 0).map(b => (r.getLong(0), b.toLong, hs(b)))
+    }.toSet
+    feat.unpersist()
+    (hist, rows.length.toLong)
+  }
+
+  private def referenceHistogram(df: DataFrame, buckets: Int)
+      : Set[(Long, Long, Long)] =
+    ReferenceTiers.classifierHistogram(df, "doc_id", "text", buckets)
+      .as[(Long, Long, Long)].collect().toSet
+
+  test("histogram kernel ≡ per-occurrence reference on generated " +
+      "documents; NULL, empty and all-whitespace documents count no " +
+      "word but keep their row") {
+    for (buckets <- Seq(1, 7, 64)) {
+      val (got, rows) = kernelHistogram(docs, buckets)
+      val want = referenceHistogram(docs, buckets)
+      assert(rows === docs.count(), s"buckets=$buckets")
+      assert(got == want, s"buckets=$buckets: kernel-only " +
+        s"${(got -- want).take(10)}, reference-only ${(want -- got).take(10)}")
+      assert(!got.exists(t => Set(1000L, 1001L, 1002L)(t._1)))
+    }
+  }
+
+  test("a document above 1 MB: histogram kernel ≡ reference") {
+    val sb = new StringBuilder
+    var seed = 95000L
+    while (sb.toString.getBytes("UTF-8").length <= (1 << 20) + 4096) {
+      (0 until 256).foreach { _ =>
+        sb.append(sample(docOf(nonBmp), seed)).append('\n'); seed += 1 }
+    }
+    val long = Seq((1L, sb.toString, Option(1))).toDF("doc_id", "text", "y")
+    val (got, rows) = kernelHistogram(long, 32)
+    assert(rows === 1L)
+    assert(got == referenceHistogram(long, 32))
+  }
+
+  test("the count-folded trainer's weights ≡ the count-then-pass " +
+      "reference; the scored logits ≡ logitMicro over the text") {
+    for ((buckets, iters, lrDen) <- Seq((16, 2, 100L), (5, 3, 1L))) {
+      val got = ClassifierOps.trainHardLogistic(docs, "text", "y",
+        buckets, iters, lrDen)
+      val want = ReferenceTiers.trainHardLogistic(docs, "text", "y",
+        buckets, iters, lrDen)
+      assert(got.toSeq === want.toSeq, s"($buckets, $iters, $lrDen)")
+      val scored = ClassifierOps.trainHardLogisticScored(docs, "text", "y",
+        "doc_id", buckets, iters, lrDen)
+      val viaText = docs.select(col("doc_id"), ClassifierOps.logitMicro(
+        col("text"), want.take(buckets).toSeq, want(buckets))
+        .as("logit_micro"))
+      assert(scored.exceptAll(viaText).count() === 0L)
+      assert(viaText.exceptAll(scored).count() === 0L)
+    }
+    // the generated weights moved off zero, so the comparison is not
+    // between two untouched arrays
+    assert(ClassifierOps.trainHardLogistic(docs, "text", "y", 16, 2, 1L)
+      .exists(_ != 0L))
+  }
+}

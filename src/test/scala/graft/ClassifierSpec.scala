@@ -55,30 +55,6 @@ class ClassifierSpec extends SparkSpec {
   // the scored logits must equal the per-occurrence formulation bit for
   // bit (integer gradients — any drift is a bug, not noise).
   test("histogram features match the per-occurrence formulation bit for bit") {
-    import graft.llm.TextStatsOps
-    // the pre-r19 per-occurrence loop, kept verbatim as the reference
-    def reference(df: org.apache.spark.sql.DataFrame, buckets: Int,
-        iters: Int, lrDen: Long): Array[Long] = {
-      val n = df.count()
-      val w = Array.fill(buckets + 1)(0L)
-      val txt = coalesce(col("text"), lit(""))
-      for (_ <- 1 to iters) {
-        val z = ClassifierOps.logitMicro(txt, w.take(buckets).toSeq, w(buckets))
-        val err = (ClassifierOps.hardSigmoidMicro(z) -
-          col("y").cast("long") * ClassifierOps.Micro).as("__err")
-        val g = df.select(err,
-            array_append(
-              transform(TextStatsOps.words(txt),
-                t => TextStatsOps.md5Bucket(t, buckets)),
-              lit(buckets.toLong)).as("__bs"))
-          .select(col("__err"), explode(col("__bs")).as("__b"))
-          .groupBy("__b").agg(sum("__err").as("__g"))
-          .collect()
-          .map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
-        for (j <- 0 to buckets) w(j) -= g.getOrElse(j, 0L) / (lrDen * n)
-      }
-      w
-    }
     // include a NULL-text row (trains and scores as bias-only) AND a
     // NULL-label row (r19 ADVICE: the label column is parquet-nullable;
     // the per-occurrence loop null-propagated such a row out of every
@@ -90,7 +66,8 @@ class ClassifierSpec extends SparkSpec {
         .toDF("id", "text").withColumn("y", lit(null).cast("int")))
     val got = ClassifierOps.trainHardLogistic(withNull, "text", "y",
       buckets = 32, iters = 3, lrDen = 10L)
-    val want = reference(withNull, 32, 3, 10L)
+    val want = ReferenceTiers.trainHardLogistic(withNull, "text", "y", 32, 3,
+      10L)
     assert(got.toSeq === want.toSeq)
     val scored = ClassifierOps.trainHardLogisticScored(withNull, "text",
       "y", "id", buckets = 32, iters = 3, lrDen = 10L)

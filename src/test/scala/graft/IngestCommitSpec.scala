@@ -1,7 +1,9 @@
 package graft
 
 import graft.llm.{IngestCommit, SimilarityOps, TextDedupOps}
+import org.apache.spark.SpecListenerBus
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.functions._
 
 /** Exactly-once foreachBatch ingest (IngestCommit): kill the ingest at
@@ -82,7 +84,7 @@ class IngestCommitSpec extends SparkSpec {
     bandRows.foreach { case (id, n) =>
       assert(n == bands, s"doc $id has $n band rows, expected $bands")
     }
-    val sigCounts = TextDedupOps.sigsMergedRead(spark, index)
+    val sigCounts = TextDedupOps.sigsRead(spark, index, "doc_id")
       .filter(col("ingest_id").isNull || col("ingest_id") <= hwm)
       .groupBy("doc_id").count().as[(Long, Long)].collect().toMap
     assert(sigCounts.keySet == corpusIds)
@@ -210,6 +212,130 @@ class IngestCommitSpec extends SparkSpec {
       IngestCommit.committedCorpus(spark, corpus, s"$index/commits"),
       oneShotOracle)
     assertIndexConsistent(index, corpus)
+  }
+
+  test("near-dup ingest: a NULL-id document reaches the corpus but not " +
+      "the index") {
+    val root = tmpDir("near-null")
+    val (index, corpus) = (s"$root/index", s"$root/corpus")
+    initIndex(index)
+    val nullDoc = triDocs(Seq(500L))
+      .select(lit(null).cast("long").as("doc_id"), col("text"))
+    assert(IngestCommit.nearDupIngestBatch(
+      triDocs(0L until 10L).unionByName(nullDoc), 0L, index, corpus,
+      threshold = 0.99))
+    val ids = IngestCommit.committedCorpus(spark, corpus,
+      s"$index/commits").select("doc_id").as[Option[Long]].collect()
+    assert(ids.count(_.isEmpty) === 1, ids.toSeq)
+    assert(ids.flatten.toSet == (0L until 10L).toSet)
+    val bandIds = spark.read.schema(TextDedupOps.bandsReadSchema("doc_id"))
+      .parquet(s"$index/bands").select("doc_id").as[Option[Long]]
+      .collect().toSet
+    val sigIds = TextDedupOps.sigsRead(spark, index, "doc_id")
+      .select("doc_id").as[Option[Long]].collect().toSet
+    assert(bandIds == (0L until 10L).map(Option(_)).toSet, bandIds)
+    assert(sigIds == bandIds, sigIds)
+  }
+
+  /** Runs `body` and returns each query it executed, by the plan AQE
+    * started from (its initial plan, before any stage ran) or, where
+    * AQE left a query alone, by its executed plan. */
+  private def initialPlans(body: => Unit): Seq[(QueryExecution, SparkPlan)] = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        seen.add(qe); ()
+      }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    SpecListenerBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try { body; SpecListenerBus.drain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq.map(qe => qe -> qe.executedPlan.transformUp {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+    })
+  }
+
+  /** The output path of a write query, if `qe` is one. */
+  private def writePath(qe: QueryExecution): Option[String] =
+    qe.logical.collectFirst {
+      case c: org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand =>
+        c.outputPath.toString
+    }
+
+  /** Ingests a 250-doc base as batch 0, then captures the plans of a
+    * 250-row batch 1 (240 fresh docs and 10 clones of base docs) that is
+    * joined to its own ids, as a scored batch is: the join's size
+    * estimate (the product of its sides) is far above the broadcast
+    * threshold, so only the checkpoint's measured size can make the
+    * batch a broadcast side. */
+  private def batchOnePlans(tag: String): Seq[(QueryExecution, SparkPlan)] = {
+    val root = tmpDir(tag)
+    val (index, corpus) = (s"$root/index", s"$root/corpus")
+    initIndex(index)
+    assert(IngestCommit.nearDupIngestBatch(triDocs(0L until 250L), 0L,
+      index, corpus, threshold = 0.99))
+    val clones = triDocs(0L until 10L)
+      .select((col("doc_id") + 1000).as("doc_id"), col("text"))
+    val fresh = triDocs(250L until 490L).unionByName(clones)
+    val b1 = fresh.join(fresh.select("doc_id"), Seq("doc_id"))
+    val plans = initialPlans(assert(IngestCommit.nearDupIngestBatch(
+      b1, 1L, index, corpus, threshold = 0.99)))
+    val ids = IngestCommit.committedCorpus(spark, corpus,
+      s"$index/commits").select("doc_id").as[Long].collect().toSet
+    assert(ids == (0L until 490L).toSet)
+    plans
+  }
+
+  private def shuffles(p: SparkPlan) = p.collect {
+    case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
+  }
+
+  /** The pair probe: the one collect over the banded join. */
+  private def probePlan(plans: Seq[(QueryExecution, SparkPlan)]): SparkPlan = {
+    val probes = plans.collect { case (qe, p) if writePath(qe).isEmpty &&
+        p.toString.contains("band_hash") => p }
+    assert(probes.size == 1, probes.mkString("\n\n"))
+    probes.head
+  }
+
+  test("near-dup ingest plans: the corpus write and both appends plan " +
+      "no shuffle; the pair probe broadcasts the batch bands") {
+    import org.apache.spark.sql.execution.{GenerateExec, RDDScanExec}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val plans = batchOnePlans("near-plans")
+    val writes = plans.flatMap { case (qe, p) => writePath(qe).map(_ -> p) }
+    Seq("corpus/ingest_id=1", "index/bands", "index/sigs").foreach { w =>
+      val ps = writes.collect { case (path, p) if path.endsWith(w) => p }
+      assert(ps.size == 1, s"$w: ${writes.map(_._1)}")
+      assert(shuffles(ps.head).isEmpty, s"$w shuffles:\n${ps.head}")
+    }
+    // the batch bands (explode of the checkpointed signatures) are a
+    // broadcast side; the index scan streams past them
+    val probe = probePlan(plans)
+    val bandBroadcast = probe.collect { case b: BroadcastExchangeExec
+        if b.child.exists(_.isInstanceOf[GenerateExec]) &&
+          b.child.exists(_.isInstanceOf[RDDScanExec]) => b }
+    assert(bandBroadcast.nonEmpty, probe.toString)
+  }
+
+  test("near-dup ingest plans: with broadcasts off the pair probe " +
+      "plans shuffle joins (the broadcast is chosen by size, not a hint)") {
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      val probe = probePlan(batchOnePlans("near-plans-nobc"))
+      assert(probe.collect { case b: BroadcastExchangeExec => b }.isEmpty,
+        probe.toString)
+      assert(probe.collect { case j: SortMergeJoinExec => j }.nonEmpty,
+        probe.toString)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("near-dup ingest evaluates its input lineage once per batch") {

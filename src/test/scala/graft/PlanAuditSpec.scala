@@ -37,6 +37,11 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("TakeOrderedAndProject"), p.take(2000))
   }
 
+  test("frame_update: the patch frame's broadcast hint steers the join") {
+    val p = plan("frame_update")
+    assert(p.contains("BroadcastHashJoin"), p.take(2000))
+  }
+
   test("nlargest: TakeOrderedAndProject, not a global sort") {
     val p = plan("nlargest_orders")
     assert(p.contains("TakeOrderedAndProject"), p.take(2000))
@@ -413,13 +418,58 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   /** The Spark plan of every registry query, built and planned once
-    * for both registry-wide guards below. A query that fails to plan
-    * fails the guard that reads the map first. */
-  private lazy val registryPlans: Seq[(String, SparkPlan)] =
-    SparkEntry.queries.toSeq.sortBy(_._1).map { case (n, fn) =>
-      n -> (try fn(spark, d).queryExecution.sparkPlan
-        catch { case e: Throwable => fail(s"$n failed to plan: $e") })
+    * for the registry-wide guards below, with the hint errors Spark
+    * logged (and otherwise ignored) while building and planning it. A
+    * query that fails to plan fails the guard that reads the map
+    * first. */
+  private lazy val registry: Seq[(String, SparkPlan, Seq[String])] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val name = "org.apache.spark.sql.catalyst.analysis.HintErrorLogger"
+    // the session's start (re)configures logging: attach after it, to
+    // the configuration the hint logger actually uses
+    spark.sparkContext
+    val logger = LogManager.getLogger(name).asInstanceOf[Logger]
+    assert(logger.isEnabled(Level.WARN),
+      s"$name does not log warnings, so no dropped hint could be seen")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("plan-audit-hint-errors", null,
+        null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName == name) {
+          seen.add(e.getMessage.getFormattedMessage); ()
+        }
     }
+    val root = logger.getContext.getConfiguration.getRootLogger
+    appender.start()
+    root.addAppender(appender, Level.WARN, null)
+    logger.getContext.updateLoggers()
+    try SparkEntry.queries.toSeq.sortBy(_._1).map { case (n, fn) =>
+      seen.clear()
+      val sp = try fn(spark, d).queryExecution.sparkPlan
+        catch { case e: Throwable => fail(s"$n failed to plan: $e") }
+      import scala.jdk.CollectionConverters._
+      (n, sp, seen.asScala.toSeq)
+    } finally {
+      root.removeAppender(appender.getName)
+      logger.getContext.updateLoggers()
+      appender.stop()
+    }
+  }
+
+  private lazy val registryPlans: Seq[(String, SparkPlan)] =
+    registry.map { case (n, sp, _) => n -> sp }
+
+  test("registry-wide: no query carries a hint Spark drops") {
+    // A hint that attaches to nothing (a broadcast hint on a frame no
+    // join reads, say) is logged once and ignored: the plan silently
+    // lacks the shape the hint was written for.
+    val dropped = registry.collect { case (n, _, ws) if ws.nonEmpty =>
+      s"$n: ${ws.mkString("; ")}" }
+    assert(dropped.isEmpty, dropped.mkString("\n"))
+  }
 
   /** Registry-wide guard: WindowExec with an empty partition spec moves
     * ALL rows to one partition — fatal at 100 TB unless the input is

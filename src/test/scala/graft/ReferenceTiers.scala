@@ -1,6 +1,6 @@
 package graft
 
-import graft.llm.{TextDedupOps, TextStatsOps}
+import graft.llm.{ClassifierOps, TextDedupOps, TextStatsOps}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -16,7 +16,9 @@ import org.apache.spark.sql.functions._
   *   - Gopher repetition: the staged expression form, against
   *     `TextStatsOps.gopherRepetition`;
   *   - MinHash: the shingle explode + k-way `min` aggregation, against
-  *     `TextDedupOps.minHashSignatures`.
+  *     `TextDedupOps.minHashSignatures`;
+  *   - hashed classifier: the per-occurrence word-bucket explode, against
+  *     `ClassifierOps`' histogram kernel and trainer.
   * Every table rides the plan as a literal and every loop is an
   * interpreted higher-order function: fine for spec-sized inputs,
   * O(len²) and worse per word. */
@@ -353,5 +355,47 @@ object ReferenceTiers {
     exploded.groupBy(col(idCol)).agg(mins.head, mins.tail: _*)
       .select(col(idCol),
         array((0 until k).map(i => col(s"__m$i")): _*).as("signature"))
+  }
+
+  // ───── Hashed quality classifier ─────
+
+  /** Per-occurrence word-bucket histogram: every whitespace word of the
+    * text (NULL reads as empty) exploded, `md5Bucket`ed and counted
+    * per (idCol, bucket) — rows only for nonzero counts. Against the
+    * histogram kernel `ClassifierOps.bucketCountFeatures`. */
+  def classifierHistogram(df: DataFrame, idCol: String, textCol: String,
+      buckets: Int): DataFrame =
+    df.select(col(idCol), explode(transform(
+        TextStatsOps.words(coalesce(col(textCol), lit(""))),
+        t => TextStatsOps.md5Bucket(t, buckets))).as("bucket"))
+      .groupBy(col(idCol), col("bucket")).agg(count(lit(1)).as("n"))
+
+  /** The hard-sigmoid trainer as a count-then-pass loop: `n` from its
+    * own `count()`, then `iters` per-occurrence gradient passes (each
+    * word occurrence and one bias slot per document exploded and
+    * summed per bucket), weights updated with truncating division by
+    * lrDen·n. Against `ClassifierOps.trainHardLogistic`, which folds
+    * the count into its first pass over the histogram. */
+  def trainHardLogistic(df: DataFrame, textCol: String, labelCol: String,
+      buckets: Int, iters: Int, lrDen: Long): Array[Long] = {
+    val n = df.count()
+    val w = Array.fill(buckets + 1)(0L)
+    val txt = coalesce(col(textCol), lit(""))
+    for (_ <- 1 to iters) {
+      val z = ClassifierOps.logitMicro(txt, w.take(buckets).toSeq, w(buckets))
+      val err = (ClassifierOps.hardSigmoidMicro(z) -
+        col(labelCol).cast("long") * ClassifierOps.Micro).as("__err")
+      val g = df.select(err,
+          array_append(
+            transform(TextStatsOps.words(txt),
+              t => TextStatsOps.md5Bucket(t, buckets)),
+            lit(buckets.toLong)).as("__bs"))
+        .select(col("__err"), explode(col("__bs")).as("__b"))
+        .groupBy("__b").agg(sum("__err").as("__g"))
+        .collect()
+        .map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
+      for (j <- 0 to buckets) w(j) -= g.getOrElse(j, 0L) / (lrDen * n)
+    }
+    w
   }
 }
