@@ -300,22 +300,6 @@ object ExcelIo {
     r.close(); rows.result()
   }
 
-  private def slurpFile(fs: org.apache.hadoop.fs.FileSystem,
-      p: Path): Array[Byte] = {
-    val len = fs.getFileStatus(p).getLen
-    require(len <= MaxBytes,
-      s"$p is ${len >> 20} MB — xlsx is a driver-bounded interchange " +
-        s"format (limit ${MaxBytes >> 20} MB); use parquet for data at scale")
-    val in = fs.open(p)
-    try {
-      val out = new ByteArrayOutputStream(len.toInt)
-      val buf = new Array[Byte](1 << 20)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      out.toByteArray
-    } finally in.close()
-  }
-
   private val LongRe = "-?\\d{1,18}".r
 
   /** Infer a column type from its raw cells (the read_excel dtype rule:
@@ -367,60 +351,42 @@ object ExcelIo {
     * read_excel sheet_name parameter (`pandas/io/excel.py:300`). */
   def read(spark: SparkSession, path: String, sheetIndex: Int = 0,
       sheetName: String = null): DataFrame = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(path)
-    val fs = p.getFileSystem(hconf)
-    val files: Seq[String] =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).map(_.getPath).filter(_.getName.endsWith(".xlsx"))
-          .map(_.toString).sorted.toSeq
-      else Seq(p.toString)
-    require(files.nonEmpty, s"no .xlsx files under $path")
-
+    val files = SplitRead.inputFiles(spark, path, ".xlsx")
     // schema from the first workbook, on the driver
-    val first = parseWorkbook(slurpFile(fs, new Path(files.head)),
+    val first = sheet(files.head,
+      SplitRead.readWhole(spark, files.head, MaxBytes, "xlsx"),
       sheetIndex, sheetName)
-    require(first.nonEmpty, s"${files.head}: empty worksheet (no header row)")
-    val header = first.head.map(c => c.col -> c.value).toMap
-    val nCols = (first.map(_.map(_.col).maxOption.getOrElse(-1)).max + 1)
-      .max(header.keys.maxOption.map(_ + 1).getOrElse(0))
-    val names = (0 until nCols).map(i => header.getOrElse(i, s"_c$i"))
-    val body = first.tail
+    val nCols = first.map(_.map(_.col).maxOption.getOrElse(-1)).max + 1
     val types = (0 until nCols).map(i =>
-      inferType(body.flatMap(_.find(_.col == i))))
-    val schema = StructType(names.zip(types).map { case (n, t) =>
-      StructField(n, t, nullable = true) })
+      inferType(first.tail.flatMap(_.find(_.col == i))))
+    val schema = SplitRead.headerSchema(headerNames(first.head), types)
 
-    val bConf = spark.sparkContext.broadcast(new SerializableHadoopConf(hconf))
-    val bTypes = spark.sparkContext.broadcast(types.toArray)
-    val bNames = spark.sparkContext.broadcast(names.toArray)
-    val rdd = spark.sparkContext
-      .parallelize(files, files.size)
-      .flatMap { f =>
-        val path = new Path(f)
-        val fsx = path.getFileSystem(bConf.value.value)
-        val ts = bTypes.value
-        val wb = parseWorkbook(slurpFile(fsx, path), sheetIndex, sheetName)
-        require(wb.nonEmpty, s"$f: empty worksheet (no header row)")
-        // sibling workbooks must carry the first workbook's header —
-        // names and arity — or columns would silently misassign (the
-        // dta/xpt directory readers apply the same per-file check)
-        val hdr = wb.head.map(c => c.col -> c.value).toMap
-        val got = (0 until math.max(ts.length,
-          hdr.keys.maxOption.map(_ + 1).getOrElse(0)))
-          .map(i => hdr.getOrElse(i, s"_c$i"))
-        require(got == bNames.value.toSeq,
-          s"$f: header (${got.mkString(", ")}) does not match the first " +
-            s"workbook's (${bNames.value.mkString(", ")})")
-        wb.drop(1).map { cells =>
-          val arr = new Array[Any](ts.length)
-          cells.foreach(c =>
-            if (c.col < ts.length) arr(c.col) = convert(c, ts(c.col)))
-          Row.fromSeq(arr.toSeq)
-        }
+    SplitRead.scan(spark, schema, files.map(_ -> ())) { case (f, _, in) =>
+      val wb = sheet(f, SplitRead.readWhole(in, f, MaxBytes, "xlsx"),
+        sheetIndex, sheetName)
+      // sibling workbooks must carry the first workbook's header — names
+      // and arity — or columns would silently misassign
+      SplitRead.requireSchema(f,
+        SplitRead.headerSchema(headerNames(wb.head), types), files.head, schema)
+      wb.iterator.drop(1).map { cells =>
+        val arr = new Array[Any](types.length)
+        cells.foreach(c =>
+          if (c.col < types.length) arr(c.col) = convert(c, types(c.col)))
+        Row.fromSeq(arr.toSeq)
       }
-    spark.createDataFrame(rdd, schema)
+    }
   }
+
+  /** The selected sheet's rows, header first. */
+  private def sheet(f: String, bytes: Array[Byte], sheetIndex: Int,
+      sheetName: String): Seq[Seq[RawCell]] = {
+    val wb = parseWorkbook(bytes, sheetIndex, sheetName)
+    require(wb.nonEmpty, s"$f: empty worksheet (no header row)")
+    wb
+  }
+
+  private def headerNames(header: Seq[RawCell]): Map[Int, String] =
+    header.map(c => c.col -> c.value).toMap
 
   // --------------------------------------------------------------- write
 

@@ -132,12 +132,8 @@ object FeatherIo {
           s"feather vector ${other.getClass.getSimpleName}")
     }
 
-  /** Paths resolve through the Hadoop FileSystem API — identical
-    * semantics to spark.read.parquet: bare paths go to the default
-    * filesystem, `file://`/`hdfs://`/object-store schemes all work, so
-    * a feather file on shared storage is readable from every executor.
-    * Arrow needs a SeekableByteChannel; FSDataInputStream provides the
-    * positioned reads. */
+  /** Arrow needs a SeekableByteChannel; FSDataInputStream provides the
+    * positioned reads. The stream's opener closes it. */
   private class HadoopSeekableChannel(
       in: org.apache.hadoop.fs.FSDataInputStream, sz: Long)
       extends SeekableByteChannel {
@@ -158,60 +154,58 @@ object FeatherIo {
     override def position(p: Long): SeekableByteChannel = { pos = p; this }
     override def size(): Long = sz
     override def isOpen: Boolean = open
-    override def close(): Unit = { open = false; in.close() }
+    override def close(): Unit = open = false
     override def write(src: ByteBuffer): Int =
       throw new UnsupportedOperationException("read-only channel")
     override def truncate(s: Long): SeekableByteChannel =
       throw new UnsupportedOperationException("read-only channel")
   }
 
-  private def openRead(path: String,
-      conf: org.apache.hadoop.conf.Configuration): SeekableByteChannel = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    new HadoopSeekableChannel(fs.open(p), fs.getFileStatus(p).getLen)
-  }
+  /** An IPC file's footer: its schema, length and record-batch blocks. */
+  private case class Footer(schema: StructType, length: Long,
+      blocks: Seq[(Long, Int, Long)])
 
-  /** Footer metadata only: (spark schema, record-batch blocks). */
-  private def footer(path: String,
-      conf: org.apache.hadoop.conf.Configuration)
-      : (StructType, Seq[(Long, Int, Long)]) = {
+  /** Footer metadata only, no record batch read. */
+  private def footer(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Footer = {
+    val length = fs.getFileStatus(p).getLen
+    val in = fs.open(p)
     val alloc = new RootAllocator()
-    val ch = openRead(path, conf)
     try {
-      val reader = new ArrowFileReader(ch, alloc)
+      val reader =
+        new ArrowFileReader(new HadoopSeekableChannel(in, length), alloc)
       try {
         val schema = StructType(reader.getVectorSchemaRoot.getSchema
           .getFields.asScala.toSeq.map(f =>
             StructField(f.getName, sparkType(f.getType), f.isNullable)))
         val blocks = reader.getRecordBlocks.asScala.toSeq.map(b =>
           (b.getOffset, b.getMetadataLength, b.getBodyLength))
-        (schema, blocks)
+        Footer(schema, length, blocks)
       } finally reader.close()
-    } finally { ch.close(); alloc.close() }
+    } finally { in.close(); alloc.close() }
   }
 
-  /** pandas `read_feather(path)`: the IPC file as a DataFrame, one
-    * task per record batch. */
+  /** pandas `read_feather(path)`: the IPC file (or a directory of them)
+    * as a DataFrame, one record batch per split. Paths resolve through
+    * the Hadoop FileSystem API, as spark.read.parquet's do, so a file on
+    * shared storage is readable from every executor. */
   def read(spark: SparkSession, path: String): DataFrame = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val (schema, blocks) = footer(path, hconf)
-    if (blocks.isEmpty)
-      return spark.createDataFrame(new java.util.ArrayList[Row](), schema)
+    val files = SplitRead.inputFiles(spark, path, ".feather")
+    val (schema, footers) = SplitRead.headers(spark, files)(footer)(_.schema)
+    val splits = footers.flatMap { case (f, ft) =>
+      ft.blocks.map(b => f -> (ft.length, b))
+    }
     // Partition count scales with the cluster (defaultParallelism =
     // total executor cores), not a hardcoded local-mode constant: a
     // 10k-batch file on a 1000-core cluster gets 1000 slices of ~10
     // sequential batch loads each, not 32 stragglers.
-    val parallelism = math.min(blocks.size,
-      math.max(spark.sparkContext.defaultParallelism, 1))
-    val bcConf = spark.sparkContext.broadcast(new SerializableHadoopConf(hconf))
-    val rdd = spark.sparkContext
-      .parallelize(blocks, parallelism)
-      .flatMap { case (off, metaLen, bodyLen) =>
+    SplitRead.scan(spark, schema, splits,
+        maxSlices = math.max(spark.sparkContext.defaultParallelism, 1)) {
+      case (_, (length, (off, metaLen, bodyLen)), in) =>
         val alloc = new RootAllocator()
-        val ch = openRead(path, bcConf.value.value)
         try {
-          val reader = new ArrowFileReader(ch, alloc)
+          val reader = new ArrowFileReader(
+            new HadoopSeekableChannel(in, length), alloc)
           try {
             reader.loadRecordBatch(new ArrowBlock(off, metaLen, bodyLen))
             val root = reader.getVectorSchemaRoot
@@ -225,11 +219,10 @@ object FeatherIo {
               out += Row.fromSeq(vecs.toIndexedSeq.map(v => cell(v, i)))
               i += 1
             }
-            out
+            out.iterator
           } finally reader.close()
-        } finally { ch.close(); alloc.close() }
-      }
-    spark.createDataFrame(rdd, schema)
+        } finally alloc.close()
+    }
   }
 
   /** pandas `to_feather(df, path)`: stream the frame into one IPC file

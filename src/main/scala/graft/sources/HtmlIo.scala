@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.UTF_8
 import java.sql.{Date, Timestamp}
 
@@ -311,70 +310,46 @@ object HtmlIo {
     }
   }
 
-  private def slurp(fs: org.apache.hadoop.fs.FileSystem, p: Path): String = {
-    val len = fs.getFileStatus(p).getLen
-    require(len <= MaxBytes,
-      s"$p is ${len >> 20} MB — an HTML table is a driver-bounded " +
-        s"interchange format (limit ${MaxBytes >> 20} MB); use parquet at scale")
-    val in = fs.open(p)
-    try {
-      val out = new ByteArrayOutputStream(len.toInt)
-      val buf = new Array[Byte](1 << 20)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      new String(out.toByteArray, UTF_8)
-    } finally in.close()
-  }
-
   /** read_html: the `tableIndex`-th table of each document (reference
     * returns a list of frames; the index selects one). One file or a
-    * directory (one task per file); schema from the first document. */
+    * directory (one task per file); schema from the first document,
+    * whose header every sibling must carry. */
   def read(spark: SparkSession, path: String, tableIndex: Int = 0): DataFrame = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(path)
-    val fs = p.getFileSystem(hconf)
-    val files: Seq[String] =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).map(_.getPath)
-          .filter(f => f.getName.endsWith(".html") || f.getName.endsWith(".htm"))
-          .map(_.toString).sorted.toSeq
-      else Seq(p.toString)
-    require(files.nonEmpty, s"no .html files under $path")
-
-    val firstTables = parseTables(slurp(fs, new Path(files.head)))
-    require(tableIndex < firstTables.size,
-      s"${files.head}: has ${firstTables.size} table(s), asked for #$tableIndex")
-    val first = firstTables(tableIndex)
+    val files = SplitRead.inputFiles(spark, path, ".html", ".htm")
+    val first = table(files.head,
+      SplitRead.readWhole(spark, files.head, MaxBytes, "an HTML table"),
+      tableIndex)
     val nCols = (first.header.map(_.size).getOrElse(0) +:
       first.rows.map(_.size)).max
     require(nCols > 0, s"${files.head}: table #$tableIndex is empty")
-    val names = first.header.getOrElse((0 until nCols).map(i => s"_c$i"))
-      .padTo(nCols, "").zipWithIndex
-      .map { case (n, i) => if (n.isEmpty) s"_c$i" else n }
     val types = (0 until nCols).map(i =>
       inferType(first.rows.map(r => if (i < r.size) r(i) else null)))
-    val schema = StructType(names.zip(types).map { case (n, t) =>
-      StructField(n, t, nullable = true) })
+    val schema = SplitRead.headerSchema(headerNames(first), types)
 
-    val bConf = spark.sparkContext.broadcast(new SerializableHadoopConf(hconf))
-    val bTypes = spark.sparkContext.broadcast(types.toArray)
-    val rdd = spark.sparkContext
-      .parallelize(files, files.size)
-      .flatMap { f =>
-        val fp = new Path(f)
-        val fsx = fp.getFileSystem(bConf.value.value)
-        val ts = bTypes.value
-        val all = parseTables(slurp(fsx, fp))
-        require(tableIndex < all.size,
-          s"$f: has ${all.size} table(s), asked for #$tableIndex")
-        val tbl = all(tableIndex)
-        tbl.rows.map { cells =>
-          Row.fromSeq((0 until ts.length).map(i =>
-            convert(if (i < cells.size) cells(i) else null, ts(i))))
-        }
+    SplitRead.scan(spark, schema, files.map(_ -> ())) { case (f, _, in) =>
+      val tbl = table(f,
+        SplitRead.readWhole(in, f, MaxBytes, "an HTML table"), tableIndex)
+      SplitRead.requireSchema(f,
+        SplitRead.headerSchema(headerNames(tbl), types), files.head, schema)
+      tbl.rows.iterator.map { cells =>
+        Row.fromSeq(types.indices.map(i =>
+          convert(if (i < cells.size) cells(i) else null, types(i))))
       }
-    spark.createDataFrame(rdd, schema)
+    }
   }
+
+  /** A document's `tableIndex`-th table. */
+  private def table(f: String, bytes: Array[Byte],
+      tableIndex: Int): HtmlTable = {
+    val all = parseTables(new String(bytes, UTF_8))
+    require(tableIndex < all.size,
+      s"$f: has ${all.size} table(s), asked for #$tableIndex")
+    all(tableIndex)
+  }
+
+  private def headerNames(t: HtmlTable): Map[Int, String] =
+    t.header.getOrElse(Nil).zipWithIndex
+      .collect { case (n, i) if n.nonEmpty => i -> n }.toMap
 
   // --------------------------------------------------------------- write
 

@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 import java.sql.{Date, Timestamp}
 import java.time.LocalDate
 
-import org.apache.hadoop.fs.{FSDataInputStream, Path}
+import org.apache.hadoop.fs.FSDataInputStream
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -452,7 +452,7 @@ object SasBdatIo {
     }
 
   /** Decode one page's rows as (buffer, base) pairs. Self-describing:
-    * everything needed is in the page header + broadcast meta. Packed
+    * everything needed is in the page header + the file's meta. Packed
     * rows (mix/data pages) are always raw; meta pages in compressed
     * files carry one row per data subheader, decompressed here when the
     * payload is shorter than the row. */
@@ -546,64 +546,32 @@ object SasBdatIo {
     * PAGE-RANGE split-parallel within each file. */
   def read(spark: SparkSession, path: String,
       splitBytes: Long = 64L << 20, encoding: String = ""): DataFrame = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(path)
-    val fs = p.getFileSystem(hconf)
-    val files: Seq[String] =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).map(_.getPath)
-          .filter(_.getName.endsWith(".sas7bdat"))
-          .map(_.toString).sorted.toSeq
-      else Seq(p.toString)
-    require(files.nonEmpty, s"no .sas7bdat files under $path")
-
-    val meta = parseMeta(() => fs.open(new Path(files.head)), encoding)
-    val schema = StructType(meta.columns.map(c =>
-      StructField(c.name, sparkTypeOf(c), nullable = true)))
+    val files = SplitRead.inputFiles(spark, path, ".sas7bdat")
+    // Only the columns must agree across a directory — page size, header
+    // length, row counts, codec, and the 32/64-bit layout legitimately
+    // differ file to file (BUFSIZE and COMPRESS are per-dataset SAS
+    // options), so every file decodes with ITS OWN meta.
+    val (schema, metas) = SplitRead.headers(spark, files)(
+      (fs, p) => parseMeta(() => fs.open(p), encoding)) { m =>
+      StructType(m.columns.map(c =>
+        StructField(c.name, sparkTypeOf(c), nullable = true)))
+    }
     val kinds = schema.fields.map(_.dataType)
-
     val targetBytes = math.min(math.max(1L, splitBytes), 1L << 30)
-    // Per-FILE metadata: only the column layout must agree across a
-    // directory — page size, header length, row counts, codec, and the
-    // 32/64-bit layout legitimately differ file to file (BUFSIZE and
-    // COMPRESS are per-dataset SAS options), so every file decodes with
-    // ITS OWN meta, broadcast as a map keyed by path.
-    val metas: Map[String, BdatMeta] = files.map { f =>
-      val m = if (f == files.head) meta
-        else parseMeta(() => fs.open(new Path(f)), encoding)
-      require(m.columns == meta.columns,
-        s"$f: schema differs from ${files.head}")
-      f -> m
-    }.toMap
-    val splits: Seq[(String, Long, Long)] = files.flatMap { f =>
-      val m = metas(f)
+    val splits = metas.flatMap { case (f, m) =>
       val pagesPer = math.max(1L, targetBytes / math.max(1, m.pageSize))
       (0L until m.pageCount by pagesPer).map(s =>
-        (f, s, math.min(pagesPer, m.pageCount - s)))
+        f -> (m, s, math.min(pagesPer, m.pageCount - s)))
     }
-    if (splits.isEmpty) return spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], schema)
-
-    val bConf = spark.sparkContext.broadcast(new SerializableHadoopConf(hconf))
-    val bMetas = spark.sparkContext.broadcast(metas)
-    val rdd = spark.sparkContext
-      .parallelize(splits, splits.size)
-      .flatMap { case (f, pageStart, nPages) =>
-        val m = bMetas.value(f)
-        val fp = new Path(f)
-        val fsx = fp.getFileSystem(bConf.value.value)
-        val in = fsx.open(fp)
-        try {
-          val page = new Array[Byte](m.pageSize)
-          (0L until nPages).flatMap { k =>
-            in.readFully(m.headerLength + (pageStart + k) * m.pageSize,
-              page)
-            pageRows(m, page).map { case (buf, base) =>
-              decodeRow(m, kinds, buf, base)
-            }.toVector
+    SplitRead.scan(spark, schema, splits) {
+      case (_, (m, pageStart, nPages), in) =>
+        val page = new Array[Byte](m.pageSize)
+        (0L until nPages).iterator.flatMap { k =>
+          in.readFully(m.headerLength + (pageStart + k) * m.pageSize, page)
+          pageRows(m, page).map { case (buf, base) =>
+            decodeRow(m, kinds, buf, base)
           }
-        } finally in.close()
-      }
-    spark.createDataFrame(rdd, schema)
+        }
+    }
   }
 }

@@ -191,94 +191,69 @@ object SasXportIo {
     * split-parallel within each file. */
   def read(spark: SparkSession, path: String,
       splitBytes: Long = 64L << 20): DataFrame = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(path)
-    val fs = p.getFileSystem(hconf)
-    val files: Seq[String] =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).map(_.getPath).filter(_.getName.endsWith(".xpt"))
-          .map(_.toString).sorted.toSeq
-      else Seq(p.toString)
-    require(files.nonEmpty, s"no .xpt files under $path")
-
-    val meta = parseMeta(fs, new Path(files.head))
-    val schema = StructType(meta.fields.map(f =>
-      StructField(f.name, sparkTypeOf(f), nullable = true)))
-
+    val files = SplitRead.inputFiles(spark, path, ".xpt")
+    val (schema, metas) = SplitRead.headers(spark, files)(parseMeta) { m =>
+      StructType(m.fields.map(f =>
+        StructField(f.name, sparkTypeOf(f), nullable = true)))
+    }
     val targetBytes = math.min(math.max(1L, splitBytes), 1L << 30)
-    val splits: Seq[(String, Long, Long, Long)] = files.flatMap { f =>
-      val m = if (f == files.head) meta else parseMeta(fs, new Path(f))
-      require(m.fields == meta.fields,
-        s"$f: schema differs from ${files.head}")
+    val splits = metas.flatMap { case (f, m) =>
       val rowsPer = math.max(1L, targetBytes / math.max(1, m.recordLength))
       (0L until m.nobs by rowsPer).map(s =>
-        (f, m.recordStart, s, math.min(rowsPer, m.nobs - s)))
+        f -> (m, s, math.min(rowsPer, m.nobs - s)))
     }
-    if (splits.isEmpty) return spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], schema)
-
-    val bConf = spark.sparkContext.broadcast(new SerializableHadoopConf(hconf))
-    val bMeta = spark.sparkContext.broadcast(meta)
-    val rdd = spark.sparkContext
-      .parallelize(splits, splits.size)
-      .flatMap { case (f, start0, rowStart, n) =>
-        val m = bMeta.value
-        val fp = new Path(f)
-        val fsx = fp.getFileSystem(bConf.value.value)
-        val in = fsx.open(fp)
-        try {
-          in.seek(start0 + rowStart * m.recordLength)
-          val chunk = new Array[Byte]((n * m.recordLength).toInt)
-          in.readFully(chunk)
-          (0L until n).map { r =>
-            val base = (r * m.recordLength).toInt
-            var off = base
-            val arr = new Array[Any](m.fields.size)
-            var i = 0
-            while (i < m.fields.size) {
-              val fld = m.fields(i)
-              arr(i) =
-                if (!fld.numeric) {
-                  // latin-1, trailing blanks stripped (reference read())
-                  var end = off + fld.length
-                  while (end > off && (chunk(end - 1) == ' '.toByte ||
-                    chunk(end - 1) == 0)) end -= 1
-                  new String(chunk, off, end - off, ISO_8859_1)
-                } else {
-                  // truncated floats pad right with zeros (reference
-                  // _handle_truncated_float_vec)
-                  val b8 = new Array[Byte](8)
-                  System.arraycopy(chunk, off, b8, 0, fld.length)
-                  if (missingNumeric(b8, 0)) null
-                  else {
-                    val v = ibmToIeee(ByteBuffer.wrap(b8)
-                      .order(ByteOrder.BIG_ENDIAN).getLong)
-                    if (fld.format.startsWith("DATETIME")) {
-                      // a SECONDS-serial double carries ~0.5-1 µs of
-                      // representation error at 2030+ epochs; snap to
-                      // the ms boundary within ±2 µs (same rationale as
-                      // ExcelIo.serialToMicros — genuine off-boundary
-                      // values are preserved)
-                      val raw = math.round(v * 1e6) + SasEpochMs * 1000L
-                      val mod = Math.floorMod(raw, 1000L)
-                      val micros = if (mod <= 2) raw - mod
-                        else if (mod >= 998) raw + (1000L - mod) else raw
-                      val t = new Timestamp(Math.floorDiv(micros, 1000000L) * 1000L)
-                      t.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
-                      t
-                    } else if (sparkTypeOf(fld) == DateType)
-                      Date.valueOf(LocalDate.ofEpochDay(v.toLong + SasEpochDay))
-                    else v
-                  }
-                }
-              off += fld.length
-              i += 1
+    val kinds = schema.fields.map(_.dataType)
+    SplitRead.scan(spark, schema, splits) { case (_, (m, rowStart, n), in) =>
+      in.seek(m.recordStart + rowStart * m.recordLength)
+      val chunk = new Array[Byte]((n * m.recordLength).toInt)
+      in.readFully(chunk)
+      (0L until n).iterator.map { r =>
+        val base = (r * m.recordLength).toInt
+        var off = base
+        val arr = new Array[Any](m.fields.size)
+        var i = 0
+        while (i < m.fields.size) {
+          val fld = m.fields(i)
+          arr(i) =
+            if (!fld.numeric) {
+              // latin-1, trailing blanks stripped (reference read())
+              var end = off + fld.length
+              while (end > off && (chunk(end - 1) == ' '.toByte ||
+                chunk(end - 1) == 0)) end -= 1
+              new String(chunk, off, end - off, ISO_8859_1)
+            } else {
+              // truncated floats pad right with zeros (reference
+              // _handle_truncated_float_vec)
+              val b8 = new Array[Byte](8)
+              System.arraycopy(chunk, off, b8, 0, fld.length)
+              if (missingNumeric(b8, 0)) null
+              else {
+                val v = ibmToIeee(ByteBuffer.wrap(b8)
+                  .order(ByteOrder.BIG_ENDIAN).getLong)
+                if (kinds(i) == TimestampType) {
+                  // a SECONDS-serial double carries ~0.5-1 µs of
+                  // representation error at 2030+ epochs; snap to
+                  // the ms boundary within ±2 µs (same rationale as
+                  // ExcelIo.serialToMicros — genuine off-boundary
+                  // values are preserved)
+                  val raw = math.round(v * 1e6) + SasEpochMs * 1000L
+                  val mod = Math.floorMod(raw, 1000L)
+                  val micros = if (mod <= 2) raw - mod
+                    else if (mod >= 998) raw + (1000L - mod) else raw
+                  val t = new Timestamp(Math.floorDiv(micros, 1000000L) * 1000L)
+                  t.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
+                  t
+                } else if (kinds(i) == DateType)
+                  Date.valueOf(LocalDate.ofEpochDay(v.toLong + SasEpochDay))
+                else v
+              }
             }
-            Row.fromSeq(arr.toIndexedSeq)
-          }
-        } finally in.close()
+          off += fld.length
+          i += 1
+        }
+        Row.fromSeq(arr.toIndexedSeq)
       }
-    spark.createDataFrame(rdd, schema)
+    }
   }
 
   // --------------------------------------------------------------- write

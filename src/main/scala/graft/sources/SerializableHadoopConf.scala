@@ -3,8 +3,9 @@ package graft.sources
 /** Hadoop `Configuration` is not Serializable; this envelope ships the
   * SESSION config (spark.hadoop.* credentials, fs.defaultFS) to executor
   * tasks via its own write/readFields wire format — the same shape
-  * Spark's internal `SerializableConfiguration` uses. Shared by the
-  * file-parallel sources ([[FeatherIo]], [[ExcelIo]], [[StataIo]]). */
+  * Spark's internal `SerializableConfiguration` uses. Broadcast by
+  * [[SplitRead.scan]] for the seven file readers, by
+  * [[WetIo.writeShards]] and by [[Manifest]]'s footer index build. */
 private[sources] class SerializableHadoopConf(
     @transient var value: org.apache.hadoop.conf.Configuration)
     extends Serializable {

@@ -27,7 +27,8 @@ import org.apache.spark.sql.types._
   * file. `read` computes row ranges and each task seeks straight to
   * `dataOffset + start * rowSize`, so a single 50 GB .dta scans with
   * full cluster parallelism. Value labels (`convert_categoricals`) are
-  * driver-parsed (they are UI-sized by nature) and broadcast.
+  * driver-parsed (they are UI-sized by nature) and ride in each split
+  * with the rest of their file's header.
   * `write` streams `toLocalIterator` into one file after a single
   * pre-pass aggregate that decides integer widths and strf widths —
   * the same upsizing rules as the reference (sentinel-colliding int32
@@ -206,66 +207,40 @@ object StataIo {
   }
 
   /** read_stata: one .dta file or a directory of them; row-range
-    * split-parallel within each file (`splitBytes` per task). Value
+    * split-parallel within each file (`splitBytes` per task), each file
+    * decoded at its own data offset with its own value labels. Value
     * labels are applied (reference default convert_categoricals=True). */
   def read(spark: SparkSession, path: String,
       splitBytes: Long = 64L << 20): DataFrame = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(path)
-    val fs = p.getFileSystem(hconf)
-    val files: Seq[String] =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).map(_.getPath).filter(_.getName.endsWith(".dta"))
-          .map(_.toString).sorted.toSeq
-      else Seq(p.toString)
-    require(files.nonEmpty, s"no .dta files under $path")
-
-    val meta = parseMeta(fs, new Path(files.head))
-    val schema = StructType((0 until meta.nvar).map(i =>
-      StructField(meta.names(i), sparkTypeOf(meta, i), nullable = true)))
-
+    val files = SplitRead.inputFiles(spark, path, ".dta")
+    val (schema, metas) = SplitRead.headers(spark, files)(parseMeta) { m =>
+      StructType((0 until m.nvar).map(i =>
+        StructField(m.names(i), sparkTypeOf(m, i), nullable = true)))
+    }
     // row ranges: ~splitBytes per task, >= 1 row each; clamped to 1 GB so
     // the per-task chunk allocation stays within a JVM byte array
     val targetBytes = math.min(math.max(1L, splitBytes), 1L << 30)
-    val splits: Seq[(String, Long, Long)] = files.flatMap { f =>
-      val m = if (f == files.head) meta else parseMeta(fs, new Path(f))
-      require(m.typeCodes.sameElements(meta.typeCodes) &&
-        m.names.sameElements(meta.names),
-        s"$f: schema differs from ${files.head}")
+    val splits = metas.flatMap { case (f, m) =>
       val rowsPerSplit = math.max(1L, targetBytes / math.max(1, m.rowSize))
       (0L until m.nobs by rowsPerSplit).map(s =>
-        (f, s, math.min(rowsPerSplit, m.nobs - s)))
+        f -> (m, s, math.min(rowsPerSplit, m.nobs - s)))
     }
-    if (splits.isEmpty) return spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], schema)
-
-    val bConf = spark.sparkContext.broadcast(new SerializableHadoopConf(hconf))
-    val bMeta = spark.sparkContext.broadcast(meta)
-    val rdd = spark.sparkContext
-      .parallelize(splits, splits.size)
-      .flatMap { case (f, start, n) =>
-        val m = bMeta.value
-        val fp = new Path(f)
-        val fsx = fp.getFileSystem(bConf.value.value)
-        val in = fsx.open(fp)
-        try {
-          in.seek(m.dataOffset + start * m.rowSize)
-          val chunk = new Array[Byte]((n * m.rowSize).toInt)
-          in.readFully(chunk)
-          val bb = ByteBuffer.wrap(chunk).order(ByteOrder.LITTLE_ENDIAN)
-          val utf8 = m.release == 118
-          (0L until n).map { _ =>
-            val arr = new Array[Any](m.nvar)
-            var i = 0
-            while (i < m.nvar) {
-              arr(i) = readCell(bb, m, i, utf8)
-              i += 1
-            }
-            Row.fromSeq(arr.toIndexedSeq)
-          }
-        } finally in.close()
+    SplitRead.scan(spark, schema, splits) { case (_, (m, start, n), in) =>
+      in.seek(m.dataOffset + start * m.rowSize)
+      val chunk = new Array[Byte]((n * m.rowSize).toInt)
+      in.readFully(chunk)
+      val bb = ByteBuffer.wrap(chunk).order(ByteOrder.LITTLE_ENDIAN)
+      val utf8 = m.release == 118
+      Iterator.fill(n.toInt) {
+        val arr = new Array[Any](m.nvar)
+        var i = 0
+        while (i < m.nvar) {
+          arr(i) = readCell(bb, m, i, utf8)
+          i += 1
+        }
+        Row.fromSeq(arr.toIndexedSeq)
       }
-    spark.createDataFrame(rdd, schema)
+    }
   }
 
   /** One cell: decode storage, null out sentinels, then apply the

@@ -52,49 +52,27 @@ object WetIo {
     // toInt allocation into an opaque NegativeArraySizeException
     require(maxRecordBytes > 0 && maxRecordBytes <= Int.MaxValue,
       s"maxRecordBytes must be in (0, Int.MaxValue]: $maxRecordBytes")
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(path)
-    val fs = p.getFileSystem(hconf)
-    val files: Seq[String] =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).map(_.getPath)
-          .filter(f => isWetName(f.getName)).map(_.toString).sorted.toSeq
-      else Seq(p.toString)
-    require(files.nonEmpty, s"no .wet/.wet.gz files under $path")
-    val bConf = spark.sparkContext.broadcast(
-      new SerializableHadoopConf(hconf))
-    val rdd = spark.sparkContext.parallelize(files, files.size)
-      .flatMap { f =>
-        val fp = new Path(f)
-        val fsx = fp.getFileSystem(bConf.value.value)
-        val raw: InputStream = fsx.open(fp)
-        val in = new BufferedInputStream(
-          if (f.endsWith(".gz")) new GZIPInputStream(raw) else raw, 1 << 16)
-        var closed = false
-        def closeOnce(): Unit = if (!closed) { closed = true; in.close() }
-        // partial consumption (limit/take) or a mid-record parse
-        // failure must not leak the stream: close at task completion,
-        // not only at natural EOF
-        Option(org.apache.spark.TaskContext.get())
-          .foreach(_.addTaskCompletionListener[Unit](_ => closeOnce()))
-        new Iterator[Row] {
-          private var nextRec: Row = advance()
-          private def advance(): Row = {
-            var r = readRecord(in, f, maxRecordBytes)
-            while (r != null && r._1 != "conversion") // skip warcinfo etc.
-              r = readRecord(in, f, maxRecordBytes)
-            if (r == null) { closeOnce(); null }
-            else Row(r._2, r._3, r._4, r._5, r._6)
-          }
-          def hasNext: Boolean = nextRec != null
-          def next(): Row = { val r = nextRec; nextRec = advance(); r }
+    val files = SplitRead.inputFiles(spark, path, WetSuffixes: _*)
+    SplitRead.scan(spark, schema, files.map(_ -> ())) { case (f, _, raw) =>
+      val in = new BufferedInputStream(
+        if (f.endsWith(".gz")) new GZIPInputStream(raw) else raw, 1 << 16)
+      new Iterator[Row] {
+        private var nextRec: Row = advance()
+        private def advance(): Row = {
+          var r = readRecord(in, f, maxRecordBytes)
+          while (r != null && r._1 != "conversion") // skip warcinfo etc.
+            r = readRecord(in, f, maxRecordBytes)
+          // closing at EOF frees a gzip inflater now, not at GC
+          if (r == null) { in.close(); null }
+          else Row(r._2, r._3, r._4, r._5, r._6)
         }
+        def hasNext: Boolean = nextRec != null
+        def next(): Row = { val r = nextRec; nextRec = advance(); r }
       }
-    spark.createDataFrame(rdd, schema)
+    }
   }
 
-  private def isWetName(n: String): Boolean =
-    n.endsWith(".wet") || n.endsWith(".wet.gz") || n.endsWith(".warc.wet.gz")
+  private val WetSuffixes = Seq(".wet", ".wet.gz")
 
   /** One record: (type, uri, date, id, length, text); null at EOF. */
   private def readRecord(in: InputStream, file: String,
@@ -251,7 +229,7 @@ object WetIo {
     if (dfs.exists(new Path(dir)))
       dfs.listStatus(new Path(dir)).map(_.getPath).foreach { p =>
         val n = p.getName
-        if ((n.startsWith("part-") && isWetName(n)) ||
+        if ((n.startsWith("part-") && WetSuffixes.exists(n.endsWith)) ||
             (n.startsWith(".part-") && n.endsWith(".tmp")))
           dfs.delete(p, false)
       }

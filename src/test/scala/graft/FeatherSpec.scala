@@ -60,6 +60,21 @@ class FeatherSpec extends SparkSpec {
     assertFrameEqual(back, df)
   }
 
+  test("directory of files reads as one frame; a sibling whose column " +
+      "type differs is rejected") {
+    val d = Files.createTempDirectory("feather-dir").toFile
+    def at(n: String) = new java.io.File(d, n).getPath
+    FeatherIo.write(spark.range(0, 40).toDF("id"), at("a.feather"), batchSize = 16)
+    FeatherIo.write(spark.range(40, 50).toDF("id"), at("b.feather"))
+    assertFrameEqual(FeatherIo.read(spark, d.getPath),
+      spark.range(0, 50).toDF("id"))
+
+    FeatherIo.write(Seq(1).toDF("id"), at("c.feather"))
+    val e = intercept[IllegalArgumentException](FeatherIo.read(spark, d.getPath))
+    assert(e.getMessage.contains("c.feather") && e.getMessage.contains("id: int"),
+      e.getMessage)
+  }
+
   test("empty frame round-trips schema") {
     val df = Seq.empty[(Long, String)].toDF("id", "s")
     val path = tmp("empty.feather")

@@ -85,6 +85,17 @@ class HtmlSpec extends SparkSpec {
       Set((1L, "a"), (2L, "b"), (3L, "c")))
   }
 
+  test("directory rejects a sibling document whose header is reordered") {
+    val d = Files.createTempDirectory("html-mismatch").toFile
+    HtmlIo.write(Seq((1L, 10L)).toDF("a", "b"),
+      new java.io.File(d, "p1.html").getPath)
+    HtmlIo.write(Seq((20L, 2L)).toDF("b", "a"),
+      new java.io.File(d, "p2.html").getPath)
+    val e = intercept[Exception](HtmlIo.read(spark, d.getPath).collect())
+    assert(e.getMessage.contains("p2.html") &&
+      e.getMessage.contains("b: bigint, a: bigint"), e.getMessage)
+  }
+
   test("colspan/rowspan expand like the reference (io/html.py:427)") {
     val p = tmp("span.html")
     Files.write(java.nio.file.Paths.get(p),

@@ -90,6 +90,28 @@ class SasXportSpec extends SparkSpec {
     assert(many.collect().map(_.toSeq).toSet == one.collect().map(_.toSeq).toSet)
   }
 
+  test("directory read equals the union of its single-file reads, each " +
+      "file at its own record length; a sibling with other fields is " +
+      "rejected") {
+    import spark.implicits._
+    val d = Files.createTempDirectory("xport-dir").toFile
+    def at(n: String) = new java.io.File(d, n).getPath
+    // char widths 2 and 11: the files' record lengths differ
+    SasXportIo.write(Seq((1L, "ab"), (2L, "cd")).toDF("K", "S"), at("a.xpt"))
+    SasXportIo.write(Seq((3L, "longer text")).toDF("K", "S"), at("b.xpt"))
+    val both = SasXportIo.read(spark, d.getPath)
+    assert(both.rdd.getNumPartitions == 2)
+    assertFrameEqual(both,
+      SasXportIo.read(spark, at("a.xpt")).unionAll(
+        SasXportIo.read(spark, at("b.xpt"))))
+
+    SasXportIo.write(Seq((4L, "x")).toDF("K", "T"), at("c.xpt"))
+    val e = intercept[IllegalArgumentException](
+      SasXportIo.read(spark, d.getPath))
+    assert(e.getMessage.contains("c.xpt") && e.getMessage.contains("T: string"),
+      e.getMessage)
+  }
+
   test("fences are loud: >8-byte names, non-latin-1 text, out-of-range " +
       "numerics, >2^53 integers") {
     import spark.implicits._

@@ -1,6 +1,8 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.charset.StandardCharsets.ISO_8859_1
+import java.nio.file.{Files, Paths}
 import java.sql.{Date, Timestamp}
 
 import graft.sources.StataIo
@@ -148,5 +150,70 @@ class StataSpec extends SparkSpec {
     val e4 = intercept[Exception](StataIo.read(spark, res("fixture_118.dta")
       .replace("fixture_118", "missing")))
     assert(e4 != null)
+  }
+
+  private lazy val fixture118 = Files.readAllBytes(Paths.get(res("fixture_118.dta")))
+
+  private def offsetOf(b: Array[Byte], tag: String): Int =
+    new String(b, ISO_8859_1).indexOf(tag) + tag.length
+
+  /** fixture_118 with a dataset label: every section after the header
+    * moves by the label's length, and the <map> says so. */
+  private def withLabel(label: String): Array[Byte] = {
+    val lbl = label.getBytes(ISO_8859_1)
+    val at = offsetOf(fixture118, "<label>")
+    val out = ByteBuffer.allocate(fixture118.length + lbl.length)
+      .order(ByteOrder.LITTLE_ENDIAN)
+    out.put(fixture118, 0, at).putShort(lbl.length.toShort).put(lbl)
+      .put(fixture118, at + 2, fixture118.length - at - 2)
+    val map = offsetOf(fixture118, "<map>") + lbl.length
+    for (k <- 1 until 14) // entry 0 is the file start
+      out.putLong(map + 8 * k, out.getLong(map + 8 * k) + lbl.length)
+    out.array
+  }
+
+  /** fixture_118 with column `col`'s fixed-width field in the section
+    * after `tag` replaced by `value`. */
+  private def withField(tag: String, width: Int, col: Int,
+      value: String): Array[Byte] = {
+    val b = fixture118.clone
+    val at = offsetOf(b, tag) + col * width
+    java.util.Arrays.fill(b, at, at + width, 0.toByte)
+    System.arraycopy(value.getBytes(ISO_8859_1), 0, b, at, value.length)
+    b
+  }
+
+  private def dirOf(files: (String, Array[Byte])*): String = {
+    val d = Files.createTempDirectory("stata-dir")
+    files.foreach { case (n, b) => Files.write(d.resolve(n), b) }
+    d.toString
+  }
+
+  test("directory read decodes each file at its own data offset: equal " +
+      "columns, headers of different length") {
+    val label = "a 21-byte dataset lbl"
+    assert(label.length == 21)
+    val d = dirOf("a.dta" -> fixture118, "b.dta" -> withLabel(label))
+    val a = StataIo.read(spark, s"$d/a.dta")
+    val b = StataIo.read(spark, s"$d/b.dta")
+    assertFrameEqual(b, a)
+    val both = StataIo.read(spark, d)
+    assert(both.count() == 8)
+    assertFrameEqual(both, a.unionAll(b))
+  }
+
+  test("directory read rejects a sibling whose format or value-label " +
+      "name changes a column's Spark type, naming the file") {
+    // `day` (column 7) stored as double: %td reads a date, %10.0g a double
+    val byFormat = dirOf("a.dta" -> fixture118,
+      "b.dta" -> withField("<formats>", 57, 7, "%10.0g"))
+    // `cat` (column 8): labelled codes read as strings, unlabelled as int8
+    val byLabel = dirOf("a.dta" -> fixture118,
+      "b.dta" -> withField("<value_label_names>", 129, 8, ""))
+    for ((d, col) <- Seq(byFormat -> "day: double", byLabel -> "cat: tinyint")) {
+      val e = intercept[IllegalArgumentException](StataIo.read(spark, d))
+      assert(e.getMessage.contains("b.dta") && e.getMessage.contains(col),
+        e.getMessage)
+    }
   }
 }
