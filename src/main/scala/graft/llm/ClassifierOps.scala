@@ -21,11 +21,13 @@ import org.apache.spark.sql.functions._
   * (p − y)·1 on the word's bucket — an integer — and the batch
   * gradient is an integer SUM: order-insensitive.
   *
-  * Scale shape per iteration: the logit is row-local HOF arithmetic
-  * (weights ride the plan as literals — zero shuffle), the gradient is
-  * ONE map-side-combinable sum keyed by feature bucket (≤ buckets+1
-  * result rows), and the weight update touches the driver with
-  * buckets+1 longs. Nothing grows with corpus size on the driver.
+  * Scale shape per iteration: ONE single-stage job over the persisted
+  * per-document bucket counts ([[bucketCountFeatures]]) — each task
+  * folds its rows' logits and gradients into buckets+3 longs, and the
+  * driver merges one such array per partition and updates buckets+1
+  * weights. The pass is an `RDD.aggregate` over an RDD planned once,
+  * so no pass is re-analyzed, re-planned or re-compiled, and none
+  * shuffles. Nothing grows with corpus size on the driver.
   */
 object ClassifierOps {
 
@@ -56,25 +58,24 @@ object ClassifierOps {
     * optimization, guide §1.2 "per-task work" + §2.3 "aggregate
     * before you shuffle"): the md5 word
     * bucketing — the interpreted-HOF hot spot every pass used to
-    * re-pay — runs ONCE, and each training pass becomes a single
-    * codegen'd aggregation over `buckets` long columns instead of an
-    * explode of every word occurrence (measured at sf0.1: 0.86 s →
-    * ~0.04 s per gradient pass; the whole query 2.04 s → ~1.1 s).
+    * re-pay — runs ONCE, and each training pass reads `buckets` longs
+    * per document instead of an explode of every word occurrence
+    * (measured at sf0.1: 0.86 s → ~0.04 s per gradient pass; the whole
+    * query 2.04 s → ~1.1 s).
     *
     * Columns: `keep` passthroughs, `__y` (label·µ-ready long), and
-    * `__h0..__h{buckets-1}` — per-document occurrence counts per
+    * `__hs` — the array of per-document occurrence counts per
     * bucket. The bias sentinel needs no column (its count is 1 per
     * document by construction). Counts are exact longs, so every
     * gradient/logit below is the SAME integer the per-occurrence
     * formulation produced — layout-invariant and oracle-replayable,
     * bit for bit.
     *
-    * Scale shape: one text scan + one exchange of (doc, buckets+2
-    * longs) rows — strictly less than the per-iteration occurrence
-    * explode it replaces; the persisted frame is buckets longs per
-    * document, far smaller than the corpus. Arity is O(buckets) in
-    * the plan, fine for the classifier's documented 16-256 bucket
-    * range (the literal-weights plan was already O(buckets)).
+    * Scale shape: one row-local text scan, no exchange — strictly less
+    * than the per-iteration occurrence explode it replaces; the
+    * persisted frame is buckets longs per document, far smaller than
+    * the corpus. The scoring plan ([[featLogit]]) has O(buckets)
+    * arity, fine for the classifier's documented 16-256 bucket range.
     *
     * NULL text reads as empty: words(NULL) is NULL and would
     * null-propagate through the transform, dropping the row while n
@@ -83,8 +84,8 @@ object ClassifierOps {
     * (the label column is parquet-nullable): the per-occurrence
     * formulation null-propagated such a row out of every gradient sum
     * while `n` still counted it, and the kernel must reproduce that —
-    * not throw — so the null stays and the codegen'd `__err` sums drop
-    * it exactly as before (r19 ADVICE: the first kernel cut called
+    * not throw — so the null stays and the gradient passes skip it
+    * exactly as before (r19 ADVICE: the first kernel cut called
     * getLong on the label and crashed on a single NULL-label row).
     *
     * Materialization (r20, guide §5): persist(MEMORY_AND_DISK) —
@@ -94,7 +95,10 @@ object ClassifierOps {
     * real cluster one lost executor mid-GD-loop failed the job. The
     * persisted frame keeps its (deterministic) kernel lineage, so a
     * lost block recomputes; plan and timing shape are unchanged (same
-    * one eager job, every GD step still reads materialized blocks). */
+    * one eager job, every GD step still reads materialized blocks).
+    * The caller releases it: [[trainHardLogistic]] unpersists it before
+    * returning, [[trainHardLogisticScored]] (whose scores read it)
+    * registers it with `DistScan`'s release queue. */
   private[graft] def bucketCountFeatures(df: DataFrame, textCol: String,
       labelCol: String, keep: Seq[String], buckets: Int): DataFrame = {
     import org.apache.spark.sql.Row
@@ -138,14 +142,8 @@ object ClassifierOps {
         Row.fromSeq((0 until nKeep).map(r.get) ++ Seq(y, hs.toSeq))
       }
     }
-    // registered with DistScan's release queue (the minhash-signature
-    // convention): persisted entries are CacheManager-pinned until
-    // unpersist, so the application frees them at its step boundaries
-    // — localCheckpoint blocks were GC-freed, a persist must not turn
-    // into per-run storage growth in a long-lived session
-    graft.operators.DistScan.registerCache(
-      spark.createDataFrame(rdd, outSchema)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    spark.createDataFrame(rdd, outSchema)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
   /** Micro-unit logit of one feature row under weights `w` (buckets
@@ -158,33 +156,74 @@ object ClassifierOps {
       .reduceOption(_ + _).getOrElse(lit(0L)) + lit(w(buckets))
 
   /** One full-batch hard-sigmoid GD loop over a persisted feature
-    * frame; mutates nothing, returns the weights. Each iteration is
-    * ONE codegen'd global aggregation (buckets+1 sums — word gradients
-    * Σ err·h_b and the bias gradient Σ err ride the same map-side
-    * combine) over the materialized features; no text, no explode.
-    * The document count `n` rides the same aggregation (the first
-    * pass scans every row anyway), so no separate count job runs; it
-    * is the same count, so the weights are unchanged. `caller` names
-    * the trainer in the empty-corpus error. */
-  private def trainOnFeatures(feat: DataFrame, buckets: Int, iters: Int,
-      lrDen: Long, caller: String): Array[Long] = {
+    * frame; mutates nothing, returns the weights. Each iteration is ONE
+    * single-stage job: an `RDD.aggregate` over the frame's
+    * (`__y`, `__hs`) rows, whose RDD is planned once before the loop —
+    * the pass ships its weights in the closure instead of re-planning
+    * a frame with the weights as literals. Each task folds its rows
+    * into buckets+3 longs ([[addGradient]]): the word gradients
+    * Σ err·h_b, the bias gradient Σ err, the document count `n` and the
+    * labelled-row count; the driver merges the partitions' arrays.
+    * NULL-label rows count in `n` and in no gradient. `caller` names
+    * the trainer in the empty-corpus error; a corpus with no labelled
+    * row fails too (its gradient sums would be NULL). */
+  private[graft] def trainOnFeatures(feat: DataFrame, buckets: Int,
+      iters: Int, lrDen: Long, caller: String): Array[Long] = {
+    val rows = feat.select(col("__y"), col("__hs")).rdd
     val w = Array.fill(buckets + 1)(0L) // [word buckets..., bias]
     for (_ <- 1 to iters) {
-      val err = (hardSigmoidMicro(featLogit(w, buckets)) -
-        col("__y") * Micro).as("__err")
-      val sums = (0 until buckets).map(b =>
-        sum(col("__err") * element_at(col("__hs"), b + 1)).as(s"__g$b")) :+
-        sum(col("__err")).as("__gb") :+ count(lit(1)).as("__n")
-      val row = feat
-        .select(err, col("__hs"))
-        .agg(sums.head, sums.tail: _*)
-        .collect()(0) // bounded: one row of buckets+2 longs
-      val n = row.getLong(buckets + 1)
+      val wp = w.clone()
+      // an overflow, in a task or in the driver's merge, surfaces as
+      // the ArithmeticException itself, as a SQL aggregate's does
+      val g = try rows.aggregate(new Array[Long](buckets + 3))(
+          (acc, r) => addGradient(acc, r, wp, buckets), mergeGradients)
+        catch { case e: org.apache.spark.SparkException
+          if e.getCause.isInstanceOf[ArithmeticException] => throw e.getCause }
+      val n = g(buckets + 1)
       require(n > 0, s"$caller: empty corpus")
+      require(g(buckets + 2) > 0, s"$caller: no labelled document")
       for (j <- 0 to buckets)
-        w(j) -= row.getLong(j) / (lrDen * n) // truncating, like //
+        w(j) -= g(j) / (lrDen * n) // truncating, like //
     }
     w
+  }
+
+  /** Adds one feature row to a pass's sums `acc` = [Σ err·h_b per
+    * bucket b, Σ err, n, labelled rows], in place. The integer twin of
+    * [[featLogit]] and [[hardSigmoidMicro]] as Spark evaluates them in
+    * ANSI mode: the logit is the left fold of h_b·w_b plus the bias,
+    * evaluated for EVERY row (so its overflow fails a NULL-label row
+    * too), err = p − y·1e6 only for a labelled row, and every product
+    * and sum goes through `Math.*Exact`, so an overflow throws
+    * `ArithmeticException` and never wraps. */
+  private def addGradient(acc: Array[Long], r: org.apache.spark.sql.Row,
+      w: Array[Long], buckets: Int): Array[Long] = {
+    val hs = r.getSeq[Long](1)
+    var z = 0L
+    var b = 0
+    while (b < buckets) {
+      z = Math.addExact(z, Math.multiplyExact(hs(b), w(b)))
+      b += 1
+    }
+    z = Math.addExact(z, w(buckets))
+    val p = math.min(Micro, math.max(0L, Micro / 2 + (z / 4.0d).toLong))
+    acc(buckets + 1) += 1
+    if (!r.isNullAt(0)) {
+      val err = Math.subtractExact(p, Math.multiplyExact(r.getLong(0), Micro))
+      b = 0
+      while (b < buckets) {
+        acc(b) = Math.addExact(acc(b), Math.multiplyExact(err, hs(b)))
+        b += 1
+      }
+      acc(buckets) = Math.addExact(acc(buckets), err)
+      acc(buckets + 2) += 1
+    }
+    acc
+  }
+
+  private def mergeGradients(a: Array[Long], b: Array[Long]): Array[Long] = {
+    for (i <- a.indices) a(i) = Math.addExact(a(i), b(i))
+    a
   }
 
   /** Train `iters` full-batch hard-sigmoid logistic steps on
@@ -198,7 +237,8 @@ object ClassifierOps {
     require(buckets >= 1 && iters >= 1 && lrDen >= 1,
       s"trainHardLogistic: bad hyperparameters ($buckets, $iters, $lrDen)")
     val feat = bucketCountFeatures(df, textCol, labelCol, Nil, buckets)
-    trainOnFeatures(feat, buckets, iters, lrDen, "trainHardLogistic")
+    try trainOnFeatures(feat, buckets, iters, lrDen, "trainHardLogistic")
+    finally feat.unpersist(blocking = false)
   }
 
   /** [[trainHardLogistic]] plus the trained scoring pass over the SAME
@@ -212,7 +252,12 @@ object ClassifierOps {
       lrDen: Long = 100L): DataFrame = {
     require(buckets >= 1 && iters >= 1 && lrDen >= 1,
       s"trainHardLogisticScored: bad hyperparameters ($buckets, $iters, $lrDen)")
-    val feat = bucketCountFeatures(df, textCol, labelCol, Seq(idCol), buckets)
+    // the returned scores read the persisted features, so they stay
+    // until the application's step boundary: registered with DistScan's
+    // release queue (the minhash-signature convention) — a persist must
+    // not turn into per-run storage growth in a long-lived session
+    val feat = graft.operators.DistScan.registerCache(bucketCountFeatures(
+      df, textCol, labelCol, Seq(idCol), buckets))
     val w = trainOnFeatures(feat, buckets, iters, lrDen,
       "trainHardLogisticScored")
     feat.select(col(idCol), featLogit(w, buckets).as("logit_micro"))

@@ -2314,10 +2314,11 @@ object LlmQueries extends QueryModule {
     // weight update (Scala / == DuckDB //, which TRUNCATES — it is
     // not floor division), iter-2 logits through the clamped hard
     // sigmoid (trunc(z/4) is dyadic-exact), second
-    // update, then final scoring of every document. Per step: zero-
-    // shuffle row-local logits + ONE map-side-combined gradient sum
-    // keyed by feature bucket (bias rides a sentinel bucket in the
-    // same exchange); the driver only ever holds 17 longs.
+    // update, then final scoring of every document. Per step: ONE
+    // single-stage job over the persisted per-document bucket counts
+    // (each task folds logits and gradients into 19 longs, no
+    // exchange, the weights ride the closure, not the plan); the
+    // driver only ever holds a few dozen longs.
     QueryDef("classifier_train",
       (s, d) => {
         import graft.llm.ClassifierOps

@@ -1,6 +1,7 @@
 package graft
 
 import graft.llm.ClassifierOps
+import org.apache.spark.SpecListenerBus
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
@@ -14,7 +15,10 @@ import org.scalacheck.rng.Seed
   * `ReferenceTiers.trainHardLogistic` — on generated documents: NULL,
   * empty, all-whitespace, non-BMP (accented and astral code points)
   * and ASCII word soups, with NULL labels among the 0/1 ones, plus one
-  * document above 1 MB. Fixed seeds, as in [[GopherPropertySpec]]. */
+  * document above 1 MB. Fixed seeds, as in [[GopherPropertySpec]].
+  * The trainer's gradient passes also face NULL-heavy labels, a
+  * gradient that overflows a long, a pin of their job shape and a leak
+  * check of the persisted features. */
 class ClassifierPropertySpec extends SparkSpec {
   import spark.implicits._
 
@@ -130,5 +134,59 @@ class ClassifierPropertySpec extends SparkSpec {
     // between two untouched arrays
     assert(ClassifierOps.trainHardLogistic(docs, "text", "y", 16, 2, 1L)
       .exists(_ != 0L))
+  }
+
+  /** [[docs]] relabelled with NULL for about half of the documents. */
+  private lazy val halfNull: DataFrame =
+    docs.withColumn("y", when(col("doc_id") % 2 === 0, col("y")))
+
+  test("NULL-label rows: the trainer's weights ≡ the reference's") {
+    for ((buckets, iters, lrDen) <-
+        Seq((16, 2, 100L), (7, 5, 1L), (1, 3, 3L))) {
+      val got = ClassifierOps.trainHardLogistic(halfNull, "text", "y",
+        buckets, iters, lrDen)
+      val want = ReferenceTiers.trainHardLogistic(halfNull, "text", "y",
+        buckets, iters, lrDen)
+      assert(got.toSeq === want.toSeq, s"($buckets, $iters, $lrDen)")
+    }
+    val allNull = docs.withColumn("y", lit(null).cast("int"))
+    val e = intercept[IllegalArgumentException](
+      ClassifierOps.trainHardLogistic(allNull, "text", "y"))
+    assert(e.getMessage.contains("no labelled document"))
+  }
+
+  test("a gradient that overflows a long throws ArithmeticException in " +
+      "the reference and in the trainer") {
+    // y·1e6 = 4e18 fits a long; three such errors summed do not — in
+    // the driver's merge of one-row partitions, or within one task
+    val big = Seq((1L, "a b", 4000000000000L), (2L, "b c", 4000000000000L),
+      (3L, "c a", 4000000000000L)).toDF("doc_id", "text", "y")
+    for (df <- Seq(big, big.repartition(1))) {
+      intercept[ArithmeticException](
+        ReferenceTiers.trainHardLogistic(df, "text", "y", 4, 1, 1L))
+      intercept[ArithmeticException](
+        ClassifierOps.trainHardLogistic(df, "text", "y", 4, 1, 1L))
+    }
+  }
+
+  test("after the feature build, each gradient pass is one single-stage " +
+      "job") {
+    val feat = ClassifierOps.bucketCountFeatures(docs.repartition(3),
+      "text", "y", Nil, 16)
+    try {
+      feat.count()
+      for (iters <- Seq(1, 3)) {
+        val perJob = SpecListenerBus.stagesRunPerJob(spark.sparkContext)(
+          ClassifierOps.trainOnFeatures(feat, 16, iters, 100L, "spec"))
+        assert(perJob == Seq.fill(iters)(1), s"iters=$iters")
+      }
+    } finally feat.unpersist()
+  }
+
+  test("trainHardLogistic leaves no new persisted RDD behind") {
+    docs.count()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    ClassifierOps.trainHardLogistic(docs, "text", "y", 16, 2, 100L)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
   }
 }

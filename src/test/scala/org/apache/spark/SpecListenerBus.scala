@@ -1,9 +1,37 @@
 package org.apache.spark
 
-/** The one Spark-internal call the plan-capturing specs need: block
-  * until every listener queue has delivered its events, so a
-  * `QueryExecutionListener` has seen every query that ran before it is
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted}
+
+/** The Spark-internal listener-bus access the plan- and job-capturing
+  * specs need: block until every listener queue has delivered its
+  * events, so a listener has seen everything that ran before it is
   * read. */
 object SpecListenerBus {
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
+
+  /** Runs `body` and returns, for each Spark job it started (in start
+    * order), how many of the job's stages ran: a stage skipped because
+    * its shuffle output or cached blocks already existed does not
+    * count. */
+  def stagesRunPerJob(sc: SparkContext)(body: => Unit): Seq[Int] = {
+    val jobs = new ConcurrentLinkedQueue[Seq[Int]]()
+    val ran = ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.add(e.stageIds); ()
+      }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+        ran.add(e.stageInfo.stageId); ()
+      }
+    }
+    drain(sc)
+    sc.addSparkListener(listener)
+    try { body; drain(sc) } finally sc.removeSparkListener(listener)
+    jobs.asScala.toSeq.map(_.count(ran.contains))
+  }
 }
