@@ -246,7 +246,14 @@ object ClassifierOps {
     * every input document — the identical integers
     * `logitMicro(text, w, wb)` yields, without a third tokenize+md5
     * scan of the corpus (the scorer reads buckets longs per doc from
-    * the checkpoint instead). */
+    * the checkpoint instead).
+    *
+    * The usual caller joins the scores back onto `df` by `idCol`, which
+    * would run `df`'s lineage a second time. So when `df` is not
+    * persisted, it is persisted here (MEMORY_AND_DISK, filled by the
+    * feature build) and registered with `DistScan`'s release queue, and
+    * the join-back reads the cached rows. A frame the caller persisted
+    * is left as it is: `releaseCaches()` never unpersists it. */
   def trainHardLogisticScored(df: DataFrame, textCol: String,
       labelCol: String, idCol: String, buckets: Int = 16, iters: Int = 2,
       lrDen: Long = 100L): DataFrame = {
@@ -256,6 +263,9 @@ object ClassifierOps {
     // until the application's step boundary: registered with DistScan's
     // release queue (the minhash-signature convention) — a persist must
     // not turn into per-run storage growth in a long-lived session
+    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+      graft.operators.DistScan.registerCache(df.persist(
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val feat = graft.operators.DistScan.registerCache(bucketCountFeatures(
       df, textCol, labelCol, Seq(idCol), buckets))
     val w = trainOnFeatures(feat, buckets, iters, lrDen,

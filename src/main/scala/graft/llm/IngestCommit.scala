@@ -783,7 +783,16 @@ object IngestCommit {
     * path does, and [[TextDedupOps.compactSimHashStore]] is the
     * maintenance tier. Returns false (no writes) for a replay of the
     * hwm batch. `failpoint` is a test hook ("after-survivors",
-    * "after-corpus", "after-index"). */
+    * "after-corpus", "after-index").
+    *
+    * Driver-cost shape, as in [[nearDupIngestBatch]]: `batch` is
+    * evaluated ONCE, into a sized eager checkpoint; its hashes are
+    * computed from that checkpoint and checkpointed once by the
+    * incremental core, which pairs them new-vs-all against the
+    * committed view; the corpus partition and the hash append are the
+    * checkpointed batch and its checkpointed hashes through the same
+    * survivor step. A NULL-id document reaches the corpus but, having
+    * no id to index, not the store. */
   def simHashIngestBatch(batch: DataFrame, batchId: Long,
       hashesDir: String, corpusDir: String, idCol: String = "doc_id",
       textCol: String = "text", maxHamming: Int = 3, bands: Int = 4,
@@ -797,46 +806,34 @@ object IngestCommit {
       case Some(r) => r
     }
     // r19: hash files live under hashesDir/hashes (r18 root layouts
-    // migrate on first touch) so the store gets the IndexSwap-based
-    // delete/compaction tier its siblings have; the matching view —
-    // committed at the hwm, tombstones anti-joined — is the shared
-    // committedSimHashes read. Unstamped rows (a compacted base, or
-    // out-of-contract direct writes) read as committed-at-any-
-    // watermark, the family's null-means-committed convention.
-    TextDedupOps.migrateSimHashLayout(spark, hashesDir)
+    // migrate on first touch, inside committedSimHashes) so the store
+    // gets the IndexSwap-based delete/compaction tier its siblings
+    // have; the matching view — committed at the hwm, tombstones
+    // anti-joined — is the shared committedSimHashes read. Unstamped
+    // rows (a compacted base, or out-of-contract direct writes) read
+    // as committed-at-any-watermark, the family's
+    // null-means-committed convention.
     val dataDir = TextDedupOps.simHashDataDir(hashesDir)
-    val existing = TextDedupOps.committedSimHashes(spark, hashesDir,
-      idCol)
-    val surv = TextDedupOps.simHashIncremental(batch, existing, idCol,
+    val docs = Bridge.sizedLocalCheckpoint(batch) // the ONE evaluation
+    val (batchHashes, survive) = TextDedupOps.incrementalSimHash(docs,
+      TextDedupOps.committedSimHashes(spark, hashesDir, idCol), idCol,
       textCol, maxHamming, bands, maxBucketSize)
-      .localCheckpoint(true) // consumed twice (corpus + hash append);
-                             // batch-sized, and it truncates the
-                             // banded-join lineage like the LSH path
     failpoint("after-survivors")
-    // survivor hashes recompute row-locally from the checkpointed
-    // survivors — no shuffle, and exactly the hashes the next batch's
-    // committed view must serve
-    val survHashes = TextDedupOps.simHash(surv, idCol, textCol)
-      .select(col(idCol).cast("long").as(idCol), col("simhash"))
+    val survHashes = survive(batchHashes)
     publishAndCommit(spark, logDir, batchId, failpoint) {
-      surv.write.mode("overwrite")
+      survive(docs).write.mode("overwrite")
         .parquet(s"$corpusDir/ingest_id=$batchId")
     } {
       val dataP = new org.apache.hadoop.fs.Path(dataDir)
-      val hasData = fsOf(spark, dataP).exists(dataP)
       val toWrite =
-        if (!recover || !hasData) survHashes
-        else {
-          // pinned schema: the crashed attempt may be the store's
-          // FIRST write, and the recovery read must not depend on
-          // which footer inference lands on
-          val vis = spark.read
-            .schema(TextDedupOps.simHashReadSchema(idCol))
-            .parquet(dataDir)
-            .filter(col("ingest_id") === batchId)
-            .select(col(idCol).cast("long").as(idCol), col("simhash"))
-          survHashes.exceptAll(vis)
-        }
+        if (!recover || !fsOf(spark, dataP).exists(dataP)) survHashes
+        // pinned schema: the crashed attempt may be the store's FIRST
+        // write, and the recovery read must not depend on which footer
+        // inference lands on
+        else survHashes.exceptAll(spark.read
+          .schema(TextDedupOps.simHashReadSchema(idCol)).parquet(dataDir)
+          .filter(col("ingest_id") === batchId)
+          .select(col(idCol), col("simhash")))
       toWrite.withColumn("ingest_id", lit(batchId))
         .write.mode("append").parquet(dataDir)
     }
@@ -855,14 +852,16 @@ object IngestCommit {
     * checkpoint that reports its stored size
     * ([[Bridge.sizedLocalCheckpoint]]); the signatures and the corpus
     * write read it, so corpus partition and index append come from the
-    * same rows by construction. The loser step collects (or, past its
-    * cap, checkpoints) the pair set eagerly and hands back the losing
-    * ids, so the corpus write, the bands append and the sigs append are
-    * each one narrow job: the checkpointed batch or its checkpointed
-    * signatures anti-joined with the losers (a broadcast literal on
-    * the collected path). A NULL-id document matches no loser: it
-    * reaches the corpus but, having no id to index, not the index.
-    * `kKnown` skips the per-append signature-length probe job.
+    * same rows by construction. The survivor step
+    * ([[TextDedupOps]]' `incrementalLosers`) collects (or, past its cap,
+    * checkpoints) the pair set eagerly, so the corpus write, the bands
+    * append and the sigs append are each one narrow job: the
+    * checkpointed batch or its checkpointed signatures through that
+    * step — a filter on the losing ids on the collected path, which
+    * runs no job of its own, or an anti-join with the persisted losers
+    * past the cap. A NULL-id document passes the step: it reaches the
+    * corpus but, having no id to index, is never signed, so not the
+    * index. `kKnown` skips the per-append signature-length probe job.
     *
     * `failpoint` is a test hook invoked at the named crash points
     * ("after-survivors", "after-corpus", "after-index"); production
@@ -885,18 +884,16 @@ object IngestCommit {
     // crashed attempt's own stamped rows are invisible, making the
     // loser set identical on every replay (the determinism the
     // recovery subtraction in appendSigsToIndex relies on)
-    val (batchSigs, losers) = TextDedupOps.lshIncrementalIndexedCore(
+    val (batchSigs, survive) = TextDedupOps.lshIncrementalIndexedCore(
       docs, indexDir, idCol, textCol, shingleN, k, bands, threshold,
       maxBucketSize)
     failpoint("after-survivors")
     publishAndCommit(spark, logDir, batchId, failpoint) {
-      docs.join(losers, Seq(idCol), "left_anti").write
+      survive(docs).write
         .mode("overwrite").parquet(s"$corpusDir/ingest_id=$batchId")
     } {
-      TextDedupOps.appendSigsToIndex(
-        TextDedupOps.survivorSignatures(batchSigs, losers, idCol),
-        indexDir, idCol, bands,
-        shingleN, ingestId = Some(batchId), recover = recover,
+      TextDedupOps.appendSigsToIndex(survive(batchSigs), indexDir, idCol,
+        bands, shingleN, ingestId = Some(batchId), recover = recover,
         kKnown = Some(k))
     }
   }

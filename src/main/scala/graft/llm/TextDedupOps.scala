@@ -322,16 +322,21 @@ object TextDedupOps {
     * minima — reaches `threshold`. Returns (id_a, id_b, est_jaccard). */
   private def withEstJaccard(pairs: DataFrame, signatures: DataFrame,
       idCol: String, threshold: Double): DataFrame = {
-    val withSigs = pairs
-      .join(signatures.select(col(idCol).as("id_a"), col("signature").as("sig_a")), Seq("id_a"))
-      .join(signatures.select(col(idCol).as("id_b"), col("signature").as("sig_b")), Seq("id_b"))
-    val est = size(filter(zip_with(col("sig_a"), col("sig_b"),
-      (x, y) => (x === y).cast("int")), v => v === 1)).cast("double") /
-      size(col("sig_a"))
-    withSigs.withColumn("est_jaccard", est)
+    val est = size(filter(zip_with(col("__a"), col("__b"), (x, y) => x === y),
+      v => v)).cast("double") / size(col("__a"))
+    bothEnds(pairs, signatures, idCol, "signature")
+      .withColumn("est_jaccard", est)
       .filter(col("est_jaccard") >= threshold)
       .select("id_a", "id_b", "est_jaccard")
   }
+
+  /** Candidate `pairs` (id_a, id_b) with both ends' `value` column of
+    * `payload` (idCol, value) re-attached as `__a` and `__b`. */
+  private def bothEnds(pairs: DataFrame, payload: DataFrame,
+      idCol: String, value: String): DataFrame =
+    pairs
+      .join(payload.select(col(idCol).as("id_a"), col(value).as("__a")), Seq("id_a"))
+      .join(payload.select(col(idCol).as("id_b"), col(value).as("__b")), Seq("id_b"))
 
   /** INCREMENTAL near-dup dedup — the MinHash twin of
     * [[dedupIncremental]] (r12 verdict task #7): a production pipeline
@@ -357,7 +362,7 @@ object TextDedupOps {
     * (the side bit folded into the id, see the side-bit fold's id
     * contract); components run on candidate pairs only (O(diameter)
     * rounds — near-dup graphs are shallow); the final membership check
-    * is one anti-join on unique ids. */
+    * is one survivor step on unique ids ([[incrementalLosers]]). */
   def lshIncremental(newBatch: DataFrame, existingSignatures: DataFrame,
       idCol: String, textCol: String, shingleN: Int = 3, k: Int = 32,
       bands: Int = 8, threshold: Double = 0.7,
@@ -367,9 +372,12 @@ object TextDedupOps {
 
   /** [[lshIncremental]] plus the SURVIVORS' signature frame — the rows
     * a production ingest loop appends to its persisted index: the
-    * batch's checkpointed signatures minus the losers, since
-    * re-signaturing the survivors from text would re-run the batch
-    * lineage and the signature kernel. `existingSignatures` is RE-EXECUTED per consumer
+    * batch's checkpointed signatures through the same survivor step as
+    * the batch (see [[incrementalLosers]]), since re-signaturing the
+    * survivors from text would re-run the batch lineage and the
+    * signature kernel. A NULL-id document is signed by no tier: it
+    * survives into the first frame but has no id to index, so it is
+    * not in the second. `existingSignatures` is RE-EXECUTED per consumer
     * — fine for a parquet read or a checkpointed in-session index; an
     * expensive un-materialized lineage should be persisted first, or
     * use [[lshIncrementalIndexed]] where storage IS the index. */
@@ -378,53 +386,61 @@ object TextDedupOps {
       shingleN: Int = 3, k: Int = 32, bands: Int = 8,
       threshold: Double = 0.7, maxBucketSize: Int = Int.MaxValue)
       : (DataFrame, DataFrame) = {
-    val (batchSigs, losers) = incrementalMinHash(newBatch,
+    val (batchSigs, survive) = incrementalMinHash(newBatch,
       existingSignatures, bandFrame(existingSignatures, idCol, bands),
       idCol, textCol, shingleN, k, bands, threshold, maxBucketSize)
-    (newBatch.join(losers, Seq(idCol), "left_anti"),
-      survivorSignatures(batchSigs, losers, idCol))
+    (survive(newBatch), survive(batchSigs))
   }
 
-  /** The survivors' rows of the batch signature frame: NULL ids
-    * dropped, then the losers anti-joined. A NULL id matches no loser,
-    * so the anti-join alone would keep a NULL-id document, which
-    * survives into the corpus but is never indexed. */
-  private[llm] def survivorSignatures(batchSigs: DataFrame,
-      losers: DataFrame, idCol: String): DataFrame =
-    batchSigs.filter(col(idCol).isNotNull)
-      .join(losers, Seq(idCol), "left_anti")
-
-  /** The one incremental MinHash body of the in-memory and the
-    * persisted-index tier, which differ only in where the existing side
-    * comes from: `exSigs` (idCol, signature) and `exBands` (idCol,
-    * band, band_hash), keyed by plain ids. Returns (the batch's
-    * checkpointed signatures, plain ids; the losers, see
-    * [[incrementalLosers]]).
-    *
-    * The pair join consumes the batch signatures THREE times (band
-    * explode + two re-attach joins): an EAGER checkpoint runs the
-    * batch lineage and the signature kernel once and TRUNCATES the
-    * plan to an RDD scan. It is sized ([[Bridge.sizedLocalCheckpoint]]),
-    * so a batch below the broadcast threshold plans its bands and
-    * signatures as broadcast sides and the index scans stream past
-    * them with no exchange. The existing side is storage-backed and
-    * cheap to re-scan, so it does not checkpoint (that would cost
-    * index-sized executor storage per batch). */
+  /** The MinHash tier of [[incrementalNearDup]], shared by the
+    * in-memory and the persisted-index tier, which differ only in where
+    * the existing side comes from: `exSigs` (idCol, signature) and
+    * `exBands` (idCol, band, band_hash), keyed by plain ids. Pairs
+    * pass at estimated Jaccard ≥ `threshold`. */
   private def incrementalMinHash(newBatch: DataFrame, exSigs: DataFrame,
       exBands: DataFrame, idCol: String, textCol: String, shingleN: Int,
       k: Int, bands: Int, threshold: Double,
-      maxBucketSize: Int): (DataFrame, DataFrame) = {
-    val nwSigs = Bridge.sizedLocalCheckpoint(
-      minHashSignatures(newBatch, idCol, textCol, shingleN, k)
-        .select(foldNew(col(idCol)).as(idCol), col("signature")))
-    val nwBands = bandFrame(nwSigs, idCol, bands)
-    val ex = exSigs.select(foldOld(col(idCol)).as(idCol), col("signature"))
-    val exB = exBands.select(foldOld(col(idCol)).as(idCol), col("band"),
-      col("band_hash"))
-    val pairs = asymPairsFromBands(exB.unionByName(nwBands), nwBands,
-      ex.unionByName(nwSigs), idCol, threshold, maxBucketSize)
-    (nwSigs.select(unfold(col(idCol)).as(idCol), col("signature")),
-      incrementalLosers(pairs, idCol))
+      maxBucketSize: Int): (DataFrame, DataFrame => DataFrame) =
+    incrementalNearDup(minHashSignatures(newBatch.filter(col(idCol).isNotNull),
+        idCol, textCol, shingleN, k), exSigs, exBands,
+      bandFrame(_, idCol, bands), Seq("band", "band_hash"), idCol,
+      maxBucketSize)(withEstJaccard(_, _, idCol, threshold))
+
+  /** The one incremental near-dup core of the MinHash and SimHash
+    * tiers. `batch` is the batch's (idCol, payload) frame — signatures
+    * or hashes of its non-NULL-id documents — and `exPayload`/`exBanded`
+    * the existing side's payload and banded rows (idCol, `key`...),
+    * keyed by plain ids; `band` bands a payload frame. Ids are
+    * side-folded, the batch payload is checkpointed, the new-vs-all
+    * bucket pairs ([[asymPairsFromBands]]) go through the tier's
+    * similarity test `similar(pairs, payload of old ∪ new)`, and the
+    * survivors come from [[incrementalLosers]]. Returns (the batch's
+    * checkpointed payload, plain ids; the survivor step).
+    *
+    * The pair join consumes the batch payload THREE times (band
+    * explode + two re-attach joins): an EAGER checkpoint runs the
+    * batch lineage and the payload kernel once and TRUNCATES the plan
+    * to an RDD scan. It is sized ([[Bridge.sizedLocalCheckpoint]]), so
+    * a batch below the broadcast threshold plans its bands and payload
+    * as broadcast sides and the index scans stream past them with no
+    * exchange. The existing side is storage-backed and cheap to
+    * re-scan, so it does not checkpoint (that would cost index-sized
+    * executor storage per batch). */
+  private def incrementalNearDup(batch: DataFrame, exPayload: DataFrame,
+      exBanded: DataFrame, band: DataFrame => DataFrame, key: Seq[String],
+      idCol: String, maxBucketSize: Int)(
+      similar: (DataFrame, DataFrame) => DataFrame)
+      : (DataFrame, DataFrame => DataFrame) = {
+    val payload = batch.columns.filterNot(_ == idCol).toSeq.map(col)
+    def fold(df: DataFrame, side: Column => Column, cols: Seq[Column]) =
+      df.select(side(col(idCol)).as(idCol) +: cols: _*)
+    val nw = Bridge.sizedLocalCheckpoint(fold(batch, foldNew, payload))
+    val nwBanded = fold(band(nw), identity, key.map(col))
+    val pairs = asymPairsFromBands(
+      fold(exBanded, foldOld, key.map(col)).unionByName(nwBanded),
+      nwBanded, idCol, key, maxBucketSize)
+    val all = fold(exPayload, foldOld, payload).unionByName(nw)
+    (fold(nw, unfold, payload), incrementalLosers(similar(pairs, all), idCol))
   }
 
   /** Persist an LSH signature index PRE-BANDED — the steady-state
@@ -822,18 +838,17 @@ object TextDedupOps {
       idCol: String, textCol: String, shingleN: Int = 3, k: Int = 32,
       bands: Int = 8, threshold: Double = 0.7,
       maxBucketSize: Int = Int.MaxValue): (DataFrame, DataFrame) = {
-    val (batchSigs, losers) = lshIncrementalIndexedCore(newBatch,
+    val (batchSigs, survive) = lshIncrementalIndexedCore(newBatch,
       indexDir, idCol, textCol, shingleN, k, bands, threshold,
       maxBucketSize)
-    (newBatch.join(losers, Seq(idCol), "left_anti"),
-      survivorSignatures(batchSigs, losers, idCol))
+    (survive(newBatch), survive(batchSigs))
   }
 
   /** [[lshIncrementalIndexed]] before the survivors are derived —
-    * returns (the batch's checkpointed signature frame, the losers,
-    * see [[incrementalLosers]]) so the exactly-once ingest loop
+    * returns (the batch's checkpointed signature frame, the survivor
+    * step, see [[incrementalLosers]]) so the exactly-once ingest loop
     * derives the corpus write, the bands append and the sigs append
-    * from its materialized batch with one anti-join each (one pair
+    * from its materialized batch with one survivor step each (one pair
     * computation per batch instead of one per consumer).
     * When the index carries a commit log
     * (`indexDir/commits`, see [[IngestCommit]]), the index reads are
@@ -845,26 +860,24 @@ object TextDedupOps {
   private[llm] def lshIncrementalIndexedCore(newBatch: DataFrame,
       indexDir: String, idCol: String, textCol: String, shingleN: Int,
       k: Int, bands: Int, threshold: Double,
-      maxBucketSize: Int): (DataFrame, DataFrame) = {
+      maxBucketSize: Int): (DataFrame, DataFrame => DataFrame) = {
     val spark = newBatch.sparkSession
     checkLshMeta(spark, indexDir, bands, shingleN, k)
     val hwmOpt = IngestCommit.committedHwm(spark,
       lshStore(indexDir).logDir)
-    def committed(df: DataFrame): DataFrame = hwmOpt.fold(df)(h =>
-      df.filter(col("ingest_id").isNull || col("ingest_id") <= h))
     // tombstoned ids (deleteFromLshIndex) leave both layouts logically
     // BEFORE the fold — a deleted doc must neither band-match nor
     // est-jaccard-join, exactly as if vacuumed
     val tomb = readTombstones(spark, lshStore(indexDir), idCol)
+    def visible(df: DataFrame): DataFrame = minusTombstones(hwmOpt.fold(df)(
+      h => df.filter(col("ingest_id").isNull || col("ingest_id") <= h)), tomb)
     // both layouts read with pinned schemas: no footer-inference job
     // per batch, and a sigs file without the stamp (written before the
     // exactly-once path) reads NULL = committed
-    val exSigs = committed(sigsRead(spark, indexDir, idCol))
-    val exBands = committed(
-      spark.read.schema(bandsReadSchema(idCol)).parquet(s"$indexDir/bands"))
-    incrementalMinHash(newBatch, minusTombstones(exSigs, tomb),
-      minusTombstones(exBands, tomb), idCol, textCol, shingleN, k, bands,
-      threshold, maxBucketSize)
+    incrementalMinHash(newBatch, visible(sigsRead(spark, indexDir, idCol)),
+      visible(spark.read.schema(bandsReadSchema(idCol))
+        .parquet(s"$indexDir/bands")),
+      idCol, textCol, shingleN, k, bands, threshold, maxBucketSize)
   }
 
   /** The slim (idCol, band, band_hash) frame the banded joins consume
@@ -881,7 +894,10 @@ object TextDedupOps {
 
   /** Banded candidate pairs for the INCREMENTAL path, over side-folded
     * ids: the new-side rows (`bandedNew`, the odd-id subset of the id
-    * space `bandedAll` covers) join against ALL rows — never old × old.
+    * space `bandedAll` covers) join against ALL rows on the bucket
+    * `key` columns — never old × old. Returns bare (id_a, id_b) pairs,
+    * id_a < id_b; each tier then applies its own similarity test
+    * (estimated Jaccard for MinHash, Hamming distance for SimHash).
     * An old-old pair is provably irrelevant to incremental
     * survivorship: a batch doc dies the moment it (or a
     * new-new-connected peer) touches ANY existing doc, so which old
@@ -890,24 +906,20 @@ object TextDedupOps {
     * all. At 100 TB this is THE incremental win — per-batch join work
     * scales with batch × bucket occupancy, not (index + batch)².
     * Bucket-size caps count over bandedAll (old + new together,
-    * matching [[lshCandidatePairs]]); `signatures` re-attaches for the
-    * est-Jaccard filter. The `distinct` stays: a pair colliding in
-    * several bands surfaces once per band, and under a cap a dropped
-    * bucket can hide its first colliding band. */
+    * matching the one-shot generators). The `distinct` stays: a pair
+    * colliding in several bands surfaces once per band, and under a
+    * cap a dropped bucket can hide its first colliding band. */
   private def asymPairsFromBands(bandedAll: DataFrame,
-      bandedNew: DataFrame, signatures: DataFrame, idCol: String,
-      threshold: Double, maxBucketSize: Int): DataFrame = {
-    val cap = bucketCap(bandedAll, Seq("band", "band_hash"), maxBucketSize)
-    val n = cap(bandedNew)
-      .select(col(idCol).as("__nid"), col("band"), col("band_hash"))
-    val o = cap(bandedAll)
-      .select(col(idCol).as("__oid"), col("band"), col("band_hash"))
-    val pairs = n.join(o, Seq("band", "band_hash"))
+      bandedNew: DataFrame, idCol: String, key: Seq[String],
+      maxBucketSize: Int): DataFrame = {
+    val cap = bucketCap(bandedAll, key, maxBucketSize)
+    val n = cap(bandedNew).select(col(idCol).as("__nid") +: key.map(col): _*)
+    val o = cap(bandedAll).select(col(idCol).as("__oid") +: key.map(col): _*)
+    n.join(o, key)
       .filter(col("__nid") =!= col("__oid"))
       .select(least(col("__nid"), col("__oid")).as("id_a"),
         greatest(col("__nid"), col("__oid")).as("id_b"))
       .distinct()
-    withEstJaccard(pairs, signatures, idCol, threshold)
   }
 
   /** The hot-key cap of every bucketed pair generator (LSH and SimHash
@@ -965,33 +977,36 @@ object TextDedupOps {
     parent.keys.map(m => m -> find(m)).toMap
   }
 
-  /** Shared loser selection for the incremental near-dup tiers
-    * ([[lshIncremental]] / [[simHashIncremental]]): given candidate
-    * pairs over side-folded ids (see the fold above), the batch ids
-    * that do NOT survive — those whose component touches an existing
-    * document, and those that are not their component's minimum NEW
-    * id — as one plain-id column `idCol` (long). Survivors are the
-    * batch anti-joined with these; publishing from the loser
-    * set lets the ingest loop anti-join its checkpointed batch and
-    * signatures against it directly.
+  /** The survivor step of the incremental near-dup tiers
+    * ([[incrementalNearDup]]): given candidate pairs over side-folded
+    * ids (see the fold above), the batch ids that do NOT survive are
+    * those whose component touches an existing document, and those
+    * that are not their component's minimum NEW id. Returns the step
+    * every survivor frame goes through — the batch, its checkpointed
+    * signatures or hashes — keyed on plain ids in `idCol`:
+    *   - below the 65,536-pair cap the pairs are collected and the
+    *     losers resolved on the driver; the step is the filter
+    *     `idCol IS NULL OR idCol NOT IN (losers)`, or the identity when
+    *     nothing loses. It plans no join and submits no job of its own;
+    *   - past the cap the step is an anti-join against the persisted
+    *     loser frame (registered with `DistScan`'s release queue).
+    * Either way a NULL-id row matches no loser and passes.
     *
     * Components run on the NEW-NEW subgraph only — equivalent to the
     * full graph because an existing doc is reachable from a new doc
     * only over a new-old edge (no old-old pairs matter, see
-    * [[asymPairsFromBands]]): any component member with an old
-    * neighbor damns its whole new-new component, and a component with
-    * no old contact is purely new, where the min-new doc IS the
-    * component label. Old-old pairs in the input (the simhash path
-    * still generates them) fall out of both filters. */
+    * [[asymPairsFromBands]], which emits none): any component member
+    * with an old neighbor damns its whole new-new component, and a
+    * component with no old contact is purely new, where the min-new
+    * doc IS the component label. */
   private def incrementalLosers(pairs: DataFrame,
-      idCol: String): DataFrame = {
-    val spark = pairs.sparkSession
+      idCol: String): DataFrame => DataFrame = {
     // FULL driver fast path (r18 — the ingest witness's per-batch cost
     // is fixed job overhead, not data): a micro-batch's post-threshold
     // pair graph is usually tiny, so ONE bounded collect resolves
     // new-new components, old-touched ids, and the loser set entirely
     // on the driver — no pair checkpoint, no component jobs, no loser
-    // persist — and the losers ride back as a broadcast literal
+    // persist — and the losers ride in the filter as literals
     // (bounded: at most two ids per collected pair).
     // Semantics identical to the distributed body below (union-by-min
     // root = connectedComponents' cluster pick; same three loser
@@ -1008,11 +1023,12 @@ object TextDedupOps {
       val roots = minRootComponents(edges.iterator // new-new edges only
         .filter { case (a, b) => isNewId(a) && isNewId(b) })
       val badRoots = oldTouched.iterator.flatMap(roots.get).toSet
-      val losers = roots.iterator
+      val losers = (roots.iterator
         .collect { case (m, r) if badRoots.contains(r) || m != r => m } ++
-        oldTouched.iterator.filterNot(roots.contains)
-      import spark.implicits._
-      return broadcast(losers.map(unfoldId).toSet.toSeq.sorted.toDF(idCol))
+        oldTouched.iterator.filterNot(roots.contains))
+        .map(unfoldId).toSet
+      return if (losers.isEmpty) identity
+        else _.filter(col(idCol).isNull || !col(idCol).isInCollection(losers))
     }
     // pairs feed THREE consumers (new-new edges into components,
     // old-touched extraction, and — through losers — every downstream
@@ -1037,7 +1053,7 @@ object TextDedupOps {
     // components with any old-touched member die whole
     val compBad = comps.join(oldTouched, Seq("id"), "left_semi")
       .select("cluster").distinct()
-    graft.operators.DistScan.registerCache(
+    val losers = graft.operators.DistScan.registerCache(
       comps.join(compBad, Seq("cluster"), "left_semi")
         .select(col("id"))
         .unionByName(comps.filter(col("id") =!= col("cluster"))
@@ -1047,6 +1063,7 @@ object TextDedupOps {
         .distinct()
         .select(unfold(col("id")).as(idCol))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    _.join(losers, Seq(idCol), "left_anti")
   }
 
   /** INCREMENTAL SimHash near-dup dedup — the banded-Hamming twin of
@@ -1057,22 +1074,35 @@ object TextDedupOps {
     * the three incremental indexes. Survivorship is the same one-shot
     * replay over old ∪ new: a batch doc survives iff its component
     * over the ≤ maxHamming candidate graph touches no existing doc
-    * and it is the minimum-id new doc of its component. Callers union
-    * the survivors' hashes into the index for the next ingest. The
-    * side bit is folded into the id (see the side-bit fold's id
-    * contract). */
+    * and it is the minimum-id new doc of its component. It runs the
+    * MinHash tiers' core ([[incrementalNearDup]]): pairs are new-vs-all
+    * only, so a batch costs its own hashes plus one banded join of
+    * its chunks against the index, never the index's old × old pairs.
+    * Callers union the survivors' hashes into the index for the next
+    * ingest. The side bit is folded into the id (see the side-bit
+    * fold's id contract). */
   def simHashIncremental(newBatch: DataFrame, existingHashes: DataFrame,
       idCol: String, textCol: String, maxHamming: Int = 3,
-      bands: Int = 4, maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    val batchH = simHash(newBatch, idCol, textCol)
-    val ex = existingHashes.select(foldOld(col(idCol)).as(idCol),
-      col("simhash"))
-    val nw = batchH.select(foldNew(col(idCol)).as(idCol), col("simhash"))
-    val pairs = simHashPairsOfHashes(ex.unionByName(nw), idCol,
-      maxHamming, bands, maxBucketSize)
-      .select("id_a", "id_b")
-    newBatch.join(incrementalLosers(pairs, idCol), Seq(idCol), "left_anti")
-  }
+      bands: Int = 4, maxBucketSize: Int = Int.MaxValue): DataFrame =
+    incrementalSimHash(newBatch, existingHashes, idCol, textCol,
+      maxHamming, bands, maxBucketSize)._2(newBatch)
+
+  /** [[simHashIncremental]] before the survivors are derived: (the
+    * batch's checkpointed (idCol, simhash) frame over its non-NULL ids,
+    * the survivor step), so the exactly-once ingest derives its corpus
+    * partition and its hash append from one evaluation of the batch. */
+  private[llm] def incrementalSimHash(newBatch: DataFrame,
+      existingHashes: DataFrame, idCol: String, textCol: String,
+      maxHamming: Int, bands: Int,
+      maxBucketSize: Int): (DataFrame, DataFrame => DataFrame) =
+    incrementalNearDup(simHash(newBatch.filter(col(idCol).isNotNull),
+        idCol, textCol), existingHashes,
+      simHashBands(existingHashes, idCol, bands),
+      simHashBands(_, idCol, bands), Seq("band", "chunk"), idCol,
+      maxBucketSize) { (pairs, hashes) =>
+      bothEnds(pairs, hashes, idCol, "simhash")
+        .filter(hammingDistance(col("__a"), col("__b")) <= maxHamming)
+    }
 
   // ----- SimHash STORE lifecycle (r19) ------------------------------
   // The persisted per-document simhash store (written by
@@ -1519,37 +1549,34 @@ object TextDedupOps {
     * pathology). Returns (id_a, id_b, hamming). */
   def simHashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, bands: Int = 4,
-      maxBucketSize: Int = Int.MaxValue): DataFrame =
-    simHashPairsOfHashes(simHash(df, idCol, textCol), idCol, maxHamming,
-      bands, maxBucketSize)
-
-  /** The banded-Hamming pair generator over an EXISTING (idCol,
-    * simhash) frame — factored out of [[simHashNearDupPairs]] so the
-    * incremental tier can band a persisted hash index without
-    * recomputing hashes from text. Same pigeonhole recall and
-    * hot-bucket cap semantics. */
-  def simHashPairsOfHashes(sh: DataFrame, idCol: String,
-      maxHamming: Int = 3, bands: Int = 4,
       maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    require(64 % bands == 0, s"bands must divide 64: $bands")
-    val width = 64 / bands
-    val mask = if (width == 64) -1L else (1L << width) - 1
-    val chunks = array((0 until bands).map(i =>
-      shiftrightunsigned(col("simhash"), i * width).bitwiseAND(lit(mask))): _*)
-    val bandedAll = sh.select(col(idCol), col("simhash"),
-      posexplode(chunks).as(Seq("band", "chunk")))
+    val bandedAll = simHashBands(simHash(df, idCol, textCol), idCol, bands)
     val banded =
       bucketCap(bandedAll, Seq("band", "chunk"), maxBucketSize)(bandedAll)
-    val a = banded.select(col(idCol).as("id_a"), col("simhash").as("h_a"),
-      col("band"), col("chunk"))
-    val b = banded.select(col(idCol).as("id_b"), col("simhash").as("h_b"),
-      col("band"), col("chunk"))
-    a.join(b, Seq("band", "chunk"))
+    def side(s: String) = banded.select(col(idCol).as(s"id_$s"),
+      col("simhash").as(s"h_$s"), col("band"), col("chunk"))
+    side("a").join(side("b"), Seq("band", "chunk"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
         hammingDistance(col("h_a"), col("h_b")).as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
+  }
+
+  /** An (idCol, simhash) frame banded for bucketing — one row per
+    * (document, band): (idCol, simhash, band, chunk), the chunk being
+    * the band's 64/`bands` contiguous bits. The one banding of the
+    * one-shot ([[simHashNearDupPairs]]) and the incremental
+    * ([[simHashIncremental]]) SimHash tiers. */
+  private def simHashBands(sh: DataFrame, idCol: String,
+      bands: Int): DataFrame = {
+    require(64 % bands == 0, s"bands must divide 64: $bands")
+    val width = 64 / bands
+    val mask = if (width == 64) -1L else (1L << width) - 1
+    val chunks = array((0 until bands).map(i =>
+      shiftrightunsigned(col("simhash"), i * width).bitwiseAND(lit(mask))): _*)
+    sh.select(col(idCol), col("simhash"),
+      posexplode(chunks).as(Seq("band", "chunk")))
   }
 
   /** Exact substring-span deduplication: remove every token covered by

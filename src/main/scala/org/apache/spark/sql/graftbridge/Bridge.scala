@@ -4,6 +4,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan,
   ResolvedHint, Statistics}
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Minimal access bridge: `Dataset.ofRows` is private[sql], and a custom
@@ -25,7 +26,12 @@ object Bridge {
     * block manager's memory + disk bytes for the checkpointed RDD:
     * joins against it broadcast below
     * `spark.sql.autoBroadcastJoinThreshold` and shuffle above it, by
-    * size alone. Falls back to the plain checkpoint when the storage
+    * size alone. It is also coalesced, narrowly, to at most as many
+    * partitions as AQE coalesces a shuffle of that size into (one per
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`): a frame read
+    * from a cache keeps its exchange's `spark.sql.shuffle.partitions`,
+    * and a small batch spread that wide would write one small file per
+    * partition. Falls back to the plain checkpoint when the storage
     * info is missing (nothing stored). */
   def sizedLocalCheckpoint(df: DataFrame): DataFrame = {
     val cp = df.localCheckpoint(true)
@@ -34,11 +40,14 @@ object Bridge {
         val spark = df.sparkSession
         spark.sparkContext.getRDDStorageInfo.find(_.id == r.rdd.id)
           .fold(cp) { info =>
-            ofRows(spark, r.copy()(
+            val bytes = info.memSize + info.diskSize
+            val sized = ofRows(spark, r.copy()(
               spark.asInstanceOf[classic.SparkSession],
-              Some(Statistics(sizeInBytes = BigInt(
-                info.memSize + info.diskSize))),
+              Some(Statistics(sizeInBytes = BigInt(bytes))),
               Some(r.constraints)))
+            val n = (bytes / SQLConf.get.getConf(
+              SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) + 1).toInt
+            if (n < r.rdd.getNumPartitions) sized.coalesce(n) else sized
           }
       case _ => cp
     }

@@ -183,6 +183,37 @@ class ClassifierPropertySpec extends SparkSpec {
     } finally feat.unpersist()
   }
 
+  test("trainHardLogisticScored: joining the scores back onto the input " +
+      "runs the input lineage no more times; releaseCaches() frees it") {
+    val in = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft-classifier-join-${ProcessHandle.current().pid()}").toString
+    docs.write.mode("overwrite").parquet(in)
+    // counts every row the input lineage produces; parquet input keeps
+    // the optimizer from folding the filter into a local relation
+    val evals = spark.sparkContext.longAccumulator("classifier-input-rows")
+    val seen = udf(() => { evals.add(1); true }).asNondeterministic()
+    val df = spark.read.parquet(in).filter(seen())
+    val scores = ClassifierOps.trainHardLogisticScored(df, "text", "y",
+      "doc_id")
+    val rows = evals.value
+    assert(rows === docs.count())
+    assert(df.join(scores, Seq("doc_id")).count() === rows)
+    assert(evals.value === rows, "the join-back re-ran the input lineage")
+    graft.operators.DistScan.releaseCaches()
+    assert(df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+  }
+
+  test("trainHardLogisticScored leaves a frame the caller persisted " +
+      "persisted after releaseCaches()") {
+    val df = docs.select("doc_id", "text", "y").persist()
+    try {
+      ClassifierOps.trainHardLogisticScored(df, "text", "y", "doc_id")
+        .count()
+      graft.operators.DistScan.releaseCaches()
+      assert(df.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    } finally df.unpersist()
+  }
+
   test("trainHardLogistic leaves no new persisted RDD behind") {
     docs.count()
     val before = spark.sparkContext.getPersistentRDDs.keySet

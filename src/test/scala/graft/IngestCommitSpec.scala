@@ -342,26 +342,92 @@ class IngestCommitSpec extends SparkSpec {
     val root = tmpDir("near-once")
     val (index, corpus) = (s"$root/index", s"$root/corpus")
     initIndex(index)
+    ingestCountingRows(root)(IngestCommit.nearDupIngestBatch(_, _, index,
+      corpus, threshold = 0.99))
+    assertFrameEqual(
+      IngestCommit.committedCorpus(spark, corpus, s"$index/commits"),
+      oneShotOracle)
+    assertIndexConsistent(index, corpus)
+  }
+
+  /** Writes each of `batches` to parquet under `root` and ingests it
+    * with `ingest`(batch, id) through a filter that counts every row the
+    * batch lineage produces; asserts the lineage ran once per batch. */
+  private def ingestCountingRows(root: String)(
+      ingest: (DataFrame, Long) => Boolean): Unit = {
     // every row the batch lineage produces passes this filter once per
     // evaluation of the lineage; parquet input keeps the optimizer from
     // folding the filter into a driver-side local relation
-    val evals = spark.sparkContext.longAccumulator("near-dup-batch-rows")
+    val evals = spark.sparkContext.longAccumulator("batch-rows")
     val seen = udf(() => { evals.add(1); true }).asNondeterministic()
     batches.zipWithIndex.foreach { case (b, i) =>
       val in = s"$root/in-$i"
       b.write.parquet(in)
       val rows = spark.read.parquet(in).count()
       evals.reset()
-      assert(IngestCommit.nearDupIngestBatch(
-        spark.read.parquet(in).filter(seen()), i.toLong, index, corpus,
-        threshold = 0.99))
+      assert(ingest(spark.read.parquet(in).filter(seen()), i.toLong))
       assert(evals.value == rows, s"batch $i: ${evals.value} row " +
         s"evaluations for $rows rows")
     }
-    assertFrameEqual(
-      IngestCommit.committedCorpus(spark, corpus, s"$index/commits"),
-      oneShotOracle)
-    assertIndexConsistent(index, corpus)
+  }
+
+  /** The one-shot SimHash replay over every batch at once. */
+  private def simHashOneShot: DataFrame = {
+    val all = batches.reduce(_ unionByName _)
+    TextDedupOps.simHashIncremental(all,
+      TextDedupOps.simHash(all.limit(0), "doc_id", "text"),
+      "doc_id", "text")
+  }
+
+  test("simhash ingest evaluates its input lineage once per batch") {
+    val root = tmpDir("simhash-once")
+    val (hashes, corpus) = (s"$root/hashes", s"$root/corpus")
+    ingestCountingRows(root)(
+      IngestCommit.simHashIngestBatch(_, _, hashes, corpus))
+    val committed = IngestCommit.committedCorpus(spark, corpus,
+      s"$hashes/_commits")
+    assertFrameEqual(committed, simHashOneShot)
+    assert(TextDedupOps.committedSimHashes(spark, hashes)
+      .select("doc_id").as[Long].collect().sorted.toSeq ==
+      committed.select("doc_id").as[Long].collect().sorted.toSeq)
+  }
+
+  test("simhash ingest: a NULL-id document reaches the corpus but not " +
+      "the hash store") {
+    val root = tmpDir("simhash-null")
+    val (hashes, corpus) = (s"$root/hashes", s"$root/corpus")
+    val nullDoc = triDocs(Seq(500L))
+      .select(lit(null).cast("long").as("doc_id"), col("text"))
+    assert(IngestCommit.simHashIngestBatch(
+      triDocs(0L until 10L).unionByName(nullDoc), 0L, hashes, corpus))
+    val ids = IngestCommit.committedCorpus(spark, corpus,
+      s"$hashes/_commits").select("doc_id").as[Option[Long]].collect()
+    assert(ids.count(_.isEmpty) === 1, ids.toSeq)
+    assert(ids.flatten.toSet == (0L until 10L).toSet)
+    val stored = TextDedupOps.committedSimHashes(spark, hashes)
+      .select("doc_id").as[Option[Long]].collect()
+    assert(stored.sorted.toSeq == (0L until 10L).map(Option(_)), stored.toSeq)
+  }
+
+  test("near-dup ingest of a batch with losers runs no job whose only " +
+      "stage broadcasts a local relation") {
+    val root = tmpDir("near-nolocal")
+    val (index, corpus) = (s"$root/index", s"$root/corpus")
+    initIndex(index)
+    val bs = batches
+    Seq(0, 1).foreach(i => assert(IngestCommit.nearDupIngestBatch(
+      bs(i), i.toLong, index, corpus, threshold = 0.99)))
+    val jobs = SpecListenerBus.stageScopesPerJob(spark.sparkContext)(
+      assert(IngestCommit.nearDupIngestBatch(bs(2), 2L, index, corpus,
+        threshold = 0.99)))
+    val localBroadcasts = jobs.filter(j => j.size == 1 &&
+      j.head.contains("LocalTableScan") &&
+      j.head.subsetOf(Set("LocalTableScan", "BroadcastExchange")))
+    assert(localBroadcasts.isEmpty, jobs.mkString("\n"))
+    // batch 2 has losers: its clones of committed docs 0..4 and of 52
+    val ids = spark.read.parquet(s"$corpus/ingest_id=2").select("doc_id")
+      .as[Long].collect().toSet
+    assert(ids == (50L until 55L).toSet)
   }
 
   test("simhash ingest: kills at both crash points replay to the " +
@@ -381,13 +447,9 @@ class IngestCommitSpec extends SparkSpec {
     }
     assert(IngestCommit.simHashIngestBatch(bs(2), 2L, hashes, corpus))
     assert(!IngestCommit.simHashIngestBatch(bs(2), 2L, hashes, corpus))
-    val all = batches.reduce(_ unionByName _)
-    val oneShot = TextDedupOps.simHashIncremental(all,
-      TextDedupOps.simHash(all.limit(0), "doc_id", "text"),
-      "doc_id", "text")
     val committed = IngestCommit.committedCorpus(spark, corpus,
       s"$hashes/_commits")
-    assertFrameEqual(committed, oneShot)
+    assertFrameEqual(committed, simHashOneShot)
     // exactly one committed hash row per corpus id (a replay
     // double-append would inflate this)
     val hwm = IngestCommit.committedHwm(spark, s"$hashes/_commits")

@@ -5,7 +5,7 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageSubmitted}
+  SparkListenerStageSubmitted, StageInfo}
 
 /** The Spark-internal listener-bus access the plan- and job-capturing
   * specs need: block until every listener queue has delivered its
@@ -18,12 +18,22 @@ object SpecListenerBus {
     * order), how many of the job's stages ran: a stage skipped because
     * its shuffle output or cached blocks already existed does not
     * count. */
-  def stagesRunPerJob(sc: SparkContext)(body: => Unit): Seq[Int] = {
-    val jobs = new ConcurrentLinkedQueue[Seq[Int]]()
+  def stagesRunPerJob(sc: SparkContext)(body: => Unit): Seq[Int] =
+    stageScopesPerJob(sc)(body).map(_.size)
+
+  /** Runs `body` and returns, for each Spark job it started (in start
+    * order), each stage of the job that ran, as the set of RDD
+    * operation scope names of the stage's RDDs — for SQL, the names of
+    * the plan nodes that built them ("LocalTableScan",
+    * "BroadcastExchange", ...). Skipped stages are left out, as in
+    * [[stagesRunPerJob]]. */
+  def stageScopesPerJob(sc: SparkContext)(body: => Unit)
+      : Seq[Seq[Set[String]]] = {
+    val jobs = new ConcurrentLinkedQueue[Seq[StageInfo]]()
     val ran = ConcurrentHashMap.newKeySet[Int]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.add(e.stageIds); ()
+        jobs.add(e.stageInfos); ()
       }
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
         ran.add(e.stageInfo.stageId); ()
@@ -32,6 +42,7 @@ object SpecListenerBus {
     drain(sc)
     sc.addSparkListener(listener)
     try { body; drain(sc) } finally sc.removeSparkListener(listener)
-    jobs.asScala.toSeq.map(_.count(ran.contains))
+    jobs.asScala.toSeq.map(_.filter(s => ran.contains(s.stageId))
+      .map(_.rddInfos.flatMap(_.scope.map(_.name)).toSet))
   }
 }
