@@ -791,20 +791,15 @@ object IngestCommit {
     * incremental core, which pairs them new-vs-all against the
     * committed view; the corpus partition and the hash append are the
     * checkpointed batch and its checkpointed hashes through the same
-    * survivor step. A NULL-id document reaches the corpus but, having
-    * no id to index, not the store. */
+    * survivor step, each coalesced for its write only
+    * ([[Bridge.writeWidth]]). A NULL-id document reaches the corpus
+    * but, having no id to index, not the store. */
   def simHashIngestBatch(batch: DataFrame, batchId: Long,
       hashesDir: String, corpusDir: String, idCol: String = "doc_id",
       textCol: String = "text", maxHamming: Int = 3, bands: Int = 4,
       maxBucketSize: Int = Int.MaxValue,
       failpoint: String => Unit = NoFailpoint): Boolean = {
     val spark = batch.sparkSession
-    val logDir = simHashStore(hashesDir).logDir
-    val recover = beginIngest(spark, logDir, batchId,
-      "simHashIngestBatch", writeAhead = true) match {
-      case None => return false
-      case Some(r) => r
-    }
     // r19: hash files live under hashesDir/hashes (r18 root layouts
     // migrate on first touch, inside committedSimHashes) so the store
     // gets the IndexSwap-based delete/compaction tier its siblings
@@ -814,23 +809,18 @@ object IngestCommit {
     // as committed-at-any-watermark, the family's
     // null-means-committed convention.
     val dataDir = TextDedupOps.simHashDataDir(hashesDir)
-    val docs = Bridge.sizedLocalCheckpoint(batch) // the ONE evaluation
-    val (batchHashes, survive) = TextDedupOps.incrementalSimHash(docs,
-      TextDedupOps.committedSimHashes(spark, hashesDir, idCol), idCol,
-      textCol, maxHamming, bands, maxBucketSize)
-    failpoint("after-survivors")
-    val survHashes = survive(batchHashes)
-    publishAndCommit(spark, logDir, batchId, failpoint) {
-      survive(docs).write.mode("overwrite")
-        .parquet(s"$corpusDir/ingest_id=$batchId")
-    } {
+    nearDupIngest(batch, batchId, simHashStore(hashesDir).logDir,
+        "simHashIngestBatch", corpusDir, failpoint) {
+      TextDedupOps.incrementalSimHash(_, TextDedupOps.committedSimHashes(
+        spark, hashesDir, idCol), idCol, textCol, maxHamming, bands,
+        maxBucketSize)
+    } { (survHashes, recover) =>
       val dataP = new org.apache.hadoop.fs.Path(dataDir)
-      val toWrite =
-        if (!recover || !fsOf(spark, dataP).exists(dataP)) survHashes
-        // pinned schema: the crashed attempt may be the store's FIRST
-        // write, and the recovery read must not depend on which footer
-        // inference lands on
-        else survHashes.exceptAll(spark.read
+      // pinned schema: the crashed attempt may be the store's FIRST
+      // write, and the recovery read must not depend on which footer
+      // inference lands on
+      val toWrite = if (!recover || !fsOf(spark, dataP).exists(dataP))
+        survHashes else survHashes.exceptAll(spark.read
           .schema(TextDedupOps.simHashReadSchema(idCol)).parquet(dataDir)
           .filter(col("ingest_id") === batchId)
           .select(col(idCol), col("simhash")))
@@ -859,9 +849,12 @@ object IngestCommit {
     * checkpointed batch or its checkpointed signatures through that
     * step — a filter on the losing ids on the collected path, which
     * runs no job of its own, or an anti-join with the persisted losers
-    * past the cap. A NULL-id document passes the step: it reaches the
-    * corpus but, having no id to index, is never signed, so not the
-    * index. `kKnown` skips the per-append signature-length probe job.
+    * past the cap; each is coalesced for its write only
+    * ([[Bridge.writeWidth]]), so the signature kernel keeps the
+    * checkpoint's parallelism. A NULL-id document passes the step: it
+    * reaches the corpus but, having no id to index, is never signed,
+    * so not the index. `kKnown` skips the per-append signature-length
+    * probe job.
     *
     * `failpoint` is a test hook invoked at the named crash points
     * ("after-survivors", "after-corpus", "after-index"); production
@@ -872,29 +865,44 @@ object IngestCommit {
       bands: Int = 8, threshold: Double = 0.7,
       maxBucketSize: Int = Int.MaxValue,
       failpoint: String => Unit = NoFailpoint): Boolean = {
-    val spark = batch.sparkSession
-    val logDir = lshStore(indexDir).logDir
-    val recover = beginIngest(spark, logDir, batchId,
-      "nearDupIngestBatch", writeAhead = true) match {
-      case None => return false
-      case Some(r) => r
-    }
-    val docs = Bridge.sizedLocalCheckpoint(batch) // the ONE evaluation
-    // Core filters the index to rows committed at the hwm — the
-    // crashed attempt's own stamped rows are invisible, making the
-    // loser set identical on every replay (the determinism the
-    // recovery subtraction in appendSigsToIndex relies on)
-    val (batchSigs, survive) = TextDedupOps.lshIncrementalIndexedCore(
-      docs, indexDir, idCol, textCol, shingleN, k, bands, threshold,
-      maxBucketSize)
-    failpoint("after-survivors")
-    publishAndCommit(spark, logDir, batchId, failpoint) {
-      survive(docs).write
-        .mode("overwrite").parquet(s"$corpusDir/ingest_id=$batchId")
-    } {
-      TextDedupOps.appendSigsToIndex(survive(batchSigs), indexDir, idCol,
-        bands, shingleN, ingestId = Some(batchId), recover = recover,
+    nearDupIngest(batch, batchId, lshStore(indexDir).logDir,
+        "nearDupIngestBatch", corpusDir, failpoint) {
+      // Core filters the index to rows committed at the hwm — the
+      // crashed attempt's own stamped rows are invisible, making the
+      // loser set identical on every replay (the determinism the
+      // recovery subtraction in appendSigsToIndex relies on)
+      TextDedupOps.lshIncrementalIndexedCore(_, indexDir, idCol, textCol,
+        shingleN, k, bands, threshold, maxBucketSize)
+    } { (survSigs, recover) =>
+      TextDedupOps.appendSigsToIndex(survSigs, indexDir, idCol, bands,
+        shingleN, ingestId = Some(batchId), recover = recover,
         kKnown = Some(k))
+    }
+  }
+
+  /** The one body of [[nearDupIngestBatch]] and [[simHashIngestBatch]].
+    * It opens `batchId` in the log at `logDir` (false, and no writes,
+    * for a replay of the hwm batch) and checkpoints `batch` once. The
+    * tier's incremental `core` maps that checkpoint to (its payload:
+    * signatures or hashes; the survivor step). The survivors go to
+    * `corpusDir/ingest_id=<batch>` and their payload to `append(payload,
+    * recover)`, each coalesced for its write only
+    * ([[Bridge.writeWidth]]). */
+  private def nearDupIngest(batch: DataFrame, batchId: Long,
+      logDir: String, op: String, corpusDir: String,
+      failpoint: String => Unit)(
+      core: DataFrame => (DataFrame, DataFrame => DataFrame))(
+      append: (DataFrame, Boolean) => Unit): Boolean = {
+    val spark = batch.sparkSession
+    beginIngest(spark, logDir, batchId, op, writeAhead = true).fold(false) { recover =>
+      val docs = Bridge.sizedLocalCheckpoint(batch) // the ONE evaluation
+      val (payload, survive) = core(docs)
+      val written = survive.andThen(Bridge.writeWidth(docs))
+      failpoint("after-survivors")
+      publishAndCommit(spark, logDir, batchId, failpoint) {
+        written(docs).write.mode("overwrite")
+          .parquet(s"$corpusDir/ingest_id=$batchId")
+      }(append(written(payload), recover))
     }
   }
 }

@@ -322,21 +322,15 @@ object TextDedupOps {
     * minima — reaches `threshold`. Returns (id_a, id_b, est_jaccard). */
   private def withEstJaccard(pairs: DataFrame, signatures: DataFrame,
       idCol: String, threshold: Double): DataFrame = {
-    val est = size(filter(zip_with(col("__a"), col("__b"), (x, y) => x === y),
-      v => v)).cast("double") / size(col("__a"))
-    bothEnds(pairs, signatures, idCol, "signature")
+    val est = size(filter(zip_with(col("sig_a"), col("sig_b"),
+      (x, y) => x === y), v => v)).cast("double") / size(col("sig_a"))
+    pairs
+      .join(signatures.select(col(idCol).as("id_a"), col("signature").as("sig_a")), Seq("id_a"))
+      .join(signatures.select(col(idCol).as("id_b"), col("signature").as("sig_b")), Seq("id_b"))
       .withColumn("est_jaccard", est)
       .filter(col("est_jaccard") >= threshold)
       .select("id_a", "id_b", "est_jaccard")
   }
-
-  /** Candidate `pairs` (id_a, id_b) with both ends' `value` column of
-    * `payload` (idCol, value) re-attached as `__a` and `__b`. */
-  private def bothEnds(pairs: DataFrame, payload: DataFrame,
-      idCol: String, value: String): DataFrame =
-    pairs
-      .join(payload.select(col(idCol).as("id_a"), col(value).as("__a")), Seq("id_a"))
-      .join(payload.select(col(idCol).as("id_b"), col(value).as("__b")), Seq("id_b"))
 
   /** INCREMENTAL near-dup dedup — the MinHash twin of
     * [[dedupIncremental]] (r12 verdict task #7): a production pipeline
@@ -385,12 +379,15 @@ object TextDedupOps {
       existingSignatures: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, k: Int = 32, bands: Int = 8,
       threshold: Double = 0.7, maxBucketSize: Int = Int.MaxValue)
-      : (DataFrame, DataFrame) = {
-    val (batchSigs, survive) = incrementalMinHash(newBatch,
-      existingSignatures, bandFrame(existingSignatures, idCol, bands),
-      idCol, textCol, shingleN, k, bands, threshold, maxBucketSize)
-    (survive(newBatch), survive(batchSigs))
-  }
+      : (DataFrame, DataFrame) = survivors(newBatch, incrementalMinHash(
+      newBatch, existingSignatures, bandFrame(existingSignatures, idCol,
+      bands), idCol, textCol, shingleN, k, bands, threshold, maxBucketSize))
+
+  /** `batch` and its checkpointed payload (`core._1`) through the
+    * survivor step (`core._2`) of an incremental near-dup tier. */
+  private def survivors(batch: DataFrame,
+      core: (DataFrame, DataFrame => DataFrame)): (DataFrame, DataFrame) =
+    (core._2(batch), core._2(core._1))
 
   /** The MinHash tier of [[incrementalNearDup]], shared by the
     * in-memory and the persisted-index tier, which differ only in where
@@ -409,21 +406,23 @@ object TextDedupOps {
   /** The one incremental near-dup core of the MinHash and SimHash
     * tiers. `batch` is the batch's (idCol, payload) frame — signatures
     * or hashes of its non-NULL-id documents — and `exPayload`/`exBanded`
-    * the existing side's payload and banded rows (idCol, `key`...),
-    * keyed by plain ids; `band` bands a payload frame. Ids are
+    * the existing side's payload and banded rows, keyed by plain ids;
+    * `band` bands a payload frame into (idCol, `key`..., carried...)
+    * rows, and `exBanded` has at least those columns. Ids are
     * side-folded, the batch payload is checkpointed, the new-vs-all
-    * bucket pairs ([[asymPairsFromBands]]) go through the tier's
-    * similarity test `similar(pairs, payload of old ∪ new)`, and the
-    * survivors come from [[incrementalLosers]]. Returns (the batch's
-    * checkpointed payload, plain ids; the survivor step).
+    * bucket pairs ([[asymPairsFromBands]], carrying the banded rows'
+    * other columns) go through the tier's similarity test
+    * `similar(pairs, payload of old ∪ new)`, and the survivors come
+    * from [[incrementalLosers]]. Returns (the batch's checkpointed
+    * payload, plain ids; the survivor step).
     *
-    * The pair join consumes the batch payload THREE times (band
-    * explode + two re-attach joins): an EAGER checkpoint runs the
-    * batch lineage and the payload kernel once and TRUNCATES the plan
-    * to an RDD scan. It is sized ([[Bridge.sizedLocalCheckpoint]]), so
-    * a batch below the broadcast threshold plans its bands and payload
-    * as broadcast sides and the index scans stream past them with no
-    * exchange. The existing side is storage-backed and cheap to
+    * The pair join consumes the batch payload more than once (the band
+    * explode on both join sides, and for MinHash two re-attach joins):
+    * an EAGER checkpoint runs the batch lineage and the payload kernel
+    * once and TRUNCATES the plan to an RDD scan. It is sized
+    * ([[Bridge.sizedLocalCheckpoint]]), so a batch below the broadcast
+    * threshold plans its bands and payload as broadcast sides and the
+    * index scans stream past them with no exchange. The existing side is storage-backed and cheap to
     * re-scan, so it does not checkpoint (that would cost index-sized
     * executor storage per batch). */
   private def incrementalNearDup(batch: DataFrame, exPayload: DataFrame,
@@ -431,16 +430,17 @@ object TextDedupOps {
       idCol: String, maxBucketSize: Int)(
       similar: (DataFrame, DataFrame) => DataFrame)
       : (DataFrame, DataFrame => DataFrame) = {
-    val payload = batch.columns.filterNot(_ == idCol).toSeq.map(col)
-    def fold(df: DataFrame, side: Column => Column, cols: Seq[Column]) =
-      df.select(side(col(idCol)).as(idCol) +: cols: _*)
-    val nw = Bridge.sizedLocalCheckpoint(fold(batch, foldNew, payload))
-    val nwBanded = fold(band(nw), identity, key.map(col))
+    // `df` with its ids side-folded and the other columns of `like`
+    def fold(df: DataFrame, side: Column => Column, like: DataFrame) =
+      df.select(side(col(idCol)).as(idCol) +:
+        like.columns.filterNot(_ == idCol).toSeq.map(col): _*)
+    val nw = Bridge.sizedLocalCheckpoint(fold(batch, foldNew, batch))
+    val nwBanded = band(nw)
     val pairs = asymPairsFromBands(
-      fold(exBanded, foldOld, key.map(col)).unionByName(nwBanded),
+      fold(exBanded, foldOld, nwBanded).unionByName(nwBanded),
       nwBanded, idCol, key, maxBucketSize)
-    val all = fold(exPayload, foldOld, payload).unionByName(nw)
-    (fold(nw, unfold, payload), incrementalLosers(similar(pairs, all), idCol))
+    val all = fold(exPayload, foldOld, nw).unionByName(nw)
+    (fold(nw, unfold, nw), incrementalLosers(similar(pairs, all), idCol))
   }
 
   /** Persist an LSH signature index PRE-BANDED — the steady-state
@@ -837,12 +837,9 @@ object TextDedupOps {
   def lshIncrementalIndexed(newBatch: DataFrame, indexDir: String,
       idCol: String, textCol: String, shingleN: Int = 3, k: Int = 32,
       bands: Int = 8, threshold: Double = 0.7,
-      maxBucketSize: Int = Int.MaxValue): (DataFrame, DataFrame) = {
-    val (batchSigs, survive) = lshIncrementalIndexedCore(newBatch,
-      indexDir, idCol, textCol, shingleN, k, bands, threshold,
-      maxBucketSize)
-    (survive(newBatch), survive(batchSigs))
-  }
+      maxBucketSize: Int = Int.MaxValue): (DataFrame, DataFrame) =
+    survivors(newBatch, lshIncrementalIndexedCore(newBatch, indexDir,
+      idCol, textCol, shingleN, k, bands, threshold, maxBucketSize))
 
   /** [[lshIncrementalIndexed]] before the survivors are derived —
     * returns (the batch's checkpointed signature frame, the survivor
@@ -895,9 +892,13 @@ object TextDedupOps {
   /** Banded candidate pairs for the INCREMENTAL path, over side-folded
     * ids: the new-side rows (`bandedNew`, the odd-id subset of the id
     * space `bandedAll` covers) join against ALL rows on the bucket
-    * `key` columns — never old × old. Returns bare (id_a, id_b) pairs,
-    * id_a < id_b; each tier then applies its own similarity test
-    * (estimated Jaccard for MinHash, Hamming distance for SimHash).
+    * `key` columns — never old × old. Returns (id_a, id_b) pairs,
+    * id_a < id_b, plus each other column `c` of the banded rows from
+    * both ends as `c_n` (the new end) and `c_o` (the other end); each
+    * tier then applies its own similarity test (estimated Jaccard over
+    * re-attached signatures for MinHash, whose slim bands carry none;
+    * Hamming distance between `simhash_n` and `simhash_o` for
+    * SimHash).
     * An old-old pair is provably irrelevant to incremental
     * survivorship: a batch doc dies the moment it (or a
     * new-new-connected peer) touches ANY existing doc, so which old
@@ -906,20 +907,24 @@ object TextDedupOps {
     * all. At 100 TB this is THE incremental win — per-batch join work
     * scales with batch × bucket occupancy, not (index + batch)².
     * Bucket-size caps count over bandedAll (old + new together,
-    * matching the one-shot generators). The `distinct` stays: a pair
-    * colliding in several bands surfaces once per band, and under a
-    * cap a dropped bucket can hide its first colliding band. */
+    * matching the one-shot generators). The dedup on (id_a, id_b)
+    * stays: a pair colliding in several bands surfaces once per band,
+    * under a cap a dropped bucket can hide its first colliding band,
+    * and a new-new pair is found from both ends (its `c_n` and `c_o`
+    * swapped; one row is kept, either order). */
   private def asymPairsFromBands(bandedAll: DataFrame,
       bandedNew: DataFrame, idCol: String, key: Seq[String],
       maxBucketSize: Int): DataFrame = {
     val cap = bucketCap(bandedAll, key, maxBucketSize)
-    val n = cap(bandedNew).select(col(idCol).as("__nid") +: key.map(col): _*)
-    val o = cap(bandedAll).select(col(idCol).as("__oid") +: key.map(col): _*)
-    n.join(o, key)
-      .filter(col("__nid") =!= col("__oid"))
-      .select(least(col("__nid"), col("__oid")).as("id_a"),
-        greatest(col("__nid"), col("__oid")).as("id_b"))
-      .distinct()
+    val carried = bandedNew.columns.filterNot((idCol +: key).contains).toSeq
+    def side(df: DataFrame, s: String) = cap(df).select(col(idCol).as(s"__$s")
+      +: key.map(col) ++: carried.map(c => col(c).as(s"${c}_$s")): _*)
+    side(bandedNew, "n").join(side(bandedAll, "o"), key)
+      .filter(col("__n") =!= col("__o"))
+      .select(least(col("__n"), col("__o")).as("id_a") +:
+        greatest(col("__n"), col("__o")).as("id_b") +:
+        carried.flatMap(c => Seq(col(s"${c}_n"), col(s"${c}_o"))): _*)
+      .dropDuplicates("id_a", "id_b")
   }
 
   /** The hot-key cap of every bucketed pair generator (LSH and SimHash
@@ -986,8 +991,9 @@ object TextDedupOps {
     * signatures or hashes — keyed on plain ids in `idCol`:
     *   - below the 65,536-pair cap the pairs are collected and the
     *     losers resolved on the driver; the step is the filter
-    *     `idCol IS NULL OR idCol NOT IN (losers)`, or the identity when
-    *     nothing loses. It plans no join and submits no job of its own;
+    *     `idCol IS NULL OR idCol NOT IN (losers)`, the losers one
+    *     `InSet` ([[Bridge.isInSet]]), or the identity when nothing
+    *     loses. It plans no join and submits no job of its own;
     *   - past the cap the step is an anti-join against the persisted
     *     loser frame (registered with `DistScan`'s release queue).
     * Either way a NULL-id row matches no loser and passes.
@@ -1006,8 +1012,9 @@ object TextDedupOps {
     // pair graph is usually tiny, so ONE bounded collect resolves
     // new-new components, old-touched ids, and the loser set entirely
     // on the driver — no pair checkpoint, no component jobs, no loser
-    // persist — and the losers ride in the filter as literals
-    // (bounded: at most two ids per collected pair).
+    // persist — and the losers ride in the filter as one InSet
+    // (bounded: at most two ids per collected pair; an In-list of
+    // literals would cost planning time per loser, Bridge.isInSet).
     // Semantics identical to the distributed body below (union-by-min
     // root = connectedComponents' cluster pick; same three loser
     // classes); one row past the cap falls back, so scale is safe.
@@ -1028,7 +1035,8 @@ object TextDedupOps {
         oldTouched.iterator.filterNot(roots.contains))
         .map(unfoldId).toSet
       return if (losers.isEmpty) identity
-        else _.filter(col(idCol).isNull || !col(idCol).isInCollection(losers))
+        else _.filter(col(idCol).isNull ||
+          !Bridge.isInSet(col(idCol).cast("long"), losers.toSet[Any]))
     }
     // pairs feed THREE consumers (new-new edges into components,
     // old-touched extraction, and — through losers — every downstream
@@ -1099,9 +1107,9 @@ object TextDedupOps {
         idCol, textCol), existingHashes,
       simHashBands(existingHashes, idCol, bands),
       simHashBands(_, idCol, bands), Seq("band", "chunk"), idCol,
-      maxBucketSize) { (pairs, hashes) =>
-      bothEnds(pairs, hashes, idCol, "simhash")
-        .filter(hammingDistance(col("__a"), col("__b")) <= maxHamming)
+      maxBucketSize) { (pairs, _) =>
+      pairs.filter(hammingDistance(col("simhash_n"), col("simhash_o"))
+        <= maxHamming).select("id_a", "id_b")
     }
 
   // ----- SimHash STORE lifecycle (r19) ------------------------------

@@ -2,10 +2,12 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan,
   ResolvedHint, Statistics}
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Minimal access bridge: `Dataset.ofRows` is private[sql], and a custom
   * LogicalPlan needs exactly one entry point to become a public
@@ -26,12 +28,7 @@ object Bridge {
     * block manager's memory + disk bytes for the checkpointed RDD:
     * joins against it broadcast below
     * `spark.sql.autoBroadcastJoinThreshold` and shuffle above it, by
-    * size alone. It is also coalesced, narrowly, to at most as many
-    * partitions as AQE coalesces a shuffle of that size into (one per
-    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`): a frame read
-    * from a cache keeps its exchange's `spark.sql.shuffle.partitions`,
-    * and a small batch spread that wide would write one small file per
-    * partition. Falls back to the plain checkpoint when the storage
+    * size alone. Falls back to the plain checkpoint when the storage
     * info is missing (nothing stored). */
   def sizedLocalCheckpoint(df: DataFrame): DataFrame = {
     val cp = df.localCheckpoint(true)
@@ -40,18 +37,38 @@ object Bridge {
         val spark = df.sparkSession
         spark.sparkContext.getRDDStorageInfo.find(_.id == r.rdd.id)
           .fold(cp) { info =>
-            val bytes = info.memSize + info.diskSize
-            val sized = ofRows(spark, r.copy()(
+            ofRows(spark, r.copy()(
               spark.asInstanceOf[classic.SparkSession],
-              Some(Statistics(sizeInBytes = BigInt(bytes))),
+              Some(Statistics(sizeInBytes = BigInt(
+                info.memSize + info.diskSize))),
               Some(r.constraints)))
-            val n = (bytes / SQLConf.get.getConf(
-              SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) + 1).toInt
-            if (n < r.rdd.getNumPartitions) sized.coalesce(n) else sized
           }
       case _ => cp
     }
   }
+
+  /** The narrow coalesce of a frame derived from `sized` (a
+    * [[sizedLocalCheckpoint]]) to as many partitions as AQE coalesces
+    * a shuffle of `sized`'s stored bytes into: one per
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`. It is for the
+    * writes only. A checkpoint of a cached frame keeps the cache's
+    * `spark.sql.shuffle.partitions`, and a small batch written that
+    * wide leaves one small file per partition (and per band, in a
+    * band-partitioned layout); the kernels between the checkpoint and
+    * the write keep its parallelism. */
+  def writeWidth(sized: DataFrame): DataFrame => DataFrame = _.coalesce(
+    (sized.queryExecution.optimizedPlan.stats.sizeInBytes / SQLConf.get
+      .getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) + 1)
+      .min(Int.MaxValue).toInt)
+
+  /** `c IN values` as one `InSet` over the driver-held `values`, which
+    * must be of `c`'s type. `Column.isInCollection` builds an `In` with
+    * one literal child per value, and the analyzer and the optimizer
+    * rules before `OptimizeIn` walk every child on each pass: on a
+    * 4-core local session, planning a filter on 4,096 ids took 4.6 s,
+    * and on 65,536 ids it did not finish in 7 minutes. */
+  def isInSet(c: Column, values: Set[Any]): Column =
+    ExpressionUtils.column(InSet(ExpressionUtils.expression(c), values))
 
   /** `df` with its resolved hints removed — for a query that reads a
     * hinted frame without joining it (a `broadcast` side's own

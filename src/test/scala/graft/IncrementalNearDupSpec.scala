@@ -297,41 +297,53 @@ class IncrementalNearDupSpec extends SparkSpec {
     }
   }
 
-  test("past the 65,536-pair cap (370 identical batch documents) the " +
-      "MinHash and SimHash tiers equal the all-pairs reference") {
+  test("either side of the 65,536-pair cap (360 and 370 identical " +
+      "batch documents) the MinHash and SimHash tiers equal the " +
+      "all-pairs reference") {
+    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.Join
     def words(p: String): String = (0 until 40).map(j => s"$p$j").mkString(" ")
-    assert(370 * 369 / 2 > 65536)
-    // 370 copies of one text; three copies of an indexed text, which
-    // all die to the index; two singletons
-    val batch = ((0L until 370L).map(i => (i, words("t"))) ++
-      (1000L until 1003L).map(i => (i, words("u"))) ++
-      Seq((2000L, words("f")), (2001L, words("g")))).toDF("doc_id", "text")
+    // three copies of an indexed text, which all die to the index (3
+    // new-new and 3 new-old pairs), and two singletons
     val old = Seq((5000L, words("u")), (5001L, words("o")))
       .toDF("doc_id", "text")
     val want = Set(0L, 2000L, 2001L)
-    def pastCap(survivors: DataFrame): Boolean =
-      survivors.queryExecution.optimizedPlan.exists {
-        case j: org.apache.spark.sql.catalyst.plans.logical.Join =>
-          j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti
-        case _ => false
+    for (copies <- Seq(360L, 370L)) {
+      val pairs = copies * (copies - 1) / 2 + 6
+      val pastCap = pairs > 65536
+      assert(pastCap == (copies == 370L), pairs)
+      val batch = ((0L until copies).map(i => (i, words("t"))) ++
+        (1000L until 1003L).map(i => (i, words("u"))) ++
+        Seq((2000L, words("f")), (2001L, words("g")))).toDF("doc_id", "text")
+      // past the cap the step anti-joins the persisted losers; below it
+      // the losers are one InSet, never one literal per loser
+      def check(survivors: DataFrame, tier: String): Unit = {
+        val plan = survivors.queryExecution.analyzed
+        assert(plan.exists {
+          case j: Join => j.joinType == LeftAnti
+          case _ => false
+        } == pastCap, s"$tier $copies")
+        assert(plan.expressions.exists(_.exists(_.isInstanceOf[InSet])) ==
+          !pastCap && !plan.expressions.exists(_.exists(_.isInstanceOf[In])),
+          s"$tier $copies")
+        assert(ids(survivors) === want, s"$tier $copies")
       }
 
-    val so = sigsOf(old)
-    assert(referenceSurvivors(so, sigsOf(batch), estAtLeast(0.8) _) === want)
-    val m = TextDedupOps.lshIncremental(batch,
-      TextDedupOps.minHashSignatures(old, "doc_id", "text", 3, 32),
-      "doc_id", "text", threshold = 0.8)
-    assert(pastCap(m))
-    assert(ids(m) === want)
+      val so = sigsOf(old)
+      assert(referenceSurvivors(so, sigsOf(batch), estAtLeast(0.8) _) === want)
+      check(TextDedupOps.lshIncremental(batch,
+        TextDedupOps.minHashSignatures(old, "doc_id", "text", 3, 32),
+        "doc_id", "text", threshold = 0.8), "MinHash")
 
-    val ho = hashesOf(old)
-    val hb = hashesOf(batch)
-    assert(referenceSurvivors(ho, hb,
-      simHashEdge(ho.values ++ hb.values, 3, 4, Int.MaxValue)) === want)
-    val sh = TextDedupOps.simHashIncremental(batch,
-      TextDedupOps.simHash(old, "doc_id", "text"), "doc_id", "text")
-    assert(pastCap(sh))
-    assert(ids(sh) === want)
+      val ho = hashesOf(old)
+      val hb = hashesOf(batch)
+      assert(referenceSurvivors(ho, hb,
+        simHashEdge(ho.values ++ hb.values, 3, 4, Int.MaxValue)) === want)
+      check(TextDedupOps.simHashIncremental(batch,
+        TextDedupOps.simHash(old, "doc_id", "text"), "doc_id", "text"),
+        "SimHash")
+    }
   }
 
   test("incremental SimHash pairs are new-vs-all: an index whose " +
