@@ -1,7 +1,9 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Distributed TRAINING for the hashed quality classifier
   * ([[TextStatsOps.hashedClassifierLogit]] is the inference side) —
@@ -21,13 +23,15 @@ import org.apache.spark.sql.functions._
   * (p − y)·1 on the word's bucket — an integer — and the batch
   * gradient is an integer SUM: order-insensitive.
   *
-  * Scale shape per iteration: ONE single-stage job over the persisted
-  * per-document bucket counts ([[bucketCountFeatures]]) — each task
+  * The features are one select over the caller's frame with a named
+  * histogram udf ([[bucketCountFeatures]]), persisted, so the cached
+  * plan keeps the caller's lineage. Scale shape per iteration: ONE
+  * single-stage job over those per-document bucket counts — each task
   * folds its rows' logits and gradients into buckets+3 longs, and the
   * driver merges one such array per partition and updates buckets+1
-  * weights. The pass is an `RDD.aggregate` over an RDD planned once,
-  * so no pass is re-analyzed, re-planned or re-compiled, and none
-  * shuffles. Nothing grows with corpus size on the driver.
+  * weights. The pass is an `RDD.aggregate` over the feature cache's
+  * rows, so no pass is re-analyzed, re-planned or re-compiled, and
+  * none shuffles. Nothing grows with corpus size on the driver.
   */
 object ClassifierOps {
 
@@ -76,6 +80,9 @@ object ClassifierOps {
     * persisted frame is buckets longs per document, far smaller than
     * the corpus. The scoring plan ([[featLogit]]) has O(buckets)
     * arity, fine for the classifier's documented 16-256 bucket range.
+    * The histogram is one udf over [[bucketCounts]], named
+    * `bucketCountFeatures` in plans, so the cached plan keeps the
+    * caller's lineage.
     *
     * NULL text reads as empty: words(NULL) is NULL and would
     * null-propagate through the transform, dropping the row while n
@@ -101,50 +108,41 @@ object ClassifierOps {
     * registers it with `DistScan`'s release queue. */
   private[graft] def bucketCountFeatures(df: DataFrame, textCol: String,
       labelCol: String, keep: Seq[String], buckets: Int): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    val spark = df.sparkSession
-    val in = df.select(keep.map(col) ++ Seq(
-      col(labelCol).cast("long").as("__y"),
-      coalesce(col(textCol), lit("")).as("__t")): _*)
-    val outSchema = StructType(
-      in.schema.fields.filterNot(_.name == "__t") :+
-        StructField("__hs", ArrayType(LongType, containsNull = false),
-          nullable = false))
-    val nKeep = keep.size
-    // ZERO-SHUFFLE histogram kernel (guide §4.2: hand the whole batch
-    // to native code): per row, split + md5-bucket each word and count
-    // into a local array — the explode + per-doc pivot aggregation
-    // this replaces shipped one row per word occurrence through an
-    // exchange. The bucket function is bit-equal to md5Bucket (first
-    // 4 md5 bytes as an unsigned 32-bit value, mod buckets; UTF-8
-    // input bytes — the spec pins the whole path against the
-    // per-occurrence expression formulation).
-    val rdd = in.rdd.mapPartitions { it =>
-      val md = java.security.MessageDigest.getInstance("MD5")
-      it.map { r =>
-        val t = r.getString(nKeep + 1)
-        val hs = new Array[Long](buckets)
-        val parts = t.split("\\s+")
-        var i = 0
-        while (i < parts.length) {
-          val w = parts(i)
-          if (w.nonEmpty) {
-            val d = md.digest(
-              w.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            val u = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-              ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-            hs((u % buckets).toInt) += 1L
-          }
-          i += 1
-        }
-        val y: Any = if (r.isNullAt(nKeep)) null else r.getLong(nKeep)
-        Row.fromSeq((0 until nKeep).map(r.get) ++ Seq(y, hs.toSeq))
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
+    val hist = udf((t: String) => bucketCounts(t, buckets))
+      .asNonNullable().withName("bucketCountFeatures")
+    df.select(keep.map(col) ++ Seq(
+        col(labelCol).cast("long").as("__y"),
+        hist(coalesce(col(textCol), lit(""))).as("__hs")): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
+
+  /** The classifier histogram of one text: per whitespace word, the
+    * count of its md5 bucket. The bucket is bit-equal to
+    * [[TextStatsOps.md5Bucket]]
+    * (first 4 md5 bytes of the UTF-8 word as an unsigned 32-bit value,
+    * mod buckets); ClassifierPropertySpec pins the whole path against
+    * the per-occurrence expression formulation. */
+  private def bucketCounts(t: String, buckets: Int): Array[Long] = {
+    val md = Md5.get
+    val hs = new Array[Long](buckets)
+    val parts = t.split("\\s+")
+    var i = 0
+    while (i < parts.length) {
+      val w = parts(i)
+      if (w.nonEmpty) {
+        val d = md.digest(w.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        val u = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
+          ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
+        hs((u % buckets).toInt) += 1L
+      }
+      i += 1
+    }
+    hs
+  }
+
+  /** One MD5 digest per task thread for [[bucketCounts]]. */
+  private val Md5: ThreadLocal[java.security.MessageDigest] =
+    ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
 
   /** Micro-unit logit of one feature row under weights `w` (buckets
     * word weights + bias): Σ_b h_b·w_b + w_bias — pure codegen'd
@@ -157,11 +155,11 @@ object ClassifierOps {
 
   /** One full-batch hard-sigmoid GD loop over a persisted feature
     * frame; mutates nothing, returns the weights. Each iteration is ONE
-    * single-stage job: an `RDD.aggregate` over the frame's
-    * (`__y`, `__hs`) rows, whose RDD is planned once before the loop —
-    * the pass ships its weights in the closure instead of re-planning
-    * a frame with the weights as literals. Each task folds its rows
-    * into buckets+3 longs ([[addGradient]]): the word gradients
+    * single-stage job: an `RDD.aggregate` over the frame's cached rows
+    * ([[Bridge.cachedRows]], so the first pass fills the cache in its
+    * own tasks) — the pass ships its weights in the closure instead of
+    * re-planning a frame with the weights as literals. Each task folds
+    * its rows into buckets+3 longs ([[addGradient]]): the word gradients
     * Σ err·h_b, the bias gradient Σ err, the document count `n` and the
     * labelled-row count; the driver merges the partitions' arrays.
     * NULL-label rows count in `n` and in no gradient. `caller` names
@@ -169,14 +167,16 @@ object ClassifierOps {
     * row fails too (its gradient sums would be NULL). */
   private[graft] def trainOnFeatures(feat: DataFrame, buckets: Int,
       iters: Int, lrDen: Long, caller: String): Array[Long] = {
-    val rows = feat.select(col("__y"), col("__hs")).rdd
+    val rows = Bridge.cachedRows(feat)
+    val (yi, hi) =
+      (feat.schema.fieldIndex("__y"), feat.schema.fieldIndex("__hs"))
     val w = Array.fill(buckets + 1)(0L) // [word buckets..., bias]
     for (_ <- 1 to iters) {
       val wp = w.clone()
       // an overflow, in a task or in the driver's merge, surfaces as
       // the ArithmeticException itself, as a SQL aggregate's does
       val g = try rows.aggregate(new Array[Long](buckets + 3))(
-          (acc, r) => addGradient(acc, r, wp, buckets), mergeGradients)
+          (acc, r) => addGradient(acc, r, yi, hi, wp, buckets), mergeGradients)
         catch { case e: org.apache.spark.SparkException
           if e.getCause.isInstanceOf[ArithmeticException] => throw e.getCause }
       val n = g(buckets + 1)
@@ -188,7 +188,8 @@ object ClassifierOps {
     w
   }
 
-  /** Adds one feature row to a pass's sums `acc` = [Σ err·h_b per
+  /** Adds one feature row (`__y` at ordinal `yi`, `__hs` at `hi`) to a
+    * pass's sums `acc` = [Σ err·h_b per
     * bucket b, Σ err, n, labelled rows], in place. The integer twin of
     * [[featLogit]] and [[hardSigmoidMicro]] as Spark evaluates them in
     * ANSI mode: the logit is the left fold of h_b·w_b plus the bias,
@@ -196,23 +197,23 @@ object ClassifierOps {
     * too), err = p − y·1e6 only for a labelled row, and every product
     * and sum goes through `Math.*Exact`, so an overflow throws
     * `ArithmeticException` and never wraps. */
-  private def addGradient(acc: Array[Long], r: org.apache.spark.sql.Row,
-      w: Array[Long], buckets: Int): Array[Long] = {
-    val hs = r.getSeq[Long](1)
+  private def addGradient(acc: Array[Long], r: InternalRow, yi: Int,
+      hi: Int, w: Array[Long], buckets: Int): Array[Long] = {
+    val hs = r.getArray(hi)
     var z = 0L
     var b = 0
     while (b < buckets) {
-      z = Math.addExact(z, Math.multiplyExact(hs(b), w(b)))
+      z = Math.addExact(z, Math.multiplyExact(hs.getLong(b), w(b)))
       b += 1
     }
     z = Math.addExact(z, w(buckets))
     val p = math.min(Micro, math.max(0L, Micro / 2 + (z / 4.0d).toLong))
     acc(buckets + 1) += 1
-    if (!r.isNullAt(0)) {
-      val err = Math.subtractExact(p, Math.multiplyExact(r.getLong(0), Micro))
+    if (!r.isNullAt(yi)) {
+      val err = Math.subtractExact(p, Math.multiplyExact(r.getLong(yi), Micro))
       b = 0
       while (b < buckets) {
-        acc(b) = Math.addExact(acc(b), Math.multiplyExact(err, hs(b)))
+        acc(b) = Math.addExact(acc(b), Math.multiplyExact(err, hs.getLong(b)))
         b += 1
       }
       acc(buckets) = Math.addExact(acc(buckets), err)

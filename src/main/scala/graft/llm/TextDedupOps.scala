@@ -176,7 +176,9 @@ object TextDedupOps {
     * ([[minHashKernel]]): a document's shingles all live in its row, so
     * nothing explodes and nothing shuffles. One output row per input
     * row — `idCol` must be a KEY of `df` (rows sharing an id are not
-    * merged). NULL text yields an all-NULL signature. */
+    * merged). A row whose text is NULL gets no signature: it has no
+    * shingles, and an all-NULL signature would share every band's
+    * bucket with each other NULL-text document. */
   def minHashSignatures(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, k: Int = 32, seed: Long = 42L): DataFrame = {
     require(shingleN >= 1 && k >= 1,
@@ -184,7 +186,8 @@ object TextDedupOps {
     val (a, b) = hashParams(k, seed).toArray.unzip
     val sign = udf((t: String) => minHashKernel(t, shingleN, a, b))
       .asNonNullable()
-    df.select(col(idCol), sign(normalize(col(textCol))).as("signature"))
+    df.filter(col(textCol).isNotNull)
+      .select(col(idCol), sign(normalize(col(textCol))).as("signature"))
   }
 
   /** The k MinHash minima of one NORMALIZED text. Words are the text's
@@ -1185,7 +1188,7 @@ object TextDedupOps {
       if (fs.exists(p))
         spark.read.schema(simHashReadSchema(idCol)).parquet(data)
       else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
         simHashReadSchema(idCol))
     val hwmOpt = IngestCommit.committedHwm(spark, simHashStore(dir).logDir)
     val committed = hwmOpt.fold(raw)(h =>

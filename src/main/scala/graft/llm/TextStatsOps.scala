@@ -4,6 +4,7 @@ package graft.llm
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Text analysis for training-data curation (north-star LLM pipeline):
   * token statistics, quality scoring, n-gram language ID, tokenizers.
@@ -1368,55 +1369,37 @@ object TextStatsOps {
     * DuckDB oracle twin — NaN fails every `<= threshold` rule, so
     * empty documents drop cleanly (keep = false).
     *
-    * Scale shape (100 TB): ONE mapPartitions kernel (r20), zero
-    * shuffle, row-local at scan throughput; per row O(Σn m·n)
+    * Scale shape (100 TB): one row-local udf over the kernel, zero
+    * shuffle, at scan throughput; per row O(Σn m·n)
     * primitive-array table fills, peak transient memory one n's
     * id/count tables (~4 ints per word). GopherKernelSpec pins it
     * doubleToLongBits-equal to a test-scope replay of the metrics as
-    * staged Catalyst expressions. The output is safe to `.filter`
-    * directly: metrics exist only as kernel results, so Catalyst has
-    * no expression tree to duplicate below a pushed predicate. */
+    * staged Catalyst expressions. The udf is named `gopherRepetition`
+    * in plans and marked nondeterministic, so a filter on any output
+    * column stays above it and the kernel runs once per row. */
   def gopherRepetition(df: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    val in = df.select(col(idCol), col(textCol).cast("string"))
-    val nMetrics = GopherRepetitionRules.size
-    val outSchema = StructType(in.schema.fields(0) +:
-      (GopherRepetitionRules.map(r => StructField(r._1, DoubleType)) ++
-        GopherRepetitionRules.map(r => StructField(r._2, BooleanType)) :+
-        StructField("keep", BooleanType)))
-    // Dataset mapPartitions (NOT .rdd): the kernel must lift to
-    // STREAMING frames unchanged (StreamingSpec pins it) — .rdd is a
-    // batch-only materialization, while MapPartitions is an ordinary
-    // logical node; it also keeps the source scan (and its pushdown)
-    // visible in the SQL plan instead of hiding it in RDD lineage.
-    in.mapPartitions { it: Iterator[Row] =>
-      it.map { r =>
-        if (r.isNullAt(1)) {
-          // NULL text: every metric, boolean and keep is NULL
-          // (length(NULL) denominator)
-          Row.fromSeq(r.get(0) +: Seq.fill(2 * nMetrics + 1)(null))
-        } else {
-          val ms = gopherDocMetrics(r.getString(1))
-          val cells = new Array[Any](2 * nMetrics + 2)
-          cells(0) = r.get(0)
-          var keep = true
-          var j = 0
-          while (j < nMetrics) {
-            // NaN <= th is false in both engines
-            val ok = ms(j) <= GopherThresholds(j)
-            cells(1 + j) = ms(j)
-            cells(1 + nMetrics + j) = ok
-            keep &&= ok
-            j += 1
-          }
-          cells(2 * nMetrics + 1) = keep
-          Row.fromSeq(
-            scala.collection.immutable.ArraySeq.unsafeWrapArray(cells))
-        }
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
+    val verdict = udf((t: String) => if (t == null) null else gopherVerdict(t))
+      .asNondeterministic().withName("gopherRepetition")
+    val v = col("__gopher")
+    val rules = GopherRepetitionRules.zipWithIndex
+    df.select(col(idCol), verdict(col(textCol).cast("string")).as("__gopher"))
+      .select(col(idCol) +:
+        (rules.map { case (r, j) => v("metrics")(j).as(r._1) } ++
+          rules.map { case (r, j) => v("ok")(j).as(r._2) } :+
+          v("keep").as("keep")): _*)
+  }
+
+  /** One document's Gopher repetition result: the 13 metrics of
+    * [[gopherDocMetrics]], each rule's `metric <= threshold` (NaN
+    * fails) and their conjunction. */
+  private[graft] case class GopherVerdict(metrics: Array[Double],
+      ok: Array[Boolean], keep: Boolean)
+
+  private def gopherVerdict(t: String): GopherVerdict = {
+    val ms = gopherDocMetrics(t)
+    val ok = Array.tabulate(ms.length)(j => ms(j) <= GopherThresholds(j))
+    GopherVerdict(ms, ok, ok.forall(identity))
   }
 
   /** Slot count of [[gopherDocMetrics]]' open-address n-gram table
@@ -1588,15 +1571,10 @@ object TextStatsOps {
   }
 
   /** The corpus rows that SURVIVE the Gopher repetition gate — the
-    * filter companion to [[gopherRepetition]]. Since r20 this is a
-    * pure ROW-LOCAL kernel filter: each row's `keep` is computed in
-    * the same primitive-array pass the metric kernel uses
-    * ([[gopherDocMetrics]]) and failing rows are dropped in place,
-    * keeping every input column. ZERO shuffle — the r11 shape paid an
-    * aggregation-barrier exchange (pushdown protection the expression
-    * tier needed) plus the semi-join's corpus exchange; both are gone
-    * and the gate runs at scan throughput at any corpus size, the
-    * 100 TB ideal for a row-local filter.
+    * filter companion to [[gopherRepetition]]: `df` filtered by a
+    * Boolean udf (`gopherRepetitionKept` in plans) that runs the same
+    * kernel and returns the row's `keep`, keeping every input column.
+    * Zero shuffle, one kernel call per row.
     *
     * Semantics: a row survives iff its OWN text passes every rule —
     * identical to the old keep-filter + id-semi-join whenever ids are
@@ -1606,27 +1584,9 @@ object TextStatsOps {
     * is the filter semantics callers actually mean. NULL text fails
     * the gate (the old `.filter(keep)` dropped its NULL keep too). */
   def gopherRepetitionKept(df: org.apache.spark.sql.DataFrame,
-      idCol: String, textCol: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.Row
-    val schema = df.schema
-    val ti = schema.fieldIndex(textCol)
-    // Dataset mapPartitions, not .rdd — lifts to streaming frames and
-    // keeps the source scan in the SQL plan (see gopherRepetition)
-    df.mapPartitions { it: Iterator[Row] =>
-      it.filter { r =>
-        !r.isNullAt(ti) && {
-          val ms = gopherDocMetrics(r.getString(ti))
-          var keep = true
-          var j = 0
-          while (keep && j < GopherThresholds.length) {
-            keep = ms(j) <= GopherThresholds(j) // NaN fails, like the
-            j += 1                              // metric booleans
-          }
-          keep
-        }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
-  }
+      idCol: String, textCol: String): org.apache.spark.sql.DataFrame =
+    df.filter(udf((t: String) => t != null && gopherVerdict(t).keep)
+      .withName("gopherRepetitionKept")(col(textCol)))
 
   /** C4 boilerplate line phrases (Raffel et al. 2020 §2.2: policy
     * notices removed at line level). */
@@ -2111,50 +2071,58 @@ object TextStatsOps {
     * drift signal a curation pipeline watches — a vocabulary trained
     * last month scoring today's crawl. Zero shuffle; vocabulary is an
     * executor-side broadcast HashMap (the PQ-codebook discipline on
-    * the vocab axis). */
+    * the vocab axis).
+    *
+    * One udf ([[unigramReport]], `unigramEncodeDocsKernel` in plans)
+    * returns the report as a struct; it is marked nondeterministic, so
+    * a filter on a report column stays above it and the kernel runs
+    * once per row. NULL text reports (0, 0, 0, 0, ""); the id is cast
+    * to long and NOT NULL — a NULL id fails the query. */
   def unigramEncodeDocsKernel(df: org.apache.spark.sql.DataFrame,
       idCol: String, textCol: String, vocab: Map[String, Long],
       unkCharMicro: Long, maxTokenLen: Int = 8)
       : org.apache.spark.sql.DataFrame = {
     require(vocab.nonEmpty, "unigramEncodeDocsKernel: empty vocabulary")
     require(maxTokenLen >= 1, "unigramEncodeDocsKernel: maxTokenLen >= 1")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val bVocab = spark.sparkContext.broadcast(vocabHashMap(vocab))
-    val mtl = maxTokenLen
-    val unk = unkCharMicro
-    df.select(col(idCol).cast("long"), col(textCol).cast("string"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        val vm = bVocab.value
-        it.map { case (id, text) =>
-          if (text == null) (id, 0L, 0L, 0L, 0L, "")
-          else {
-            val ws = wordsOf(text)
-            var nw = 0L; var nc = 0L; var nt = 0L; var nu = 0L
-            val sb = new java.lang.StringBuilder(text.length)
-            var i = 0
-            while (i < ws.length) {
-              val pieces = viterbiSegment(ws(i), vm, unk, mtl)
-              nw += 1
-              nc += ws(i).codePointCount(0, ws(i).length)
-              nt += pieces.length
-              var p = 0
-              while (p < pieces.length) {
-                if (!vm.containsKey(pieces(p))) nu += 1
-                sb.append(pieces(p))
-                p += 1
-              }
-              if (i < ws.length - 1) sb.append(' ')
-              i += 1
-            }
-            (id, nw, nc, nt, nu, sb.toString)
-          }
-        }
-      }
-      .toDF(idCol, "n_words", "n_chars", "n_tokens", "n_unk_chars",
-        "recon")
+    val bVocab = df.sparkSession.sparkContext.broadcast(vocabHashMap(vocab))
+    val report = udf((t: String) =>
+        unigramReport(t, bVocab.value, unkCharMicro, maxTokenLen))
+      .asNonNullable().asNondeterministic()
+      .withName("unigramEncodeDocsKernel")
+    df.select(Bridge.assertNotNull(col(idCol).cast("long")).as(idCol),
+        report(col(textCol).cast("string")).as("__report"))
+      .select(col(idCol) +: Seq("n_words", "n_chars", "n_tokens",
+        "n_unk_chars", "recon").map(f => col(s"__report.$f")): _*)
   }
+
+  /** [[unigramEncodeDocsKernel]]'s report of one document. */
+  private[graft] case class UnigramReport(n_words: Long, n_chars: Long,
+      n_tokens: Long, n_unk_chars: Long, recon: String)
+
+  private def unigramReport(text: String,
+      vm: java.util.HashMap[String, java.lang.Long], unk: Long,
+      mtl: Int): UnigramReport =
+    if (text == null) UnigramReport(0L, 0L, 0L, 0L, "")
+    else {
+      val ws = wordsOf(text)
+      var nc = 0L; var nt = 0L; var nu = 0L
+      val sb = new java.lang.StringBuilder(text.length)
+      var i = 0
+      while (i < ws.length) {
+        val pieces = viterbiSegment(ws(i), vm, unk, mtl)
+        nc += ws(i).codePointCount(0, ws(i).length)
+        nt += pieces.length
+        var p = 0
+        while (p < pieces.length) {
+          if (!vm.containsKey(pieces(p))) nu += 1
+          sb.append(pieces(p))
+          p += 1
+        }
+        if (i < ws.length - 1) sb.append(' ')
+        i += 1
+      }
+      UnigramReport(ws.length.toLong, nc, nt, nu, sb.toString)
+    }
 
   /** Unigram token ENCODING rows — the artifact a training pipeline
     * materializes (the doc-level report above only budgets it): one

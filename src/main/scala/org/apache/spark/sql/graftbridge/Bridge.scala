@@ -3,9 +3,13 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan,
   ResolvedHint, Statistics}
 import org.apache.spark.sql.catalyst.expressions.InSet
+import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -69,6 +73,24 @@ object Bridge {
     * and on 65,536 ids it did not finish in 7 minutes. */
   def isInSet(c: Column, values: Set[Any]): Column =
     ExpressionUtils.column(InSet(ExpressionUtils.expression(c), values))
+
+  /** `c` as a NOT NULL column: a NULL value fails the query, as a
+    * typed encoder's primitive field does. */
+  def assertNotNull(c: Column): Column =
+    ExpressionUtils.column(AssertNotNull(ExpressionUtils.expression(c)))
+
+  /** The rows of persisted `df`'s cache, read by a plain
+    * `InMemoryTableScanExec`. Under AQE, a query over a cache whose plan
+    * is itself adaptive (one that reads another cache or shuffles)
+    * first fills the cache in a table-cache stage job of its own; read
+    * this way, the cache fills inside the first job that reads it. */
+  def cachedRows(df: DataFrame): RDD[InternalRow] = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    val rel = ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
+      .getOrElse(throw new IllegalArgumentException("cachedRows: not persisted"))
+      .cachedRepresentation
+    InMemoryTableScanExec(rel.output, Nil, rel).execute()
+  }
 
   /** `df` with its resolved hints removed — for a query that reads a
     * hinted frame without joining it (a `broadcast` side's own

@@ -237,6 +237,27 @@ class IngestCommitSpec extends SparkSpec {
     assert(sigIds == bandIds, sigIds)
   }
 
+  test("near-dup ingest: NULL-text documents reach the corpus but not " +
+      "the index") {
+    val root = tmpDir("near-null-text")
+    val (index, corpus) = (s"$root/index", s"$root/corpus")
+    initIndex(index)
+    val nullText = triDocs(Seq(500L, 501L))
+      .select(col("doc_id"), lit(null).cast("string").as("text"))
+    assert(IngestCommit.nearDupIngestBatch(
+      triDocs(0L until 10L).unionByName(nullText), 0L, index, corpus,
+      threshold = 0.99))
+    val ids = IngestCommit.committedCorpus(spark, corpus,
+      s"$index/commits").select("doc_id").as[Long].collect()
+    assert(ids.sorted.toSeq == (0L until 10L) ++ Seq(500L, 501L))
+    val bandIds = spark.read.schema(TextDedupOps.bandsReadSchema("doc_id"))
+      .parquet(s"$index/bands").select("doc_id").as[Long].collect().toSet
+    val sigIds = TextDedupOps.sigsRead(spark, index, "doc_id")
+      .select("doc_id").as[Long].collect().toSet
+    assert(bandIds == (0L until 10L).toSet, bandIds)
+    assert(sigIds == bandIds, sigIds)
+  }
+
   /** Runs `body` and returns each query it executed, by the plan AQE
     * started from (its initial plan, before any stage ran) or, where
     * AQE left a query alone, by its executed plan. */

@@ -88,15 +88,29 @@ class MinHashKernelPropertySpec extends SparkSpec {
         nullable = false))
     val byId = sigs.collect().map(r => r.getLong(0) -> r.getSeq[Any](1))
       .toMap
-    assert(byId.size == 160)
-    assert(byId(1000L) == Seq.fill(8)(null))
-    byId.removed(1000L).foreach { case (id, s) =>
+    // NULL text (doc 1000) has no signature row
+    assert(byId.size == 159 && !byId.contains(1000L))
+    byId.foreach { case (id, s) =>
       assert(s.size == 8 && s.forall(_ != null), s"doc $id")
     }
     // everything outside [a-z0-9 ] normalizes away: empty,
     // all-whitespace, punctuation-only and astral-only texts are all
     // the one empty word
     assert(Seq(1002L, 1003L, 1006L).forall(i => byId(i) == byId(1001L)))
+  }
+
+  test("NULL-text documents give no signature rows and no candidate " +
+      "pairs") {
+    val nulls = (0L until 20L).map(i => (i, null: String)).toDF("doc_id",
+      "text")
+    assert(TextDedupOps.minHashSignatures(nulls, "doc_id", "text").isEmpty)
+    val mixed = nulls.unionByName(Seq((100L, "alpha beta gamma delta"),
+      (101L, "alpha beta gamma delta")).toDF("doc_id", "text"))
+    val pairs = TextDedupOps.lshCandidatePairs(
+        TextDedupOps.minHashSignatures(mixed, "doc_id", "text"), "doc_id",
+        bands = 8, threshold = 0.0)
+      .select("id_a", "id_b").as[(Long, Long)].collect()
+    assert(pairs.toSeq == Seq((100L, 101L)), pairs.toSeq)
   }
 
   test("one signature per input row: ids are a key, never merged") {

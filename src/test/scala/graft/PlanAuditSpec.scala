@@ -417,6 +417,114 @@ class PlanAuditSpec extends SparkSpec {
     assert(ex <= 6, s"substring_dedup shuffles too much ($ex):\n${p.take(3000)}")
   }
 
+  // ───── row kernels: one named udf each, evaluated once per row ─────
+
+  private lazy val kernelDocs: DataFrame = {
+    import spark.implicits._
+    Seq[(Long, String, java.lang.Long)](
+      (1L, (1 to 60).map(i => s"word$i").mkString(" "), 1L),
+      (2L, "same line\nsame line\nsame line", 0L),
+      (3L, null, 1L), (4L, "", null), (5L, "zebra quagga 𝕏", 0L))
+      .toDF("doc_id", "text", "y")
+  }
+  private val UnigramVocab: Map[String, Long] = Map("the" -> -1000000L,
+    "cat" -> -2000000L, "dog" -> -2000000L, "a" -> -3000000L)
+
+  /** How often a udf named `name` is called in `plan`'s text. */
+  private def calls(plan: String, name: String): Int =
+    s"\\b$name\\(".r.findAllIn(plan).size
+
+  test("row kernels keep their output schemas, nullability included") {
+    import org.apache.spark.sql.functions.{col, when, lit}
+    import org.apache.spark.sql.types._
+    import graft.llm.{ClassifierOps, TextStatsOps}
+    val rules = TextStatsOps.GopherRepetitionRules
+    def gopherSchema(id: StructField) = StructType(id +:
+      (rules.map(r => StructField(r._1, DoubleType)) ++
+        rules.map(r => StructField(r._2, BooleanType)) :+
+        StructField("keep", BooleanType)))
+    // a NOT NULL id and a nullable one
+    val nullableId = kernelDocs.select(when(lit(true), col("doc_id"))
+      .as("doc_id"), col("text"), col("y"))
+    for (df <- Seq(kernelDocs, nullableId)) {
+      val id = df.schema("doc_id")
+      assert(TextStatsOps.gopherRepetition(df, "doc_id", "text").schema ==
+        gopherSchema(id))
+      assert(TextStatsOps.gopherRepetitionKept(df, "doc_id", "text")
+        .schema == df.schema)
+      val feat = ClassifierOps.bucketCountFeatures(df, "text", "y",
+        Seq("doc_id"), 8)
+      try assert(feat.schema == StructType(Seq(id,
+        StructField("__y", LongType),
+        StructField("__hs", ArrayType(LongType, containsNull = false),
+          nullable = false))))
+      finally feat.unpersist()
+      assert(TextStatsOps.unigramEncodeDocsKernel(df, "doc_id", "text",
+          UnigramVocab, -10000000L).schema ==
+        StructType(Seq("doc_id", "n_words", "n_chars", "n_tokens",
+          "n_unk_chars").map(StructField(_, LongType, nullable = false)) :+
+          StructField("recon", StringType)))
+    }
+    // the report's id is NOT NULL: a NULL id fails, it is never emitted
+    val nullIdRow = nullableId.select(
+      when(col("doc_id") === 3L, lit(null)).otherwise(col("doc_id"))
+        .as("doc_id"), col("text"))
+    intercept[Exception] {
+      TextStatsOps.unigramEncodeDocsKernel(nullIdRow, "doc_id", "text",
+        UnigramVocab, -10000000L).collect()
+    }
+  }
+
+  test("multi-output row kernels are called once per row: a filter on " +
+      "an output does not copy the udf") {
+    import org.apache.spark.sql.functions.col
+    import graft.llm.TextStatsOps
+    def gopher(df: DataFrame) =
+      TextStatsOps.gopherRepetition(df, "doc_id", "text").filter(col("keep"))
+    def unigram(df: DataFrame) = TextStatsOps.unigramEncodeDocsKernel(df,
+      "doc_id", "text", UnigramVocab, -10000000L)
+      .filter(col("n_unk_chars") > 0)
+    // a scanned table: the optimizer evaluates a local relation's
+    // projections itself, leaving no udf in the plan
+    val docs = Tables.documents(spark, d).select("doc_id", "text")
+    for ((df, name) <- Seq(gopher(docs) -> "gopherRepetition",
+        unigram(docs) -> "unigramEncodeDocsKernel")) {
+      val p = df.queryExecution.optimizedPlan.toString
+      assert(calls(p, name) == 1, s"$name:\n$p")
+      assert(calls(df.queryExecution.executedPlan.toString, name) == 1,
+        s"$name:\n${df.queryExecution.executedPlan}")
+    }
+    assert(gopher(kernelDocs).select("doc_id").collect().map(_.getLong(0))
+      .toSet == Set(1L))
+    assert(unigram(kernelDocs).select("doc_id").collect()
+      .map(_.getLong(0)).toSet == Set(1L, 2L, 5L))
+  }
+
+  test("the ingest curation chain plans no object round trip and no RDD " +
+      "scan: Gopher gates, exact dedup, classifier features") {
+    import org.apache.spark.sql.functions.col
+    import graft.llm.{ClassifierOps, TextDedupOps, TextStatsOps}
+    val batch = Tables.documents(spark, d)
+      .select(col("doc_id"), col("text"), (col("doc_id") % 2).as("y"))
+    val quality = batch.filter(TextStatsOps.gopherKeep(col("text")))
+    val kept = TextStatsOps.gopherRepetitionKept(quality, "doc_id", "text")
+    val exact = TextDedupOps.exactDedup(kept, "text", "doc_id")
+    val feat = ClassifierOps.bucketCountFeatures(exact, "text", "y",
+      Seq("doc_id"), 16)
+    try {
+      val qe = feat.queryExecution
+      // the executed plan prints the cached plan under InMemoryRelation
+      for (p <- Seq(qe.analyzed.toString, qe.optimizedPlan.toString,
+          qe.executedPlan.toString)) {
+        for (node <- Seq("DeserializeToObject", "SerializeFromObject",
+            "MapPartitions", "ExistingRDD", "LogicalRDD"))
+          assert(!p.contains(node), s"$node in:\n$p")
+        assert(calls(p, "gopherRepetitionKept") == 1 &&
+          calls(p, "bucketCountFeatures") == 1, p)
+      }
+    } finally feat.unpersist()
+  }
+
   /** The Spark plan of every registry query, built and planned once
     * for the registry-wide guards below, with the hint errors Spark
     * logged (and otherwise ignored) while building and planning it. A

@@ -338,11 +338,12 @@ object ReferenceTiers {
 
   /** MinHash signatures as an explode + map-side-combined `min`
     * aggregation: one row per shingle, k minima per doc behind one
-    * exchange. Rows sharing an id merge into one signature. */
+    * exchange. Rows sharing an id merge into one signature; a NULL
+    * text has no signature. */
   def minHashSignatures(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, k: Int = 32, seed: Long = 42L): DataFrame = {
     val p = TextDedupOps.HashP
-    val exploded = df
+    val exploded = df.filter(col(textCol).isNotNull)
       .withColumn("__words", split(TextDedupOps.normalize(col(textCol)), " "))
       .withColumn("__wh", transform(col("__words"),
         w => pmod(xxhash64(w), lit(p))))
